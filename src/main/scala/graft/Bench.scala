@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query wall-clock seconds.
   *
@@ -9,6 +11,23 @@ package graft
   * on the driver.
   */
 object Bench {
+
+  /** ONE timing rep for every measurement in the repo — the sweep, the
+    * steady block and the confirm rep below, and every `tools.Dev` mode
+    * (review finding, round 12: two verbatim copies of this rep let a
+    * hygiene-protocol change silently diverge two measurements). Runs
+    * the query to the noop sink, then drops the rep's orphaned
+    * checkpoint caches outside the timed region. Returns seconds;
+    * throws on query failure. */
+  def runOnce(spark: SparkSession, dir: String, name: String): Double = {
+    val t0 = System.nanoTime()
+    SparkEntry.queries(name)(spark, dir)
+      .write.format("noop").mode("overwrite").save()
+    val t = (System.nanoTime() - t0) / 1e9
+    graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
+    t
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Host-load stamps (VERDICT r17 #2): the r17 32-core capture was
@@ -33,15 +52,11 @@ object Bench {
     // Checkpoint-cache hygiene (VERDICT r8 #1): every query rep calls
     // .ckpt() afresh, so a full bench accumulates hundreds of orphaned
     // localCheckpoint caches — by the r8 capture's tail the session
-    // pressure inflated individual queries 8× over their BenchOne
-    // steady states (q177 7.6 s vs 0.9 s). After each rep, unpersist
-    // every persistent RDD EXCEPT the DerivationCache-owned shared
-    // derivations (their checkpoint blocks are unrecoverable — lineage
-    // is truncated — and later queries reuse them). Cleanup runs
-    // outside the timed region.
-    val sc = spark.sparkContext
-    def dropOrphanCheckpoints(): Unit =
-      graft.plans.DerivationCache.dropOrphans(sc)
+    // pressure inflated individual queries 8× over their isolated
+    // steady states (q177 7.6 s vs 0.9 s). After each rep, runOnce
+    // unpersists every persistent RDD EXCEPT the DerivationCache-owned
+    // shared derivations (their checkpoint blocks are unrecoverable —
+    // lineage is truncated — and later queries reuse them).
     // Per-query adaptive repeats: the first run absorbs whole-stage-
     // codegen compilation (3s+ even for trivial queries — NOTES.md
     // documents ±25% run-to-run noise from this plus container jitter).
@@ -49,27 +64,15 @@ object Bench {
     // was negligible and min(t0,t1) is the steady state, otherwise run
     // a third time and report the min of the two warm runs. Reported
     // numbers are reproducible across bench invocations to ~10%.
-    // ONE timing-rep definition for the in-bench sweep AND the steady
-    // block below (review finding, round 12: two verbatim copies of
-    // this closure let the next hygiene-protocol change silently
-    // diverge the two measurements).
-    def runOnce(name: String): Double = { // throws on query failure
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val t = (System.nanoTime() - t0) / 1e9
-      dropOrphanCheckpoints()
-      t
-    }
     val results: Seq[(String, Option[Double])] = names.map { name =>
       // A failed query must NOT masquerade as a (near-zero) timing in
       // the JSON — it is excluded from `queries` and listed in `failed`.
       val steady = try {
-        val t0 = runOnce(name)
-        val t1 = runOnce(name)
+        val t0 = runOnce(spark, sfDir, name)
+        val t1 = runOnce(spark, sfDir, name)
         Some(
           if (math.abs(t0 - t1) <= 0.1 * math.min(t0, t1)) math.min(t0, t1)
-          else math.min(t1, runOnce(name)))
+          else math.min(t1, runOnce(spark, sfDir, name)))
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -95,9 +98,9 @@ object Bench {
     // runs in isolation, and the last three rounds each burned an
     // adjudication cycle separating that artifact from real
     // regressions. For each candidate, evict ALL shared
-    // derivations, run once to rebuild them (the BenchOne
-    // fresh-session rep-1), then report the min of two warm reps — the
-    // machine-recorded equivalent of the isolated BenchOne steady
+    // derivations, run once to rebuild them (a fresh session's rep-1,
+    // as `tools.Dev time` sees it), then report the min of two warm
+    // reps — the machine-recorded equivalent of the isolated steady
     // state. Baseline-tagged fixtures are excluded (review finding,
     // round 12: they are deliberately quadratic and already outside
     // total_production — a baseline in the top 10 would burn three
@@ -120,9 +123,9 @@ object Bench {
         .flatMap { name =>
           try {
             graft.plans.DerivationCache.evictAll()
-            dropOrphanCheckpoints()
-            runOnce(name) // rebuilds the evicted derivations + codegen
-            Some(name -> math.min(runOnce(name), runOnce(name)))
+            graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
+            runOnce(spark, sfDir, name) // rebuilds the evicted derivations + codegen
+            Some(name -> math.min(runOnce(spark, sfDir, name), runOnce(spark, sfDir, name)))
           } catch {
             case e: Throwable =>
               // a steady failure must be visible in the log, not just
@@ -192,7 +195,7 @@ object Bench {
               !steadyNames.contains(k) &&
               ranges.get(k).exists { case (_, hi) => v > 3 * hi } => k
         }.flatMap { name =>
-          try Some(name -> runOnce(name))
+          try Some(name -> runOnce(spark, sfDir, name))
           catch {
             case e: Throwable =>
               System.err.println(s"[bench] confirm $name failed: ${e.getMessage}")

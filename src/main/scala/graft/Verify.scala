@@ -2,14 +2,38 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.SparkSession
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q1,q2,...]
+  * The optional third argument limits the dump (and oracle_sql.json) to
+  * the named queries, so tools/check_oracle.py can pre-flight just the
+  * queries under work.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir, only) = args match {
+      case Array(sf, out)        => (sf, out, None)
+      case Array(sf, out, names) => (sf, out, Some(names.split(',').toSet))
+      case _ => throw new IllegalArgumentException(
+        "usage: graft.Verify <sfDir> <outDir> [q1,q2,...]")
+    }
     val spark = GraftSession.create()
+    run(spark, sfDir, outDir, only)
+    spark.stop()
+  }
+
+  def run(spark: SparkSession, sfDir: String, outDir: String,
+      only: Option[Set[String]] = None): Unit = {
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    }
+    def wanted(name: String): Boolean = only.forall(_.contains(name))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -28,9 +52,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

@@ -94,6 +94,7 @@ object Extract {
     * a partition cap, not hand-rolled concurrency). */
   def jdbcRangeRead(spark: SparkSession, job: TableJob,
       lower: Long, upper: Long, maxConnections: Int = 20): DataFrame = {
+    require(job.stride > 0, "stride must be positive")
     val span = upper - lower + 1
     val wanted = math.max(1L, (span + job.stride - 1) / job.stride)
     val numPartitions = math.min(wanted, maxConnections.toLong).toInt
@@ -169,34 +170,35 @@ object Extract {
   def runShardedJob(spark: SparkSession, job: TableJob,
       shardUrls: Seq[String]): Unit = {
     require(shardUrls.nonEmpty, "at least one shard url")
-    val shards = shardUrls.map { u =>
-      val full = spark.read.jdbc(u, job.tableName, job.properties)
-      keyBounds(full, job.primaryKey) match {
-        case Some((lo, hi)) => jdbcRangeRead(spark, job.copy(url = u), lo, hi)
-        case None           => full
-      }
-    }
-    val normalized = normalizeBinary(unionShards(shards))
-    val conformed = job.declaredSchema.map(conformTo(normalized, _)).getOrElse(normalized)
-    writeParquet(conformed, job.output, job.maxRecordsPerFile)
+    sink(job, unionShards(shardUrls.map(u => jdbcRead(spark, job.copy(url = u)))))
   }
 
   /** A13: run one job end-to-end (source → normalize → conform → sink). */
   def runJob(spark: SparkSession, job: TableJob): Unit = {
     val raw = job.format match {
-      case "jdbc" =>
-        val full = spark.read.jdbc(job.url, job.tableName, job.properties)
-        keyBounds(full, job.primaryKey) match {
-          case Some((lo, hi)) => jdbcRangeRead(spark, job, lo, hi)
-          // empty table: no slices to plan — extract the (empty) frame
-          // directly rather than fabricating a [0,0] stride
-          case None => full
-        }
+      case "jdbc"    => jdbcRead(spark, job)
       case "parquet" => spark.read.parquet(job.url)
       case "csv"     => spark.read.option("header", "true").csv(job.url)
       case "json"    => spark.read.json(job.url)
       case other     => throw new IllegalArgumentException(s"unknown format: $other")
     }
+    sink(job, raw)
+  }
+
+  /** A4 → A1: plan the key bounds of the job's table, then range-read
+    * it in strides. An empty table has no slices to plan, so its
+    * (empty) full scan is extracted directly rather than fabricating a
+    * [0,0] stride. */
+  private def jdbcRead(spark: SparkSession, job: TableJob): DataFrame = {
+    val full = spark.read.jdbc(job.url, job.tableName, job.properties)
+    keyBounds(full, job.primaryKey) match {
+      case Some((lo, hi)) => jdbcRangeRead(spark, job, lo, hi)
+      case None           => full
+    }
+  }
+
+  /** normalize → conform → Snappy parquet, the tail of every job. */
+  private def sink(job: TableJob, raw: DataFrame): Unit = {
     val normalized = normalizeBinary(raw)
     val conformed = job.declaredSchema.map(conformTo(normalized, _)).getOrElse(normalized)
     writeParquet(conformed, job.output, job.maxRecordsPerFile)

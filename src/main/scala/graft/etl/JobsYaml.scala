@@ -1,7 +1,5 @@
 package graft.etl
 
-import scala.jdk.CollectionConverters._
-
 /** YAML job-list loader: the declarative form of the reference's
   * hard-coded `[]TableJob` slice (`extractor.go:255-258`) plus its DSN
   * map (`extractor.go:233-236`) — one file declares the whole extract
@@ -21,29 +19,26 @@ import scala.jdk.CollectionConverters._
   */
 object JobsYaml {
 
-  def parse(yaml: String): Seq[TableJob] = {
-    val root = new org.yaml.snakeyaml.Yaml()
-      .load[java.util.Map[String, AnyRef]](yaml)
-    val jobs = root.get("jobs") match {
-      case l: java.util.List[_] => l.asScala.toSeq
-      case other => throw new IllegalArgumentException(s"missing 'jobs' list: $other")
-    }
-    jobs.map { j =>
-      val m = j.asInstanceOf[java.util.Map[String, AnyRef]].asScala
-      def str(k: String): String = m.getOrElse(k,
-        throw new IllegalArgumentException(s"job missing '$k'")).toString
-      def opt(k: String): Option[String] = m.get(k).map(_.toString)
+  /** Rejects a malformed file with an IllegalArgumentException naming
+    * the job index and key: an empty file, a missing required key, or a
+    * non-positive `stride` / `max_records_per_file` (Spark would read a
+    * file cap ≤ 0 as "no limit"). */
+  def parse(yaml: String): Seq[TableJob] =
+    YamlEntry.list(yaml, "jobs", "job").map { j =>
+      def positive(k: String, default: Long): Long = j.opt(k).fold(default) { v =>
+        v.toLongOption.filter(_ > 0)
+          .getOrElse(throw j.bad(s"'$k' must be a positive integer, got '$v'"))
+      }
       TableJob(
-        tableName = str("table"),
-        output = str("output"),
-        primaryKey = str("primary_key"),
-        url = str("url"),
-        format = opt("format").getOrElse("jdbc"),
-        stride = opt("stride").map(_.toLong).getOrElse(10000L),
-        maxRecordsPerFile = opt("max_records_per_file").map(_.toLong).getOrElse(100000L),
-        declaredSchema = opt("schema_file").map(SchemaYaml.load))
+        tableName = j.str("table"),
+        output = j.str("output"),
+        primaryKey = j.str("primary_key"),
+        url = j.str("url"),
+        format = j.opt("format").getOrElse("jdbc"),
+        stride = positive("stride", 10000L),
+        maxRecordsPerFile = positive("max_records_per_file", 100000L),
+        declaredSchema = j.opt("schema_file").map(SchemaYaml.load))
     }
-  }
 
   def load(path: String): Seq[TableJob] =
     parse(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),

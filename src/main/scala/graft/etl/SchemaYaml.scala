@@ -1,7 +1,6 @@
 package graft.etl
 
 import org.apache.spark.sql.types._
-import scala.jdk.CollectionConverters._
 
 /** YAML → StructType loader: parity with the reference's sink-schema
   * loader (`/root/reference/schema/read_schema.go:20-54`, consuming
@@ -38,22 +37,14 @@ object SchemaYaml {
         throw new IllegalArgumentException(s"unsupported parquet type: $other")
     }
 
-  def parse(yaml: String): StructType = {
-    val root = new org.yaml.snakeyaml.Yaml()
-      .load[java.util.Map[String, AnyRef]](yaml)
-    val fields = root.get("schema") match {
-      case l: java.util.List[_] => l.asScala.toSeq
-      case other => throw new IllegalArgumentException(s"missing 'schema' list: $other")
-    }
-    StructType(fields.map { f =>
-      val m = f.asInstanceOf[java.util.Map[String, AnyRef]].asScala
-      val name = m("name").toString
-      val t = m("type").toString
-      val conv = m.get("convertedtype").map(_.toString)
-      val nullable = !m.get("repetitiontype").map(_.toString.toUpperCase).contains("REQUIRED")
-      StructField(name, sparkType(t, conv), nullable = nullable)
+  /** Rejects a malformed file with an IllegalArgumentException naming
+    * the field index and key: an empty file or a field without `name`
+    * or `type`. */
+  def parse(yaml: String): StructType =
+    StructType(YamlEntry.list(yaml, "schema", "schema field").map { f =>
+      StructField(f.str("name"), sparkType(f.str("type"), f.opt("convertedtype")),
+        nullable = !f.opt("repetitiontype").map(_.toUpperCase).contains("REQUIRED"))
     })
-  }
 
   def load(path: String): StructType =
     parse(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),

@@ -117,21 +117,6 @@ object Extras {
       .orderBy(col("dirty_key"), col("match_key"))
   }
 
-  /** The blocked-quadratic baseline (the oracle's literal shape): every
-    * (dirty, clean) pair within a nation block gets a thresholded
-    * levenshtein. Correct, but block-pair volume grows quadratically in
-    * rows-per-nation — kept for ScaleSmoke's measured comparison. */
-  def fuzzyMatchBlocked(s: SparkSession, d: String): DataFrame = {
-    val cust = Tables.customer(s, d)
-    dirtyCustomers(cust)
-      .join(cust, col("dn") === col("c_nationkey"))
-      .withColumn("dist",
-        levenshtein(col("dirty_name"), col("c_name"), 1).cast("int"))
-      .filter(col("dist") >= 0)
-      .select(col("dirty_key"), col("c_custkey").as("match_key"), col("dist"))
-      .orderBy(col("dirty_key"), col("match_key"))
-  }
-
   private[operators] def roundTripDir(fmt: String): String =
     s"${System.getProperty("java.io.tmpdir")}/graft_roundtrip/$fmt"
 

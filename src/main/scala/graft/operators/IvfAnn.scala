@@ -540,7 +540,7 @@ object IvfAnn {
   private[graft] val adjacencyFlatBroadcastMaxCells: Long = 131072L
 
   /** Routing point between the flat and grouped adjacency builds,
-    * measured in ScaleSmoke ADJSCALE (SCALE.md round 11): the flat
+    * measured at scale (SCALE.md round 11): the flat
     * join is quadratic in ncells but constant-light per pair (0.51 /
     * 1.58 / 5.28 / 39.2 s at 8k / 16k / 32k / 100k cells — clean n²);
     * the grouped build pays a coarse Lloyd over the centroid set plus

@@ -49,7 +49,7 @@ object LlmOps {
   /** `fan = true` spreads the compact doc rows across the cores BEFORE
     * the shingle blowup — a single-row-group fixture scan otherwise
     * runs the whole tokenize+shingle+explode chain of every consumer
-    * on one core (ProfileOne r17: 1-1.6 s single-task stages in
+    * on one core (r17 stage profile: 1-1.6 s single-task stages in
     * q89/q272). No-op on a multi-split table (Spread scaladoc).
     * OPT-IN, not the default: the interleaved A/B (r17) measured the
     * fan-out per consumer family — decisive wins where the exploded
@@ -404,41 +404,6 @@ object LlmOps {
     else ("banded", simhashBandedPairs(sig, uniq))
   }
 
-  /** q216's banding fan-out, for scale measurement (ScaleSmoke
-    * SIMHASH100X): per band over DISTINCT signatures — bucket count,
-    * max bucket, and Σ sz² (the band's candidate-join volume) — plus
-    * the signature-diversity row the banded join's cost tracks. */
-  private[graft] def simhashBandProfile(s: SparkSession, d: String): DataFrame = {
-    val tokens = Tables.documents(s, d)
-      .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
-    val sig = simhashAgg(tokens)
-    val uniq = sig.select(col("simhash")).distinct()
-    val bb = uniq.select(col("simhash"),
-        explode(array((0 to 3).map(lit): _*)).as("band"))
-      .withColumn("bv", expr("shiftright(simhash, band * 8) % 256"))
-    bb.groupBy("band", "bv").agg(count(lit(1)).as("sz"))
-      .groupBy("band").agg(count(lit(1)).as("n_buckets"),
-        max(col("sz")).as("max_bucket"),
-        sum(col("sz") * col("sz")).as("cand_volume"))
-      .orderBy("band")
-  }
-
-  /** q216b's fan-out under the same lens: per 16-bit band over distinct
-    * 64-bit signatures. */
-  private[graft] def simhash64BandProfile(s: SparkSession, d: String): DataFrame = {
-    val tokens = Tables.documents(s, d)
-      .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
-    val uniq = simhash64Agg(tokens)
-      .select("simhash", "bv0", "bv1", "bv2", "bv3").distinct()
-    val bb = uniq.select(posexplode(
-      array(col("bv0"), col("bv1"), col("bv2"), col("bv3"))).as(Seq("band", "bv")))
-    bb.groupBy("band", "bv").agg(count(lit(1)).as("sz"))
-      .groupBy("band").agg(count(lit(1)).as("n_buckets"),
-        max(col("sz")).as("max_bucket"),
-        sum(col("sz") * col("sz")).as("cand_volume"))
-      .orderBy("band")
-  }
-
   /** Shared q216/q216c oracle: banded candidates + exact bit_count
     * verify in DuckDB — route-agnostic (both Spark branches are exact,
     * so any route matches this). */
@@ -571,7 +536,7 @@ object LlmOps {
 
   /** THE production near-dup threshold (t = 0.8), shared by q44's
     * verify filter + oracle, q43b's declaration, DedupSpec's recall
-    * certification, and RecallCheck — one constant so a retune cannot
+    * certification — one constant so a retune cannot
     * leave the verify filter and the oracle/certificate at different
     * thresholds. Matched to the 8×4 banding S-curve: miss probability
     * (1−t⁴)⁸ ≤ 1.5% at t = 0.8. */
@@ -675,7 +640,7 @@ object LlmOps {
     // r18 scan-once A/B (VERDICT #3), REJECTED: ckpt'ing the compact
     // shingled frame for the lang-only (q89) path so tokenize+shingle
     // runs once instead of once per join side measured 2.3-3.2 s
-    // steady vs 1.6-1.7 s without (BenchOne sf0.1/32c) — the serial
+    // steady vs 1.6-1.7 s without (isolated reps, sf0.1/32c) — the serial
     // localCheckpoint write+read barrier of the array column costs
     // more than the ~0.24 s of duplicated 32-way shingle work it
     // saves, and the spread exchange is already reused by both sides
@@ -734,8 +699,8 @@ object LlmOps {
   private[graft] def bucketedShingleIndex(s: SparkSession, d: String): DataFrame = {
     // Plan-audit mode (VERDICT r9 #8): building the index is a
     // CONSTRUCTION-TIME WAREHOUSE MUTATION (saveAsTable + stale-
-    // generation deletion), so plan-only tooling (PlanAuditSpec,
-    // PlanDump — anything running under Ckpt.auditMode) must never
+    // generation deletion), so plan-only tooling (PlanAuditSpec —
+    // anything running under Ckpt.auditMode) must never
     // trigger it. In audit mode return the logically-equivalent
     // UNBUCKETED exploded frame instead: same columns, same rows, full
     // pre-materialization lineage for the audit to walk — and zero
@@ -791,9 +756,7 @@ object LlmOps {
     s.table(name)
   }
 
-  /** q255b's probe body over the pre-exploded bucketed index — shared
-    * with ScaleSmoke's DELTAPROBE so the smoke always times the plan
-    * the declared query ships. */
+  /** q255b's probe body over the pre-exploded bucketed index. */
   private[graft] def bucketedDeltaPairs(
       idx: DataFrame, deltaSh: DataFrame, t10: Int): DataFrame = {
     val a = idx.select(col("doc_id").as("a_id"), col("sz").as("a_sz"),
@@ -814,9 +777,8 @@ object LlmOps {
     * shingle inventory: exact-Jaccard pairs (a_id < b_id) at t10/10
     * whose LARGER element lies in `shDelta`. `shIndex` models the
     * persisted corpus shingle inventory (callers checkpoint/persist it
-    * untimed); only the delta side is "today's" work — the per-day cost
-    * shape ScaleSmoke's DELTAPROBE mode measures against a fixed-size
-    * delta on a growing corpus. */
+    * untimed); only the delta side is "today's" work, so the per-day
+    * cost tracks the delta, not the growing corpus. */
   private[graft] def deltaNearDupProbe(
       shIndex: DataFrame, shDelta: DataFrame, t10: Int): DataFrame = {
     val exAll = shIndex.select(col("doc_id").as("a_id"), col("sz").as("a_sz"),
@@ -845,8 +807,8 @@ object LlmOps {
     * corpus removal (q82) — this cache is that persisted intermediate
     * (same contract as IvfAnn.cachedIndex: RNG-free derivation over an
     * immutable fixture dir, so the cached frame equals a recomputation
-    * bit-for-bit). Tools that MEASURE the join itself (ScaleSmoke,
-    * RecallCheck) call jaccardCountJoinAt, which stays uncached. */
+    * bit-for-bit). Code that measures or certifies the join itself
+    * (DedupSpec) calls jaccardCountJoinAt, which stays uncached. */
   private val pairStatsCache = new graft.plans.DerivationCache[DataFrame]
 
   /** The shared pair-graph build, promoted to the BUCKETED layout
@@ -1366,9 +1328,6 @@ object LlmOps {
     Q("q216c_simhash_neighbors_routed", simhashNeighborsOracleSql)(
       (s, d) => adaptiveSimhashNeighbors(s, d)._2),
 
-    // (q216's banding fan-out profiler lives below as
-    // simhashBandProfile — measurement tool, not a declared query.)
-
     // q216's 100×-Heaps scale path: 64-bit simhash, 4 bands × 16 bits.
     // SCALE.md round 8 measured the 32-bit/8-bit-band form saturating
     // its 256-bucket band space at 500k docs (Σsz² up 92×, wall-clock
@@ -1401,7 +1360,7 @@ object LlmOps {
     }) { (s, d) =>
       // fan out before the signature build: one sha256 per token makes
       // the serial single-split chain this query's hot spot
-      // (ProfileOne r17: a 740 ms single-task stage; no-op at scale)
+      // (r17 stage profile: a 740 ms single-task stage; no-op at scale)
       val tokens = Tables.documents(s, d).spread(col("doc_id"))
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
       val sig = simhash64Agg(tokens).ckpt() // members + distinct
@@ -2430,8 +2389,6 @@ object LlmOps {
     // never corpus². (At 100 TB the index side is the persisted
     // shingle inventory — the same snapshot artifact cachedPairStats
     // models; only delta shingles are computed fresh each day.)
-    // (core factored into deltaNearDupProbe so ScaleSmoke can time the
-    // per-day probe against a FIXED-size delta while the corpus grows)
     Q("q255_delta_neardup", deltaNearDupOracleSql) { (s, d) =>
       val mx = Tables.documents(s, d).agg(max(col("doc_id")).as("mx"))
       // consumed by BOTH the index side and the delta probe side —

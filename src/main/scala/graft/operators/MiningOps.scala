@@ -411,7 +411,7 @@ object MiningOps {
       // `first(x) OVER (ORDER BY day ROWS CURRENT..UNBOUNDED FOLLOWING)`
       // is an UnboundedFollowingWindowFunctionFrame, which Spark
       // re-evaluates from scratch per row — O(rows²) per partition
-      // (ProfileOne r17: 2 × ~620 ms single-task window stages, the
+      // (r17 stage profile: 2 × ~620 ms single-task window stages, the
       // whole query's hot spot). Days are unique per pri (calendar), so
       // `last(x ignore nulls)` over day DESC running is exactly equal
       // and streams in O(rows); the extra per-partition sort is noise.

@@ -105,11 +105,9 @@ object PipelineOps {
     *    survivors-only corpus).
     *
     * Returns the per-stage survivor frames (lazily — the caller
-    * decides what to materialize) plus the two plan tables. PIPE10X
-    * (ScaleSmoke) measures the composed wall against the sum of the
-    * stages' isolated steady states and asserts parity against
-    * independently-run cold stages; PipelineSpec pins the same parity
-    * on the sf0.001 fixture. */
+    * decides what to materialize) plus the two plan tables.
+    * PipelineSpec pins parity against independently-run stages on the
+    * sf0.001 fixture. */
   final case class CurationRun(stages: Seq[(String, DataFrame)],
       survivors: DataFrame, mixture: DataFrame, shards: DataFrame)
 
@@ -517,7 +515,7 @@ object PipelineOps {
       bucket = "bkt", order = Seq(v), value = "cnt", out = "cum")
       .withColumn("below", col("cum") - col("cnt"))
       .select(col("source"), col(v), col("below"))
-    // Plan-only tooling (PlanAuditSpec/PlanDump under Ckpt.auditMode)
+    // Plan-only tooling (PlanAuditSpec under Ckpt.auditMode)
     // must not execute the skew probe; audit the BOUNDED branch — it
     // is the scale-safe plan whose funnel-freeness matters.
     val maxTie =
@@ -825,7 +823,7 @@ object PipelineOps {
         |FROM f ORDER BY source""".stripMargin) { (s, d) =>
       val docs = Tables.documents(s, d)
       // r18 spread A/B on the unigramStats feed, REJECTED: interleaved
-      // AbConf (graft.spread) med 3.67 s (on) vs 2.87 s (off) — the
+      // in-JVM A/B med 3.67 s (on) vs 2.87 s (off) — the
       // fused explode+two-level-aggregate downstream loses to the
       // extra exchange, the same pattern r17 recorded at q269.
       val u = TrainingOps.unigramStats(docs)

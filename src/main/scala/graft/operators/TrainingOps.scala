@@ -782,8 +782,8 @@ object TrainingOps {
            |) h""".stripMargin
       Seq(3, 5, 8).map(legSql).mkString("", "\nUNION ALL\n", "\nORDER BY n")
     }) { (s, d) =>
-      // r18 rewrite (was: three independent per-n legs, ProfileOne
-      // showed them running SERIALLY as three single-task 0.5-1.2 s
+      // r18 rewrite (was: three independent per-n legs, a stage
+      // profile showed them running SERIALLY as three single-task 0.5-1.2 s
       // gram chains — the r17 spread A/B on THAT shape measured +10%
       // because each leg bought its own exchange): tokenize once, tag
       // every width's distinct grams into ONE (n, gram) frame via a

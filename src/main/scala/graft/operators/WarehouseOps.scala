@@ -212,8 +212,8 @@ object WarehouseOps {
         .select(col("s_suppkey"))
       // r18 A/B, REJECTED: dropping the pre-distinct (count(DISTINCT)
       // dedups per group anyway, partial agg keyed (group, suppkey))
-      // removes one exchange but measured a wash-to-worse (BenchOne
-      // same-window: 1.5-2.3 s with distinct vs 1.8-2.9 s without) —
+      // removes one exchange but measured a wash-to-worse (isolated
+      // reps, same window: 1.5-2.3 s with distinct vs 1.8-2.9 s without) —
       // the surviving countDistinct exchange carries (brand, type,
       // size, suppkey) STRING keys where the dropped one carried two
       // longs, so the bytes saved by the removed exchange come back

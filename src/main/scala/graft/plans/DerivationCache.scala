@@ -93,8 +93,8 @@ object DerivationCache {
     b.result()
   }
 
-  /** Measurement-harness hygiene, shared by Bench/BenchOne/ScaleSmoke/
-    * RouteProbe (one definition — the protocol changed twice already):
+  /** Measurement-harness hygiene, run by [[graft.Bench.runOnce]] — the
+    * one timing rep behind Bench and tools.Dev — after every rep:
     * unpersist every persistent RDD EXCEPT the cache-owned shared
     * derivations, whose localCheckpoint blocks are unrecoverable
     * (lineage truncated) and reused across queries. `blocking = true`
@@ -113,7 +113,7 @@ object DerivationCache {
   /** Full eviction (the steady-state bench protocol, VERDICT r11 #6):
     * drop every cached derivation and release its storage so the next
     * consumer rebuilds from scratch — reproducing the fresh-session
-    * (BenchOne) cost model inside a long-lived bench process. The
+    * cost model inside a long-lived bench process. The
     * in-bench numbers include warm-sharing from earlier queries in the
     * sweep; evicting before a query's steady reps removes exactly that
     * sharing, which is what made the last three rounds' in-bench-vs-

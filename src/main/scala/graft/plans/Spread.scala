@@ -8,11 +8,12 @@ import org.apache.spark.sql.{Column, DataFrame}
   * files, so their scans offer ONE split and every narrow operation
   * pipelined on top (tokenize, shingle, explode, signature hashing,
   * checkpoint write, shuffle-write of a join side) runs on one core
-  * regardless of the session's parallelism — ProfileOne shows the hot
-  * document queries spending 60-80% of their wall in such single-task
-  * stages. `spread` hash-redistributes the frame across the session's
-  * default parallelism BEFORE the heavy per-row work, shuffling the
-  * compact pre-blowup rows (docs, not exploded shingles), and no-ops
+  * regardless of the session's parallelism — stage profiles (`tools.Dev
+  * profile`) show the hot document queries spending 60-80% of their
+  * wall in such single-task stages. `spread` hash-redistributes the
+  * frame across the session's default parallelism BEFORE the heavy
+  * per-row work, shuffling the compact pre-blowup rows (docs, not
+  * exploded shingles), and no-ops
   * when the lineage already offers enough partitions — the case for
   * any real multi-file / multi-row-group table at scale, so production
   * plans keep their exchange counts.
@@ -28,15 +29,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Spread {
 
-  /** Measurement seam (AbConf): lets an in-JVM A/B interleave
-    * spread-on vs spread-off reps inside one session, the only way to
-    * resolve a ~0.5 s code-change effect under this host's degraded
-    * ambient windows. Production and bench never touch it. */
-  @volatile var enabled: Boolean = true
-
   implicit final class SpreadOps(private val df: DataFrame) extends AnyVal {
     def spread(keys: Column*): DataFrame = {
-      if (!enabled || Ckpt.auditMode) return df
+      if (Ckpt.auditMode) return df
       // Enforce the exchange-free-lineage precondition (ADVICE r17):
       // on a shuffled lineage the getNumPartitions probe below would
       // eagerly materialize AQE query stages at PLAN time. Rather than

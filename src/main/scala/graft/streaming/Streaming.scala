@@ -1770,9 +1770,6 @@ object Streaming {
   private def headRecordPath(p: String, seq: Long) =
     new org.apache.hadoop.fs.Path(s"$p/head/$seq")
 
-  // private[graft], not [streaming]: the HEADTAIL economics leg
-  // (tools.ScaleSmoke) drives the real writer to price records at the
-  // never-compacting extreme without paying 4000 data-plane batches
   private[graft] def writeHeadRecord(spark: SparkSession, p: String,
       seq: Long, gen: Long, tail: Seq[Long]): Unit = {
     val (fs, _) = hfs(spark, s"$p/head")

@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** AQE skew-join proof: the runtime re-plan splits an oversized shuffle
   * partition into multiple tasks (skew=true in the final adaptive
-  * plan). Wall-clock on local[32] is shuffle-write dominated (measured
-  * in ScaleSmoke — see SCALE.md), so the structural assertion is the
+  * plan). Wall-clock on local[32] is shuffle-write dominated (see
+  * SCALE.md), so the structural assertion is the
   * reliable artifact: the straggler task is gone from the plan.
   */
 class AqeSkewSpec extends AnyFunSuite {

@@ -106,6 +106,25 @@ class EtlSpec extends AnyFunSuite {
     assert(jobs.head.stride == 10000L && jobs.head.maxRecordsPerFile == 100000L)
     assert(jobs.head.format == "jdbc")
     assert(jobs(1).format == "parquet" && jobs(1).stride == 500L)
+    // malformed files fail naming the job index and key — not an NPE,
+    // a `/ by zero` at read time, or a silently uncapped sink (Spark
+    // reads maxRecordsPerFile ≤ 0 as "no limit")
+    def rejects(parse: => Any, msg: String): Unit = {
+      val e = intercept[IllegalArgumentException](parse)
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    val job = "  - table: t\n    output: /o\n    primary_key: id\n    url: jdbc:x\n"
+    def jobs2(extra: String) = graft.etl.JobsYaml.parse(s"jobs:\n$job$job$extra")
+    rejects(jobs2("    stride: 0\n"), "job 1: 'stride' must be a positive integer")
+    rejects(jobs2("    max_records_per_file: 0\n"), "job 1: 'max_records_per_file'")
+    rejects(jobs2("    max_records_per_file: -5\n"), "job 1: 'max_records_per_file'")
+    rejects(jobs2("    stride: ten\n"), "job 1: 'stride'")
+    rejects(graft.etl.JobsYaml.parse("jobs:\n  - table: t\n"), "job 0: missing 'output'")
+    rejects(graft.etl.JobsYaml.parse(""), "missing 'jobs' list")
+    rejects(SchemaYaml.parse(""), "missing 'schema' list")
+    rejects(SchemaYaml.parse("schema:\n  - name: id\n"), "schema field 0: missing 'type'")
+    rejects(Extract.jdbcRangeRead(spark,
+      TableJob("t", "/o", "id", "jdbc:x", stride = 0L), 0L, 10L), "stride must be positive")
   }
 
   test("runJob end-to-end on a file source (A13)") {
