@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.durable.Log
 import graft.plans.Ckpt.CkptOps
 import graft.plans.PrefixScan
 import graft.{Q, Tables}
@@ -130,14 +131,15 @@ object PipelineOps {
     * as a one-row `_SUCCESS`-gated parquet at `runDir/meta`; every
     * later invocation must present the SAME dataset — resuming another
     * corpus's completed frontiers would silently return a chimera of
-    * two runs (the IvfMaintainer fresh-construction lesson, round 11).
+    * two runs (the IvfMaintainer fresh-construction lesson).
     * A crash mid-record leaves an unmarked dir and the retry rewrites
     * it; no rename anywhere. */
-  private def checkOrRecordRunMeta(s: SparkSession, runDir: String,
+  private def checkOrRecordRunMeta(s: SparkSession, log: Log,
       d: String): Unit = {
     val norm = d.replaceAll("/+$", "")
+    val runDir = log.root
     val metaDir = s"$runDir/meta"
-    if (graft.streaming.Streaming.markerExists(s, metaDir)) {
+    if (log.marker("meta")) {
       val recorded = s.read.parquet(metaDir).head().getString(0)
       require(recorded == norm,
         s"curation run log $runDir holds stage frontiers for dataset " +
@@ -153,94 +155,74 @@ object PipelineOps {
     * [[retireRun]] gates on. */
   private[graft] val CurationStages = 5
 
-  /** @param runDir opt-in durable run log (VERDICT r14 #1). Without it
-    * each stage frontier is localCheckpoint'ed — executor memory, gone
-    * on any crash, so a 100-TB curation run dying at the mixture-plan
-    * stage re-pays dedup + clustering + decontamination from zero. With
-    * it, each frontier persists as `_SUCCESS`-gated parquet at
-    * `runDir/stage_N` under the IvfMaintainer log conventions: written
-    * straight to its final name (an unmarked dir is invisible and
-    * overwritten on retry — no renames), foreign-dir-tolerant,
-    * overwrite-idempotent. A re-invocation with the same runDir SKIPS
-    * every completed stage — its frontier is READ, and the stage's
-    * upstream jobs (the pair graph, CC, gate signals) never execute,
-    * because each stage body is by-name and only evaluated when its
-    * marker is absent — and resumes at the first unmarked stage. The
-    * frontiers are slim ((doc_id), plus (source, n_tok) at stage 5), so
-    * the extra write is one column-pruned job per stage, trivial next
-    * to the stage itself at any scale.
+  /** @param runDir opt-in durable run log. Without it each stage
+    * frontier is localCheckpoint'ed — executor memory, gone on any
+    * crash, so a 100-TB curation run dying at the mixture-plan stage
+    * re-pays dedup + clustering + decontamination from zero. With it,
+    * each frontier persists as a `_SUCCESS`-gated data dir
+    * `runDir/stage_N` of a [[graft.durable.Log]]. A re-invocation with
+    * the same runDir SKIPS every completed stage — its frontier is
+    * READ, and the stage's upstream jobs (the pair graph, CC, gate
+    * signals) never execute, because each stage body is by-name and
+    * only evaluated when its marker is absent — and resumes at the
+    * first unmarked stage. The frontiers are slim ((doc_id), plus
+    * (source, n_tok) at stage 5), so the extra write is one
+    * column-pruned job per stage, trivial next to the stage itself at
+    * any scale.
     *
-    * Single-writer, ENFORCED (VERDICT r15 #3): entry takes
-    * `runDir/run.lock` by exclusive create (the cleanup.lock
-    * precedent) and releases it only on completion, so a second
-    * concurrent invocation over one runDir — two writers of one log,
-    * the same hazard as two live IvfMaintainers — refuses loudly
-    * instead of silently interleaving frontier writes. A lock orphaned
-    * by a crash also refuses (deliberate fail-closed, like
-    * cleanup.lock): the runbook remediation is to delete run.lock
-    * after confirming the previous invocation is dead, then re-invoke —
-    * the resume then reads every completed frontier as usual. On
-    * filesystems without atomic create-no-overwrite the lock degrades
-    * to advisory, same as pairing.txt. Kill/resume + injected-fault +
-    * lock laws: PipelineSpec. */
+    * Single-writer, enforced: entry takes the `run.lock` claim and
+    * releases it only on completion, so a second concurrent invocation
+    * over one runDir — two writers of one log, the same hazard as two
+    * live IvfMaintainers — refuses loudly instead of silently
+    * interleaving frontier writes. A lock orphaned by a crash also
+    * refuses (fail-closed): remediation is [[forceUnlockRun]], or
+    * deleting run.lock after confirming the previous invocation is
+    * dead; the resume then reads every completed frontier as usual.
+    * Kill/resume + injected-fault + lock laws: PipelineSpec. */
   private[graft] def curationRun(s: SparkSession, d: String,
       runDir: Option[String] = None): CurationRun = {
     val q = graft.SparkEntry.queries
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
-    runDir.foreach { rd =>
-      val (lfs, lock) = runLockPath(s, rd)
-      // The CLAIM is the exclusive create; the writer-identity token
-      // (pid@host — the liveness probe [[forceUnlockRun]] reads) lands
-      // with the same stream's close. A crash inside that sliver
-      // leaves a claimed-but-unstamped lock, which forceUnlockRun
-      // refuses (fail-closed: an unstamped claim may belong to a live
-      // writer mid-stamp) — the manual runbook delete remains the
+    val log = runDir.map(Log(s, _))
+    log.foreach { l =>
+      val rd = l.root
+      // A crash between the claim's create and its stamp leaves an
+      // unstamped lock, which forceUnlockRun refuses (the claimant may
+      // be live mid-stamp); the manual runbook delete remains the
       // remediation for that window only.
-      try {
-        val out = lfs.create(lock, false)
-        try out.write(runLockToken().getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      catch { case e: java.io.IOException =>
-        // only an exclusive-create loss is the contract message
-        // (review r16 pass 2: a permissions/filesystem failure must
-        // not masquerade as "another writer holds the lock")
-        if (lfs.exists(lock)) throw new IllegalStateException(
-          s"curation run log $rd is locked ($rd/run.lock exists): a " +
-            "runDir has ONE writer at a time — a concurrent invocation " +
-            "is live, or a previous one crashed without releasing the " +
-            "lock. If the previous invocation is confirmed dead, unlock " +
-            "with forceUnlockRun (it probes the recorded writer identity " +
-            "and refuses while liveness can't be ruled out) and " +
-            "re-invoke; the resume reads every completed frontier.", e)
-        else throw e
-      }
+      if (!l.claim("run.lock")) throw new IllegalStateException(
+        s"curation run log $rd is locked ($rd/run.lock exists): a " +
+          "runDir has ONE writer at a time — a concurrent invocation " +
+          "is live, or a previous one crashed without releasing the " +
+          "lock. If the previous invocation is confirmed dead, unlock " +
+          "with forceUnlockRun (it probes the recorded writer identity " +
+          "and refuses while liveness can't be ruled out) and " +
+          "re-invoke; the resume reads every completed frontier.")
       // the chimera/pending-retirement refusals are clean no-ops, not
       // crashes — release the lock so the CORRECT invocation that
       // follows isn't blocked by an orphan these guards created
       try {
-        require(!lfs.exists(new org.apache.hadoop.fs.Path(s"$rd/retired")),
+        require(!l.exists("retired"),
           s"curation run log $rd has a pending retirement " +
             s"($rd/retired exists): finish it with retireRun, or use a " +
             "fresh runDir — new frontiers written under a pending " +
             "retirement would be deleted by its retry")
-        checkOrRecordRunMeta(s, rd, d)
-      } catch { case e: Throwable => lfs.delete(lock, false); throw e }
+        checkOrRecordRunMeta(s, l, d)
+      } catch { case e: Throwable => l.delete("run.lock"); throw e }
     }
     // each stage frontier is materialized: a real pipeline materializes
     // its stage outputs, and here the funnel counts plus the two plan
     // tables would otherwise re-execute the overlapping upstream DAG
     // (pair graph joins, gate signals) once per action
-    def frontier(n: Int)(compute: => DataFrame): DataFrame = runDir match {
+    def frontier(n: Int)(compute: => DataFrame): DataFrame = log match {
       case None =>
         stageProbe(n)
         compute.ckpt()
-      case Some(rd) =>
-        val stageDir = s"$rd/stage_$n"
-        if (!graft.streaming.Streaming.markerExists(s, stageDir)) {
+      case Some(l) =>
+        val stageDir = s"${l.root}/stage_$n"
+        if (!l.marker(s"stage_$n")) {
           stageProbe(n)
           compute.write.mode("overwrite").parquet(stageDir)
         }
@@ -267,10 +249,7 @@ object PipelineOps {
     // completion: every frontier is durable (or the run was in-memory) —
     // release the writer lock. A crash anywhere above leaves it held,
     // which is the fail-closed contract the entry guard documents.
-    runDir.foreach { rd =>
-      val (lfs, lock) = runLockPath(s, rd)
-      lfs.delete(lock, false)
-    }
+    log.foreach(_.delete("run.lock"))
     CurationRun(
       Seq("ingested" -> docs.select("doc_id"), "exact_dedup" -> s1,
         "near_dup" -> s2, "decontaminated" -> s3, "quality" -> s4),
@@ -280,181 +259,80 @@ object PipelineOps {
       shardPlan(surv.select("doc_id", "n_tok")))
   }
 
-  private def runLockPath(s: SparkSession, runDir: String) = {
-    val p = new org.apache.hadoop.fs.Path(s"$runDir/run.lock")
-    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def localHostName: String =
-    try java.net.InetAddress.getLocalHost.getHostName
-    catch { case _: java.net.UnknownHostException => "localhost" }
-
-  /** The writer-identity token [[curationRun]] stamps into run.lock —
-    * magic + `writer=<pid>@<host>` + end sentinel, the same framing
-    * discipline as the head records. PID-on-host is the strongest
-    * liveness handle available without a heartbeat protocol: exact on
-    * the writer's own host (modulo OS pid reuse, which errs REFUSING —
-    * the safe direction), explicitly unprobeable from any other. */
-  private def runLockToken(): String = {
-    val pid = ProcessHandle.current().pid()
-    s"graft-run-lock-v1\nwriter=$pid@$localHostName\nend\n"
-  }
-
-  /** Tooled remediation for an orphaned `run.lock` (VERDICT r16 #6 —
-    * the runbook step was a bare manual delete, one typo away from
-    * unlocking a LIVE run). Deletes the lock ONLY when the stamped
-    * writer is provably dead: the token names this host AND its pid no
-    * longer exists. Everything else refuses loudly, mirroring
-    * [[retireRun]]'s fail-closed posture — a live pid (or a reused
-    * one), a lock stamped on another host (liveness unprobeable from
-    * here), a token naming THIS process (the writer thread may still
-    * be live in this JVM — curationRun in this process either finishes
-    * and releases it, or truly crashed, in which case restarting the
-    * JVM makes the pid probeable), and an unstamped/malformed token (a
-    * claim whose stamp hasn't landed yet belongs to a possibly-live
-    * claimant). True iff the lock was deleted; false iff there was no
-    * lock to delete (including one released mid-probe). After a
-    * successful unlock, re-invoking [[curationRun]] resumes from the
-    * completed frontiers as usual.
-    *
-    * Honesty note on the probe→delete window: two CONCURRENT unlock
-    * operators against the same dead writer are idempotent (both
-    * confirm the same dead pid; the loser's delete is a no-op), but if
-    * a second operator unlocks AND a new writer claims between this
-    * call's probe and its delete, the delete removes the NEW writer's
-    * lock — a two-operator-plus-instant-reclaim race no create/delete
-    * filesystem primitive can close. Accepted: the manual-delete
-    * runbook step this tool replaces carried the same window with NO
-    * liveness probe at all; run one unlock operator at a time. */
-  private[graft] def forceUnlockRun(s: SparkSession, runDir: String): Boolean = {
-    val (lfs, lock) = runLockPath(s, runDir)
-    def refuse(why: String): Nothing = throw new IllegalStateException(
-      s"forceUnlockRun: refusing to delete $runDir/run.lock — $why. " +
-        "Deleting a live writer's lock readmits the two-writer hazard " +
-        "the lock exists to prevent; remove it manually only with " +
-        "out-of-band proof the writer is dead.")
-    val content: Option[String] =
-      try {
-        if (!lfs.exists(lock)) None
-        else {
-          val buf = new Array[Byte](lfs.getFileStatus(lock).getLen.toInt)
-          val in = lfs.open(lock)
-          try in.readFully(0L, buf) finally in.close()
-          Some(new String(buf, java.nio.charset.StandardCharsets.UTF_8))
-        }
-      } catch {
-        // vanished mid-probe = the writer completed and released it —
-        // the outcome the caller wanted, minus anything left to delete
-        case _: java.io.FileNotFoundException => None
-      }
-    content match {
-      case None => false
-      case Some(c) =>
-        val lines = c.split("\n", -1).map(_.trim).filter(_.nonEmpty)
-        val writer =
-          if (lines.length == 3 && lines(0) == "graft-run-lock-v1" &&
-              lines(1).startsWith("writer=") && lines(2) == "end")
-            Some(lines(1).stripPrefix("writer=")) else None
-        writer match {
-          case None => refuse("the lock carries no complete writer " +
-            "token (a pre-token lock, or a claim whose stamp hasn't " +
-            "landed yet — the claimant may be live)")
-          case Some(w) => w.split("@", 2) match {
-            // width-bounded (review r17 pass 1): an unbounded digit
-            // run would overflow toLong into a NumberFormatException
-            // instead of the malformed-token refusal
-            case Array(pidS, host) if pidS.matches("[0-9]{1,18}") =>
-              if (host != localHostName)
-                refuse(s"the lock was taken on host '$host' — writer " +
-                  "liveness is unprobeable from this one; run the " +
-                  "unlock there")
-              else {
-                val pid = pidS.toLong
-                if (pid == ProcessHandle.current().pid())
-                  refuse("the lock names THIS process — its writer " +
-                    "may still be live in this JVM; let it finish, or " +
-                    "restart the JVM and unlock from there")
-                val h = ProcessHandle.of(pid)
-                if (h.isPresent && h.get.isAlive)
-                  refuse(s"writer $w is still alive")
-                lfs.delete(lock, false)
-                true
-              }
-            case _ => refuse(s"the lock's writer token '$w' is malformed")
-          }
-        }
+  /** Tooled remediation for an orphaned `run.lock`: deletes the lock
+    * ONLY when the stamped writer is provably dead — the token names
+    * this host AND its pid no longer exists ([[graft.durable.Log.unlock]]).
+    * Everything else refuses loudly, mirroring [[retireRun]]'s
+    * fail-closed posture: a live (or reused) pid, a lock stamped on
+    * another host, a token naming THIS process (curationRun in this
+    * JVM either finishes and releases it, or truly crashed, and a JVM
+    * restart makes the pid probeable), and an unstamped or malformed
+    * token. True iff the lock was deleted; false iff there was no lock
+    * to delete (including one released mid-probe). After a successful
+    * unlock, re-invoking [[curationRun]] resumes from the completed
+    * frontiers as usual. Run one unlock operator at a time. */
+  private[graft] def forceUnlockRun(s: SparkSession, runDir: String): Boolean =
+    Log(s, runDir).unlock("run.lock") { why =>
+      throw new IllegalStateException(
+        s"forceUnlockRun: refusing to delete $runDir/run.lock — $why. " +
+          "Deleting a live writer's lock readmits the two-writer hazard " +
+          "the lock exists to prevent; remove it manually only with " +
+          "out-of-band proof the writer is dead.")
     }
-  }
 
-  /** Opt-in retention for curation run logs (VERDICT r15 #3):
-    * completed runDirs otherwise accumulate forever. Retires a run's
-    * stage frontiers ONLY when the run is provably finished and
-    * unowned — every `stage_N` marker present (a completed prefix is
-    * exactly what a resume needs, so an in-flight run is never
-    * touched) and no `run.lock` held (a live writer, or a crashed one
-    * pending the runbook's lock removal, keeps its log). The caller
-    * decides WHEN a completed run is superseded — a newer completed
-    * run of the pipeline, an explicit operator decision — this pass
-    * only enforces that retirement cannot destroy a resumable
-    * frontier.
+  /** Opt-in retention for curation run logs: completed runDirs
+    * otherwise accumulate forever. Retires a run's stage frontiers ONLY
+    * when the run is provably finished and unowned — every `stage_N`
+    * marker present (a completed prefix is exactly what a resume needs,
+    * so an in-flight run is never touched) and no `run.lock` held (a
+    * live writer, or a crashed one pending the runbook's lock removal,
+    * keeps its log). The caller decides WHEN a completed run is
+    * superseded; this pass only enforces that retirement cannot destroy
+    * a resumable frontier.
     *
-    * Marker-gated like the IvfMaintainer debris pass: an intent
-    * record (`runDir/retired`) is written AFTER the completeness
-    * check and BEFORE any deletion, so a crash mid-retirement is
-    * re-invokable — the retry sees the intent and finishes the
-    * (idempotent) deletes instead of mistaking the half-deleted log
-    * for an in-flight run and stranding the debris. [[curationRun]]
-    * refuses a runDir carrying the intent record for the same reason
-    * in reverse: a fresh run writing new frontiers under a pending
-    * retirement would hand them straight to the retry's delete pass.
+    * Marker-gated like the IvfMaintainer debris pass: an intent claim
+    * (`runDir/retired`) is taken AFTER the completeness check and
+    * BEFORE any deletion, so a crash mid-retirement is re-invokable —
+    * the retry sees the intent and finishes the (idempotent) deletes
+    * instead of mistaking the half-deleted log for an in-flight run.
+    * [[curationRun]] refuses a runDir carrying the intent for the same
+    * reason in reverse: new frontiers written under a pending
+    * retirement would go to the retry's delete pass.
     * Returns true iff the log was retired (including finishing a
     * crashed retirement). */
   private[graft] def retireRun(s: SparkSession, runDir: String): Boolean = {
-    val (lfs, lock) = runLockPath(s, runDir)
-    val intent = new org.apache.hadoop.fs.Path(s"$runDir/retired")
+    val log = Log(s, runDir)
     def deleteAll(): Boolean = {
-      (1 to CurationStages).foreach(n => lfs.delete(
-        new org.apache.hadoop.fs.Path(s"$runDir/stage_$n"), true))
-      lfs.delete(new org.apache.hadoop.fs.Path(s"$runDir/meta"), true)
-      lfs.delete(intent, false)
+      (1 to CurationStages).foreach(n => log.delete(s"stage_$n"))
+      log.delete("meta")
+      log.delete("retired")
       true
     }
-    // lock check FIRST, even for the finish-a-crashed-retirement arm
-    // (review r16 pass 3): intent + lock can coexist transiently while
-    // a racing writer and retirer resolve their Dekker exchange below,
-    // and a second retirer entering that window must yield to the
-    // lock, not treat the in-flight intent as a crashed one. A
-    // genuinely crashed retirement never holds the lock (retireRun
-    // never takes it).
-    if (lfs.exists(lock)) false
-    else if (lfs.exists(intent)) deleteAll() // finish a crashed retirement
-    else if (!(1 to CurationStages).forall(n =>
-        graft.streaming.Streaming.markerExists(s, s"$runDir/stage_$n")))
+    // lock check FIRST, even for the finish-a-crashed-retirement arm:
+    // intent + lock coexist transiently while a racing writer and
+    // retirer resolve their Dekker exchange below, and a second retirer
+    // entering that window must yield to the lock, not treat the
+    // in-flight intent as a crashed one. A genuinely crashed retirement
+    // never holds the lock (retireRun never takes it).
+    if (log.exists("run.lock")) false
+    else if (log.exists("retired")) deleteAll() // finish a crashed retirement
+    else if (!(1 to CurationStages).forall(n => log.marker(s"stage_$n")))
       false
     else {
       retireProbe()
-      // Exclusive-create loss vs real failure (ADVICE r16, mirroring
-      // the run.lock disambiguation in [[curationRun]]): two
-      // concurrent retirers can both pass the !exists(intent) check
-      // above, and the loser's create throws a raw IOException — which
-      // without the re-check would also masquerade a permissions/
-      // filesystem failure as a lost race. Intent present after the
-      // throw = the race, and the WINNER is actively retiring — yield
-      // (false), never treat its in-flight intent as a crashed one;
-      // absent = a real failure, rethrow.
-      try lfs.create(intent, false).close()
-      catch { case e: java.io.IOException =>
-        if (lfs.exists(intent)) return false else throw e
-      }
-      // Cross-check AFTER the intent write (review r16 pass 2 — the
-      // Dekker shape): a concurrent curationRun acquiring the lock
-      // between our lock check and the intent write would otherwise
-      // resume under a retirement. Both sides re-check the OTHER
-      // record after writing their own — curationRun checks `retired`
-      // while holding the lock — so whichever wrote second sees the
-      // other and backs off; a lock observed here means the writer may
-      // not have seen our intent yet, so WE yield.
-      if (lfs.exists(lock)) { lfs.delete(intent, false); false }
+      // two concurrent retirers can both pass the !exists(intent)
+      // check above: the loser of the claim yields (false) — the WINNER
+      // is actively retiring, so its intent is never a crashed one
+      if (!log.claim("retired")) false
+      // Cross-check AFTER the intent write (the Dekker shape): a
+      // concurrent curationRun taking the lock between our lock check
+      // and the intent write would otherwise resume under a
+      // retirement. Both sides re-check the OTHER record after writing
+      // their own — curationRun checks `retired` while holding the lock
+      // — so whichever wrote second sees the other and backs off; a
+      // lock observed here means the writer may not have seen our
+      // intent yet, so WE yield.
+      else if (log.exists("run.lock")) { log.delete("retired"); false }
       else deleteAll()
     }
   }

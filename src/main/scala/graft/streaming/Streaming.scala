@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Encoders}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
 
+import graft.durable.{Gate, Log}
+
 /** Structured Streaming surface (SURVEY §2B streaming): the same
   * declarative transforms as the batch EventsOps queries, applied to an
   * unbounded events stream. Batch/stream parity is asserted in
@@ -485,7 +487,7 @@ object Streaming {
     * [[IvfMaintainer.restore]] rebuilds the maintainer by applying
     * the completed deltas as ONE bulk append (order-insensitive under
     * a fixed quantizer — see the companion scaladoc; restore stays one
-    * job, never O(batches) planning rounds) and sets lastBatch to the
+    * job, never O(batches) planning rounds) and sets the gate's last batch to the
     * highest logged id, so the checkpoint-resumed stream's re-delivery
     * of the last uncommitted batch is the usual no-op. The law (StreamingSpec):
     * kill + restore + resume ≡ an uninterrupted run, in corpus content
@@ -494,7 +496,7 @@ object Streaming {
     * writeClustered on its own cadence. Alongside the data, every
     * applied delta and every completed generation writes a frontier
     * HEAD RECORD (`path/head/<n>` — see the head-record section at
-    * [[discoverFrontier]]) so restore never depends on a directory
+    * [[graft.durable.Log]]) so restore never depends on a directory
     * listing to find the newest state (VERDICT r15 #1). */
   final class IvfMaintainer(initialCorpus: DataFrame,
       rebuildWhen: graft.operators.IvfAnn.IvfIndex => Boolean,
@@ -510,21 +512,21 @@ object Streaming {
     import graft.operators.IvfAnn
     import graft.plans.Ckpt.CkptOps
     private val spark = initialCorpus.sparkSession
+    private val log = persistPath.map(Log(spark, _))
+    private val gate = new Gate(log)
     // Fresh-construction guard FIRST — before the eager seed checkpoint
     // and index build below, so a rejected construction fails in
-    // milliseconds instead of after minutes of cluster work (review
-    // finding, round 12). A FRESH maintainer must never adopt a
-    // pre-existing log (ADVICE r11): the old _SUCCESS-guard skip meant a
-    // fresh run pointed at a reused path silently took the stale seed,
-    // and its deltas overwrote only COLLIDING batch ids — a later
-    // restore() then returned a chimera of two runs' corpora. Fresh
-    // construction now requires the path hold no completed seed; only
-    // [[IvfMaintainer.restore]] (which passes the on-disk seed back in)
-    // may construct over an existing log.
-    persistPath.foreach { p =>
+    // milliseconds instead of after minutes of cluster work. A FRESH
+    // maintainer must never adopt a pre-existing log: a fresh run over a
+    // reused path would take the stale seed, its deltas would overwrite
+    // only COLLIDING batch ids, and a later restore() would return a
+    // chimera of two runs' corpora. Only [[IvfMaintainer.restore]]
+    // (which passes the on-disk seed back in) may construct over an
+    // existing log.
+    log.foreach { l =>
       if (!fromRestore)
-        require(!markerExists(spark, s"$p/seed"),
-          s"IvfMaintainer: persistPath $p already holds a completed " +
+        require(!l.marker("seed"),
+          s"IvfMaintainer: persistPath ${l.root} already holds a completed " +
             "maintainer log — use IvfMaintainer.restore to resume it, or " +
             "point the fresh maintainer at an empty path (adopting the " +
             "stale seed would merge two runs' corpora)")
@@ -536,8 +538,6 @@ object Streaming {
     private val indexRef = new java.util.concurrent.atomic.AtomicReference(
       presetIndex.getOrElse(IvfAnn.buildIndexWithRadii(corpusRef.get)))
     @volatile private var rebuildCount = 0
-    @volatile private var lastBatch = -1L
-    @volatile private var firstAfterRestore = false
     private var sinceCompact = 0
     // TWO counters where round 13 had one (ADVICE r13): both count
     // applied non-empty batches, but they answer different questions.
@@ -742,8 +742,7 @@ object Streaming {
       * AFTER the monitor is released — see the lock-order note there). */
     private def applyBatchInner(batch: DataFrame, batchId: Long): Boolean = synchronized {
       import graft.functions.GraftFunctions
-      checkResumePairing(batchId)
-      if (batchId > lastBatch) {
+      if (gate.admit(batchId)) {
         val prepped = batch
           .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
           .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
@@ -762,12 +761,11 @@ object Streaming {
           // Restore reading a record whose batch never committed to
           // the stream checkpoint is consistent too: the delta is
           // durable (written just above), the restored corpus includes
-          // it, lastBatch lands on it, and the checkpoint's
+          // it, the gate lands on it, and the checkpoint's
           // re-delivery of that batch is the usual no-op.
-          persistPath.foreach { p =>
-            prepped.write.mode("overwrite").parquet(s"$p/delta/$batchId")
-            writeHeadRecord(spark, p, headSeq + 1, frontierGen,
-              frontierTail :+ batchId)
+          log.foreach { l =>
+            prepped.write.mode("overwrite").parquet(s"${l.root}/delta/$batchId")
+            l.writeRecord(headSeq + 1, frontierGen, frontierTail :+ batchId)
           }
           append(prepped)
           // ---- no failable work below: counters only ----
@@ -778,30 +776,10 @@ object Streaming {
           appliedSinceLogCompact += 1
           dataSinceGen += 1
         }
-        lastBatch = batchId
+        gate.last = batchId
         compactLogEvery > 0 && appliedSinceLogCompact >= compactLogEvery
       } else false
     }
-
-    /** Resume-pairing guard (review finding, round 11): a restored
-      * maintainer resumed WITHOUT its original checkpointLocation gets
-      * batch ids numbered from 0 again, and the idempotence guard
-      * would then silently DROP the first lastBatch+1 batches of
-      * brand-new data. From a correctly-paired checkpoint, the first
-      * post-restore delivery is always ≥ lastBatch (foreachBatch
-      * commits per batch, so at most the single uncommitted batch —
-      * id == lastBatch — re-delivers); a regression below that on the
-      * FIRST post-restore batch is therefore always the mispairing
-      * bug, and it throws instead of absorbing. Later lower ids stay
-      * no-ops (the documented stale-replay contract). */
-    private def checkResumePairing(batchId: Long): Unit =
-      if (firstAfterRestore) {
-        require(batchId >= lastBatch,
-          s"batch id regression after restore ($batchId < $lastBatch): the " +
-            "stream was resumed without its original checkpointLocation — " +
-            "new data would be silently dropped by the idempotence guard")
-        firstAfterRestore = false
-      }
 
     /** The in-memory append step, shared by live batches and restore
       * replay. O(batch) per batch: the delta is already durable/
@@ -816,7 +794,7 @@ object Streaming {
       * runs BEFORE either ref is set; the swaps and counter updates
       * below the line are straight-line unfailable code. A job failure
       * mid-append therefore leaves the maintainer EXACTLY as it was
-      * (corpus, index, counters, and the caller's lastBatch all
+      * (corpus, index, counters, and the gate's last batch all
       * unchanged), so the at-least-once re-delivery of the same batchId
       * re-appends once instead of duplicating vec_ids — the same
       * compute→set→advance discipline MixturePlanner.applyBatch pins
@@ -856,10 +834,9 @@ object Streaming {
       if (rebuildWhen(indexRef.get)) {
         rebuildCount += 1
         indexRef.set(IvfAnn.buildIndexWithRadii(corpusRef.get))
-        if (persist) persistPath.foreach { p =>
-          val (mfs, mp) = hfs(spark, s"$p/quantizer/$baseGen/_SUCCESS")
-          if (mfs.exists(mp)) mfs.delete(mp, false)
-          writeQuantizer(p, baseGen, indexRef.get)
+        if (persist) log.foreach { l =>
+          l.delete(s"quantizer/$baseGen/_SUCCESS")
+          writeQuantizer(l, baseGen, indexRef.get)
         }
       }
     }
@@ -867,7 +844,7 @@ object Streaming {
     /** Collapse the persist log into a corpus snapshot (the LSM
       * compaction the class scaladoc promises the deployment runs on
       * its own cadence — this IS that operation): write the CURRENT
-      * accumulated corpus to `path/compact/<lastBatch>` (parquet,
+      * accumulated corpus to `path/compact/<last batch id>` (parquet,
       * _SUCCESS-gated), then delete the delta dirs it covers and any
       * older compaction generation. Restore afterwards reads ONE
       * snapshot plus only the deltas that arrived after it. Every
@@ -885,7 +862,7 @@ object Streaming {
       * corpus-proportional wall (COMPACTLIVE10X: max batch wall ≈ solo
       * + compaction; minutes at 100 TB). Now only two SHORT critical
       * sections take the monitor: (capture) read one consistent
-      * (lastBatch, corpus, index) triple — DataFrames are immutable and
+      * (last batch, corpus, index) triple — DataFrames are immutable and
       * the refs are only ever swapped, so the captured pair stays
       * self-consistent; (finalize) re-root the live frames, run the
       * deletion passes, advance the gate. The corpus-proportional work
@@ -949,11 +926,12 @@ object Streaming {
         try { compactLogLocked(); () } finally compactionLock.unlock()
 
     private def compactLogLocked(): Boolean = {
-      persistPath.exists { p =>
+      log.exists { l =>
+        val p = l.root
         // ---- capture (short monitor hold) -------------------------
         // The no-op gate decides HERE, on a consistent triple. Head
         // alone is not enough once a generation exists (review r13,
-        // pass 3): applyBatch advances lastBatch on EMPTY batches too
+        // pass 3): applyBatch advances the gate on EMPTY batches too
         // (it must — idempotence tracks delivery, not data), so the
         // gate also requires data actually applied since the last
         // completed generation (dataSinceGen; restore seeds it with
@@ -972,7 +950,7 @@ object Streaming {
         // the pass leaves it unset and the retry redoes every
         // (idempotent) step.
         val captured = synchronized {
-          val lb = lastBatch
+          val lb = gate.last
           if (lb >= 0 && lb != lastCompactedGen &&
               (lastCompactedGen < 0 || dataSinceGen > 0))
             Some((lb, corpusRef.get, indexRef.get, rebuildCount, dataSinceGen))
@@ -1003,7 +981,7 @@ object Streaming {
           // mid-rewrite of the ONLY snapshot — whose covered deltas
           // are already gone — would silently roll the log back to
           // the original seed)
-          if (!markerExists(spark, s"$p/compact/$lb"))
+          if (!l.marker(s"compact/$lb"))
             corpusSnap.write.mode("overwrite").parquet(s"$p/compact/$lb")
           // Persist the live quantizer alongside the generation
           // (round 13): without it a snapshot restore must RE-LEARN
@@ -1017,8 +995,8 @@ object Streaming {
           // snapshot's. It is written from the CAPTURED index, so it
           // stays consistent with the lb snapshot even if the head
           // moves mid-stage.
-          if (!markerExists(spark, s"$p/quantizer/$lb"))
-            writeQuantizer(p, lb, idxSnap)
+          if (!l.marker(s"quantizer/$lb"))
+            writeQuantizer(l, lb, idxSnap)
           // Checkpoint the captured index frames OUTSIDE the monitor:
           // assigned's lineage may reach the delta files through a
           // non-checkpointed bulk append (a restored maintainer), and
@@ -1120,7 +1098,7 @@ object Streaming {
             // r14 review evicted from this section.
             val seq = headSeq + 1
             val newTail = frontierTail.filter(_ > lb)
-            writeHeadRecord(spark, p, seq, lb, newTail)
+            l.writeRecord(seq, lb, newTail)
             headSeq = seq
             frontierGen = lb
             frontierTail = newTail
@@ -1134,12 +1112,8 @@ object Streaming {
           // deferred-deletion branch defers only the dirs the live
           // index lineage may reach — no frame ever references a head
           // record.
-          writeHeadAnchor(spark, p, recSeq)
-          locally {
-            val (fs, files) = numericFiles(spark, s"$p/head")
-            files.filter(_._2 < recSeq)
-              .foreach(f => fs.delete(f._1.getPath, false))
-          }
+          l.writeAnchor(recSeq)
+          l.retire("head", l.numbered("head", dirs = false).filter(_ < recSeq))
           // ---- deletions (NO lock held) ---------------------------
           // idempotent + straggler-safe: restore skips stale dirs by
           // id, so a crash anywhere in here costs only disk space
@@ -1152,9 +1126,7 @@ object Streaming {
             // superseded (the new one keeps serving restores)
             Seq(("delta", lb), ("compact", lb - 1), ("quantizer", lb - 1))
               .foreach { case (sub, bound) =>
-                val (fs, ds) = numericDirs(spark, s"$p/$sub")
-                ds.filter(_._2 <= bound)
-                  .foreach(d => fs.delete(d._1.getPath, true))
+                l.retire(sub, l.numbered(sub).filter(_ <= bound))
               }
           }
           // ---- gate advance (short monitor hold), LAST ------------
@@ -1185,8 +1157,9 @@ object Streaming {
       * mid-rewrite leaves an unmarked ensemble and restore falls back
       * to re-learning (correct, just slower — the ensemble is an
       * optimization, never the record; the snapshot is the record). */
-    private def writeQuantizer(p: String, gen: Long,
+    private def writeQuantizer(l: Log, gen: Long,
         live: graft.operators.IvfAnn.IvfIndex): Unit = {
+      val p = l.root
       live.assigned.write.mode("overwrite")
         .parquet(s"$p/quantizer/$gen/assigned")
       live.cmeta.write.mode("overwrite")
@@ -1194,8 +1167,7 @@ object Streaming {
       spark.range(1)
         .select(lit(live.nlist).as("nlist"), lit(live.nprobe).as("nprobe"))
         .write.mode("overwrite").parquet(s"$p/quantizer/$gen/meta")
-      val (mfs, mp) = hfs(spark, s"$p/quantizer/$gen/_SUCCESS")
-      mfs.create(mp, true).close()
+      l.write(s"quantizer/$gen/_SUCCESS", "")
     }
 
     /** newVectors: streaming (vec_id, embedding array<float>) frame.
@@ -1203,15 +1175,8 @@ object Streaming {
       * `persistPath` so a restart resumes instead of replaying from
       * scratch (the restore law in StreamingSpec). */
     def start(newVectors: DataFrame,
-        checkpointLocation: Option[String] = None) = {
-      persistPath.foreach(p =>
-        checkOrRecordPairing(spark, p, checkpointLocation, lastBatch >= 0))
-      val w = newVectors.writeStream
-        .foreachBatch((batch: DataFrame, batchId: Long) => applyBatch(batch, batchId))
-        .outputMode(OutputMode.Update)
-      checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-      w.start()
-    }
+        checkpointLocation: Option[String] = None) =
+      gate.start(newVectors, checkpointLocation)(applyBatch)
   }
 
   object IvfMaintainer {
@@ -1255,24 +1220,18 @@ object Streaming {
       // a compacted log restores from its newest COMPLETED snapshot
       // (which already contains every delta it covered) plus only the
       // deltas that arrived after it; an uncompacted log from the
-      // original seed plus the whole delta log. Frontier discovery is
-      // GET-only (VERDICT r15 #1): the newest head record NAMES the
-      // generation and the tail delta ids, so a stale LIST can no
-      // longer truncate the restore (the failure the r15 law pinned —
-      // now asserted FULLY recovered under the emulated stale listing).
-      // A named path the record promised that is gone anyway (foreign
-      // damage, or the owner compacted past it mid-restore) surfaces
-      // as the eager read's PATH_NOT_FOUND — the exact signature the
-      // replica heal retries on, same as before. Only a log with no
-      // head records (pre-head-record logs, or nothing applied yet)
-      // falls back to the legacy LIST walk, where stale deltas a
+      // original seed plus the whole delta log. The newest head record
+      // NAMES the generation and the tail delta ids (Log.discover), so a
+      // stale LIST cannot truncate the restore. A named path that is
+      // gone anyway (foreign damage, or the owner compacted past it
+      // mid-restore) surfaces as the eager read's PATH_NOT_FOUND — the
+      // signature the replica heal retries on. Only a log with no head
+      // records falls back to the legacy LIST walk, where stale deltas a
       // crashed compaction didn't delete are skipped by the id > base
       // filter — correctness never depends on the deletion pass.
-      val frontier = discoverFrontier(spark, path)
-      val base = frontier match {
-        case Some((_, gen, _)) => Some(gen).filter(_ >= 0)
-        case None => completedBatchIds(spark, s"$path/compact").lastOption
-      }
+      val log = Log(spark, path)
+      val frontier = log.frontier("compact", Some("delta"))
+      val base = Some(frontier.gen).filter(_ >= 0)
       val (seedFrame, baseBatch) = base match {
         case Some(b) => (spark.read.parquet(s"$path/compact/$b"), b)
         case None =>
@@ -1283,13 +1242,13 @@ object Streaming {
           // the truncation as the canonical seed) — fail fast instead;
           // a log without a complete seed never held a complete
           // maintainer.
-          require(markerExists(spark, s"$path/seed"),
+          require(log.marker("seed"),
             s"IvfMaintainer.restore: $path/seed has no _SUCCESS marker " +
               "(incomplete seed write) — nothing durable to restore from")
           (spark.read.parquet(s"$path/seed"), -1L)
       }
-      // A generation that also logged its quantizer (compactLog, round
-      // 13) restores the index by READING it — assignment + centroid/
+      // A generation that also logged its quantizer (compactLog)
+      // restores the index by READING it — assignment + centroid/
       // radius tables wrap into an IvfIndex directly, valid because the
       // snapshot corpus IS the corpus those frames were computed from
       // under the maintainer's monitor. Only a quantizer whose id
@@ -1298,7 +1257,7 @@ object Streaming {
       // the snapshot corpus, which stays correct, just slower
       // (RESTORE100X: 32.8 s read vs 120.8 s re-learn at 600k vectors).
       val preset = base
-        .filter(b => markerExists(spark, s"$path/quantizer/$b"))
+        .filter(b => log.marker(s"quantizer/$b"))
         .map { b =>
           val meta = spark.read.parquet(s"$path/quantizer/$b/meta").head()
           graft.operators.IvfAnn.IvfIndex(
@@ -1309,13 +1268,10 @@ object Streaming {
       val m = new IvfMaintainer(seedFrame,
         rebuildWhen, compactEvery, Some(path), fromRestore = true,
         compactLogEvery = compactLogEvery, presetIndex = preset)
-      val bids = frontier match {
-        case Some((_, _, tail)) => tail.filter(_ > baseBatch)
-        case None => completedBatchIds(spark, s"$path/delta").filter(_ > baseBatch)
-      }
+      val bids = frontier.tail.filter(_ > baseBatch)
       // seed the in-memory frontier mirror: the restored maintainer's
       // next record continues the dense seq (a legacy log starts at 1)
-      m.headSeq = frontier.map(_._1).getOrElse(0L)
+      m.headSeq = frontier.seq
       m.frontierGen = baseBatch
       m.frontierTail = bids.toVector
       if (bids.nonEmpty) {
@@ -1341,8 +1297,7 @@ object Streaming {
       // the full re-learn — the exact cost the ensemble exists to
       // avoid. preset.isDefined ⟺ the ensemble is complete.
       if (preset.isDefined) m.lastCompactedGen = baseBatch
-      m.lastBatch = math.max(baseBatch, if (bids.isEmpty) -1L else bids.max)
-      m.firstAfterRestore = m.lastBatch >= 0
+      m.gate.resume(math.max(baseBatch, if (bids.isEmpty) -1L else bids.max))
       // the tail deltas ARE data applied since the adopted generation —
       // seed the no-op gate's counter so a post-restart compaction at
       // this head still runs (review r13, pass 3). ONLY that counter
@@ -1375,43 +1330,29 @@ object Streaming {
     }
 
     /** One-shot head-record adoption for a LEGACY (record-free)
-      * maintainer log (VERDICT r16 #1) — deletes the last place the
-      * old stale-LIST truncation survives instead of fencing it. A log
-      * written before head records restores through the LIST walk, so
-      * a stale listing (the pre-Dec-2020 S3 contract) can still
-      * silently truncate ITS restore; this migration pays that
-      * strong-LIST requirement ONE final time — the same
-      * [[completedBatchIds]] walk restore does today — and records the
-      * discovered frontier as head record 1 plus its anchor, after
-      * which every restore of the log is GET-only like a live-protocol
-      * log's.
-      *
-      * Contract: run OFFLINE, like restore itself — the single-writer
-      * protocol extends to adoption (a live owner is already numbering
-      * head records; racing it could collide at the same seq). Safe to
-      * re-run: a log that already holds records — live protocol or a
-      * prior adoption — is left untouched (returns false). The
-      * adopted log resumes seamlessly: restore seeds `headSeq = 1`
-      * from the record, so the owner's next applied batch writes
-      * record 2 and the dense-retention discipline continues.
+      * maintainer log: a log written before head records restores
+      * through the LIST walk, which a stale listing can truncate. This
+      * pays the strong-LIST walk ONE final time and records the
+      * discovered frontier as head record 1 plus its anchor
+      * ([[graft.durable.Log.adopt]]), after which every restore of the
+      * log is GET-only. Run OFFLINE, like restore itself. Safe to re-run:
+      * a log that already holds records is left untouched (false). The
+      * adopted log resumes seamlessly: restore seeds `headSeq = 1`, so
+      * the owner's next applied batch writes record 2.
       *
       * True iff records were written; requires the completed-seed
-      * marker (the same fail-fast as restore — a log without a
-      * complete seed never held a complete maintainer, and adopting a
-      * frontier for one would certify a truncation). */
+      * marker (a log without a complete seed never held a complete
+      * maintainer, and adopting a frontier for one would certify a
+      * truncation). */
     def adoptHeadRecords(spark: SparkSession, path: String): Boolean = {
-      if (discoverFrontier(spark, path).nonEmpty) false
-      else {
-        require(markerExists(spark, s"$path/seed"),
+      val log = Log(spark, path)
+      log.adopt {
+        require(log.marker("seed"),
           s"adoptHeadRecords: $path/seed has no _SUCCESS marker " +
             "(incomplete or absent seed) — not a restorable maintainer " +
             "log; nothing to adopt")
-        val gen = completedBatchIds(spark, s"$path/compact")
-          .lastOption.getOrElse(-1L)
-        val tail = completedBatchIds(spark, s"$path/delta").filter(_ > gen)
-        writeHeadRecord(spark, path, 1L, gen, tail)
-        writeHeadAnchor(spark, path, 1L)
-        true
+        val f = log.listed("compact", Some("delta"))
+        Some((f.gen, f.tail))
       }
     }
   }
@@ -1637,391 +1578,6 @@ object Streaming {
     false
   }
 
-  /** Persist-log filesystem access (VERDICT r11 #1): every log walk
-    * resolves the Hadoop [[org.apache.hadoop.fs.FileSystem]] for the
-    * path from the active session's hadoopConfiguration, so the same
-    * code serves file://, hdfs:// and s3a:// logs alike — the old
-    * `java.io.File` walks only ever saw a local filesystem and returned
-    * null `listFiles` on the object stores a cluster deployment
-    * actually checkpoints to. Semantics (parquet's _SUCCESS completion
-    * gate, numeric batch-id leaves) are unchanged; the laws in
-    * StreamingSpec run on file:// through this same API. */
-  private def hfs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** True iff `dir/_SUCCESS` exists (the parquet completion marker).
-    * private[graft]: the batch curation run log
-    * ([[graft.operators.PipelineOps.curationRun]]) reuses the persist
-    * log's completion-gate convention through this one definition. */
-  private[graft] def markerExists(spark: SparkSession, dir: String): Boolean = {
-    val (fs, p) = hfs(spark, s"$dir/_SUCCESS")
-    fs.exists(p)
-  }
-
-  /** All-digit-named subdirs of a persist-log dir with their numeric
-    * ids, plus the resolved FileSystem — the ONE shared walk behind
-    * [[completedBatchIds]], the snapshot retention and the compaction
-    * deletion passes (review finding r12: the pattern had grown four
-    * inline copies). Foreign (non-numeric) names are skipped, never
-    * touched: a stray dir must neither crash a walk with a
-    * NumberFormatException (ADVICE r11) nor be deleted. */
-  private[streaming] def numericDirs(spark: SparkSession, dir: String)
-      : (org.apache.hadoop.fs.FileSystem,
-         Seq[(org.apache.hadoop.fs.FileStatus, Long)]) = {
-    val (fs, p) = hfs(spark, dir)
-    val ds =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.matches("[0-9]+"))
-        .map(st => (st, st.getPath.getName.toLong))
-    (fs, ds)
-  }
-
-  /** Batch-id subdirs of a persist log that finished writing (parquet
-    * drops _SUCCESS last, so a mid-write crash leaves no marker and
-    * restore skips the partial dir — the stream's checkpoint
-    * re-delivers that batch). */
-  private[graft] def completedBatchIds(spark: SparkSession, dir: String): Seq[Long] = {
-    val (fs, ds) = numericDirs(spark, dir)
-    ds.filter(d => fs.exists(
-        new org.apache.hadoop.fs.Path(d._1.getPath, "_SUCCESS")))
-      .map(_._2).sorted
-  }
-
-  /** All-digit-named FILES of a dir with their numeric ids — the
-    * head-record sibling of [[numericDirs]] (head records are single
-    * objects, not parquet dirs). Used only by the RETENTION pass, so
-    * the LIST semantics are the adjudicated debris contract: an entry
-    * a stale listing hides is merely retired one pass later. Frontier
-    * DISCOVERY never lists — see [[discoverFrontier]]. */
-  private[streaming] def numericFiles(spark: SparkSession, dir: String)
-      : (org.apache.hadoop.fs.FileSystem,
-         Seq[(org.apache.hadoop.fs.FileStatus, Long)]) = {
-    val (fs, p) = hfs(spark, dir)
-    val ds =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isFile && st.getPath.getName.matches("[0-9]+"))
-        .map(st => (st, st.getPath.getName.toLong))
-    (fs, ds)
-  }
-
-  // ---- durable frontier head records (VERDICT r15 #1) ---------------
-  //
-  // The restore truncation the round-15 law PINNED: frontier discovery
-  // walked listStatus, and a stale LIST (the pre-Dec-2020 S3 contract)
-  // that omitted the newest delta or generation made restore silently
-  // truncate the corpus — undetectable by the resume-pairing guard.
-  // But GET/HEAD were strongly consistent even under that old
-  // contract, so the frontier doesn't need a LIST: the single-writer
-  // log now records it explicitly. Each applied delta and each
-  // completed generation writes `head/<n>` — a densely-numbered,
-  // never-renamed, single-object record naming the newest completed
-  // generation and the exact delta ids past it — and restore finds the
-  // newest record by exists() probing alone. The shape is the public
-  // pointer-record pattern (Delta Lake's `_last_checkpoint`, double-
-  // buffered superblocks) adapted to this log's no-rename discipline:
-  //
-  //  - RECORD: one small object, content framed by a magic first line
-  //    and a terminal `end` sentinel — for a single object that IS the
-  //    completion gate (a dir-level _SUCCESS protects multi-file
-  //    parquet commits; a one-object record only needs torn-write
-  //    detection, and on a real object store the PUT is atomic anyway,
-  //    making the sentinel belt-and-braces for local filesystems).
-  //    Records are never renamed and never rewritten with DIFFERENT
-  //    content — a re-delivery/retry rewrites the same seq with the
-  //    same bytes, which also repairs a torn first write.
-  //  - ANCHOR: retention (below) deletes superseded records, which
-  //    would strand a gallop that starts at seq 1 — so each compaction
-  //    rewrites an anchor slot naming its own record's seq BEFORE its
-  //    retention pass runs. Two slots (`anchor0`/`anchor1`), each
-  //    advance writing the slot OPPOSITE the current best value
-  //    (strict alternation — see [[writeHeadAnchor]]): a crash tearing
-  //    one slot's rewrite always leaves the OTHER slot intact and
-  //    naming a record that still exists, because the torn write means
-  //    THIS compaction's retention never ran. Discovery takes the max
-  //    valid slot whose record exists.
-  //  - DISCOVERY ([[discoverFrontier]]): gallop exists(seq+1) upward
-  //    from the anchor (records [anchor, newest] are contiguous —
-  //    retention only ever deletes below a completed compaction's own
-  //    record). A torn NEWEST record is the crash-during-write window;
-  //    the single sequential writer completed record n-1 before
-  //    starting n, so discovery steps back one — the frontier entry
-  //    the torn record would have added is exactly the batch the
-  //    stream checkpoint re-delivers. No records at all ⇒ None, and
-  //    restore falls back to the legacy LIST walk (logs written before
-  //    this round, or a log with no applied batch yet).
-  //
-  // The remaining LIST uses are retention-only (adjudicated: stale
-  // entries are debris retired a pass later, never data loss) plus the
-  // legacy-restore fallback, which keeps the old strong-LIST
-  // requirement only for pre-head-record logs (README runbook).
-  //
-  // Sizing: a record is O(uncompacted tail) bytes (~8 bytes per tail
-  // delta id), so the per-batch record write is bounded by the SAME
-  // compaction cadence that already bounds restore cost — the runbook
-  // sizing rule ("pick the cadence from your restart SLA") bounds both
-  // at once. A deployment that never compacts pays O(tail) metadata
-  // per batch, a faithful miniature of the O(tail) data restore it has
-  // also chosen.
-
-  private def headRecordPath(p: String, seq: Long) =
-    new org.apache.hadoop.fs.Path(s"$p/head/$seq")
-
-  private[graft] def writeHeadRecord(spark: SparkSession, p: String,
-      seq: Long, gen: Long, tail: Seq[Long]): Unit = {
-    val (fs, _) = hfs(spark, s"$p/head")
-    val content =
-      s"graft-head-v1\ngen=$gen\ntail=${tail.mkString(",")}\nend\n"
-    val out = fs.create(headRecordPath(p, seq), true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Parse head record `seq`: Some((gen, tail)) iff present AND
-    * complete (magic + sentinel + well-formed fields); None for
-    * missing or torn. Missing includes VANISHING (ADVICE r16): the
-    * exists→getFileStatus/open sequence is not atomic, and the
-    * OWNER's head-record retention can delete the record between the
-    * probe and the read while a replica discovers the frontier — a
-    * deletion that implies a NEWER record exists, so treating the
-    * FNFE as absence is exact: discovery steps back or lands on the
-    * legacy LIST fallback, both already-correct arms, instead of
-    * letting a raw FileNotFoundException escape into a replica search
-    * as an unhandled crash. */
-  private[graft] def readHeadRecord(spark: SparkSession, p: String,
-      seq: Long): Option[(Long, Seq[Long])] =
-    try readHeadRecordInner(spark, p, seq)
-    catch { case _: java.io.FileNotFoundException => None }
-
-  private def readHeadRecordInner(spark: SparkSession, p: String,
-      seq: Long): Option[(Long, Seq[Long])] = {
-    val (fs, _) = hfs(spark, s"$p/head")
-    val path = headRecordPath(p, seq)
-    if (!fs.exists(path)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(path).getLen.toInt)
-      val in = fs.open(path)
-      try in.readFully(0L, buf) finally in.close()
-      val lines = new String(buf,
-        java.nio.charset.StandardCharsets.UTF_8).split("\n", -1)
-        .map(_.trim).filter(_.nonEmpty)
-      // tail validation is a LINEAR scan, not the obvious
-      // `([0-9]+(,[0-9]+)*)?` regex: Java's regex engine recurses per
-      // `(,[0-9]+)*` repetition, so a deep tail — the never-compacting
-      // deployment the sizing note prices — blew the stack at ~4000
-      // ids (StackOverflowError out of restore; caught by the r17
-      // HEADTAIL economics leg doing exactly what it was built for).
-      // ASCII-only and ≤18 digits (review r17 pass 1): Char.isDigit
-      // admits Unicode digits Long.parseLong also accepts, and an
-      // unbounded digit run overflows toLong into a crash — foreign
-      // damage must read as torn (None), not throw.
-      def longOk(t: String): Boolean = t.nonEmpty && t.length <= 18 &&
-        t.forall(c => c >= '0' && c <= '9')
-      def tailOk(s: String): Boolean =
-        s.isEmpty || s.split(",", -1).forall(longOk)
-      val ok = lines.length == 4 && lines(0) == "graft-head-v1" &&
-        lines(1).startsWith("gen=") && lines(2).startsWith("tail=") &&
-        lines(3) == "end" &&
-        longOk(lines(1).stripPrefix("gen=").stripPrefix("-")) &&
-        tailOk(lines(2).stripPrefix("tail="))
-      if (!ok) None
-      else {
-        val tailStr = lines(2).stripPrefix("tail=")
-        Some((lines(1).stripPrefix("gen=").toLong,
-          if (tailStr.isEmpty) Seq.empty
-          else tailStr.split(",").toSeq.map(_.toLong)))
-      }
-    }
-  }
-
-  /** Advance the anchor into the slot OPPOSITE the one holding the
-    * current best value (review r16 pass 1: the first cut chose the
-    * slot by seq parity, but consecutive compactions can land on the
-    * same parity — an even seq gap — rewriting one slot twice in a
-    * row, so a torn rewrite could leave the OTHER slot naming a record
-    * an EARLIER retention already deleted. Choosing the loser slot
-    * alternates by construction, is stateless across restarts, and
-    * restores the documented invariant: a torn rewrite always leaves
-    * the other slot naming the previous compaction's record, which its
-    * own retention kept and the torn compaction's retention — which
-    * runs only after this write completes — never touched). */
-  private[graft] def writeHeadAnchor(spark: SparkSession, p: String,
-      seq: Long): Unit = {
-    val (fs, _) = hfs(spark, s"$p/head")
-    val best = Seq(0, 1).flatMap(i => readHeadAnchorSlot(spark, p, i)
-      .map(v => (i, v))).sortBy(_._2).lastOption
-    val slot = best.map(b => 1 - b._1).getOrElse(0)
-    val path = new org.apache.hadoop.fs.Path(s"$p/head/anchor$slot")
-    val out = fs.create(path, true)
-    try out.write(seq.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** Parse anchor slot `i`: Some(seq) iff present and well-formed.
-    * Anchors are overwritten in place, never deleted, so the
-    * vanishing-read window is narrower than the record's — but the
-    * same FNFE-as-absence contract applies (ADVICE r16, symmetric
-    * with [[readHeadRecord]]): an unreadable slot degrades discovery
-    * to the gallop-from-1 / legacy arms, never to a crash. */
-  private def readHeadAnchorSlot(spark: SparkSession, p: String,
-      i: Int): Option[Long] = {
-    val (fs, _) = hfs(spark, s"$p/head")
-    val sp = new org.apache.hadoop.fs.Path(s"$p/head/anchor$i")
-    try {
-      if (!fs.exists(sp)) None
-      else {
-        val buf = new Array[Byte](fs.getFileStatus(sp).getLen.toInt)
-        val in = fs.open(sp)
-        try in.readFully(0L, buf) finally in.close()
-        val s = new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim
-        // same ASCII/width discipline as the record parse: a damaged
-        // slot degrades discovery, never crashes it
-        if (s.nonEmpty && s.length <= 18 &&
-          s.forall(c => c >= '0' && c <= '9')) Some(s.toLong) else None
-      }
-    } catch { case _: java.io.FileNotFoundException => None }
-  }
-
-  /** The durable frontier by strongly-consistent GETs alone: Some((seq,
-    * gen, tailDeltaIds)) from the newest complete head record, None if
-    * the log predates head records (or holds none yet) — the caller
-    * falls back to the legacy LIST walk. */
-  private[graft] def discoverFrontier(spark: SparkSession,
-      path: String): Option[(Long, Long, Seq[Long])] = {
-    val (fs, _) = hfs(spark, s"$path/head")
-    def recExists(seq: Long) = fs.exists(headRecordPath(path, seq))
-    // max valid slot whose record exists; by the crash-ordering
-    // invariant at least one slot satisfies this once retention has
-    // ever run. Both slots absent/invalid ⇒ gallop from 1 (retention
-    // never ran, so record 1 exists iff any record does).
-    val start = Seq(0, 1).flatMap(readHeadAnchorSlot(spark, path, _))
-      .filter(a => a >= 1 && recExists(a))
-      .sorted.lastOption.getOrElse(1L)
-    if (!recExists(start)) None
-    else {
-      var n = start
-      while (recExists(n + 1)) n += 1
-      readHeadRecord(spark, path, n).map { case (g, t) => (n, g, t) }
-        .orElse {
-          // torn newest record: step back (complete by single-writer
-          // sequencing). n == start torn is unreachable by the
-          // protocol (an anchored record is complete, and a torn
-          // FIRST record means nothing was ever deleted) — the
-          // getOrElse(None) there is the foreign-damage arm, which
-          // lands on the legacy walk.
-          if (n > start) readHeadRecord(spark, path, n - 1)
-            .map { case (g, t) => (n - 1, g, t) }
-          else None
-        }
-    }
-  }
-
-  /** The checkpointLocation a persist log's pairing.txt records, None
-    * if the log is unpaired — the record reader behind
-    * [[checkOrRecordPairing]] and the MixturePlanner stale-record
-    * cleanup. */
-  private[streaming] def readPairing(spark: SparkSession,
-      logPath: String): Option[String] = {
-    val (fs, p) = hfs(spark, s"$logPath/pairing.txt")
-    if (!fs.exists(p)) None
-    else {
-      val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-      val in = fs.open(p)
-      try in.readFully(0L, buf) finally in.close()
-      Some(new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim)
-    }
-  }
-
-  /** Checkpoint-pairing record (ADVICE r11): the batch-id resume guard
-    * alone cannot catch a mispaired resume when the log holds exactly
-    * one batch — a fresh checkpoint renumbers from 0, `0 >= lastBatch
-    * == 0` passes, and the idempotence guard silently drops the new
-    * data. So the pairing is pinned structurally at start() time,
-    * before any batch flows: the first start() against a persist log
-    * records its checkpointLocation at `<log>/pairing.txt`, and every
-    * later start() over that log — same process or post-restore — must
-    * present the SAME location. A mismatch, or no checkpoint at all
-    * over a log that already holds state, throws instead of dropping.
-    * (Unpaired operation — no persistPath, or no checkpoint before any
-    * state exists — stays legal: nothing durable can be lost yet.) */
-  private[streaming] def checkOrRecordPairing(spark: SparkSession,
-      logPath: String, checkpointLocation: Option[String],
-      hasLoggedState: Boolean): Unit = {
-    val (fs, p) = hfs(spark, s"$logPath/pairing.txt")
-    val recorded: Option[String] = readPairing(spark, logPath)
-    (checkpointLocation, recorded) match {
-      case (Some(c), Some(r)) =>
-        require(c == r,
-          s"persist log $logPath is paired with checkpointLocation $r " +
-            s"but the stream was started with $c — a fresh checkpoint " +
-            "renumbers batch ids from 0 and the idempotence guard would " +
-            "silently drop new data; resume with the original checkpoint " +
-            "or start a new log")
-      case (None, Some(r)) =>
-        require(!hasLoggedState,
-          s"persist log $logPath holds state paired with " +
-            s"checkpointLocation $r but the stream was started without " +
-            "one — batch ids would renumber from 0 and new data would be " +
-            "silently dropped")
-      case (Some(c), None) =>
-        // an UNPAIRED log that already holds state (fed by applyBatch
-        // directly, or its pairing record lost) cannot prove this
-        // checkpoint's batch numbering continues the log's — a fresh
-        // checkpoint's batch 0 would be silently dropped (review
-        // finding, round 12: this arm used to record-and-pass)
-        require(!hasLoggedState,
-          s"persist log $logPath already holds state but no pairing " +
-            "record — its batch numbering cannot be verified against " +
-            s"checkpoint $c; continue it with applyBatch, or start a new log")
-        // The checkpoint DIRECTORY is created before the record exists
-        // (review r13, pass 2): the MixturePlanner stale-record cleanup
-        // treats "recorded checkpoint dir absent" as proof the paired
-        // run is dead — but Spark only creates the dir at query start,
-        // AFTER this record is written, so a concurrently-constructed
-        // fresh planner could observe record-present + dir-absent on a
-        // LIVE run mid-start and delete its pairing (the TOCTOU form of
-        // the two-live-writers chimera). Creating the dir first makes
-        // the invariant "record exists ⟹ its checkpoint dir exists"
-        // hold from the record's first instant; a crash between the
-        // two leaves an empty unpaired dir, which Spark accepts.
-        locally {
-          val (cfs, cp) = hfs(spark, c)
-          // mkdirs signals most failures by RETURNING false (the
-          // fs.rename lesson below — review r13, pass 3): an unchecked
-          // false would record a pairing whose checkpoint dir is
-          // absent, which the MixturePlanner stale-record cleanup
-          // reads as proof the run is dead — the exact invariant this
-          // mkdirs exists to establish.
-          require(cfs.mkdirs(cp),
-            s"failed to create checkpoint directory $c before recording " +
-              s"the pairing at $logPath/pairing.txt — a record whose " +
-              "checkpoint dir is absent would be adjudicated stale")
-        }
-        // atomic record via temp + rename (the _SUCCESS convention):
-        // a crash mid-write must not leave a truncated pairing.txt
-        // that bricks every future correctly-paired start
-        val tmp = new org.apache.hadoop.fs.Path(s"$logPath/pairing.txt.tmp")
-        val out = fs.create(tmp, true)
-        try out.write((c + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        // rename signals failure by RETURNING false (review finding) —
-        // a silently-unrecorded pairing would let the log accumulate
-        // state that no later start can ever verify against
-        require(fs.rename(tmp, p),
-          s"failed to record checkpoint pairing at $logPath/pairing.txt")
-      case (None, None) =>
-        require(!hasLoggedState,
-          s"persist log $logPath already holds state — starting an " +
-            "unpaired stream over it would renumber batch ids from 0 " +
-            "and silently drop new data; continue it with applyBatch, " +
-            "or start a new log")
-    }
-  }
-
   /** Streaming yield funnel — q287's gate cascade over a document
     * stream. Per-doc gate signals (the q90 thresholds) are ROW-LOCAL
     * higher-order functions (no explode/groupBy inside the stream —
@@ -2128,95 +1684,55 @@ object Streaming {
       persistPath: Option[String] = None,
       fromRestore: Boolean = false) {
     import graft.plans.Ckpt.CkptOps
-    // same fresh-construction guard as IvfMaintainer (ADVICE r11): a
-    // fresh planner on a reused path would leave the old run's
-    // higher-id snapshots in place — retention keeps the two NEWEST
-    // ids, so the stale ones would win and restore() would resurrect
-    // the old run's counts. Only restore() may construct over a log
-    // that already holds snapshots.
-    persistPath.foreach { p =>
+    private val log = persistPath.map(Log(spark, _))
+    private val gate = new Gate(log)
+    // same fresh-construction guard as IvfMaintainer: a fresh planner on
+    // a reused path would leave the old run's higher-id snapshots in
+    // place — retention keeps the two NEWEST ids, so the stale ones
+    // would win and restore() would resurrect the old run's counts.
+    // Only restore() may construct over a log that already holds
+    // snapshots.
+    log.foreach { l =>
       if (!fromRestore) {
-        // the head-record probe (GETs) backs the LIST walk (review r16
-        // pass 5 sweep): this guard is a REFUSAL, and a stale listing
-        // hiding the old run's snapshots would otherwise admit a fresh
-        // planner over a used log — the exact chimera the guard
-        // refuses. The maintainer's sibling guard was already GET-based
-        // (the seed marker); record-bearing logs now refuse on GETs
-        // here too, and only pre-r16 record-free logs rest on the LIST.
-        require(completedBatchIds(spark, s"$p/counts").isEmpty &&
-            discoverFrontier(spark, p).isEmpty,
-          s"MixturePlanner: persistPath $p already holds counts " +
+        // the head-record probe (GETs) backs the LIST walk: this guard
+        // is a REFUSAL, and a stale listing hiding the old run's
+        // snapshots would otherwise admit a fresh planner over a used
+        // log. Only record-free logs rest on the LIST.
+        require(l.completed("counts").isEmpty && l.discover().isEmpty,
+          s"MixturePlanner: persistPath ${l.root} already holds counts " +
             "snapshots — use MixturePlanner.restore to resume it, or " +
             "point the fresh planner at an empty path")
         // A previous run that start()-ed and crashed before ANY snapshot
-        // completed leaves a stale pairing.txt (and possibly
-        // _SUCCESS-less crash-debris dirs) on an otherwise state-free
-        // log — the guard above correctly admits the fresh planner, but
-        // its first start() would then throw spuriously against the
-        // dead run's pairing record (ADVICE r12). The record alone
-        // cannot distinguish that dead run from a LIVE one that simply
-        // hasn't snapshotted yet (review r13: unconditional cleanup
-        // would let a supervisor retry silently re-pair a log a live
-        // stream is still feeding — the chimera the record exists to
-        // prevent). Adjudication: auto-clean only when the RECORDED
-        // checkpoint location no longer exists — provably neither
-        // resumable nor live, since a running stream keeps its
-        // checkpoint dir. Otherwise the record stays and start() keeps
-        // throwing the structural mismatch; the runbook remediation is
-        // to resume via restore() + the recorded checkpoint, or delete
-        // the dead run's checkpoint dir (the explicit fencing act) and
-        // construct fresh.
-        // Cleanup fires ONLY when a pairing record exists and its
-        // checkpoint is gone (review r13, pass 3: the old
-        // `recorded.forall` was vacuously true on a record-FREE log, so
-        // a fresh planner racing a live UNPAIRED run — one fed by
-        // applyBatch directly, which never writes pairing.txt — would
-        // delete its in-flight snapshot dir mid-write). With no record
-        // there is nothing stale to adjudicate: any unmarked debris a
-        // dead unpaired run left is retired by the retention pass on
-        // the new run's first applied batch, and a completed snapshot
-        // would have been caught by the guard above.
-        val recorded = readPairing(spark, p)
-        recorded.foreach { c =>
-          val (cfs, cp) = hfs(spark, c)
-          if (!cfs.exists(cp)) {
-            // Exclusive-create cleanup lock (ADVICE r13): HDFS and the
-            // local FS give atomic create-no-overwrite, which turns the
-            // destructive passes below into a REAL critical section
-            // between concurrent fresh constructions — two cleaners
-            // racing each other was the residual TOCTOU the r13 review
-            // documented. A failed acquire skips cleanup entirely
-            // (safe: the record stays, start() keeps throwing the
-            // structural mismatch with its remediation). A lock
-            // orphaned by a crash mid-cleanup also skips — deliberate
-            // fail-closed; the runbook's remediation is to delete
-            // cleanup.lock after confirming no cleaner is live. On
-            // filesystems whose create-no-overwrite is not atomic the
-            // lock degrades to advisory, so the compare-before-delete
-            // narrowing below stays as defense in depth (review r13
-            // passes 3+4: re-read the record immediately before each
-            // destructive pass — a blind pass could destroy a NEW
-            // run's record or its in-flight snapshot dirs).
-            val (lfs, lock) = hfs(spark, s"$p/cleanup.lock")
-            val acquired =
-              try { lfs.create(lock, false).close(); true }
-              catch { case _: java.io.IOException => false }
-            if (acquired) try {
-              if (readPairing(spark, p).contains(c)) {
-                val (fs, debris) = numericDirs(spark, s"$p/counts")
-                debris.foreach(d => fs.delete(d._1.getPath, true))
-                // the dead run's head records go with its snapshots
-                // (r16): stale records naming deleted counts dirs
-                // would otherwise outlive the cleanup and collide
-                // with the fresh run's re-seeded record seqs
-                fs.delete(new org.apache.hadoop.fs.Path(s"$p/head"), true)
-                if (readPairing(spark, p).contains(c)) {
-                  val pairing = new org.apache.hadoop.fs.Path(s"$p/pairing.txt")
-                  fs.delete(pairing, false)
-                }
-              }
-            } finally lfs.delete(lock, false)
-          }
+        // completed leaves a stale pairing.txt (and possibly unmarked
+        // crash-debris dirs) on an otherwise state-free log, and this
+        // planner's first start() would throw against it. The record
+        // alone cannot tell that dead run from a LIVE one that has not
+        // snapshotted yet, so cleanup fires only when the recorded
+        // checkpoint dir is gone (Log.stalePairing) — provably neither
+        // resumable nor live. Otherwise the record stays and start()
+        // keeps throwing the structural mismatch (runbook: resume via
+        // restore() + the recorded checkpoint, or delete the dead run's
+        // checkpoint dir and construct fresh). A record-free log is
+        // never cleaned: an unpaired applyBatch-fed run writes no
+        // record, and its in-flight snapshot must survive.
+        //
+        // cleanup.lock makes the destructive passes a critical section
+        // between concurrent fresh constructions; a held or orphaned
+        // lock skips cleanup (fail-closed; runbook: delete cleanup.lock
+        // after confirming no cleaner is live). Where exclusive create
+        // is not atomic the lock is advisory, so the record is re-read
+        // before each destructive pass: a blind pass could destroy a
+        // NEW run's record or its in-flight snapshot dirs.
+        l.stalePairing.foreach { c =>
+          if (l.claim("cleanup.lock")) try {
+            if (l.pairing.contains(c)) {
+              l.retire("counts", l.numbered("counts"))
+              // the dead run's head records go with its snapshots:
+              // stale records would collide with the fresh run's seqs
+              l.delete("head")
+              if (l.pairing.contains(c)) l.delete("pairing.txt")
+            }
+          } finally l.delete("cleanup.lock")
         }
       }
     }
@@ -2225,15 +1741,11 @@ object Streaming {
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(Seq(StructField("source", StringType),
             StructField("tok", LongType)))))
-    @volatile private var lastBatch = -1L
-    @volatile private var firstAfterRestore = false
-    // head-record seq (review r16 pass 5 — the IvfMaintainer fix left
-    // this class as the LAST LIST-discovered restore: a stale LIST
-    // hiding the newest counts snapshot silently resumed from the
-    // previous one, and the lost batch — already committed to the
-    // stream checkpoint — never re-delivers). Every snapshot write is
-    // followed by a head record naming its batch id; restore discovers
-    // the newest by GETs through the same machinery as the maintainer.
+    // head-record seq: every snapshot write is followed by a head record
+    // naming its batch id, so restore discovers the newest snapshot by
+    // GETs — a stale LIST hiding it would resume from the previous one,
+    // and the lost batch, already committed to the stream checkpoint,
+    // never re-delivers
     private var headSeq = 0L
 
     /** Accumulated (source, tok) counts. */
@@ -2243,18 +1755,8 @@ object Streaming {
     def plan: DataFrame =
       graft.operators.PipelineOps.temperatureAllocation(countsRef.get)
 
-    private[graft] def applyBatch(batch: DataFrame, batchId: Long): Unit = {
-      // same resume-pairing guard as IvfMaintainer: a first-post-restore
-      // batch id below the snapshot's id means the stream was resumed
-      // without its original checkpointLocation, and the idempotence
-      // guard would silently drop new data — throw instead.
-      if (firstAfterRestore) {
-        require(batchId >= lastBatch,
-          s"batch id regression after restore ($batchId < $lastBatch): the " +
-            "stream was resumed without its original checkpointLocation")
-        firstAfterRestore = false
-      }
-      if (batchId > lastBatch) {
+    private[graft] def applyBatch(batch: DataFrame, batchId: Long): Unit =
+      if (gate.admit(batchId)) {
         val delta = batch.select(col("source"),
             size(split(col("text"), " ")).cast("long").as("n_tok"))
           .groupBy(col("source")).agg(sum(col("n_tok")).as("d"))
@@ -2271,152 +1773,87 @@ object Streaming {
           // stream; re-wrapping the checkpointed RDD resets it — the
           // frame is sources-sized and never needs an estimate.
           val reset = m.sparkSession.createDataFrame(m.rdd, m.schema)
-          // Durable snapshot FIRST, in-memory refs after (round 14 —
-          // the injected-fault law surfaced the inverted order): a
-          // snapshot write that crashes must leave the planner's
-          // in-memory state UNTOUCHED, because lastBatch has not
-          // advanced and the at-least-once contract will re-deliver
-          // this batchId — with counts already merged, the re-delivery
-          // double-counted on a live instance. Write-then-set keeps
-          // every faultable window consistent: a crash in the snapshot
-          // write or the retention pass leaves old counts + old head,
-          // and the re-delivery re-merges the delta from the OLD
-          // counts — byte-identical snapshot, idempotent retention.
-          // Between the set and the lastBatch advance there is no
-          // filesystem operation left to fail.
-          persistPath.foreach { p =>
-            reset.write.mode("overwrite").parquet(s"$p/counts/$batchId")
-            // head record naming the completed snapshot (r16: the
-            // LIST-free frontier, same machinery and same crash
-            // contract as the IvfMaintainer's — failable, so it runs
-            // before countsRef.set; a crash here or in the retention
-            // below leaves headSeq unadvanced and the re-delivery
-            // rewrites the same seq with the same content. A TORN
-            // record write steps a restore back to the previous
-            // record, whose snapshot the keep-2 retention window
-            // preserves, and the stream's re-delivery re-merges from
-            // it — byte-identical; a crash AFTER the record completes
-            // restores the new snapshot and absorbs the re-delivery
-            // as the usual no-op.) The record's gen field carries the
-            // snapshot's batch id; the tail field is unused
-            // (snapshots are full state).
-            writeHeadRecord(spark, p, headSeq + 1, batchId, Seq.empty)
-            // anchor + head retention, per batch (every record
-            // supersedes the previous — the torn-rewrite invariant
-            // holds per advance because THIS batch's retention runs
-            // only after its anchor write completes). The retention is
-            // ONE targeted delete, not a listing: records are dense
-            // and this runs every batch, so the only retirable record
-            // is the immediately-previous seq — a per-batch listStatus
-            // here would re-introduce exactly the micro-batch latency
-            // the r12 review evicted from the counts pass below.
-            writeHeadAnchor(spark, p, headSeq + 1)
-            if (headSeq > 0) {
-              val (hfs0, prev) = hfs(spark, s"$p/head/$headSeq")
-              hfs0.delete(prev, false)
-            }
+          // Durable snapshot FIRST, in-memory refs after: a snapshot
+          // write that crashes must leave the planner's in-memory state
+          // UNTOUCHED, because the gate has not advanced and the
+          // at-least-once contract will re-deliver this batchId — with
+          // counts already merged, the re-delivery would double-count.
+          // A crash in the snapshot write, the record or the retention
+          // leaves old counts + old head, and the re-delivery re-merges
+          // the delta from the OLD counts — byte-identical snapshot,
+          // same record seq and content, idempotent retention. A TORN
+          // record steps a restore back to the previous record, whose
+          // snapshot the keep-2 retention preserves. Between the set and
+          // the gate advance no filesystem operation is left to fail.
+          log.foreach { l =>
+            reset.write.mode("overwrite").parquet(s"${l.root}/counts/$batchId")
+            // the record's gen carries the snapshot's batch id; the tail
+            // is unused (snapshots are full state)
+            l.writeRecord(headSeq + 1, batchId, Seq.empty)
+            // anchor + head retention per batch. The retention is ONE
+            // targeted delete, not a listing: records are dense, so the
+            // only retirable record is the immediately-previous seq
+            l.writeAnchor(headSeq + 1)
+            l.retire("head", Seq(headSeq).filter(_ > 0))
             // retire all but the two newest COMPLETED snapshots (the
             // penultimate covers a crash between this write and the
-            // stream commit). Unmarked batch-id dirs — crash debris
-            // from a write that never reached _SUCCESS — are retired on
-            // the same pass (ADVICE r11: the old completed-only walk
-            // left them to accumulate forever); non-numeric names are
-            // foreign and left alone. ONE directory listing drives both
-            // the keep-set and the deletion pass (review finding, round
-            // 12: a second listStatus + per-dir exists() per micro-batch
-            // is real latency on the object stores this port targets).
-            val (fs, numeric) = numericDirs(spark, s"$p/counts")
-            val keep = numeric
-              .filter(d => fs.exists(
-                new org.apache.hadoop.fs.Path(d._1.getPath, "_SUCCESS")))
-              .map(_._2).sorted.takeRight(2).toSet
-            numeric
-              .filter(d => !keep.contains(d._2))
-              .foreach(d => fs.delete(d._1.getPath, true))
+            // stream commit); unmarked crash debris goes on the same
+            // pass. ONE listing drives both the keep-set and the pass.
+            val numeric = l.numbered("counts")
+            val keep = numeric.filter(i => l.marker(s"counts/$i")).takeRight(2).toSet
+            l.retire("counts", numeric.filterNot(keep))
           }
           countsRef.set(reset)
-          if (persistPath.isDefined) headSeq += 1
+          if (log.isDefined) headSeq += 1
         }
-        lastBatch = batchId
+        gate.last = batchId
       }
-    }
 
     /** docs: streaming (doc_id, text, source) frame. `checkpointLocation`
       * makes the source resumable — pair it with `persistPath` for the
       * restart contract above. */
-    def start(docs: DataFrame, checkpointLocation: Option[String] = None) = {
-      persistPath.foreach(p =>
-        checkOrRecordPairing(spark, p, checkpointLocation, lastBatch >= 0))
-      val w = docs.writeStream
-        .foreachBatch((batch: DataFrame, batchId: Long) => applyBatch(batch, batchId))
-        .outputMode(OutputMode.Update)
-      checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-      w.start()
-    }
+    def start(docs: DataFrame, checkpointLocation: Option[String] = None) =
+      gate.start(docs, checkpointLocation)(applyBatch)
   }
 
   object MixturePlanner {
     /** Rebuild a planner from its latest completed counts snapshot
       * after a driver restart (fresh planner if none exists yet).
-      * Discovery is head-record-driven like the maintainer's (r16 —
-      * GET-probed, no LIST): the newest record NAMES the snapshot, so
-      * a stale listing cannot silently resume from an older counts
-      * state whose missing batches the stream checkpoint will never
-      * re-deliver. Record-free logs (pre-r16, or nothing snapshotted
-      * yet) fall back to the legacy LIST walk. */
+      * Discovery is head-record-driven like the maintainer's: the
+      * newest record NAMES the snapshot, so a stale listing cannot
+      * silently resume from an older counts state whose missing batches
+      * the stream checkpoint will never re-deliver. Record-free logs
+      * fall back to the legacy LIST walk. */
     def restore(spark: SparkSession, path: String): MixturePlanner = {
       val m = new MixturePlanner(spark, Some(path), fromRestore = true)
-      discoverFrontier(spark, path) match {
-        case Some((seq, bid, _)) =>
-          m.countsRef.set(spark.read.parquet(s"$path/counts/$bid"))
-          m.lastBatch = bid
-          m.firstAfterRestore = true
-          m.headSeq = seq
-          // Orphan sweep (ADVICE r16): the planner's per-batch head
-          // retention is ONE targeted delete of its own predecessor
-          // (deliberately — a per-batch LIST is the latency the r12
-          // review evicted), so a crash after the anchor write but
-          // before that delete strands record seq−1 PERMANENTLY: the
-          // restored planner seeds headSeq = seq and later batches
-          // only ever delete their own predecessor. Restore is the
-          // right place to pay one listing (it already pays a snapshot
-          // read): retire every record below the discovered seq. Same
-          // adjudication as the maintainer's retention pass — a stale
-          // LIST can only UNDER-report (records it misses stay debris
-          // for the next restore; it cannot name a seq above the
-          // GET-discovered newest), so the sweep never touches the
-          // live record; deleting an already-gone record is a no-op.
-          locally {
-            val (hfs0, files) = numericFiles(spark, s"$path/head")
-            files.filter(_._2 < seq)
-              .foreach(f => hfs0.delete(f._1.getPath, false))
-          }
-        case None =>
-          completedBatchIds(spark, s"$path/counts").lastOption.foreach { bid =>
-            m.countsRef.set(spark.read.parquet(s"$path/counts/$bid"))
-            m.lastBatch = bid
-            m.firstAfterRestore = true
-          }
+      val log = Log(spark, path)
+      val f = log.frontier("counts")
+      if (f.gen >= 0) {
+        m.countsRef.set(spark.read.parquet(s"$path/counts/${f.gen}"))
+        m.gate.resume(f.gen)
+        m.headSeq = f.seq
       }
+      // Orphan sweep: the per-batch head retention deletes only its own
+      // predecessor, so a crash after the anchor write but before that
+      // delete strands record seq − 1 for good. Restore pays one listing
+      // to retire every record below the discovered seq; a stale LIST
+      // can only under-report, so the sweep never touches the live
+      // record.
+      log.retire("head", log.numbered("head", dirs = false).filter(_ < f.seq))
       m
     }
 
     /** One-shot head-record adoption for a LEGACY (record-free)
-      * planner log — [[IvfMaintainer.adoptHeadRecords]]'s sibling
-      * (VERDICT r16 #1), same contract: offline, idempotent (a log
-      * already holding records is untouched → false), pays the
-      * strong-LIST walk ONE final time and records the newest counts
-      * snapshot as head record 1 + anchor, making every later restore
-      * GET-only. A log with no completed snapshot yet has no frontier
-      * to adopt (false) — its first applied batch will seed the head
-      * log itself, exactly as a fresh planner's does. */
-    def adoptHeadRecords(spark: SparkSession, path: String): Boolean =
-      if (discoverFrontier(spark, path).nonEmpty) false
-      else completedBatchIds(spark, s"$path/counts").lastOption.exists { bid =>
-        writeHeadRecord(spark, path, 1L, bid, Seq.empty)
-        writeHeadAnchor(spark, path, 1L)
-        true
-      }
+      * planner log — [[IvfMaintainer.adoptHeadRecords]]'s sibling, same
+      * contract: offline, idempotent (a log already holding records is
+      * untouched → false), records the newest counts snapshot as head
+      * record 1 + anchor. A log with no completed snapshot has no
+      * frontier to adopt (false) — its first applied batch seeds the
+      * head log itself. */
+    def adoptHeadRecords(spark: SparkSession, path: String): Boolean = {
+      val log = Log(spark, path)
+      log.adopt(log.completed("counts").lastOption.map((_, Seq.empty[Long])))
+    }
   }
 
   /** Parquet sink with checkpointing (exactly-once file sink). */

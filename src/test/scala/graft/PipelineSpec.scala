@@ -1,5 +1,6 @@
 package graft
 
+import graft.durable.Log
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -395,7 +396,7 @@ class PipelineSpec extends AnyFunSuite {
     val runDir = "graftfs://" +
       java.nio.file.Files.createTempDirectory("graft_rundir")
     def marker(n: Int) =
-      graft.streaming.Streaming.markerExists(spark, s"$runDir/stage_$n")
+      Log(spark, runDir).marker(s"stage_$n")
     // run stages 1-2, then "die" before stage 3 computes (the probe
     // throws where a driver death between the frontiers would land)
     val seen1 = probed(n => if (n == 3) throw new RuntimeException("injected driver death")) {
@@ -479,7 +480,7 @@ class PipelineSpec extends AnyFunSuite {
       try operators.PipelineOps.curationRun(spark, dir, Some(runDir))
       finally GraftFs.renameAsCopyDelete = false
     (1 to 5).foreach(n => assert(
-      graft.streaming.Streaming.markerExists(spark, s"$runDir/stage_$n"),
+      Log(spark, runDir).marker(s"stage_$n"),
       s"stage $n's frontier never completed under copy+delete renames"))
     assert(runOutputs(r) == refRun,
       "a durable run under copy+delete renames diverged from the " +
@@ -500,9 +501,9 @@ class PipelineSpec extends AnyFunSuite {
       } finally GraftFs.disarm()
     assert(GraftFs.faultsFired.get() == 1, "the create fault never fired")
     assert(seen1 == Seq(1, 2), s"fault leg computed $seen1")
-    assert(graft.streaming.Streaming.markerExists(spark, s"$runDir/stage_1"),
+    assert(Log(spark, runDir).marker("stage_1"),
       "stage 1's completed frontier went missing")
-    assert(!graft.streaming.Streaming.markerExists(spark, s"$runDir/stage_2"),
+    assert(!Log(spark, runDir).marker("stage_2"),
       "the crashed stage-2 write carries a completion marker")
     // runbook step: clear the dead writer's orphaned lock
     new org.apache.hadoop.fs.Path(runDir.toString)
@@ -549,7 +550,7 @@ class PipelineSpec extends AnyFunSuite {
     fs.delete(pth(s"$inflight/run.lock"), false) // runbook step
     assert(!operators.PipelineOps.retireRun(spark, inflight),
       "retireRun destroyed an incomplete run's resumable prefix")
-    assert(graft.streaming.Streaming.markerExists(spark, s"$inflight/stage_3"),
+    assert(Log(spark, inflight).marker("stage_3"),
       "the resumable prefix went missing")
     // the refused log resumes exactly as the kill/resume law promises
     val seen = probed(_ => ()) {
@@ -678,7 +679,7 @@ class PipelineSpec extends AnyFunSuite {
     finally operators.PipelineOps.retireProbe = () => ()
     assert(fs.exists(intent),
       "the loser deleted the winner's in-flight intent")
-    assert(graft.streaming.Streaming.markerExists(spark, s"$raceDir/stage_3"),
+    assert(Log(spark, raceDir).marker("stage_3"),
       "the loser deleted frontiers behind the winner's intent")
     // the winner (or any retry) finishes the retirement
     assert(operators.PipelineOps.retireRun(spark, raceDir))
@@ -704,7 +705,7 @@ class PipelineSpec extends AnyFunSuite {
     } finally GraftFs.disarm()
     assert(!gfs.exists(pth(s"$failDir/retired")),
       "the failed pass left a phantom intent")
-    assert(graft.streaming.Streaming.markerExists(spark, s"$failDir/stage_5"),
+    assert(Log(spark, failDir).marker("stage_5"),
       "the failed pass deleted frontiers")
     assert(operators.PipelineOps.retireRun(spark, failDir))
     (1 to 5).foreach(n => assert(!gfs.exists(pth(s"$failDir/stage_$n"))))

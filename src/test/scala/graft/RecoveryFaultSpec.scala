@@ -1,5 +1,7 @@
 package graft
 
+import graft.durable.Log
+import graft.durable.Log.Frontier
 import graft.streaming.Streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -967,7 +969,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     try {
       // non-vacuity counterfactual: the OLD discovery (the LIST walk)
       // does truncate inside this exact window
-      assert(Streaming.completedBatchIds(spark, s"$pA/delta") == Seq(0L),
+      assert(Log(spark, pA).completed("delta") == Seq(0L),
         "the staleness window hid nothing — the law is vacuous")
       val r = Streaming.IvfMaintainer.restore(spark, pA, _ => false)
       assert(r.corpus.count() == nTotal,
@@ -987,7 +989,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(mB.compactLog()) // compact/1 complete, covered deltas gone
     GraftFs.markStaleListing("compact/1$")
     try {
-      assert(Streaming.completedBatchIds(spark, s"$pB/compact").isEmpty,
+      assert(Log(spark, pB).completed("compact").isEmpty,
         "the staleness window hid nothing — the law is vacuous")
       val r = Streaming.IvfMaintainer.restore(spark, pB, _ => false)
       assert(r.corpus.count() == nTotal,
@@ -1023,8 +1025,8 @@ class RecoveryFaultSpec extends AnyFunSuite {
       "superseded head records survived the retention pass")
     assert(fs.exists(p(ppath, "head/anchor0")),
       "the compaction never advanced its anchor slot (first advance → slot 0)")
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((3L, 1L, Seq.empty[Long])))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(3L, 1L, Seq.empty[Long])))
     val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
     assert(r.corpus.count() == nTotal)
     assert(answers(r.corpus, r.index) == fullAnswers)
@@ -1039,17 +1041,17 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // and the restored legacy maintainer RE-SEEDS the head log: its
     // next applied batch writes record 1 naming the full frontier
     legacy.applyBatch(rawBatch(0, 1), 2L)
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((1L, 1L, Seq(2L))))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(1L, 1L, Seq(2L))))
     // anchor-slot ALTERNATION (review r16 pass 1: parity-chosen slots
     // could rewrite one slot twice in a row, voiding the torn-rewrite
     // invariant — each advance must land OPPOSITE the best slot):
     // two further compactions land in slot 0 then slot 1, each naming
     // its own record, and discovery tracks the head throughout
     assert(legacy.compactLog())
-    assert(Streaming.readHeadRecord(spark, ppath, 2L).exists(_._1 == 2L))
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((2L, 2L, Seq.empty[Long])))
+    assert(Log(spark, ppath).readRecord(2L).exists(_._1 == 2L))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(2L, 2L, Seq.empty[Long])))
     legacy.applyBatch(rawBatch(1, 2), 3L)
     assert(legacy.compactLog())
     val anchors = Seq(0, 1).map(i => {
@@ -1062,8 +1064,8 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(anchors == Seq(2L, 4L),
       s"anchor slots $anchors: expected strict alternation (slot 0 = " +
         "first post-reseed compaction's record 2, slot 1 = the next's 4)")
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((4L, 3L, Seq.empty[Long])))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(4L, 3L, Seq.empty[Long])))
   }
 
   test("head records: a crash DURING the record write is exactly-once under re-delivery, and a restore inside the window resumes one batch back") {
@@ -1099,8 +1101,8 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(answers(mid.corpus, mid.index) == fullAnswers)
     // the re-delivery rewrote record 2 with the same content; the
     // frontier is whole again
-    assert(Streaming.discoverFrontier(spark, ppath.toString)
-      .contains((2L, -1L, Seq(0L, 1L))))
+    assert(Log(spark, ppath.toString).discover()
+      .contains(Frontier(2L, -1L, Seq(0L, 1L))))
   }
 
   test("head records: a crash during the COMPACTION's record write leaves the pass retryable at the same head; the retry completes the generation") {
@@ -1127,16 +1129,16 @@ class RecoveryFaultSpec extends AnyFunSuite {
       "the staged snapshot went missing — the crash landed too early")
     // the frontier still names the PRE-compaction state; a restore
     // inside the window is exact via the old generation + tail
-    assert(Streaming.discoverFrontier(spark, ppath.toString)
-      .contains((2L, -1L, Seq(0L, 1L))))
+    assert(Log(spark, ppath.toString).discover()
+      .contains(Frontier(2L, -1L, Seq(0L, 1L))))
     val mid = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
     assert(mid.corpus.count() == nTotal)
     // the gate never advanced, so the retry is NOT a no-op: it reuses
     // the completed snapshot (never rewritten in place), writes record
     // 3 for the same head, and retires the covered deltas
     assert(m.compactLog(), "the retry treated the crashed pass as done")
-    assert(Streaming.discoverFrontier(spark, ppath.toString)
-      .contains((3L, 1L, Seq.empty[Long])))
+    assert(Log(spark, ppath.toString).discover()
+      .contains(Frontier(3L, 1L, Seq.empty[Long])))
     val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
     assert(r.corpus.count() == nTotal)
     assert(answers(r.corpus, r.index) == fullAnswers)
@@ -1163,8 +1165,8 @@ class RecoveryFaultSpec extends AnyFunSuite {
       m.applyBatch(rawBatch(cut, cut + k), 0L)
       assert(m.compactLog())
       m.applyBatch(rawBatch(cut + k, nTotal), 1L)
-      assert(Streaming.discoverFrontier(spark, ppath.toString)
-        .contains((3L, 0L, Seq(1L))))
+      assert(Log(spark, ppath.toString).discover()
+        .contains(Frontier(3L, 0L, Seq(1L))))
       val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
       assert(r.corpus.count() == nTotal)
       assert(answers(r.corpus, r.index) == fullAnswers)
@@ -1188,13 +1190,13 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // the crash the exactly-once law injects at create time
     val out = fs.create(p(ppath, "head/3"), true)
     out.write("graft-head-v1\ngen=1\ntail=".getBytes("UTF-8")); out.close()
-    assert(Streaming.readHeadRecord(spark, ppath, 3L).isEmpty,
+    assert(Log(spark, ppath).readRecord(3L).isEmpty,
       "a sentinel-less record parsed as complete — the torn-write " +
         "gate is broken")
     // discovery steps back to record 2, whose frontier is the full
     // corpus — the torn record named nothing that isn't re-deliverable
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((2L, -1L, Seq(0L, 1L))))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(2L, -1L, Seq(0L, 1L))))
     val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
     assert(r.corpus.count() == nTotal)
     assert(answers(r.corpus, r.index) == fullAnswers)
@@ -1220,7 +1222,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     try {
       // non-vacuity counterfactual: the legacy walk resumes one
       // snapshot back inside this exact window
-      assert(Streaming.completedBatchIds(spark, s"$ppath/counts") == Seq(0L),
+      assert(Log(spark, ppath).completed("counts") == Seq(0L),
         "the staleness window hid nothing — the law is vacuous")
       val r = Streaming.MixturePlanner.restore(spark, ppath.toString)
       assert(tok(r) == 5L,
@@ -1236,8 +1238,8 @@ class RecoveryFaultSpec extends AnyFunSuite {
     legacy.applyBatch(
       Seq((3L, "f", "s")).toDF("doc_id", "text", "source"), 2L)
     assert(tok(legacy) == 6L)
-    assert(Streaming.discoverFrontier(spark, ppath.toString)
-      .contains((1L, 2L, Seq.empty[Long])))
+    assert(Log(spark, ppath.toString).discover()
+      .contains(Frontier(1L, 2L, Seq.empty[Long])))
     val r2 = Streaming.MixturePlanner.restore(spark, ppath.toString)
     assert(tok(r2) == 6L)
     // the fresh-construction guard refuses a used log even when a
@@ -1246,7 +1248,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // listing to slip through
     GraftFs.markStaleListing("counts")
     try {
-      assert(Streaming.completedBatchIds(spark, s"$ppath/counts").isEmpty,
+      assert(Log(spark, ppath).completed("counts").isEmpty,
         "the staleness window hid nothing — the guard leg is vacuous")
       val ex = intercept[IllegalArgumentException] {
         new Streaming.MixturePlanner(spark, Some(ppath))
@@ -1282,6 +1284,30 @@ class RecoveryFaultSpec extends AnyFunSuite {
       "cleanup never fired once the lock was free")
     assert(!fs.exists(p(ppath, "cleanup.lock")),
       "the cleaner leaked its cleanup lock")
+    // a lock create that fails for a reason other than a held lock is a
+    // real failure: it propagates instead of silently skipping cleanup
+    // (which would surface later as a misleading pairing mismatch)
+    GraftFs.register(spark)
+    val gpath = "graftfs://" +
+      java.nio.file.Files.createTempDirectory("graft_cleanlock_fault")
+    val gfs = fsFor(gpath)
+    val rec = gfs.create(p(gpath, "pairing.txt"), false)
+    try rec.write(s"$gpath/dead_ck\n".getBytes("UTF-8")) finally rec.close()
+    GraftFs.armFault("create", "cleanup.lock")
+    try {
+      intercept[java.io.IOException] {
+        new Streaming.MixturePlanner(spark, Some(gpath))
+      }
+      assert(GraftFs.faultsFired.get() == 1,
+        "the lock create fault never fired — the leg is vacuous")
+    } finally GraftFs.disarm()
+    assert(!gfs.exists(p(gpath, "cleanup.lock")),
+      "the failed lock create left a lock behind")
+    assert(gfs.exists(p(gpath, "pairing.txt")),
+      "cleanup ran without holding the lock")
+    new Streaming.MixturePlanner(spark, Some(gpath))
+    assert(!gfs.exists(p(gpath, "pairing.txt")),
+      "cleanup never fired once the filesystem behaved")
   }
 
   test("head-record reads treat a vanishing file as absence (ADVICE r16): the exists→read TOCTOU against the owner's retention degrades discovery to the step-back/legacy arms, never a raw FNFE") {
@@ -1303,8 +1329,8 @@ class RecoveryFaultSpec extends AnyFunSuite {
     try {
       // the unreadable newest record is absence: discovery steps back
       // one, exactly the torn-newest contract
-      assert(Streaming.discoverFrontier(spark, ppath)
-        .contains((1L, -1L, Seq(0L))),
+      assert(Log(spark, ppath).discover()
+        .contains(Frontier(1L, -1L, Seq(0L))),
         "discovery did not step back past the vanishing record")
       assert(GraftFs.faultsFired.get() > 0,
         "the open fault never fired — the law is vacuous")
@@ -1332,13 +1358,27 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(ok.compactLog()) // record 3, anchor0 = 3, records 1–2 retired
     GraftFs.armFault("open", "anchor", sticky = true)
     try {
-      assert(Streaming.discoverFrontier(spark, ppath).isEmpty,
+      assert(Log(spark, ppath).discover().isEmpty,
         "discovery used an anchor it could not read")
       assert(GraftFs.faultsFired.get() > 0,
         "the anchor open fault never fired — the leg is vacuous")
       val r2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
       assert(r2.corpus.count() == nTotal)
       assert(answers(r2.corpus, r2.index) == fullAnswers)
+    } finally GraftFs.disarm()
+    // pairing leg: a fresh planner reads pairing.txt before it takes
+    // cleanup.lock, and a concurrent cleaner can delete the record in
+    // between — the vanished record reads as unpaired, not as a crash
+    val mpath = "graftfs://" +
+      java.nio.file.Files.createTempDirectory("graft_pairing_toctou")
+    val mfs = fsFor(mpath)
+    val rec = mfs.create(p(mpath, "pairing.txt"), false)
+    try rec.write(s"$mpath/dead_ck\n".getBytes("UTF-8")) finally rec.close()
+    GraftFs.armFault("open", "pairing.txt", sticky = true)
+    try {
+      new Streaming.MixturePlanner(spark, Some(mpath))
+      assert(GraftFs.faultsFired.get() > 0,
+        "the pairing open fault never fired — the leg is vacuous")
     } finally GraftFs.disarm()
   }
 
@@ -1401,8 +1441,8 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // dense retention continues from the restored seq
     r.applyBatch(Seq((3L, "f", "s")).toDF("doc_id", "text", "source"), 2L)
     assert(fs.exists(p(ppath, "head/3")) && !fs.exists(p(ppath, "head/2")))
-    assert(Streaming.discoverFrontier(spark, ppath.toString)
-      .contains((3L, 2L, Seq.empty[Long])))
+    assert(Log(spark, ppath.toString).discover()
+      .contains(Frontier(3L, 2L, Seq.empty[Long])))
   }
 
   test("owner searchTopK heals the compaction-retire race (review r17 pass 3): a restored owner's parquet-backed frames retired mid-search re-resolve once; answers exact, search counted once") {
@@ -1449,30 +1489,6 @@ class RecoveryFaultSpec extends AnyFunSuite {
       "the healed search double-counted or never counted")
   }
 
-  test("head-record parse survives the never-compacting extreme (r17 HEADTAIL finding): a 4000-id tail round-trips — the naive tail regex blew the JVM stack per comma — and malformed deep tails still read as torn") {
-    val ppath = java.nio.file.Files
-      .createTempDirectory("graft_deeptail").toString
-    val deep = 0L until 4000L
-    Streaming.writeHeadRecord(spark, ppath, 1L, -1L, deep)
-    // pre-fix this line threw StackOverflowError out of the regex
-    // engine — the restore-crash a never-compacting deployment would
-    // have hit at ~4000 uncompacted batches
-    assert(Streaming.readHeadRecord(spark, ppath, 1L)
-      .contains((-1L, deep)))
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((1L, -1L, deep)))
-    // the linear validator keeps the torn-record contract: a deep tail
-    // with an empty token (torn mid-write) is absence, not a crash
-    val fs = fsFor(ppath)
-    val rec = p(ppath, "head/2")
-    val torn = "graft-head-v1\ngen=-1\ntail=" +
-      (0L until 4000L).mkString(",") + ",\nend\n"
-    val out = fs.create(rec, true)
-    try out.write(torn.getBytes("UTF-8")) finally out.close()
-    assert(Streaming.readHeadRecord(spark, ppath, 2L).isEmpty,
-      "a malformed deep tail parsed as complete")
-  }
-
   test("adoptHeadRecords migrates a legacy log (VERDICT r16 #1): the record-free LIST walk truncates under a stale listing; after the one-shot adoption the SAME window restores FULLY, and the owner resumes the dense seq") {
     GraftFs.register(spark)
     val full = IvfAnn.fullCorpus(spark, dir)
@@ -1507,12 +1523,12 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(Streaming.IvfMaintainer.adoptHeadRecords(spark, ppath))
     assert(fs.exists(p(ppath, "head/1")) && fs.exists(p(ppath, "head/anchor0")),
       "adoption did not write the record + anchor pair")
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((1L, -1L, Seq(0L, 1L))))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(1L, -1L, Seq(0L, 1L))))
     // ---- the SAME staleness window now restores FULLY (GET-only) ----
     GraftFs.markStaleListing("delta/1$")
     try {
-      assert(Streaming.completedBatchIds(spark, s"$ppath/delta") == Seq(0L),
+      assert(Log(spark, ppath).completed("delta") == Seq(0L),
         "the staleness window hid nothing — the law is vacuous")
       val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
       assert(r.corpus.count() == nTotal,
@@ -1527,11 +1543,11 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // compaction continues the anchor/retention discipline
     val res = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
     res.applyBatch(rawBatch(0, 1), 2L)
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((2L, -1L, Seq(0L, 1L, 2L))))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(2L, -1L, Seq(0L, 1L, 2L))))
     assert(res.compactLog())
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((3L, 2L, Seq.empty[Long])))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(3L, 2L, Seq.empty[Long])))
     assert(!fs.exists(p(ppath, "head/1")) && !fs.exists(p(ppath, "head/2")),
       "the post-adoption compaction's retention skipped the adopted record")
     val fin = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
@@ -1569,8 +1585,8 @@ class RecoveryFaultSpec extends AnyFunSuite {
       "the crash window left a different state than record-without-anchor")
     // anchor-less discovery gallops from 1 — correct, because
     // retention has never run (records are contiguous from 1)
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((1L, -1L, Seq(0L))))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(1L, -1L, Seq(0L))))
     val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
     assert(r.corpus.count() == nTotal)
     assert(answers(r.corpus, r.index) == fullAnswers)
@@ -1584,8 +1600,8 @@ class RecoveryFaultSpec extends AnyFunSuite {
       "the first post-adoption compaction never wrote the anchor")
     assert(!fs.exists(p(ppath, "head/1")),
       "retention skipped the adopted record")
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((2L, 0L, Seq.empty[Long])))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(2L, 0L, Seq.empty[Long])))
   }
 
   test("MixturePlanner.adoptHeadRecords: the planner's legacy counts logs migrate the same way — stale-LIST resume-from-older-snapshot before, GET-only after") {
@@ -1615,11 +1631,11 @@ class RecoveryFaultSpec extends AnyFunSuite {
       java.nio.file.Files.createTempDirectory("graft_mix_adopt_empty")))
     // the migration, then the SAME window restores the newest snapshot
     assert(Streaming.MixturePlanner.adoptHeadRecords(spark, ppath))
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((1L, 1L, Seq.empty[Long])))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(1L, 1L, Seq.empty[Long])))
     GraftFs.markStaleListing("counts/1$")
     val r = try {
-      assert(!Streaming.completedBatchIds(spark, s"$ppath/counts")
+      assert(!Log(spark, ppath).completed("counts")
         .contains(1L), "the staleness window hid nothing — vacuous")
       val r0 = Streaming.MixturePlanner.restore(spark, ppath)
       assert(r0.counts.agg(sum(col("tok"))).head().getLong(0) == 5L,
@@ -1631,7 +1647,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     r.applyBatch(Seq((3L, "f", "s")).toDF("doc_id", "text", "source"), 2L)
     assert(fs.exists(p(ppath, "head/2")) && !fs.exists(p(ppath, "head/1")),
       "the post-adoption batch did not continue the dense retention")
-    assert(Streaming.discoverFrontier(spark, ppath)
-      .contains((2L, 2L, Seq.empty[Long])))
+    assert(Log(spark, ppath).discover()
+      .contains(Frontier(2L, 2L, Seq.empty[Long])))
   }
 }

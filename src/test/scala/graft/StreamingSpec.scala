@@ -1442,19 +1442,32 @@ class StreamingSpec extends AnyFunSuite {
       new Streaming.IvfMaintainer(seed, _ => false, persistPath = Some(ppath))
     }
     assert(ex1.getMessage.contains("restore"))
-    // one real delta, then a FOREIGN dir planted in the delta log — the
-    // old getName.toLong walk threw NumberFormatException on it; the
-    // numeric-name filter must skip it (and its _SUCCESS) entirely.
+    // one real delta, then FOREIGN dirs planted in the delta log — a
+    // non-numeric name and an all-digit name too long for a Long (a
+    // `[0-9]+` filter followed by toLong threw NumberFormatException on
+    // it). The walk must skip both (and their _SUCCESS) entirely.
     val batch = spark.read.parquet(s"$dir/embeddings.parquet")
       .filter(col("vec_id") >= 64 && col("vec_id") < 96)
       .select(col("vec_id"), col("embedding"))
     m1.applyBatch(batch, 0L)
     val fs = new org.apache.hadoop.fs.Path(ppath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(s"$ppath/delta/stray/_SUCCESS"), true).close()
+    val foreign = Seq("stray", "99999999999999999999")
+    foreign.foreach(n => fs.create(
+      new org.apache.hadoop.fs.Path(s"$ppath/delta/$n/_SUCCESS"), true).close())
     val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == 64 + 32,
       "restore over a log with a foreign dir lost the real delta")
+    // compaction's deletion passes walk the same dir: they must retire
+    // the covered delta and leave every foreign dir in place
+    assert(m2.compactLog())
+    foreign.foreach(n => assert(
+      fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/delta/$n")),
+      s"compactLog deleted the foreign dir delta/$n"))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/delta/0")))
+    assert(Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+      .corpus.count() == 64 + 32,
+      "restore after compacting past foreign dirs lost data")
   }
 
   test("MixturePlanner guards: used-log refusal, checkpoint pairing at start(), crash-debris retention") {
