@@ -49,8 +49,8 @@ object Bench {
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
 
     val names = SparkEntry.registry.map(_.name)
-    // Checkpoint-cache hygiene (VERDICT r8 #1): every query rep calls
-    // .ckpt() afresh, so a full bench accumulates hundreds of orphaned
+    // Checkpoint-cache hygiene (VERDICT r8 #1): every query rep
+    // checkpoints afresh, so a full bench accumulates hundreds of orphaned
     // localCheckpoint caches — by the r8 capture's tail the session
     // pressure inflated individual queries 8× over their isolated
     // steady states (q177 7.6 s vs 0.9 s). After each rep, runOnce

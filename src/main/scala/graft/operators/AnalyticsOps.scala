@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.{Q, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.DataFrame
@@ -50,7 +49,7 @@ object AnalyticsOps {
     // (measured 9.4 s → ~1 s at sf0.1).
     val byVal = values.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
       .withColumn("bkt", (col("c") / 100000L).cast("long"))
-      .ckpt()
+      .localCheckpoint()
     val cum = graft.plans.PrefixScan.cumsum(byVal, part = Seq(), bucket = "bkt",
       order = Seq("c"), value = "cnt", out = "cum")
     val tot = byVal.agg(sum(col("cnt")).as("n"))
@@ -152,7 +151,7 @@ object AnalyticsOps {
       val st = Tables.documents(s, d)
         .select(col("source"), explode(TextFns.tokens(col("text"))).as("w"))
         .groupBy("source", "w").agg(count(lit(1)).as("cst"))
-        .ckpt()
+        .localCheckpoint()
       val wc = st.withColumn("ct", sum(col("cst")).over(Window.partitionBy("w")))
       val ns = st.groupBy("source").agg(sum(col("cst")).as("n_tokens"))
       val tot = ns.agg(sum(col("n_tokens")).as("nn"))
@@ -253,7 +252,7 @@ object AnalyticsOps {
           floor(col("l_extendedprice") * 100).cast("long").as("c"))
       val byVal = c.groupBy("k", "c").agg(count(lit(1)).as("cnt"))
         .withColumn("bkt", (col("c") / 100000L).cast("long"))
-        .ckpt() // feeds cumsum's two sides + the count side
+        .localCheckpoint() // feeds cumsum's two sides + the count side
       // n rides the cumsum's offsets broadcast (r18) — no separate
       // per-k count aggregate + broadcast join.
       val cum = graft.plans.PrefixScan.cumsum(byVal, part = Seq("k"),
@@ -352,7 +351,7 @@ object AnalyticsOps {
           size(TextFns.tokens(col("text"))).cast("long").as("w0"))
         .groupBy("lang", "n_chars").agg(sum(col("w0")).as("w"))
         .withColumn("bkt", (col("n_chars") / 100).cast("long"))
-        .ckpt() // feeds the scan, its offsets side, and tot
+        .localCheckpoint() // feeds the scan, its offsets side, and tot
       val cum = graft.plans.PrefixScan.cumsum(byVal, part = Seq("lang"),
         bucket = "bkt", order = Seq("n_chars"), value = "w", out = "cum")
       val tot = byVal.groupBy("lang").agg(sum(col("w")).as("tot"))
@@ -412,14 +411,14 @@ object AnalyticsOps {
         .select(col("o_orderpriority").as("k"),
           floor(col("o_totalprice") * 100).cast("long").as("v"))
         .groupBy("k", "v").agg(count(lit(1)).as("cnt"))
-        .ckpt() // feeds the median pass AND the deviation table
+        .localCheckpoint() // feeds the median pass AND the deviation table
       val med = lowerMedian(byVal, "med").withColumnRenamed("n", "n_rows")
       // Deviation value-table derives from the VALUE-level rows: same
       // cnt mass, value |v − med| — no second scan of the raw table.
       val devVal = byVal.join(broadcast(med), "k")
         .select(col("k"), abs(col("v") - col("med")).as("v"), col("cnt"))
         .groupBy("k", "v").agg(sum(col("cnt")).as("cnt"))
-        .ckpt() // feeds the MAD median pass AND the outlier count
+        .localCheckpoint() // feeds the MAD median pass AND the outlier count
       val mad = lowerMedian(devVal, "mad").select(col("k"), col("mad"))
       devVal.join(broadcast(med), "k").join(broadcast(mad), "k")
         .groupBy("k")
@@ -456,7 +455,7 @@ object AnalyticsOps {
         .select(floor(col("l_extendedprice") * 100).cast("long").as("v"))
         .groupBy("v").agg(count(lit(1)).as("cnt"))
         .withColumn("bkt", (col("v") / 100000L).cast("long"))
-        .ckpt() // feeds cumsum both sides + the total
+        .localCheckpoint() // feeds cumsum both sides + the total
       val cum = graft.plans.PrefixScan.cumsum(byVal, part = Seq(),
         bucket = "bkt", order = Seq("v"), value = "cnt", out = "cum")
       val n = byVal.agg(sum(col("cnt")).as("n"))
@@ -499,10 +498,10 @@ object AnalyticsOps {
       val c = Tables.orders(s, d)
         .select(col("o_orderkey").as("k"),
           floor(col("o_totalprice") * 100).cast("long").as("v"))
-        .ckpt() // feeds the value table AND the join-back
+        .localCheckpoint() // feeds the value table AND the join-back
       val byVal = c.groupBy("v").agg(count(lit(1)).as("cnt"))
         .withColumn("bkt", (col("v") / 1000000L).cast("long"))
-        .ckpt()
+        .localCheckpoint()
       val cum = graft.plans.PrefixScan.cumsum(byVal, part = Seq(),
         bucket = "bkt", order = Seq("v"), value = "cnt", out = "cum")
         .withColumn("below", col("cum") - col("cnt"))
@@ -612,7 +611,7 @@ object AnalyticsOps {
         .select(col("nk"), floor(col("o_totalprice") * 100).cast("long").as("v"))
       val vc = o.groupBy("nk", "v").agg(count(lit(1)).as("cnt"))
         .withColumn("bkt", (col("v") / 1000000L).cast("long"))
-        .ckpt() // cumsum (2 consumers) + group sizes
+        .localCheckpoint() // cumsum (2 consumers) + group sizes
       val cm = graft.plans.PrefixScan.cumsum(vc, part = Seq("nk"),
         bucket = "bkt", order = Seq("v"), value = "cnt", out = "cum")
       val kq = vc.groupBy("nk").agg(sum(col("cnt")).as("n"))
@@ -663,7 +662,7 @@ object AnalyticsOps {
         .select(col("nk"), floor(col("o_totalprice") * 100).cast("long").as("v"))
       val vc = o.groupBy("nk", "v").agg(count(lit(1)).as("cnt"))
         .withColumn("bkt", (col("v") / 1000000L).cast("long"))
-        .ckpt() // cumsum + sizes + winsorized join-back
+        .localCheckpoint() // cumsum + sizes + winsorized join-back
       val cm = graft.plans.PrefixScan.cumsum(vc, part = Seq("nk"),
         bucket = "bkt", order = Seq("v"), value = "cnt", out = "cum")
       val kq = vc.groupBy("nk").agg(sum(col("cnt")).as("n"))
@@ -711,13 +710,13 @@ object AnalyticsOps {
         |GROUP BY ks.k ORDER BY k""".stripMargin) { (s, d) =>
       val daily = Tables.orders(s, d)
         .groupBy(col("o_orderdate").as("day")).agg(count(lit(1)).as("n"))
-        .ckpt() // span aggregate + calendar join
+        .localCheckpoint() // span aggregate + calendar join
       val span = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       val f = span.select(explode(expr("sequence(mn, mx, interval 1 day)")).as("day"))
         .join(daily, Seq("day"), "left")
         .withColumn("x", coalesce(col("n"), lit(0L)))
         .select(col("day"), col("x"))
-        .ckpt() // both sides of the 7-lag self-join
+        .localCheckpoint() // both sides of the 7-lag self-join
       val ks = s.range(1, 8).select(col("id").as("k"))
       val a = f.crossJoin(broadcast(ks))
         .withColumn("jday", expr("date_add(day, CAST(k AS INT))"))
@@ -782,7 +781,7 @@ object AnalyticsOps {
       val v = c.crossJoin(broadcast(mx))
         .select(col("cust"), datediff(col("mx"), col("lastd")).cast("long").as("r"),
           col("f"), col("m"))
-        .ckpt() // the stacked threshold scan + the scoring pass
+        .localCheckpoint() // the stacked threshold scan + the scoring pass
       // All three quartile-threshold computations fused into ONE pass:
       // stack (dim, val) via explode (3 rows per customer — still
       // customer-sized), one groupBy(dim, val), one PrefixScan
@@ -1112,7 +1111,7 @@ object AnalyticsOps {
           floor(col("l_extendedprice") * 100).cast("long").as("c"))
         .groupBy("qtr", "l_suppkey")
         .agg(sum(col("c")).as("cents"))
-        .ckpt() // winner join + per-quarter max share one pass
+        .localCheckpoint() // winner join + per-quarter max share one pass
       val mx = rev.groupBy(col("qtr").as("mqtr")).agg(max(col("cents")).as("mx"))
       rev.join(broadcast(mx),
           col("qtr") === col("mqtr") && col("cents") === col("mx"))
@@ -1316,7 +1315,7 @@ object AnalyticsOps {
         .groupBy(col("o_custkey").as("cust"),
           year(col("o_orderdate")).as("yr"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("m"))
-        .ckpt() // threshold scan + scoring join
+        .localCheckpoint() // threshold scan + scoring join
       val nRow = sp.groupBy("yr").agg(count(lit(1)).as("n"))
       val vc = sp.groupBy(col("yr"), col("m").as("val"))
         .agg(count(lit(1)).as("cnt"))
@@ -1364,7 +1363,7 @@ object AnalyticsOps {
             .cast("long").as("qtr"),
           col("o_orderpriority").as("pri"))
         .agg(count(lit(1)).as("n"))
-        .ckpt() // totals join + lag window reuse
+        .localCheckpoint() // totals join + lag window reuse
       val t = q.groupBy("qtr").agg(sum(col("n")).as("tot"))
       val w = Window.partitionBy("pri").orderBy("qtr")
       q.join(broadcast(t), "qtr")
@@ -1505,7 +1504,7 @@ object AnalyticsOps {
           col("l_suppkey") === col("s_suppkey"))
         .groupBy(col("s_nationkey").as("nk"), col("l_suppkey").as("sk"))
         .agg(sum(col("c")).as("cents"))
-        .ckpt() // totals + share join
+        .localCheckpoint() // totals + share join
       val t = r.groupBy("nk").agg(sum(col("cents")).as("tot"))
       r.join(broadcast(t), "nk")
         .withColumn("share", expr("(1000000 * cents) div tot"))
@@ -1526,7 +1525,7 @@ object AnalyticsOps {
   private[graft] def ppsSample(t0: DataFrame, k: Int): DataFrame = {
     // three consumers (cumsum local side, cumsum offsets, wtot) — the
     // standard multiply-consumed-subtree checkpoint (q101's rule).
-    val t = t0.ckpt()
+    val t = t0.localCheckpoint()
     val byRow = t.withColumn("bkt", (col("doc_id") / 100L).cast("long"))
     val cum = graft.plans.PrefixScan.cumsum(byRow, part = Seq(), bucket = "bkt",
       order = Seq("doc_id"), value = "nw", out = "cum")
@@ -1549,10 +1548,10 @@ object AnalyticsOps {
   private[graft] def paretoFrontier(df0: DataFrame, part: Seq[String]): DataFrame = {
     // df feeds the byX build AND the recovery join; byX feeds both
     // suffixMaxExcl sides — checkpoint each once.
-    val df = df0.ckpt()
+    val df = df0.localCheckpoint()
     val byX = df.groupBy((part :+ "x").map(col): _*).agg(max(col("y")).as("ymax"))
       .withColumn("bkt", (col("x") / 100000L).cast("long"))
-      .ckpt()
+      .localCheckpoint()
     val suff = graft.plans.PrefixScan.suffixMaxExcl(byX, part, bucket = "bkt",
       order = Seq("x"), value = "ymax", out = "sm")
     val frontier = suff.where(col("ymax") > col("sm"))

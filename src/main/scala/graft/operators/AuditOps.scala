@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.{Q, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -63,14 +62,14 @@ object AuditOps {
     liKeysCache.getOrCompute(s, d) {
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-        .ckpt()
+        .localCheckpoint()
     }
 
   private def orderKeys(s: SparkSession, d: String): DataFrame =
     ordKeysCache.getOrCompute(s, d) {
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"))
-        .ckpt()
+        .localCheckpoint()
     }
 
   /** FK edge with a caller-supplied (already-counted) child cardinality
@@ -122,7 +121,7 @@ object AuditOps {
       // Tokenizing the corpus is the expensive step and the exploded
       // stream has 3 consumers (MG pass, total, recount) — checkpoint it
       // once (multiply-consumed-subtree rule, same as q101/q110).
-      val tokDf = toks.toDF("w").ckpt()
+      val tokDf = toks.toDF("w").localCheckpoint()
       val candidates = tokDf.as[String].mapPartitions(mg).toDF("w").distinct()
       val tot = tokDf.agg(count(lit(1)).as("n"))
       tokDf
@@ -169,8 +168,8 @@ object AuditOps {
       // One counting pass per fact table, shared across its edges
       // (1-row frames; checkpointed so each reuse is a lookup, not a
       // recount of the projection).
-      val nLi = li.agg(count(lit(1)).as("n_child")).ckpt()
-      val nOrd = ord.agg(count(lit(1)).as("n_child")).ckpt()
+      val nLi = li.agg(count(lit(1)).as("n_child")).localCheckpoint()
+      val nOrd = ord.agg(count(lit(1)).as("n_child")).localCheckpoint()
       fkEdge("customer->nation", Tables.customer(s, d), "c_nationkey",
           Tables.nation(s, d), "n_nationkey")
         .unionAll(fkEdgeWith("lineitem->orders", li, "l_orderkey", nLi,
@@ -213,7 +212,7 @@ object AuditOps {
       // One materialized 6-column projection; each column then profiles
       // as a SINGLE-distinct aggregate (two-stage partial-distinct plan,
       // null count rides along) — no Expand, no 6× row multiplication.
-      val base = Tables.orders(s, d).select(cols.map(col): _*).ckpt()
+      val base = Tables.orders(s, d).select(cols.map(col): _*).localCheckpoint()
       cols.map { c =>
         base.agg(
             sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long").as("n_nulls"),
@@ -456,7 +455,7 @@ object AuditOps {
         .groupBy(col("source"), col("n_chars").as("x"))
         .agg(count(lit(1)).as("cnt"))
         .withColumn("bkt", (col("x") / 64L).cast("long"))
-        .ckpt() // feeds cumsum's two sides + the totals
+        .localCheckpoint() // feeds cumsum's two sides + the totals
       // n and sx ride the cumsum's offsets broadcast (r18) — the
       // separate per-source totals aggregate + broadcast join drop.
       val cum = graft.plans.PrefixScan.cumsum(
@@ -579,7 +578,7 @@ object AuditOps {
       val cells = Tables.orders(s, d)
         .groupBy(col("o_orderpriority").as("pri"), col("o_orderstatus").as("st"))
         .agg(count(lit(1)).as("o"))
-        .ckpt() // marginals + totals all derive from it
+        .localCheckpoint() // marginals + totals all derive from it
       val rowT = cells.groupBy("pri").agg(sum(col("o")).as("rt"))
       val colT = cells.groupBy("st").agg(sum(col("o")).as("ct"))
       val n = cells.agg(sum(col("o")).as("n"))
@@ -708,7 +707,7 @@ object AuditOps {
         .groupBy("v")
         .agg(sum(col("early")).as("n_a"), sum(lit(1L) - col("early")).as("n_b"))
         .withColumn("bkt", expr("v div 5000000"))
-        .ckpt() // feeds two cumsums + the totals
+        .localCheckpoint() // feeds two cumsums + the totals
       // ta/tb ride the outer cumsum's offsets broadcast (r18) — the
       // separate totals aggregate + crossJoin drop.
       val cum = graft.plans.PrefixScan.cumsum(
@@ -865,7 +864,7 @@ object AuditOps {
           col("o_custkey") === col("c_custkey"))
         .groupBy("seg", "prio")
         .agg(count(lit(1)).as("n"))
-        .ckpt() // winner join + per-segment max share one pass
+        .localCheckpoint() // winner join + per-segment max share one pass
       val m = cnt.groupBy(col("seg").as("mseg")).agg(max(col("n")).as("mx"))
       cnt.join(broadcast(m), col("seg") === col("mseg") && col("n") === col("mx"))
         .groupBy("seg")

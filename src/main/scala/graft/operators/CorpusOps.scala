@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.{Q, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -78,7 +77,7 @@ object CorpusOps {
       val v = Tables.documents(s, d)
         .select(col("source"), explode(TextFns.tokens(col("text"))).as("token"))
         .distinct()
-        .ckpt() // consumed by the pair join (twice) and the size counts
+        .localCheckpoint() // consumed by the pair join (twice) and the size counts
       val c = v.groupBy(col("source")).agg(count(lit(1)).as("nv"))
       // self-join spelled explicitly so both sides rename cleanly
       val a = v.select(col("source").as("source_a"), col("token"))
@@ -176,7 +175,7 @@ object CorpusOps {
         .select(col("source"), explode(TextFns.tokens(col("text"))).as("token"))
         .groupBy(col("source"), length(col("token")).cast("long").as("token_len"))
         .agg(count(lit(1)).as("n"))
-        .ckpt() // consumed by the per-source total and the final join
+        .localCheckpoint() // consumed by the per-source total and the final join
       val tot = g.groupBy(col("source")).agg(sum(col("n")).as("tot"))
       g.join(broadcast(tot), "source")
         .select(col("source"), col("token_len"), col("n"),
@@ -296,7 +295,7 @@ object CorpusOps {
           size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
         .groupBy(col("source"), col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tokens"))
-        .ckpt() // consumed by the totals and the final join
+        .localCheckpoint() // consumed by the totals and the final join
       val tot = g.groupBy(col("source")).agg(sum(col("tokens")).as("tot"))
       g.join(broadcast(tot), "source")
         .select(col("source"), col("lang"), col("n_docs"), col("tokens"),
@@ -352,8 +351,8 @@ object CorpusOps {
           aggregate(transform(col("embedding"),
             x => floor(x.cast("double") * 1000).cast("long")),
             lit(0L), (acc, v) => acc + v * v).as("nq2"))
-        .ckpt() // consumed by both median passes and the final filter
-      val byVal = q.groupBy(col("nq2").as("v")).agg(count(lit(1)).as("cnt")).ckpt()
+        .localCheckpoint() // consumed by both median passes and the final filter
+      val byVal = q.groupBy(col("nq2").as("v")).agg(count(lit(1)).as("cnt")).localCheckpoint()
       val med = lowerMedian(byVal, "med")
       val devVal = byVal.crossJoin(broadcast(med))
         .select(abs(col("v") - col("med")).as("v"), col("cnt"))
@@ -397,7 +396,7 @@ object CorpusOps {
       val bd = docs
         .select(explode(TextFns.shingles(TextFns.tokens(col("text")), 2)).as("b"))
         .distinct()
-        .ckpt() // feeds the continuation aggregate AND the type total
+        .localCheckpoint() // feeds the continuation aggregate AND the type total
       val cont = bd
         .select(split(col("b"), " ").getItem(1).as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("n_contexts"))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.{Q, Tables}
 import org.apache.spark.sql.functions._
 
@@ -644,7 +643,7 @@ object EventsOps {
           expr("CAST(datediff(to_date(ts), DATE '1970-01-05') AS BIGINT) div 7")
             .as("wk"),
           floor(col("value") * 100).cast("long").as("c"))
-        .ckpt() // cohort build + revenue join-back
+        .localCheckpoint() // cohort build + revenue join-back
       val f = e.groupBy("user_id").agg(min(col("wk")).as("cohort"))
       e.join(f, "user_id")
         .groupBy(col("cohort"), (col("wk") - col("cohort")).as("age"))
@@ -846,7 +845,7 @@ object EventsOps {
         |FROM w GROUP BY wk ORDER BY wk""".stripMargin) { (s, d) =>
       val e = Tables.events(s, d)
         .select(col("user_id"), col("event_type"), col("ts"))
-        .ckpt() // first-view aggregate + purchase join
+        .localCheckpoint() // first-view aggregate + purchase join
       val fv = e.filter(col("event_type") === "view")
         .groupBy("user_id").agg(min(col("ts")).as("fv"))
       val cp = fv.join(e.filter(col("event_type") === "purchase"), Seq("user_id"))
@@ -940,7 +939,7 @@ object EventsOps {
         .select(col("user_id"),
           expr("CAST(datediff(day, DATE '1970-01-05') AS BIGINT) div 7").as("wk"))
         .distinct()
-        .ckpt() // actives + first-week + adjacent-week join
+        .localCheckpoint() // actives + first-week + adjacent-week join
       val act = uw.groupBy("wk").agg(count(lit(1)).as("n_active"))
       val nw = uw.groupBy("user_id").agg(min(col("wk")).as("fw"))
         .groupBy(col("fw").as("wk")).agg(count(lit(1)).as("n_new"))
@@ -1088,7 +1087,7 @@ object EventsOps {
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
     Tables.events(s, d)
       .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
-      .ckpt()
+      .localCheckpoint()
 
   /** Exact rolling 28-day MAU per covered day from distinct user-days,
     * ONE definition shared by q121 and q126 so the window length, clip

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -65,7 +64,7 @@ object Extras {
 
   private def cachedPercentiles(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    pctCache.getOrCompute(s, d)(exactPercentiles(s, d).ckpt())
+    pctCache.getOrCompute(s, d)(exactPercentiles(s, d).localCheckpoint())
 
   /** Fixed per-format scratch dir for the sink round-trips: repeated
     * Bench/Verify invocations OVERWRITE the same path instead of

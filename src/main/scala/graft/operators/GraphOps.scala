@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -52,7 +51,7 @@ object GraphOps {
   private val edgeCache = new graft.plans.DerivationCache[DataFrame]
 
   private[graft] def symEdges(s: SparkSession, d: String): DataFrame =
-    edgeCache.getOrCompute(s, d)(symEdgesUncached(s, d).ckpt())
+    edgeCache.getOrCompute(s, d)(symEdgesUncached(s, d).localCheckpoint())
 
   /** Per-node triangle participation counts, degree-ordered wedge
     * enumeration. Orients every undirected edge from its lower
@@ -79,7 +78,7 @@ object GraphOps {
     // base-edge build re-executes per consumer.
     val o = keyed.where(col("ka") < col("kb"))
       .select(col("a").as("src"), col("b").as("dst"), col("kb").as("kdst"))
-      .ckpt()
+      .localCheckpoint()
     val wedges = o.as("e1").join(o.as("e2"),
         col("e1.src") === col("e2.src") && col("e1.kdst") < col("e2.kdst"))
       .select(col("e1.src").as("x"), col("e1.dst").as("u"), col("e2.dst").as("v"))
@@ -142,7 +141,7 @@ object GraphOps {
       // for deeper BFS; for the 3-round queries it means no
       // mid-iteration checkpoint at all.
       dist = dist.unionByName(cand).groupBy("id").agg(min(col("dist")).as("dist"))
-      if (r % checkpointEvery == 0 && r < rounds) dist = dist.ckpt()
+      if (r % checkpointEvery == 0 && r < rounds) dist = dist.localCheckpoint()
     }
     dist
   }
@@ -184,8 +183,8 @@ object GraphOps {
       // the distinct nodes. The previous edges.select(src).distinct()
       // re-aggregated the full edge table (plus a second ckpt + a
       // count over it) for a frame deg already contains.
-      val deg = eSym.groupBy("src").agg(count(lit(1)).as("deg")).ckpt()
-      val edges = eSym.join(deg, "src").ckpt()
+      val deg = eSym.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
+      val edges = eSym.join(deg, "src").localCheckpoint()
       val nodes = deg.select(col("src").as("id"))
       val n = deg.count()
       // ranks (one row per node) is usually orders of magnitude smaller
@@ -305,16 +304,16 @@ object GraphOps {
       var e = li.as("x").join(li.as("y"),
           col("x.ok") === col("y.ok") && col("x.sk") < col("y.sk"))
         .select(col("x.sk").as("a"), col("y.sk").as("b")).distinct()
-        .ckpt()
+        .localCheckpoint()
       val stats = (1 to 3).map { r =>
         val deg = e.select(col("a").as("node"))
           .unionByName(e.select(col("b").as("node")))
           .groupBy("node").agg(count(lit(1)).as("dg"))
         val keep = deg.where(col("dg") >= 2).select("node")
-          .ckpt() // both endpoint joins consume it
+          .localCheckpoint() // both endpoint joins consume it
         e = e.join(keep.select(col("node").as("a")), "a")
           .join(keep.select(col("node").as("b")), "b")
-          .ckpt() // next round's degree build + this stats row
+          .localCheckpoint() // next round's degree build + this stats row
         e.select(explode(array(col("a"), col("b"))).as("node"))
           .agg(countDistinct(col("node")).as("n_nodes"))
           .crossJoin(e.agg(count(lit(1)).as("n_edges")))
@@ -347,11 +346,11 @@ object GraphOps {
       val e = Tables.lineitem(s, d)
         .select(col("l_partkey").as("p"), col("l_suppkey").as("s"))
         .distinct()
-        .ckpt() // degree tables + the edge-level join reuse it
+        .localCheckpoint() // degree tables + the edge-level join reuse it
       val dp = e.groupBy("p").agg(count(lit(1)).as("dp"))
-        .ckpt() // edge join-back + node count
+        .localCheckpoint() // edge join-back + node count
       val ds = e.groupBy("s").agg(count(lit(1)).as("ds"))
-        .ckpt()
+        .localCheckpoint()
       // node counts come from the degree tables — no multi-distinct
       // Expand over the edge list (the q118 lesson)
       val nP = dp.agg(count(lit(1)).as("n_parts"))
@@ -396,7 +395,7 @@ object GraphOps {
       val e0 = li.as("x").join(li.as("y"),
           col("x.ok") === col("y.ok") && col("x.pk") < col("y.pk"))
         .select(col("x.pk").as("a"), col("y.pk").as("b")).distinct()
-        .ckpt() // wedge join consumes it twice + the anti join
+        .localCheckpoint() // wedge join consumes it twice + the anti join
       val e = e0.unionAll(e0.select(col("b").as("a"), col("a").as("b")))
       val w = e.as("e1").join(e.as("e2"),
           col("e1.b") === col("e2.a") && col("e1.a") < col("e2.b"))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.{Q, Tables}
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -87,9 +86,9 @@ object IvfAnn {
     // without the eager localCheckpoint every reference re-executes the
     // whole k-means chain (on a cluster: reliable checkpoint instead).
     val centroids = (1 to lloydIters).foldLeft(init) { (cents, _) =>
-      recompute(corpus, assign(corpus, cents)).ckpt()
+      recompute(corpus, assign(corpus, cents)).localCheckpoint()
     }
-    (assign(corpus, centroids).ckpt(), centroids, nlist)
+    (assign(corpus, centroids).localCheckpoint(), centroids, nlist)
   }
 
   /** Exact IVF top-k with a triangle-inequality probe bound. For a cell
@@ -115,7 +114,7 @@ object IvfAnn {
       .withColumn("ang", acos(clamp(
         GraftFunctions.dot(col("emb"), col("cemb")) / (col("nrm") * col("cnrm")))))
       .groupBy(col("cell")).agg(max(col("ang")).as("radius"))
-    IvfIndex(assigned, centroids.join(radii, "cell").ckpt(),
+    IvfIndex(assigned, centroids.join(radii, "cell").localCheckpoint(),
       nlist, nprobeFor(nlist))
   }
 
@@ -235,7 +234,7 @@ object IvfAnn {
         GraftFunctions.dot(col("ea"), col("cemb")) / (col("na") * col("cnrm")))))
       .withColumn("ub", cos(greatest(lit(0.0), col("theta") - col("radius"))))
       .select(col("a_id"), col("cell"), col("theta"), col("ub"))
-      .ckpt()
+      .localCheckpoint()
     (members, scored, vecs, idx.nprobe)
   }
 
@@ -288,7 +287,7 @@ object IvfAnn {
     cosines(probe2).groupBy(col("a_id"))
       .agg(max(struct(col("c"), (-col("b_id")).as("negb"))).as("m"))
       .select(col("a_id"), (-col("m.negb")).cast("long").as("nb"))
-      .ckpt() // consumed twice by mutualNnExact's reciprocity join
+      .localCheckpoint() // consumed twice by mutualNnExact's reciprocity join
   }
 
   def mutualNnExact(s: SparkSession, d: String): DataFrame = {
@@ -415,15 +414,7 @@ object IvfAnn {
     val acosT = math.acos(math.min(1.0, math.max(-1.0, t)))
     var assigned = base.assigned.select(col("vec_id"), col("cell").cast("long").as("cell"))
     var cmeta = base.cmeta.withColumn("cell", col("cell").cast("long"))
-    // Plan-audit mode: each round references the previous round's
-    // frames several times, so WITHOUT the per-round checkpoints the
-    // lineage grows exponentially (the executedPlan the audit would
-    // build OOMed the UI listener at 3 rounds). The refinement is an
-    // INDEX BUILD — a persisted once-per-(corpus, t) artifact, the
-    // same contract as cachedIndex's k-means — so the audit skips the
-    // rounds and still walks the per-query PROBE plan over the base
-    // quantizer, which is the part that runs at scale.
-    var round = if (graft.plans.Ckpt.auditMode) maxRounds else 0
+    var round = 0
     var done = false
     while (round < maxRounds && !done) {
       val sizes = assigned.groupBy(col("cell")).agg(count(lit(1)).as("n"))
@@ -432,7 +423,7 @@ object IvfAnn {
         .select(col("cell"), col("n"))
       if (bad.isEmpty) done = true
       else {
-        val badB = broadcast(bad.ckpt())
+        val badB = broadcast(bad.localCheckpoint())
         val goodMeta = cmeta.join(badB, Seq("cell"), "left_anti")
         val goodAssigned = assigned.join(badB, Seq("cell"), "left_anti")
         // members of bad cells, with per-cell rank (window over one
@@ -445,7 +436,7 @@ object IvfAnn {
             ceil(col("n") / lit(targetDepth)).cast("int"))))
           .select(col("vec_id"), col("cell"), col("emb"), col("nrm"),
             col("rnk"), col("k"), col("n"))
-          .ckpt()
+          .localCheckpoint()
         // contiguous-block init: subcell seed = mean of each id-block.
         // rnk·k is computed in LONG: an int product overflows (ANSI
         // ARITHMETIC_OVERFLOW) once a degenerate cell holds > 2³¹/64
@@ -454,20 +445,20 @@ object IvfAnn {
         val init = mb.withColumn("sub",
           (col("rnk").cast("long") * col("k") / col("n")).cast("int"))
         val lloyd = mb.select(col("vec_id"), col("cell"), col("emb"), col("nrm"))
-        var subc = recomputeBy(init, Seq("cell", "sub")).ckpt()
+        var subc = recomputeBy(init, Seq("cell", "sub")).localCheckpoint()
         for (_ <- 1 to 2) {
           val as = assignSub(lloyd, subc)
           subc = recomputeBy(lloyd.join(as, Seq("vec_id", "cell")),
-            Seq("cell", "sub")).ckpt()
+            Seq("cell", "sub")).localCheckpoint()
         }
-        val finalSub = assignSub(lloyd, subc).ckpt()
+        val finalSub = assignSub(lloyd, subc).localCheckpoint()
         // arithmetic re-id: good keeps cell·65, subcell gets
         // cell·65 + sub + 1 (sub < 64 ⇒ collision-free, deterministic)
         assigned = goodAssigned
           .select(col("vec_id"), (col("cell") * 65L).as("cell"))
           .unionByName(finalSub.select(col("vec_id"),
             (col("cell") * 65L + col("sub") + 1L).as("cell")))
-          .ckpt()
+          .localCheckpoint()
         val subRadii = lloyd.join(finalSub, Seq("vec_id", "cell"))
           .join(broadcast(subc), Seq("cell", "sub"))
           .withColumn("ang", acos(clamp(
@@ -479,7 +470,7 @@ object IvfAnn {
           .unionByName(subc.join(subRadii, Seq("cell", "sub"))
             .select((col("cell") * 65L + col("sub") + 1L).as("cell"),
               col("cemb"), col("cnrm"), col("radius")))
-          .ckpt()
+          .localCheckpoint()
         round += 1
       }
     }
@@ -590,15 +581,15 @@ object IvfAnn {
     var gcent = recomputeBy(
       cframe.withColumn("gid",
         least(lit(ngroups - 1L), expr(s"vec_id div $blk"))),
-      Seq("gid")).ckpt()
+      Seq("gid")).localCheckpoint()
     for (_ <- 1 to 2) {
       val as = assign(cframe, toCentroids(gcent))
         .select(col("vec_id"), col("cell").as("gid"))
-      gcent = recomputeBy(cframe.join(as, "vec_id"), Seq("gid")).ckpt()
+      gcent = recomputeBy(cframe.join(as, "vec_id"), Seq("gid")).localCheckpoint()
     }
     val ga = assign(cframe, toCentroids(gcent))
       .select(col("vec_id").as("cell"), col("cell").as("gid"))
-    val withG = cmeta.join(ga, "cell").ckpt() // (cell, cemb, cnrm, radius, gid)
+    val withG = cmeta.join(ga, "cell").localCheckpoint() // (cell, cemb, cnrm, radius, gid)
     val gcentR = gcent.select(col("gid"), col("cemb").as("gemb"),
       col("cnrm").as("gnrm"))
     val gmeta = withG.join(broadcast(gcentR), "gid")
@@ -607,7 +598,7 @@ object IvfAnn {
       .groupBy(col("gid"))
       .agg(max(col("ang")).as("spread"), max(col("radius")).as("maxr"))
       .join(gcentR, "gid")
-      .ckpt()
+      .localCheckpoint()
     // surviving coarse pairs: ngroups² over the broadcast group table
     val gg = gmeta.select(col("gid").as("ggid"), col("gemb").as("ge"),
       col("gnrm").as("gn"), (col("spread") + col("maxr")).as("gb"))
@@ -617,7 +608,7 @@ object IvfAnn {
         acos(clamp(GraftFunctions.dot(col("ge"), col("fe")) / (col("gn") * col("fn"))))
           <= col("gb") + lit(acosT) + col("fb") + lit(2e-6))
       .select(col("ggid"), col("fgid"))
-      .ckpt()
+      .localCheckpoint()
     // Measured survival gate (ADVICE r11): on a LOW-prunability
     // centroid set the coarse bound rejects almost nothing — the
     // surviving pairs approach ngroups² and the "pruned" fine join
@@ -699,7 +690,7 @@ object IvfAnn {
       scala.collection.concurrent.TrieMap.empty[Double, RefinedIndex])
     m.getOrElseUpdate(t, {
       val refined = refineForThreshold(fullCorpus(s, d), cachedIndex(s, d), t)
-      val adj = cellAdjacency(refined.cmeta, t).ckpt()
+      val adj = cellAdjacency(refined.cmeta, t).localCheckpoint()
       // candidate-volume probe (the q43c/q216c Σsz² pattern): what the
       // adjacency-routed probe would generate vs the all-pairs join —
       // a planning read over cell-count-bounded frames.
@@ -783,7 +774,7 @@ object IvfAnn {
     * maintainer rebuilds when it degrades (Streaming.IvfMaintainer). */
   def appendToIndex(index: IvfIndex, newCorpus: DataFrame): IvfIndex = {
     val centroids = index.cmeta.select(col("cell"), col("cemb"), col("cnrm"))
-    val newAssigned = assign(newCorpus, centroids).ckpt()
+    val newAssigned = assign(newCorpus, centroids).localCheckpoint()
     // Per-append work stays O(delta): only the delta assignment is
     // checkpointed; the full membership is a LAZY union over already-
     // checkpointed leaves (re-materializing it here would make every
@@ -800,7 +791,7 @@ object IvfAnn {
       .withColumn("radius",
         greatest(col("radius"), coalesce(col("nradius"), lit(0.0))))
       .drop("nradius")
-      .ckpt()
+      .localCheckpoint()
     // STATS RESET (the MAINT10X lesson): localCheckpoint PRESERVES the
     // optimized plan's Catalyst statistics, and this plan references
     // the previous cmeta TWICE (the broadcast radius probe above and

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.plans.Spread.SpreadOps
 import graft.{Q, Tables}
 import graft.functions.{TextFns, VectorFns}
@@ -275,8 +274,8 @@ object LlmOps {
       // cache, so its serial chain amortizes across consumers
       val tokens = Tables.documents(s, d)
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
-      val sg = simhashAgg(tokens).ckpt()
-      val uq = sg.select(col("simhash")).distinct().ckpt()
+      val sg = simhashAgg(tokens).localCheckpoint()
+      val uq = sg.select(col("simhash")).distinct().localCheckpoint()
       (sg, uq, Long.box(uq.count()))
     }
     (v._1, v._2, v._3.longValue())
@@ -697,18 +696,6 @@ object LlmOps {
     * same idea as IvfAnn.writeClustered, realized as a bucketed
     * catalog table). */
   private[graft] def bucketedShingleIndex(s: SparkSession, d: String): DataFrame = {
-    // Plan-audit mode (VERDICT r9 #8): building the index is a
-    // CONSTRUCTION-TIME WAREHOUSE MUTATION (saveAsTable + stale-
-    // generation deletion), so plan-only tooling (PlanAuditSpec —
-    // anything running under Ckpt.auditMode) must never
-    // trigger it. In audit mode return the logically-equivalent
-    // UNBUCKETED exploded frame instead: same columns, same rows, full
-    // pre-materialization lineage for the audit to walk — and zero
-    // writes (PlanAuditSpec asserts the warehouse is untouched).
-    if (graft.plans.Ckpt.auditMode)
-      return shingleBlocks(s, d)
-        .select(col("doc_id"), col("sz"), col("lang"), col("lb"),
-          explode(col("sg")).as("shingle"))
     val fp = graft.plans.DerivationCache.dirFingerprint(d)
     // Name = <dir-hash>_<fingerprint>: the dir part identifies every
     // generation of this corpus's index, the fingerprint part the
@@ -839,11 +826,9 @@ object LlmOps {
     * q44c family, q70, q82, q217, q221, q226, q260, q266, …) touches
     * the warehouse on first construction per corpus snapshot —
     * bucketedShingleIndex saveAsTables the exploded inventory and
-    * deletes stale generations. Plan-only tooling is exempt: under
-    * Ckpt.auditMode the build is replaced by the logically-equivalent
-    * unbucketed frame and nothing is written. */
+    * deletes stale generations. */
   private def cachedPairStats(s: SparkSession, d: String): DataFrame =
-    pairStatsCache.getOrCompute(s, d)(bucketedPairStats(s, d).ckpt())
+    pairStatsCache.getOrCompute(s, d)(bucketedPairStats(s, d).localCheckpoint())
 
   private def jaccardCountJoin(s: SparkSession, d: String): DataFrame =
     finishJaccard(cachedPairStats(s, d), jaccardThreshold10)
@@ -1363,9 +1348,9 @@ object LlmOps {
       // (r17 stage profile: a 740 ms single-task stage; no-op at scale)
       val tokens = Tables.documents(s, d).spread(col("doc_id"))
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
-      val sig = simhash64Agg(tokens).ckpt() // members + distinct
+      val sig = simhash64Agg(tokens).localCheckpoint() // members + distinct
       val uniq = sig.select("simhash", "bv0", "bv1", "bv2", "bv3")
-        .distinct().ckpt()
+        .distinct().localCheckpoint()
       val bb = uniq.select(col("simhash"), posexplode(
           array(col("bv0"), col("bv1"), col("bv2"), col("bv3"))).as(Seq("band", "bv")))
       val sigPairs = bb.select(col("simhash").as("sa"), col("band"), col("bv"))
@@ -1465,7 +1450,7 @@ object LlmOps {
          |FROM g ORDER BY decile""".stripMargin
     }) { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id")).distinct()
-        .ckpt() // count + threshold scan
+        .localCheckpoint() // count + threshold scan
       val nRow = docs.agg(count(lit(1)).as("n"))
       val vc = docs.select(col("doc_id").as("val"))
         .withColumn("cnt", lit(1L)).withColumn("bkt", expr("val div 1024"))
@@ -1754,7 +1739,7 @@ object LlmOps {
       val nn = p.groupBy("a_id")
         .agg(max(struct(col("c"), (-col("b_id")).as("negb"))).as("m"))
         .select(col("a_id"), (-col("m.negb")).as("nb"))
-        .ckpt() // both sides of the reciprocity join
+        .localCheckpoint() // both sides of the reciprocity join
       nn.join(nn.select(col("a_id").as("ya"), col("nb").as("ynb")),
           col("nb") === col("ya") && col("ynb") === col("a_id")
             && col("a_id") < col("nb"))
@@ -1905,7 +1890,7 @@ object LlmOps {
             when(col("n_chars").between(100, 400), 10L).otherwise(0L))
             .as("quality"))
       val c = clusters.join(q, "doc_id")
-        .ckpt() // maxima + equality join-back
+        .localCheckpoint() // maxima + equality join-back
       val g = c.groupBy("cluster_id")
         .agg(max(col("quality")).as("mq"), count(lit(1)).as("n_docs"))
       g.join(c, Seq("cluster_id"))
@@ -2115,7 +2100,7 @@ object LlmOps {
     }) { (s, d) =>
       val comp = graft.plans.ConnectedComponents
         .components(jaccardCountJoin(s, d).select(col("a_id"), col("b_id")))
-        .ckpt() // histogram + clustered-count consumers
+        .localCheckpoint() // histogram + clustered-count consumers
       val h = comp.groupBy("label").agg(count(lit(1)).as("size"))
         .groupBy("size").agg(count(lit(1)).as("n_clusters"))
         .withColumn("n_docs", col("size") * col("n_clusters"))
@@ -2393,7 +2378,7 @@ object LlmOps {
       val mx = Tables.documents(s, d).agg(max(col("doc_id")).as("mx"))
       // consumed by BOTH the index side and the delta probe side —
       // without the checkpoint the scan+shingle pipeline runs twice
-      val sh = shingleBlocks(s, d).ckpt() // (fan-out A/B'd r17: +15%, stays serial)
+      val sh = shingleBlocks(s, d).localCheckpoint() // (fan-out A/B'd r17: +15%, stays serial)
       val delta = sh.crossJoin(broadcast(mx))
         .where(col("doc_id") * 10 > col("mx") * 9).drop("mx")
       deltaNearDupProbe(sh, delta, productionThreshold10)
@@ -2415,9 +2400,6 @@ object LlmOps {
     // runs the A4-style cutoff scalar — the persisted-snapshot
     // contract, same as Extract.keyBounds. The same applies to EVERY
     // pair-graph consumer via cachedPairStats (see its scaladoc).
-    // Plan-only tooling runs under Ckpt.auditMode, where
-    // bucketedShingleIndex substitutes the logically-equivalent
-    // unbucketed frame and never writes (VERDICT r9 #8).
     Q("q255b_delta_neardup_bucketed", deltaNearDupOracleSql) { (s, d) =>
       val idx = bucketedShingleIndex(s, d)
       // A4-style planning scalar: the ingest cutoff (max id decile).
@@ -2521,7 +2503,7 @@ object LlmOps {
         .select(col("doc_id"), col("source"), col("shingles").as("sg"))
         .filter(size(col("sg")) > 0)
       val e = f.select(col("doc_id"), col("source"),
-        explode(col("sg")).as("shingle")).ckpt() // df build + the bp join
+        explode(col("sg")).as("shingle")).localCheckpoint() // df build + the bp join
       val nd = f.agg(count(lit(1)).as("nd"))
       val bp = e.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
         .crossJoin(broadcast(nd))
@@ -2743,7 +2725,7 @@ object LlmOps {
       val t = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), sha2(col("text"), 256).as("h"),
           size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
-        .ckpt() // consumed by the keeper aggregate AND the join
+        .localCheckpoint() // consumed by the keeper aggregate AND the join
       val k = t.groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))
       t.join(k, "h")
         .groupBy(col("source"))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.plans.Spread.SpreadOps
 import graft.{Q, Tables}
 import graft.functions.TextFns
@@ -99,7 +98,7 @@ object MiningOps {
       // doc-count aggregate and the join-back left side — without the
       // checkpoint the shingling runs twice (q101's byVal pattern).
       val e = shingledDocs(s, d).select(col("doc_id"), explode(col("sg")).as("sg"))
-        .ckpt()
+        .localCheckpoint()
       val c = e.groupBy("sg").agg(count(lit(1)).as("ndoc"))
       e.join(c, "sg")
         .groupBy("doc_id")
@@ -132,8 +131,8 @@ object MiningOps {
       // toks feeds the unigram AND bigram branches; uni feeds counts AND
       // the total — checkpoints keep the scan+tokenize to one run each.
       val toks = Tables.documents(s, d).select(TextFns.tokens(col("text")).as("tk"))
-        .ckpt()
-      val uni = toks.select(explode(col("tk")).as("w")).ckpt()
+        .localCheckpoint()
+      val uni = toks.select(explode(col("tk")).as("w")).localCheckpoint()
       val uc = uni.groupBy("w").agg(count(lit(1)).as("c"))
       val n = uni.agg(count(lit(1)).as("n"))
       val bc = toks
@@ -210,7 +209,7 @@ object MiningOps {
       val daily = Tables.events(s, d)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(sum(floor(col("value") * 100).cast("long")).as("cents"))
-        .ckpt() // feeds the span aggregate AND the calendar join
+        .localCheckpoint() // feeds the span aggregate AND the calendar join
       val span = daily.groupBy("event_type")
         .agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       val cal = span.select(col("event_type"),
@@ -250,11 +249,11 @@ object MiningOps {
       val base = shingledDocs(s, d)
         .withColumn("nb", (col("n_chars") / 100).cast("long"))
         .withColumn("one", lit(1L))
-        .ckpt()
+        .localCheckpoint()
       val ranked = graft.plans.PrefixScan.cumsum(base,
         part = Seq("lang"), bucket = "nb",
         order = Seq("n_chars", "doc_id"), value = "one", out = "rnk")
-        .ckpt()
+        .localCheckpoint()
       val a = ranked.select(col("doc_id").as("a_id"), col("lang"), col("sg").as("a_sg"),
         explode(sequence(col("rnk") + 1, col("rnk") + snmWindow)).as("nbr"))
       val b = ranked.select(col("doc_id").as("b_id"), col("lang").as("langb"),
@@ -351,7 +350,7 @@ object MiningOps {
       val st = Tables.documents(s, d)
         .select(col("source"), explode(TextFns.tokens(col("text"))).as("w"))
         .distinct()
-        .ckpt() // feeds sizes + both self-join sides
+        .localCheckpoint() // feeds sizes + both self-join sides
       val sz = st.groupBy("source").agg(count(lit(1)).as("sz"))
       val pr = st.select(col("source").as("sa"), col("w"))
         .join(st.select(col("source").as("sb"), col("w").as("wb")),
@@ -400,7 +399,7 @@ object MiningOps {
       val daily = Tables.orders(s, d)
         .groupBy(col("o_orderpriority").as("pri"), to_date(col("o_orderdate")).as("day"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("cents"))
-        .ckpt()
+        .localCheckpoint()
       val span = daily.groupBy("pri").agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
       val cal = span.select(col("pri"),
         explode(expr("sequence(mn, mx, interval 1 day)")).as("day"))
@@ -457,7 +456,7 @@ object MiningOps {
         |ORDER BY doc_id, rk""".stripMargin) { (s, d) =>
       val tok = Tables.documents(s, d)
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("w"))
-        .ckpt() // feeds tf, len (df derives from tf)
+        .localCheckpoint() // feeds tf, len (df derives from tf)
       val tf = tok.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
       val len = tok.groupBy("doc_id").agg(count(lit(1)).as("len"))
       val dfreq = tf.groupBy("w").agg(count(lit(1)).as("df"))
@@ -516,7 +515,7 @@ object MiningOps {
         .select(col("w"), col("cnt"), col("s.i").as("i"),
           pmod(pmod(col("s.a") * col("rk") + col("s.b"), lit(2147483647L)),
             lit(256L)).as("bucket"))
-        .ckpt() // feeds the sketch build AND the probe join
+        .localCheckpoint() // feeds the sketch build AND the probe join
       val sk = h.groupBy("i", "bucket").agg(sum(col("cnt")).as("bc"))
       h.join(broadcast(sk), Seq("i", "bucket")) // 1024 counters — broadcast
         .groupBy("w", "cnt").agg(min(col("bc")).as("est"))
@@ -559,7 +558,7 @@ object MiningOps {
         .select(col("doc_id"),
           explode(TextFns.shingles(TextFns.tokens(col("text")), 2)).as("w"))
         .distinct()
-        .ckpt() // feeds the df count AND the posting build
+        .localCheckpoint() // feeds the df count AND the posting build
       val n = docs.agg(count(lit(1)).as("n"))
       val kept = u.groupBy("w").agg(count(lit(1)).as("df"))
         .crossJoin(broadcast(n))
@@ -605,7 +604,7 @@ object MiningOps {
         .groupBy(col("l_orderkey"))
         .agg(collect_set(col("l_partkey")).as("parts"))
         .select(col("parts"))
-        .ckpt() // pair counts + item counts + total share it
+        .localCheckpoint() // pair counts + item counts + total share it
       // (q114's pre-agg fan-out measured NEUTRAL here — the three
       // consumers overlap inside one job, so the serial basket build
       // is off the critical path; A/B r17)
@@ -716,7 +715,7 @@ object MiningOps {
       val mem = Tables.lineitem(s, d)
         .join(broadcast(urgent), col("l_orderkey") === col("o_orderkey"))
         .select(col("l_partkey").as("k")).distinct()
-        .ckpt() // feeds bit build + membership join + count
+        .localCheckpoint() // feeds bit build + membership join + count
       val memBits = positions(mem, "k").select(col("bit")).distinct()
       val probes = positions(Tables.part(s, d), "p_partkey")
       val hits = probes
@@ -766,7 +765,7 @@ object MiningOps {
          |GROUP BY e.doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
       val e = shingledDocs(s, d, fan = true) // A/B r17: see shingledDocs doc
         .select(col("doc_id"), explode(col("sg")).as("sg"))
-        .ckpt() // reference distinct + candidate side
+        .localCheckpoint() // reference distinct + candidate side
       val ref = e.filter(col("doc_id") % 2 === 0)
         .select(col("sg")).distinct().withColumn("hit", lit(1))
       e.filter(col("doc_id") % 2 === 1)
@@ -819,7 +818,7 @@ object MiningOps {
         .select(col("source"),
           expr("CAST(size(split(text, ' ')) AS BIGINT) div 64").as("bin"))
         .groupBy("source", "bin").agg(count(lit(1)).as("cnt"))
-        .ckpt() // grid build + global counts + totals
+        .localCheckpoint() // grid build + global counts + totals
       val grid = c.select(col("source")).distinct()
         .crossJoin(c.select(col("bin")).distinct())
         .join(c, Seq("source", "bin"), "left")
@@ -882,7 +881,7 @@ object MiningOps {
         .groupBy(col("l_partkey"))
         .agg(sum(floor(col("l_extendedprice") * 100).cast("long")).as("cents"))
         // consumed three times (value-level counts, tie window, total)
-        .ckpt()
+        .localCheckpoint()
       val tot = pp.agg(sum(col("cents")).as("tot"))
       // value-level frame: one row per distinct per-part revenue value,
       // walked in descending-cents order via the ascending ord = -cents
@@ -938,7 +937,7 @@ object MiningOps {
       val daily = Tables.orders(s, d)
         .groupBy(col("o_orderdate").cast("date").as("day"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("cents"))
-        .ckpt() // feeds the span aggregate AND the calendar join
+        .localCheckpoint() // feeds the span aggregate AND the calendar join
       val cal = daily.agg(min(col("day")).as("mn"), max(col("day")).as("mx"))
         .select(explode(expr("sequence(mn, mx, interval 1 day)")).as("day"))
       // single-partition window BY CONSTRUCTION: runs over the
@@ -1018,7 +1017,7 @@ object MiningOps {
         .groupBy(col("o_orderdate").cast("date").as("day"))
         .agg(sum(floor(col("o_totalprice") * 100).cast("long")).as("cents"))
         .withColumn("bkt", expr("datediff(day, DATE '1970-01-05') div 32"))
-        .ckpt() // totals + the prefix scan share one build
+        .localCheckpoint() // totals + the prefix scan share one build
       val t = daily.agg(sum(col("cents")).as("s"), count(lit(1)).as("n"))
       val cum = graft.plans.PrefixScan.cumsum(daily, part = Seq(),
         bucket = "bkt", order = Seq("day"), value = "cents", out = "cum")

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.durable.Log
-import graft.plans.Ckpt.CkptOps
 import graft.plans.PrefixScan
 import graft.{Q, Tables}
 import graft.functions.{GraftFunctions, TextFns, VectorFns}
@@ -219,7 +218,7 @@ object PipelineOps {
     def frontier(n: Int)(compute: => DataFrame): DataFrame = log match {
       case None =>
         stageProbe(n)
-        compute.ckpt()
+        compute.localCheckpoint()
       case Some(l) =>
         val stageDir = s"${l.root}/stage_$n"
         if (!l.marker(s"stage_$n")) {
@@ -388,17 +387,13 @@ object PipelineOps {
     val byV = df.groupBy(col("source"), col(v))
       .agg(count(lit(1)).as("cnt"))
       .withColumn("bkt", expr(s"$v div 256"))
-      .ckpt() // feeds the offset cumsum AND the one-row skew probe
+      .localCheckpoint() // feeds the offset cumsum AND the one-row skew probe
     val below = PrefixScan.cumsum(byV, part = Seq("source"),
       bucket = "bkt", order = Seq(v), value = "cnt", out = "cum")
       .withColumn("below", col("cum") - col("cnt"))
       .select(col("source"), col(v), col("below"))
-    // Plan-only tooling (PlanAuditSpec under Ckpt.auditMode)
-    // must not execute the skew probe; audit the BOUNDED branch — it
-    // is the scale-safe plan whose funnel-freeness matters.
-    val maxTie =
-      if (graft.plans.Ckpt.auditMode) Long.MaxValue
-      else byV.agg(max(col("cnt"))).head().getLong(0)
+    // coalesce(0): an empty input has no tie group (and no rows to rank)
+    val maxTie = byV.agg(coalesce(max(col("cnt")), lit(0L))).head().getLong(0)
     if (maxTie <= tieBound) {
       val tieW = org.apache.spark.sql.expressions.Window
         .partitionBy(col("source"), col(v)).orderBy(col("doc_id"))
@@ -640,7 +635,7 @@ object PipelineOps {
         .withColumn("g2", col("dup_bp") <= TrainingOps.dupWordBpMax
           && col("top_bp") <= TrainingOps.topUnigramBpMax)
         .withColumn("g3", col("awl_x100") >= 300 && col("awl_x100") <= 1000)
-        .ckpt() // feeds the keeper pass AND the funnel explode
+        .localCheckpoint() // feeds the keeper pass AND the funnel explode
       // exact-dedup keeper among stage-3 survivors: the q41 shape —
       // content-hash groupBy + min(doc_id), joined back by id (the
       // oracle partitions by raw text; identical absent sha2 collisions)
@@ -710,7 +705,7 @@ object PipelineOps {
         .withColumn("y",
           floor(lit(10000.0) * col("nd") / col("nw")).cast("long"))
         .select(col("doc_id"), col("source"), col("x"), col("y"))
-        .ckpt() // feeds both rank passes
+        .localCheckpoint() // feeds both rank passes
       rankBy(rankBy(sig, "x", "rx"), "y", "ry")
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
@@ -775,7 +770,7 @@ object PipelineOps {
         .select(col("source"),
           size(TextFns.tokens(col("text"))).cast("long").as("n_tok"))
         .groupBy(col("source")).agg(sum(col("n_tok")).as("tok"))
-        .ckpt() // one corpus pass feeds weights, totals, and the report
+        .localCheckpoint() // one corpus pass feeds weights, totals, and the report
       temperatureAllocation(t)
     },
 

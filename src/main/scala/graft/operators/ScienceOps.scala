@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.{Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -143,7 +142,7 @@ object ScienceOps {
       val fp = winnowFingerprints(Tables.documents(s, d), k = 3, w = 4)
         .select(col("source"), col("fpv"))
         .distinct()
-        .ckpt() // consumed by per-source counts AND the pair join (twice)
+        .localCheckpoint() // consumed by per-source counts AND the pair join (twice)
       val n = fp.groupBy("source").agg(count(lit(1)).as("nf"))
       val p = fp.as("a")
         .join(fp.as("b"), col("a.fpv") === col("b.fpv") && col("a.source") < col("b.source"))
@@ -186,7 +185,7 @@ object ScienceOps {
           explode(graft.functions.TextFns.tokens(col("text"))).as("w"))
         .groupBy("doc_id", "source", "w")
         .agg(count(lit(1)).as("c"))
-        .ckpt() // consumed by the df aggregate AND the score join
+        .localCheckpoint() // consumed by the df aggregate AND the score join
       val df = dtc.groupBy("w").agg(sum(col("c")).as("df"))
       val tot = df.agg(sum(col("df")).as("n"))
       dtc.join(df, "w") // shuffle join on the word key: vocab is unbounded (Heaps)
@@ -240,7 +239,7 @@ object ScienceOps {
           element_at(split(col("bg"), " "), 1).as("w1"))
         .groupBy("doc_id", "source", "bg", "w1")
         .agg(count(lit(1)).as("c"))
-        .ckpt() // consumed by cbg, ctx, AND the score join
+        .localCheckpoint() // consumed by cbg, ctx, AND the score join
       val cbg = dbc.groupBy("bg").agg(sum(col("c")).as("nbg"))
       val ctx = dbc.groupBy("w1").agg(sum(col("c")).as("nctx"))
       dbc.join(cbg, "bg").join(ctx, "w1") // both joins shuffle on vocab-sized keys
@@ -306,7 +305,7 @@ object ScienceOps {
         |SELECT nation, CAST(cnt AS BIGINT) AS n_pairs, CAST(slope AS BIGINT) AS ts_slope_mc
         |FROM r WHERE rn = (cnt + 1) // 2
         |ORDER BY nation""".stripMargin) { (s, d) =>
-      val m = nationMonthly(s, d).ckpt() // both sides of the pair join
+      val m = nationMonthly(s, d).localCheckpoint() // both sides of the pair join
       val p = m.as("a").join(m.as("b"),
           col("a.nation") === col("b.nation") && col("a.mi") < col("b.mi"))
         .select(col("a.nation").as("nation"),
@@ -339,7 +338,7 @@ object ScienceOps {
         |  CAST(sum(CASE WHEN sg = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_concordant,
         |  CAST(sum(CASE WHEN sg = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_discordant
         |FROM p GROUP BY 1 ORDER BY nation""".stripMargin) { (s, d) =>
-      val m = nationMonthly(s, d).ckpt()
+      val m = nationMonthly(s, d).localCheckpoint()
       m.as("a").join(m.as("b"),
           col("a.nation") === col("b.nation") && col("a.mi") < col("b.mi"))
         .select(col("a.nation").as("nation"),
@@ -488,7 +487,7 @@ object ScienceOps {
         .groupBy("g").agg(count(lit(1)).as("f"))
       val oct = v.groupBy(floorLog2(col("f")).cast("long").as("k"))
         .agg(count(lit(1)).as("nw"))
-        .ckpt() // consumed by the fit aggregate AND the output join
+        .localCheckpoint() // consumed by the fit aggregate AND the output join
       val pts = oct.select(col("k").as("x"), floorLog2(col("nw")).cast("long").as("y"))
       val fit = pts.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
@@ -582,7 +581,7 @@ object ScienceOps {
       val t = r.where(col("rn") >= 7 && col("rn") <= col("n") - 6)
         .select(col("mi"), col("c"), expr("s13 div 13").as("trend"),
           (col("c") - expr("s13 div 13")).as("det"))
-        .ckpt() // consumed by the seasonal aggregate AND the final join
+        .localCheckpoint() // consumed by the seasonal aggregate AND the final join
       val se = t.groupBy(pmod(col("mi"), lit(12)).as("moy"))
         .agg(sum(col("det")).as("sd"), count(lit(1)).as("nd"))
       t.join(broadcast(se), pmod(col("mi"), lit(12)) === col("moy"))
@@ -662,7 +661,7 @@ object ScienceOps {
       val g = o.select(col("ck"), datediff(col("od"), lag(col("od"), 1).over(w))
           .cast("long").as("gap"))
         .where(col("gap").isNotNull)
-        .ckpt() // consumed by the totals aggregate AND the MAD join
+        .localCheckpoint() // consumed by the totals aggregate AND the MAD join
       val a = g.groupBy("ck")
         .agg(count(lit(1)).as("n_gaps"), sum(col("gap")).as("total_days"))
         .where(col("n_gaps") >= 4)
@@ -919,7 +918,7 @@ object ScienceOps {
       val e = GraphOps.symEdges(s, d)
       val l0 = e.select(col("src").as("id")).distinct()
         .select(col("id"), col("id").as("lbl"))
-      val lbl = lpaRound(e, lpaRound(e, l0)).ckpt() // degree + intra joins
+      val lbl = lpaRound(e, lpaRound(e, l0)).localCheckpoint() // degree + intra joins
       val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
       val intra = e
         .join(lbl.select(col("id").as("src"), col("lbl").as("ls")), "src")

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.plans.Spread.SpreadOps
 import graft.{Q, Tables}
 import graft.functions.TextFns
@@ -721,7 +720,7 @@ object TrainingOps {
         |FROM r CROSS JOIN e ORDER BY source""".stripMargin) { (s, d) =>
       val c = Tables.documents(s, d)
         .groupBy("source").agg(count(lit(1)).as("cnt"))
-        .ckpt() // total + base/remainder pass share the count
+        .localCheckpoint() // total + base/remainder pass share the count
       val t = c.agg(sum(col("cnt")).as("n"))
       val b = c.crossJoin(broadcast(t))
         .select(col("source"), col("cnt"),

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.plans.Ckpt.CkptOps
 import graft.{Q, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -155,7 +154,7 @@ object WarehouseOps {
           .select(col("n_nationkey").as("snk"), col("n_name").as("supp_nation"))),
           col("s_nationkey") === col("snk"))
       val a = mkt.groupBy("yr", "supp_nation").agg(sum(col("cents")).as("cents"))
-        .ckpt() // consumed by the year-total AND the share join
+        .localCheckpoint() // consumed by the year-total AND the share join
       val t = a.groupBy(col("yr").as("tyr")).agg(sum(col("cents")).as("tot"))
       a.join(broadcast(t), col("yr") === col("tyr"))
         .select(col("yr"), col("supp_nation"), col("cents"),
@@ -246,7 +245,7 @@ object WarehouseOps {
       val pv = Tables.lineitem(s, d)
         .select(col("l_partkey"), floor(col("l_extendedprice") * 100).as("c"))
         .groupBy("l_partkey").agg(sum(col("c")).as("cents"))
-        .ckpt() // consumed by the scalar total AND the filter
+        .localCheckpoint() // consumed by the scalar total AND the filter
       val t = pv.agg(sum(col("cents")).as("tot"), count(lit(1)).as("np"))
       pv.crossJoin(broadcast(t))
         .where(col("cents") * col("np") > col("tot"))
@@ -486,7 +485,7 @@ object WarehouseOps {
         .mkString("", "\nUNION ALL\n", "\nORDER BY col_name")
     }) { (s, d) =>
       def profile(table: String, df: DataFrame, cols: Seq[String]): DataFrame = {
-        val base = df.select(cols.map(col): _*).ckpt()
+        val base = df.select(cols.map(col): _*).localCheckpoint()
         cols.map { c =>
           base.agg(count(lit(1)).as("n_rows"), count_distinct(col(c)).as("ndv"),
               sum(when(col(c).isNull, 1L).otherwise(0L)).cast("long").as("n_nulls"))

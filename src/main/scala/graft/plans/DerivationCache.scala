@@ -41,11 +41,6 @@ final class DerivationCache[V] {
   private[plans] def clearAll(): Unit = cache.clear()
 
   def getOrCompute(s: SparkSession, dir: String)(f: => V): V = {
-    // Plan-audit mode: compute WITHOUT caching — `f` builds an
-    // uncheckpointed frame there (Ckpt no-ops), and storing it would
-    // poison the shared-session cache for every later consumer.
-    val epoch0 = Ckpt.auditEpoch
-    if (Ckpt.auditMode) return f
     cache.keySet().removeIf(k => k._1.sparkContext.isStopped)
     val fp = DerivationCache.dirFingerprint(dir)
     val it = cache.entrySet().iterator()
@@ -56,18 +51,7 @@ final class DerivationCache[V] {
         it.remove()
       }
     }
-    val key = (s, dir, fp)
-    val v = cache.computeIfAbsent(key, _ => f)
-    // An audit scope opened (or closed) while the build ran: ckpt()
-    // may have no-opped inside `f`, so the frame is fine to RETURN but
-    // not to SHARE — evict conservatively (a clean frame just gets
-    // rebuilt by the next caller). A concurrent reader can still hit
-    // the entry in the instants before this remove runs — a transient,
-    // self-healing hazard (that caller re-executes the derivation
-    // lazily instead of reading a checkpoint), accepted because audits
-    // and builds never overlap under the forked-sequential suites.
-    if (Ckpt.auditEpoch != epoch0) cache.remove(key, v)
-    v
+    cache.computeIfAbsent((s, dir, fp), _ => f)
   }
 }
 

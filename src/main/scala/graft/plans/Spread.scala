@@ -22,16 +22,11 @@ import org.apache.spark.sql.{Column, DataFrame}
   * partition count comes from split planning and the getNumPartitions
   * probe costs only plan finalization. (On a post-shuffle lineage the
   * same probe would materialize AQE query stages.)
-  *
-  * No-op in plan-audit mode, like [[Ckpt]]: PlanAuditSpec's
-  * exchange-count laws certify each query's SCALE shape, and at scale
-  * spread contributes no exchange.
   */
 object Spread {
 
   implicit final class SpreadOps(private val df: DataFrame) extends AnyVal {
     def spread(keys: Column*): DataFrame = {
-      if (Ckpt.auditMode) return df
       // Enforce the exchange-free-lineage precondition (ADVICE r17):
       // on a shuffled lineage the getNumPartitions probe below would
       // eagerly materialize AQE query stages at PLAN time. Rather than

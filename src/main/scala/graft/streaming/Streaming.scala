@@ -510,7 +510,6 @@ object Streaming {
       // corpus. Only IvfMaintainer.restore passes this.
       presetIndex: Option[graft.operators.IvfAnn.IvfIndex] = None) {
     import graft.operators.IvfAnn
-    import graft.plans.Ckpt.CkptOps
     private val spark = initialCorpus.sparkSession
     private val log = persistPath.map(Log(spark, _))
     private val gate = new Gate(log)
@@ -534,7 +533,7 @@ object Streaming {
     // canonical index-corpus projection: the seed may carry extra
     // fixture columns (label, …) the arriving batches don't have
     private val corpusRef = new java.util.concurrent.atomic.AtomicReference(
-      initialCorpus.select(col("vec_id"), col("emb"), col("nrm")).ckpt())
+      initialCorpus.select(col("vec_id"), col("emb"), col("nrm")).localCheckpoint())
     private val indexRef = new java.util.concurrent.atomic.AtomicReference(
       presetIndex.getOrElse(IvfAnn.buildIndexWithRadii(corpusRef.get)))
     @volatile private var rebuildCount = 0
@@ -747,7 +746,7 @@ object Streaming {
           .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
           .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
           .drop("embedding")
-          .ckpt()
+          .localCheckpoint()
         if (!prepped.isEmpty) {
           // delta log first (crash between the write and the stream
           // commit ⇒ re-delivery overwrites the same dir — idempotent),
@@ -803,11 +802,11 @@ object Streaming {
     private def append(prepped: DataFrame): Unit = {
       val doCompact = sinceCompact + 1 >= compactEvery
       val grown0 = corpusRef.get.unionByName(prepped)
-      val grown = if (doCompact) grown0.ckpt() else grown0
+      val grown = if (doCompact) grown0.localCheckpoint() else grown0
       val appended0 = IvfAnn.appendToIndex(indexRef.get, prepped)
       val appended =
         if (doCompact)
-          appended0.copy(assigned = appended0.assigned.ckpt())
+          appended0.copy(assigned = appended0.assigned.localCheckpoint())
         else appended0
       val rebuilt = rebuildWhen(appended)
       val next = if (rebuilt) IvfAnn.buildIndexWithRadii(grown) else appended
@@ -1002,11 +1001,8 @@ object Streaming {
           // non-checkpointed bulk append (a restored maintainer), and
           // cmeta's may be parquet-backed by an ADOPTED quantizer
           // generation — the deletion passes below require the live
-          // frames re-rooted first. DIRECT localCheckpoint, not the
-          // Ckpt shim (ADVICE r12): this is a durability operation —
-          // under Ckpt.auditMode the shim silently no-ops and the
-          // deletions would break the live lineage with
-          // FileNotFoundException, the exact bug this exists to fix.
+          // frames re-rooted first, or the deletions would break the
+          // live lineage with FileNotFoundException.
           val assignedCk = idxSnap.assigned.localCheckpoint()
           val cmetaCk = idxSnap.cmeta.localCheckpoint()
           midStageHook()
@@ -1066,12 +1062,7 @@ object Streaming {
               if (indexDiskBacked) {
                 indexRef.set(IvfAnn.appendToIndex(
                   idxSnap.copy(assigned = assignedCk, cmeta = cmetaCk), tail))
-                // appendToIndex checkpoints its delta assignment and
-                // merged cmeta in production; under the test-only
-                // plan-audit scope those ckpts no-op and the re-rooted
-                // frames would still reference the tail delta parquet
-                // — only clear the flag when the truncation ran
-                if (!graft.plans.Ckpt.auditMode) indexDiskBacked = false
+                indexDiskBacked = false
               }
               sinceCompact = tailIds.size
               true
@@ -1683,7 +1674,6 @@ object Streaming {
   final class MixturePlanner(spark: SparkSession,
       persistPath: Option[String] = None,
       fromRestore: Boolean = false) {
-    import graft.plans.Ckpt.CkptOps
     private val log = persistPath.map(Log(spark, _))
     private val gate = new Gate(log)
     // same fresh-construction guard as IvfMaintainer: a fresh planner on
@@ -1765,7 +1755,7 @@ object Streaming {
             .select(col("source"),
               (coalesce(col("tok"), lit(0L)) + coalesce(col("d"), lit(0L)))
                 .as("tok"))
-            .ckpt()
+            .localCheckpoint()
           // STATS RESET (the appendToIndex/MAINT10X lesson):
           // localCheckpoint preserves Catalyst statistics and this plan
           // joins the previous counts frame, so the inherited

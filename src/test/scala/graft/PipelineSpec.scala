@@ -289,10 +289,14 @@ class PipelineSpec extends AnyFunSuite {
     val df = rows.toDF("doc_id", "source", "v")
     val naive = rows.sortBy(r => (r._3, r._1)).zipWithIndex
       .map { case ((id, _, _), i) => (id, (i + 1).toLong) }.toMap
+    // An empty frame has no tie group to measure and ranks to nothing.
+    val empty = df.limit(0)
     for (bound <- Seq(1L, 1L << 16)) { // forces bounded / windowed branch
       val got = operators.PipelineOps.rankBy(df, "v", "rk", tieBound = bound)
         .select(col("doc_id"), col("rk")).as[(Long, Long)].collect().toMap
       assert(got == naive, s"tieBound=$bound diverged from the naive rank")
+      val none = operators.PipelineOps.rankBy(empty, "v", "rk", tieBound = bound)
+      assert(none.isEmpty, s"tieBound=$bound ranked rows of an empty frame")
     }
   }
 

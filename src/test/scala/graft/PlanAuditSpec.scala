@@ -1,12 +1,19 @@
 package graft
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, PartialMerge}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Automated scale-killer gate: every declared query's PHYSICAL plan is
@@ -21,9 +28,25 @@ import org.scalatest.funsuite.AnyFunSuite
   * `orderBy` every query carries plans as a range exchange, not a
   * single partition, so it is invisible to this audit — as it should
   * be: range partitioning scales.)
+  *
+  * The audit walks the plans Spark actually executes. Building a query
+  * runs eager `localCheckpoint`s and planning reads (`head`, `collect`,
+  * `isEmpty`, …); each runs as an action, so a `QueryExecutionListener`
+  * captures its executed plan. A funnel upstream of a checkpoint is
+  * gone from the returned frame's plan (which starts at the
+  * checkpointed RDD) but not from the captured checkpoint plan. Each
+  * query is audited over its returned frame's plan AND every plan
+  * captured while it was built. The shared derivations
+  * (`DerivationCache`) are evicted once before the sweep, so each is
+  * built, and audited, under the first query in registry order that
+  * uses it.
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSession.spark
+
+  private val executed = new ExecutedPlans
+  override def beforeAll(): Unit = spark.listenerManager.register(executed)
+  override def afterAll(): Unit = spark.listenerManager.unregister(executed)
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -51,9 +74,8 @@ class PlanAuditSpec extends AnyFunSuite {
     "q218_vocab_growth" -> "PrefixScan offsets: one row per doc-id decile bucket",
     "q281_norm_outlier_screen" -> "PrefixScan offsets: one row per distinct-norm bucket (two lower-median passes)",
     "q285_shard_planner" -> "PrefixScan offsets: one row per 1000-doc-id range bucket",
-    // newly visible since the audit walks PRE-checkpoint plans (Ckpt
-    // audit mode): the same bounded offsets class, previously hidden
-    // behind eager localCheckpoints.
+    // found in its captured localCheckpoint plan: the same bounded
+    // offsets class, upstream of an eager checkpoint.
     "q134_cms_freq" -> "PrefixScan offsets: one row per range bucket (numShufflePartitions)",
     // Report-frame windows: the windowed frame is an aggregate whose
     // cardinality is fixed by the calendar or the report shape, not by
@@ -105,21 +127,29 @@ class PlanAuditSpec extends AnyFunSuite {
     nodes.result()
   }
 
-  /** Build the query with checkpoints DISABLED (graft.plans.Ckpt
-    * audit mode) so the audit walks the FULL pre-checkpoint plan — an
-    * eager localCheckpoint would otherwise execute its upstream stages
-    * at construction and hide any funnel above it from the audit. */
-  private def auditedNodes(name: String): Seq[String] =
-    graft.plans.Ckpt.withAudit {
-      offendingNodes(
-        SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
-    }
+  /** Offending nodes of the frame `build` returns and of every plan
+    * executed while building it, each named with the plan it was found
+    * in: the action (`localCheckpoint`, `head`, `collect`, …) for a
+    * captured plan, `result` for the returned frame. */
+  private def audit(build: => DataFrame): Seq[String] = {
+    executed.drain(spark) // plans of earlier work are not this build's
+    val result = build.queryExecution.executedPlan
+    (executed.drain(spark) :+ ("result" -> result)).flatMap { case (from, plan) =>
+      offendingNodes(plan).map(n => s"$n ($from)")
+    }.distinct
+  }
+
+  /** The registry sweep, computed once for both registry tests. */
+  private lazy val audited: Map[String, Seq[String]] = {
+    graft.plans.DerivationCache.evictAll()
+    SparkEntry.registry.map(q => q.name -> audit(SparkEntry.queries(q.name)(spark, dir))).toMap
+  }
 
   test("every declared query's plan is free of unallowlisted single-partition funnels") {
     val offenders = SparkEntry.registry.flatMap { q =>
-      val nodes = auditedNodes(q.name)
+      val nodes = audited(q.name)
       if (nodes.nonEmpty && !boundedGlobal.contains(q.name))
-        Some(s"${q.name}: ${nodes.distinct.mkString(", ")}")
+        Some(s"${q.name}: ${nodes.mkString(", ")}")
       else None
     }
     assert(offenders.isEmpty,
@@ -127,62 +157,58 @@ class PlanAuditSpec extends AnyFunSuite {
         offenders.mkString("\n  ")}")
   }
 
-  test("plan audit performs no warehouse mutations (bucketed-index family included)") {
-    // VERDICT r9 #8: constructing the pair-graph family used to
-    // saveAsTable the bucketed shingle inventory even under audit mode.
-    // Audit the whole family against a FRESH fixture dir (so no table
-    // generation can pre-exist) and assert the warehouse gained no
-    // graft_shidx2_* directory and the catalog no table.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_auditmut").toString
-    spark.read.parquet(s"$dir/documents.parquet").limit(50)
-      .coalesce(1).write.parquet(s"$tmp/documents.parquet")
-    def warehouseDirs(): Set[String] = {
-      val u = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir"))
-      val f = new java.io.File(if (u.getScheme == "file") u.getPath else u.toString)
-      Option(f.listFiles()).map(_.map(_.getName).toSet).getOrElse(Set.empty)
+  test("a funnel upstream of an eager checkpoint is found in the captured checkpoint plan") {
+    val nodes = audit {
+      spark.range(100).withColumn("r", row_number().over(Window.orderBy(col("id"))))
+        .localCheckpoint()
+        .select((col("r") + 1).as("r1"))
     }
-    def catalogTables(): Set[String] =
-      spark.catalog.listTables().collect().map(_.name).toSet
-    val (dirsBefore, tablesBefore) = (warehouseDirs(), catalogTables())
-    graft.plans.Ckpt.withAudit {
-      Seq("q43_ngram_jaccard", "q43c_jaccard_adaptive", "q255b_delta_neardup_bucketed",
-        "q266_source_leakage", "q260_doc_knn", "q217_threshold_sweep")
-        .foreach { name =>
-          SparkEntry.queries(name)(spark, tmp).queryExecution.executedPlan
-        }
-    }
-    assert(warehouseDirs() == dirsBefore,
-      s"audit wrote warehouse dirs: ${warehouseDirs() -- dirsBefore}")
-    assert(catalogTables() == tablesBefore,
-      s"audit registered tables: ${catalogTables() -- tablesBefore}")
+    assert(nodes.contains("global-window (localCheckpoint)"), nodes)
   }
 
   test("refined threshold probe plan is funnel-free (the ivf_refined branch, audited directly)") {
-    // The registry-wide audit above can never walk the ivf_refined
-    // branch: under audit mode the refinement BUILD is short-circuited
-    // (the per-round checkpoints it needs are disabled, and without
-    // them the lineage grows exponentially), so the base adjacency
-    // gives probeVolume ≈ n² and the router falls to flat/allpairs.
-    // Audit the branch's PROBE plan directly instead — its join
-    // structure (own ⋈ adjacency ⋈ vecs ⋈ broadcast(cmeta) →
-    // candidate scoring) is identical whichever quantizer granularity
-    // the build produced, so funnel-freeness of this plan is
-    // funnel-freeness of the production refined probe.
-    graft.plans.Ckpt.withAudit {
-      val nodes = offendingNodes(
-        graft.operators.IvfAnn.refinedThresholdPairs(spark, dir, 0.35)
-          .queryExecution.executedPlan)
-      assert(nodes.isEmpty,
-        s"refined probe plans single-partition funnels: ${nodes.distinct.mkString(", ")}")
-    }
+    // The registry sweep never walks the ivf_refined branch: on this
+    // fixture q50c's router measures the refined probe volume and takes
+    // the all-pairs route. Audit the branch's PROBE plan directly:
+    // own ⋈ adjacency ⋈ vecs ⋈ broadcast(cmeta) → candidate scoring,
+    // over the refined quantizer the build produced.
+    val nodes = offendingNodes(
+      graft.operators.IvfAnn.refinedThresholdPairs(spark, dir, 0.35)
+        .queryExecution.executedPlan)
+    assert(nodes.isEmpty,
+      s"refined probe plans single-partition funnels: ${nodes.distinct.mkString(", ")}")
   }
 
   test("allowlist carries no stale entries") {
     val declared = SparkEntry.registry.map(_.name).toSet
     val stale = boundedGlobal.keys.filterNot(declared.contains)
     assert(stale.isEmpty, s"allowlisted but not declared: $stale")
-    val noLongerGlobal = boundedGlobal.keys.filter(auditedNodes(_).isEmpty)
+    val noLongerGlobal = boundedGlobal.keys.filter(audited(_).isEmpty)
     assert(noLongerGlobal.isEmpty,
       s"allowlisted but now clean (remove the entries): $noLongerGlobal")
+  }
+}
+
+/** Every plan Spark executes under an action (`localCheckpoint`,
+  * `head`, `collect`, `isEmpty`, …), named by the action. The listener
+  * bus is asynchronous and delivers in order, so [[drain]] runs a
+  * job-free sentinel action and takes plans until the sentinel's
+  * arrives: by then every plan executed before it has arrived too. */
+private final class ExecutedPlans extends QueryExecutionListener {
+  private val plans = new LinkedBlockingQueue[(String, QueryExecution)]()
+
+  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+    plans.put(funcName -> qe)
+  override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+
+  def drain(spark: SparkSession): Seq[(String, SparkPlan)] = {
+    val sentinel = spark.emptyDataFrame.select()
+    sentinel.collect()
+    def next() = Option(plans.poll(60, TimeUnit.SECONDS)).getOrElse(
+      throw new IllegalStateException("listener bus did not deliver the sentinel in 60 s"))
+    Iterator.continually(next())
+      .takeWhile(_._2 ne sentinel.queryExecution)
+      .map { case (action, qe) => action -> qe.executedPlan }
+      .toList
   }
 }
