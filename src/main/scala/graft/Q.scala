@@ -32,8 +32,6 @@ object Q {
 
   def apply(name: String, sql: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(sql))
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
   def baseline(name: String, sql: String, sibling: String)(
       fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(sql), Baseline(sibling))

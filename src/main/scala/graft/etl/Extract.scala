@@ -43,17 +43,16 @@ object TableJob {
     * replaces the Go driver's row-at-a-time cursor, and
     * READ_COMMITTED matches the go-sql-driver default session. The
     * sandbox has no MySQL server, so semantics are proven on embedded
-    * Derby (JdbcSpec): Spark's JDBC partitioning/pushdown layer is
+    * Derby (JdbcSpec): Spark's JDBC partitioning layer is
     * dialect-independent (JdbcDialects only maps types/quoting), which
     * is the Derby-equivalence argument — the generated stride
-    * predicates and pushed aggregates are identical SQL either way. */
+    * predicates are identical SQL either way. */
   def mysql(tableName: String, output: String, primaryKey: String,
       url: String): TableJob = {
     val p = new java.util.Properties()
     p.setProperty("driver", "com.mysql.cj.jdbc.Driver")
     p.setProperty("fetchsize", "10000")          // stream, don't buffer the stride
     p.setProperty("isolationLevel", "READ_COMMITTED")
-    p.setProperty("pushDownAggregate", "true")   // MIN/MAX planning at the source
     // MySQL's legacy '0000-00-00' zero-dates are unrepresentable in
     // java.time and abort the scan under the connector's default
     // EXCEPTION behavior; convert to NULL at the wire (the reference's
@@ -77,10 +76,13 @@ object Extract {
     }
   }
 
-  /** A4: MIN/MAX of the primary key. On JDBC sources Catalyst pushes
-    * this aggregate down to the remote DB (spark.sql.jdbc.pushDownAggregate),
-    * exactly like the reference's `SELECT MIN(pk), MAX(pk)`. An EMPTY
-    * table aggregates to null bounds → None: the caller extracts
+  /** A4: MIN/MAX of the primary key, the reference's
+    * `SELECT MIN(pk), MAX(pk)`. NOT pushed down on a `spark.read.jdbc`
+    * (DSv1) frame: it plans as a Spark HashAggregate over
+    * `Scan JDBCRelation [numPartitions=1]` with no pushed filters, so
+    * every key crosses one connection before the ranged read (the DSv2
+    * catalog of [[registerJdbcCatalog]] is the path that pushes it). An
+    * EMPTY table aggregates to null bounds → None: the caller extracts
     * nothing (an empty span, matching the reference's no-slices path)
     * instead of NPEing on Row.getLong(null). */
   def keyBounds(df: DataFrame, pk: String): Option[(Long, Long)] = {

@@ -27,6 +27,19 @@ object TextFns {
     when(m > 0, joined).otherwise(array().cast("array<string>"))
   }
 
+  /** DuckDB twin of [[tokens]] over the SQL expression `text`. */
+  def tokensSql(text: String): String = s"string_split($text, ' ')"
+
+  /** DuckDB twin of [[shingles]] over the SQL token-list expression
+    * `words`: the same n-grams in the same order, empty below n tokens.
+    * Single-line, so it can be interpolated into a stripMargin template
+    * (a line-leading `||` would lose its first `|` to the margin). */
+  def shinglesSql(words: String, n: Int): String = {
+    val joined = (0 until n).map(j => s"$words[i+$j]").mkString(" || ' ' || ")
+    s"list_transform(range(1, CASE WHEN len($words) >= $n " +
+      s"THEN len($words) - ${n - 2} ELSE 1 END), i -> $joined)"
+  }
+
   /** Number of tokens found in `stopwords` (with repetitions). */
   def stopwordHits(words: Column, stopwords: Seq[String]): Column =
     size(filter(words, w => w.isin(stopwords.map(x => x: Any): _*)))

@@ -139,6 +139,16 @@ object IvfAnn {
       .drop("embedding")
   }
 
+  /** Oracle twin of [[fullCorpus]]: CTE `e` with the embeddings as
+    * DOUBLE[] `emb`. Single-line, spliced after `WITH`. */
+  private[graft] val fullCorpusSql: String =
+    "e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)"
+
+  /** [[fullCorpusSql]] plus CTE `n`, which adds the norm `nrm` — the
+    * dot/(nrm·nrm) cosine oracles spell out Spark's own formula. */
+  private[graft] val fullCorpusNormSql: String =
+    s"$fullCorpusSql,\nn AS (SELECT *, sqrt(list_dot_product(emb, emb)) AS nrm FROM e)"
+
   def cachedIndex(s: SparkSession, dir: String): IvfIndex =
     indexCache.getOrCompute(s, dir)(buildIndexWithRadii(fullCorpus(s, dir)))
 
@@ -816,18 +826,48 @@ object IvfAnn {
     corpus.join(assigned, "vec_id")
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
-  /** q50b/q50c shared oracle: exact all-pairs with the cosine spelled
-    * out as dot/(nrm·nrm) with precomputed norms — the identical
-    * formula/association Spark evaluates on every route. Declared
-    * BEFORE qs (object val initialization order). */
-  private val thresholdPairsOracleSql: String =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      |n AS (SELECT vec_id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e)
+  // Oracles shared by a Baseline all-pairs query and its routed
+  // sibling (both exact, so one SQL checks both). Declared BEFORE qs
+  // (object val initialization order).
+
+  /** q50/q50b/q50c: exact all-pairs with the cosine spelled out as
+    * dot/(nrm·nrm) with precomputed norms — the identical
+    * formula/association Spark evaluates on every route. */
+  private[graft] val thresholdPairsOracleSql: String =
+    s"""WITH $fullCorpusNormSql
       |SELECT a.vec_id AS a_id, b.vec_id AS b_id
       |FROM n a JOIN n b ON a.vec_id < b.vec_id
       |WHERE (CASE WHEN a.nrm = 0 OR b.nrm = 0 THEN 0.0
       |       ELSE list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm) END) > 0.35
       |ORDER BY a_id, b_id""".stripMargin
+
+  /** q49/q67: brute-force cosine top-5 for queries vec_id < 10. */
+  private[graft] val cosineTopKOracleSql: String =
+    s"""WITH $fullCorpusSql,
+      |     s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+      |             list_cosine_similarity(q.emb, c.emb) AS sim
+      |           FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
+      |     r AS (SELECT query_id, neighbor_id,
+      |             CAST(row_number() OVER (PARTITION BY query_id
+      |               ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rank
+      |           FROM s)
+      |SELECT query_id, rank, neighbor_id FROM r
+      |WHERE rank <= 5
+      |ORDER BY query_id, rank""".stripMargin
+
+  /** q222/q222b: reciprocal top-1 by the dot/(nrm·nrm) cosine. */
+  private[graft] val mutualNnOracleSql: String =
+    s"""WITH $fullCorpusNormSql,
+      |p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
+      |    CASE WHEN a.nrm = 0 OR b.nrm = 0 THEN 0.0
+      |         ELSE list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm) END AS c
+      |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
+      |nn AS (SELECT a_id, (list(b_id ORDER BY c DESC, b_id))[1] AS nb
+      |  FROM p GROUP BY a_id)
+      |SELECT x.a_id AS a_id, CAST(x.nb AS BIGINT) AS b_id
+      |FROM nn x JOIN nn y ON x.nb = y.a_id AND y.nb = x.a_id
+      |WHERE x.a_id < x.nb
+      |ORDER BY a_id""".stripMargin
 
   val qs: Seq[Q] = Seq(
     // IVF ANN top-5 for queries vec_id < 10 with a triangle-inequality
@@ -840,18 +880,7 @@ object IvfAnn {
     // oracle is the exact brute-force SQL — while the probe set stays
     // data-dependent: tightly clustered corpora prune most cells
     // (asserted in VectorSpec), the near-orthogonal fixture prunes few.
-    Q("q67_ann_ivf",
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |     s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |             list_cosine_similarity(q.emb, c.emb) AS sim
-        |           FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-        |     r AS (SELECT query_id, neighbor_id,
-        |             CAST(row_number() OVER (PARTITION BY query_id
-        |               ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rank
-        |           FROM s)
-        |SELECT query_id, rank, neighbor_id FROM r
-        |WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+    Q("q67_ann_ivf", cosineTopKOracleSql) { (s, d) =>
       val corpus = fullCorpus(s, d)
       boundedTopK(corpus, corpus.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn")),
@@ -867,19 +896,7 @@ object IvfAnn {
     // precomputed norms — the identical formula, association, and
     // summation order Spark evaluates — so near-tied neighbors cannot
     // flip cross-engine (both engines compare the same doubles).
-    Q("q222b_mutual_nn_ivf",
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |n AS (SELECT vec_id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e),
-        |p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |    CASE WHEN a.nrm = 0 OR b.nrm = 0 THEN 0.0
-        |         ELSE list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm) END AS c
-        |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-        |nn AS (SELECT a_id, (list(b_id ORDER BY c DESC, b_id))[1] AS nb
-        |  FROM p GROUP BY a_id)
-        |SELECT x.a_id AS a_id, CAST(x.nb AS BIGINT) AS b_id
-        |FROM nn x JOIN nn y ON x.nb = y.a_id AND y.nb = x.a_id
-        |WHERE x.a_id < x.nb
-        |ORDER BY a_id""".stripMargin) { (s, d) => mutualNnExact(s, d) },
+    Q("q222b_mutual_nn_ivf", mutualNnOracleSql) { (s, d) => mutualNnExact(s, d) },
 
     // Threshold near-dup pairs, IVF-routed (q50's production path):
     // probe only cells the threshold bound cannot exclude, shuffle-join

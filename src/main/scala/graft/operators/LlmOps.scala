@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.plans.Spread.SpreadOps
 import graft.{Q, Tables}
-import graft.functions.{TextFns, VectorFns}
+import graft.functions.{GraftFunctions, TextFns, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -76,8 +76,8 @@ object LlmOps {
     * session-wide by GraftExtensions; register() is a quiet no-op when
     * the function already exists. */
   private def minhashSig(s: SparkSession, hashes: Column): Column = {
-    graft.functions.GraftFunctions.register(s)
-    graft.functions.GraftFunctions.minhash(hashes)
+    GraftFunctions.register(s)
+    GraftFunctions.minhash(hashes)
   }
 
   /** LSH band keys: 8 bands of 4 signature slots each. */
@@ -103,21 +103,6 @@ object LlmOps {
         col("doc_id"), col("shingles"))
   }
 
-  /** Embeddings as double arrays with precomputed norms. Norms and all
-    * pairwise dots go through the codegen'd DotProduct expression —
-    * identical summation order to the zip_with+aggregate baseline, but a
-    * primitive loop instead of a per-pair array allocation. */
-  private def embWithNorm(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.embeddings(s, d)
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb"))))
-      .drop("embedding")
-  }
-
-  private def fastDot(a: Column, b: Column): Column =
-    graft.functions.GraftFunctions.dot(a, b)
-
   /** Sign-LSH bucket ids, one per table: bucket(t) packs the sign bits
     * of hyperplanes [t*bits, (t+1)*bits). Returned as an array so the
     * caller can posexplode into (table, bucket) rows. */
@@ -128,7 +113,7 @@ object LlmOps {
     // hyperplane array — 24 fused loops per row instead of 24 HOF
     // expression trees each allocating an intermediate array.
     def signBit(planeIdx: Int, weight: Long): Column = {
-      val dot = graft.functions.GraftFunctions.dot(
+      val dot = GraftFunctions.dot(
         emb, array(hyperplanes(planeIdx).map(lit): _*))
       when(dot > 0, lit(weight)).otherwise(lit(0L))
     }
@@ -137,14 +122,10 @@ object LlmOps {
     }: _*)
   }
 
-  /** DuckDB re-simulation of the ENTIRE sign-LSH ANN pipeline (SURVEY
-    * §5.1 "hash against a documented re-computation"): the hyperplanes
-    * are deterministic seeded constants, so the oracle inlines them as
-    * double literals (17 significant digits → exact round-trip) and
-    * replays bucketing → candidate generation → exact cosine ranking in
-    * SQL. The driver therefore checks the APPROXIMATE algorithm's exact
-    * output, not a recall proxy. */
-  private def annLshOracleSql: String = {
+  /** Oracle twin of [[lshBuckets]] over CTE `e`: CTEs `planes` (the
+    * hyperplanes inlined as double literals — 17 significant digits,
+    * an exact round-trip) and `buckets(vec_id, t, bucket)`. */
+  private[graft] val lshBucketsSql: String = {
     val planeRows = (0 until lshTables).flatMap { t =>
       (0 until lshBits).map { b =>
         // Locale.ROOT: the default-locale f-interpolator would emit
@@ -155,15 +136,25 @@ object LlmOps {
         s"($t, $b, CAST($arr AS DOUBLE[]))"
       }
     }.mkString(",\n      ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-       |  planes(t, bit, pl) AS (VALUES
+    s"""planes(t, bit, pl) AS (VALUES
        |      $planeRows),
        |  buckets AS (
        |    SELECT e.vec_id, p.t,
        |      SUM(CASE WHEN list_dot_product(e.emb, p.pl) > 0
        |               THEN 1 << p.bit ELSE 0 END) AS bucket
        |    FROM e CROSS JOIN planes p
-       |    GROUP BY e.vec_id, p.t),
+       |    GROUP BY e.vec_id, p.t)""".stripMargin
+  }
+
+  /** DuckDB re-simulation of the ENTIRE sign-LSH ANN pipeline (SURVEY
+    * §5.1 "hash against a documented re-computation"): the hyperplanes
+    * are deterministic seeded constants, so the oracle replays
+    * bucketing ([[lshBucketsSql]]) → candidate generation → exact
+    * cosine ranking in SQL. The driver therefore checks the
+    * APPROXIMATE algorithm's exact output, not a recall proxy. */
+  private def annLshOracleSql: String =
+    s"""WITH ${IvfAnn.fullCorpusSql},
+       |  $lshBucketsSql,
        |  cand AS (
        |    SELECT DISTINCT qb.vec_id AS query_id, cb.vec_id AS neighbor_id
        |    FROM buckets qb JOIN buckets cb ON qb.t = cb.t AND qb.bucket = cb.bucket
@@ -182,7 +173,6 @@ object LlmOps {
        |SELECT query_id, rank, neighbor_id FROM r
        |WHERE rank <= 5
        |ORDER BY query_id, rank""".stripMargin
-  }
 
   // ---- language-ID / quality shared SQL fragments -----------------------
 
@@ -233,27 +223,70 @@ object LlmOps {
       when(pred === col("lang"), 1).otherwise(0).as("correct"))
   }
 
-  // ---- SimHash (32-bit, sha256-derived → fully oracle-able) -------------
+  // ---- SimHash (sha256-derived → fully oracle-able) ---------------------
 
-  /** Per-bit ±1 contributions from the first 8 hex digits of
-    * sha256(token); bit b lives in hex digit b/4, position b%4. */
-  private def simhashAgg(tokens: DataFrame): DataFrame = {
-    // tokens: (doc_id, token). Project the 8 hex-digit values then sum
-    // 32 signed bit contributions per doc.
+  /** `bits`-wide simhash per doc from a (doc_id, token) frame: the first
+    * bits/4 hex digits of sha256(token) give ±1 per bit (bit b lives in
+    * hex digit b/4, position b%4), summed per doc; a bit is set when its
+    * sum is positive. `bands` > 0 adds bv0..bv(bands−1), each band's
+    * bits assembled INDEPENDENTLY as a small positive int, so no engine
+    * ever shifts a negative long (DuckDB's // and % disagree with Spark
+    * on negatives; at 64 bits bit 63 makes the signature negative —
+    * harmless, every consumer is a sign-agnostic bitwise op). */
+  private def simhashAgg(tokens: DataFrame, bits: Int, bands: Int = 0): DataFrame = {
     val hexd = tokens
-      .withColumn("hex", substring(sha2(col("token"), 256), 1, 8))
-      .select(col("doc_id") +: (0 until 8).map(i =>
+      .withColumn("hex", substring(sha2(col("token"), 256), 1, bits / 4))
+      .select(col("doc_id") +: (0 until bits / 4).map(i =>
         (instr(lit("0123456789abcdef"), substring(col("hex"), i + 1, 1)) - 1).as(s"d$i")): _*)
-    val sums = (0 until 32).map { b =>
+    val sums = (0 until bits).map { b =>
       val digit = col(s"d${b / 4}")
       sum(when(shiftright(digit, b % 4).bitwiseAND(lit(1)) === 1, 1)
         .otherwise(-1)).as(s"s$b")
     }
     val grouped = hexd.groupBy(col("doc_id")).agg(sums.head, sums.tail: _*)
-    val assemble = (0 until 32).map { b =>
-      when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L))
+    def assemble(from: Int, until: Int): Column = (from until until).map { b =>
+      when(col(s"s$b") > 0, lit(1L << (b - from))).otherwise(lit(0L))
     }.reduce(_ + _)
-    grouped.select(col("doc_id"), assemble.as("simhash"))
+    val w = if (bands > 0) bits / bands else bits
+    grouped.select(col("doc_id") +: assemble(0, bits).as("simhash") +:
+      (0 until bands).map(k => assemble(w * k, w * (k + 1)).as(s"bv$k")): _*)
+  }
+
+  /** Oracle twin of [[simhashAgg]]: CTEs ending in
+    * `sig(doc_id, simhash[, bv0..])`. */
+  private def simhashOracleSql(bits: Int, bands: Int = 0): String = {
+    val digitDefs = (0 until bits / 4)
+      .map(i => s"strpos('0123456789abcdef', substr(hex, ${i + 1}, 1)) - 1 AS d$i")
+      .mkString(",\n    ")
+    val sumDefs = (0 until bits)
+      .map(b => s"sum(CASE WHEN (d${b / 4} // ${1L << (b % 4)}) % 2 = 1 THEN 1 ELSE -1 END) AS s$b")
+      .mkString(",\n    ")
+    // Bit 63's weight is Long.MinValue; spell it without a bare
+    // 9223372036854775808 literal (out of BIGINT range pre-negation).
+    def weight(w: Long): String =
+      if (w == Long.MinValue) "(-9223372036854775807 - 1)" else w.toString
+    def assemble(from: Int, until: Int): String = (from until until)
+      .map(b => s"CASE WHEN s$b > 0 THEN ${weight(1L << (b - from))} ELSE 0 END")
+      .mkString(" + ")
+    val w = if (bands > 0) bits / bands else bits
+    val bvDefs = (0 until bands)
+      .map(k => s",\n    (${assemble(w * k, w * (k + 1))}) AS bv$k").mkString
+    s"""WITH tok AS (
+       |  SELECT doc_id, unnest(${TextFns.tokensSql("text")}) AS token FROM documents
+       |), hx AS (
+       |  SELECT doc_id, substr(sha256(token), 1, ${bits / 4}) AS hex FROM tok
+       |), dg AS (
+       |  SELECT doc_id,
+       |    $digitDefs
+       |  FROM hx
+       |), sm AS (
+       |  SELECT doc_id,
+       |    $sumDefs
+       |  FROM dg GROUP BY doc_id
+       |), sig AS (
+       |  SELECT doc_id, CAST(${assemble(0, bits)} AS BIGINT) AS simhash$bvDefs
+       |  FROM sm
+       |)""".stripMargin
   }
 
   // ---- q216c: routed 32-bit simhash neighbors (VERDICT r8 #2) ---------
@@ -274,7 +307,7 @@ object LlmOps {
       // cache, so its serial chain amortizes across consumers
       val tokens = Tables.documents(s, d)
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
-      val sg = simhashAgg(tokens).localCheckpoint()
+      val sg = simhashAgg(tokens, 32).localCheckpoint()
       val uq = sg.select(col("simhash")).distinct().localCheckpoint()
       (sg, uq, Long.box(uq.count()))
     }
@@ -284,7 +317,7 @@ object LlmOps {
   /** Expand near-SIGNATURE pairs to near-DOC pairs: join both doc-id
     * sides back, plus the same-signature groups (hamming 0 by
     * definition, every row an output row). Shared by both q216c
-    * branches and q216. */
+    * branches, q216 and q216b. */
   private def simhashDocExpand(sig: DataFrame, sigPairs: DataFrame): DataFrame = {
     val mA = sig.select(col("simhash").as("sa"), col("doc_id").as("da"))
     val mB = sig.select(col("simhash").as("sb"), col("doc_id").as("db"))
@@ -308,7 +341,15 @@ object LlmOps {
     val bb = uniq.select(col("simhash"),
         explode(array((0 to 3).map(lit): _*)).as("band"))
       .withColumn("bv", expr("shiftright(simhash, band * 8) % 256"))
-    val sigPairs = bb.select(col("simhash").as("sa"), col("band"), col("bv"))
+    simhashDocExpand(sig, bandedSigPairs(bb))
+  }
+
+  /** Distinct signature pairs sharing a (band, bv) bucket, verified at
+    * hamming ≤ 3 — the candidate join of both banded forms (q216's
+    * 8-bit bands, q216b's 16-bit ones) over a (simhash, band, bv)
+    * frame. */
+  private def bandedSigPairs(bb: DataFrame): DataFrame =
+    bb.select(col("simhash").as("sa"), col("band"), col("bv"))
       .join(bb.select(col("simhash").as("sb"), col("band").as("bandb"),
         col("bv").as("bvb")),
         col("band") === col("bandb") && col("bv") === col("bvb")
@@ -316,8 +357,6 @@ object LlmOps {
       .select(col("sa"), col("sb")).distinct()
       .withColumn("hamming", expr("CAST(bit_count(sa ^ sb) AS BIGINT)"))
       .where(col("hamming") <= 3)
-    simhashDocExpand(sig, sigPairs)
-  }
 
   /** High-diversity branch: multi-index hashing (Norouzi et al.,
     * "Fast Search in Hamming Space with Multi-Index Hashing", CVPR'12)
@@ -406,11 +445,8 @@ object LlmOps {
   /** Shared q216/q216c oracle: banded candidates + exact bit_count
     * verify in DuckDB — route-agnostic (both Spark branches are exact,
     * so any route matches this). */
-  private def simhashNeighborsOracleSql: String = {
-    val sigSql = simhashOracleSql
-    s"""WITH sig AS (
-       |$sigSql
-       |),
+  private def simhashNeighborsOracleSql: String =
+    s"""${simhashOracleSql(32)},
        |bb AS (SELECT doc_id, simhash, band,
        |    (simhash // CASE band WHEN 0 THEN 1 WHEN 1 THEN 256
        |                 WHEN 2 THEN 65536 ELSE 16777216 END) % 256 AS bv
@@ -424,110 +460,6 @@ object LlmOps {
        |  CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
        |FROM p WHERE bit_count(xor(sa, sb)) <= 3
        |ORDER BY a_id, b_id""".stripMargin
-  }
-
-  private def simhashOracleSql: String = {
-    val digitDefs = (0 until 8)
-      .map(i => s"strpos('0123456789abcdef', substr(hex, ${i + 1}, 1)) - 1 AS d$i")
-      .mkString(",\n    ")
-    val sumDefs = (0 until 32)
-      .map(b => s"sum(CASE WHEN (d${b / 4} // ${1L << (b % 4)}) % 2 = 1 THEN 1 ELSE -1 END) AS s$b")
-      .mkString(",\n    ")
-    val assemble = (0 until 32)
-      .map(b => s"CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END")
-      .mkString(" + ")
-    s"""WITH tok AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-       |), hx AS (
-       |  SELECT doc_id, substr(sha256(token), 1, 8) AS hex FROM tok
-       |), dg AS (
-       |  SELECT doc_id,
-       |    $digitDefs
-       |  FROM hx
-       |), sm AS (
-       |  SELECT doc_id,
-       |    $sumDefs
-       |  FROM dg GROUP BY doc_id
-       |)
-       |SELECT doc_id, CAST($assemble AS BIGINT) AS simhash
-       |FROM sm ORDER BY doc_id""".stripMargin
-  }
-
-
-  // ---- 64-bit SimHash (q216's 100×-Heaps scale path) --------------------
-
-  /** 64-bit simhash + its four 16-bit band values in one aggregation:
-    * 16 hex digits of sha256(token) → 64 signed bit sums per doc. The
-    * full signature (bit 63 makes it a negative long — harmless, every
-    * consumer is a sign-agnostic bitwise op) feeds the hamming verify;
-    * the band values bv0..bv3 are assembled INDEPENDENTLY as small
-    * positive ints so no engine ever shifts a negative long (DuckDB's
-    * // and % disagree with Spark on negatives). Why 64/16 exists:
-    * recall-1 banding for hamming ≤ k needs k+1 disjoint bands, so
-    * 32-bit sigs cap bands at 8 bits = 256 buckets — SCALE.md round 8
-    * measures that saturating at 100× (Σsz² grew 92×, 6.0 per-unit).
-    * Widening the signature is the production lever: 16-bit bands give
-    * 65536 buckets/band and restore the linear regime at the same
-    * k = 3 pigeonhole guarantee. */
-  private def simhash64Agg(tokens: DataFrame): DataFrame = {
-    val hexd = tokens
-      .withColumn("hex", substring(sha2(col("token"), 256), 1, 16))
-      .select(col("doc_id") +: (0 until 16).map(i =>
-        (instr(lit("0123456789abcdef"), substring(col("hex"), i + 1, 1)) - 1).as(s"d$i")): _*)
-    val sums = (0 until 64).map { b =>
-      val digit = col(s"d${b / 4}")
-      sum(when(shiftright(digit, b % 4).bitwiseAND(lit(1)) === 1, 1)
-        .otherwise(-1)).as(s"s$b")
-    }
-    val grouped = hexd.groupBy(col("doc_id")).agg(sums.head, sums.tail: _*)
-    val sig = (0 until 64).map { b =>
-      when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    val bvs = (0 until 4).map { k =>
-      (16 * k until 16 * (k + 1)).map { b =>
-        when(col(s"s$b") > 0, lit(1L << (b - 16 * k))).otherwise(lit(0L))
-      }.reduce(_ + _).as(s"bv$k")
-    }
-    grouped.select(col("doc_id") +: sig.as("simhash") +: bvs: _*)
-  }
-
-  private def simhash64OracleSql: String = {
-    val digitDefs = (0 until 16)
-      .map(i => s"strpos('0123456789abcdef', substr(hex, ${i + 1}, 1)) - 1 AS d$i")
-      .mkString(",\n    ")
-    val sumDefs = (0 until 64)
-      .map(b => s"sum(CASE WHEN (d${b / 4} // ${1L << (b % 4)}) % 2 = 1 THEN 1 ELSE -1 END) AS s$b")
-      .mkString(",\n    ")
-    // Bit 63's weight is Long.MinValue; spell it without a bare
-    // 9223372036854775808 literal (out of BIGINT range pre-negation).
-    def weight(b: Int): String =
-      if (b == 63) "(-9223372036854775807 - 1)" else (1L << b).toString
-    val assemble = (0 until 64)
-      .map(b => s"CASE WHEN s$b > 0 THEN ${weight(b)} ELSE 0 END")
-      .mkString(" + ")
-    val bvDefs = (0 until 4).map { k =>
-      (16 * k until 16 * (k + 1))
-        .map(b => s"CASE WHEN s$b > 0 THEN ${1L << (b - 16 * k)} ELSE 0 END")
-        .mkString("(", " + ", s") AS bv$k")
-    }.mkString(",\n    ")
-    s"""WITH tok AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-       |), hx AS (
-       |  SELECT doc_id, substr(sha256(token), 1, 16) AS hex FROM tok
-       |), dg AS (
-       |  SELECT doc_id,
-       |    $digitDefs
-       |  FROM hx
-       |), sm AS (
-       |  SELECT doc_id,
-       |    $sumDefs
-       |  FROM dg GROUP BY doc_id
-       |), sig64 AS (
-       |  SELECT doc_id, CAST($assemble AS BIGINT) AS simhash,
-       |    $bvDefs
-       |  FROM sm
-       |)""".stripMargin
-  }
 
   // ---- n-gram Jaccard (two exact algorithms, one oracle) ----------------
 
@@ -541,58 +473,50 @@ object LlmOps {
     * (1−t⁴)⁸ ≤ 1.5% at t = 0.8. */
   private[graft] val productionThreshold10 = 8
 
-  private def jaccardOracleSqlAt(t10: Int): String =
-    s"""WITH sh AS (
-      |  SELECT doc_id, lang, n_chars // 100 AS lb,
-      |    list_distinct(list_transform(
-      |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-      |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-      |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-      |           || ' ' || string_split(text,' ')[i+2])) AS sg
-      |  FROM documents
-      |)
-      |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-      |  CAST(floor(10000.0 * len(list_intersect(a.sg, b.sg))
-      |       / len(list_distinct(list_concat(a.sg, b.sg)))) AS BIGINT) AS jaccard_bp
-      |FROM sh a JOIN sh b
-      |  ON a.lang = b.lang AND a.lb = b.lb AND a.doc_id < b.doc_id
-      |WHERE len(a.sg) > 0 AND len(b.sg) > 0
-      |  AND len(list_intersect(a.sg, b.sg)) * 10
-      |      >= $t10 * len(list_distinct(list_concat(a.sg, b.sg)))
-      |ORDER BY a_id, b_id""".stripMargin
+  // Oracle twins of the shingle/pair/cluster derivations below. Each is
+  // written once; every near-dup oracle composes them.
 
-  private val jaccardOracleSql: String = jaccardOracleSqlAt(jaccardThreshold10)
+  /** Oracle twin of a doc's distinct 3-gram shingle set
+    * (`array_distinct(shingles(tokens(text), 3))`, [[docsWithShingles]]).
+    * Single-line, like [[TextFns.shinglesSql]]. */
+  private[graft] val docShinglesSql: String =
+    s"list_distinct(${TextFns.shinglesSql(TextFns.tokensSql("text"), 3)})"
 
-  /** t = 0.3 blocked pair predicate shared by the q70/q82 oracles — ONE
-    * definition so a threshold or blocking edit cannot leave the two
-    * recursive-CTE oracles at different semantics. Guarded against
-    * empty shingle sets like the Spark side (shingleBlocks sz > 0). */
-  private val ccPairSql =
-    """SELECT a.doc_id AS a_id, b.doc_id AS b_id
+  /** Oracle twin of [[shingleBlocks]] as CTE `sh` (doc_id, lang, lb,
+    * sg); consumers apply the non-empty guard themselves. */
+  private val shingleBlocksCte: String =
+    s"sh AS (SELECT doc_id, lang, n_chars // 100 AS lb, $docShinglesSql AS sg FROM documents)"
+
+  /** Oracle twin of [[pairStats]] with the length bucket (the shared
+    * [[cachedPairStats]] graph) over `sh`: every co-occurring pair in
+    * one (lang, lb) block with i = |A∩B| and u = |A∪B|. */
+  private val pairStatsSql: String =
+    """SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+      |    len(list_intersect(a.sg, b.sg)) AS i,
+      |    len(list_distinct(list_concat(a.sg, b.sg))) AS u
       |  FROM sh a JOIN sh b
       |    ON a.lang = b.lang AND a.lb = b.lb AND a.doc_id < b.doc_id
       |  WHERE len(a.sg) > 0 AND len(b.sg) > 0
-      |    AND len(list_intersect(a.sg, b.sg)) * 10
-      |        >= 3 * len(list_distinct(list_concat(a.sg, b.sg)))""".stripMargin
+      |    AND len(list_intersect(a.sg, b.sg)) > 0""".stripMargin
 
-  /** Shared connected-component oracle scaffold (shingles → pairs →
-    * symmetric edges → transitive closure → min-label clusters), used
-    * by every cluster-consuming oracle (q292/q296/q299). Consumers
-    * splice it via `.replace("CC_CLUSTER_CTES", ccClusterSql)` AFTER
-    * their own stripMargin — interpolating it into a margin template
-    * would let the outer stripMargin eat the leading `|` of the `||`
-    * concatenations below (the round-9 NOTES pitfall). */
+  /** Oracle twin of [[finishJaccard]] before its sort: the pairs at
+    * J ≥ t10/10 as (a_id, b_id, jaccard_bp). */
+  private def jaccardPairsSql(t10: Int): String =
+    s"""SELECT a_id, b_id, CAST(floor(10000.0 * i / u) AS BIGINT) AS jaccard_bp
+       |  FROM ($pairStatsSql)
+       |  WHERE i * 10 >= $t10 * u""".stripMargin
+
+  private def jaccardOracleSqlAt(t10: Int): String =
+    s"WITH $shingleBlocksCte\n${jaccardPairsSql(t10)}\nORDER BY a_id, b_id"
+
+  /** Shared connected-component oracle scaffold (shingles → t = 0.3
+    * pairs → symmetric edges → transitive closure → min-label clusters
+    * `cl(doc_id, cluster_id)`), used by every cluster-consuming oracle.
+    * Consumers splice it via `.replace("CC_CLUSTER_CTES", ccClusterSql)`
+    * AFTER their own stripMargin (the NOTES splice convention). */
   private val ccClusterSql: String =
-    s"""sh AS (
-       |  SELECT doc_id, lang, n_chars // 100 AS lb,
-       |    list_distinct(list_transform(
-       |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-       |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-       |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-       |           || ' ' || string_split(text,' ')[i+2])) AS sg
-       |  FROM documents
-       |), pairs AS (
-       |  $ccPairSql
+    s"""$shingleBlocksCte, pairs AS (
+       |  ${jaccardPairsSql(jaccardThreshold10)}
        |), edges AS (
        |  SELECT a_id AS a, b_id AS b FROM pairs
        |  UNION SELECT b_id, a_id FROM pairs
@@ -651,9 +575,18 @@ object LlmOps {
       col("lang"), col("lb"), col("shingle"))
     val b = ex.select(col("doc_id").as("b_id"), col("sz").as("b_sz"),
       col("lang").as("langb"), col("lb").as("lbb"), col("shingle").as("shingleb"))
-    val base = col("shingle") === col("shingleb") && col("lang") === col("langb") &&
-      col("a_id") < col("b_id")
-    a.join(b, if (useLenBucket) base && col("lb") === col("lbb") else base)
+    pairStats(a, b, useLenBucket)
+  }
+
+  /** The inverted-index count join behind every pair-stats form: an
+    * (a_id, a_sz, lang, lb, shingle) side meets a (b_id, b_sz, langb,
+    * lbb, shingleb) side on equal shingles within one lang (and, with
+    * `useLenBucket`, length-bucket) block; per pair, `inter` = common
+    * shingles and `uni` = |A|+|B|−|A∩B|. */
+  private def pairStats(a: DataFrame, b: DataFrame, useLenBucket: Boolean = true): DataFrame = {
+    val lang = col("shingle") === col("shingleb") && col("lang") === col("langb")
+    a.join(b, (if (useLenBucket) lang && col("lb") === col("lbb") else lang) &&
+        col("a_id") < col("b_id"))
       .groupBy(col("a_id"), col("b_id"), col("a_sz"), col("b_sz"))
       .agg(count(lit(1)).as("inter"))
       .withColumn("uni", col("a_sz") + col("b_sz") - col("inter"))
@@ -664,26 +597,11 @@ object LlmOps {
     * pattern), so the checkpointed-inventory and bucketed-table forms
     * verify against the same SQL. */
   private[graft] val deltaNearDupOracleSql: String =
-    s"""WITH sh AS (
-      |  SELECT doc_id, lang, n_chars // 100 AS lb,
-      |    list_distinct(list_transform(
-      |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-      |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-      |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-      |           || ' ' || string_split(text,' ')[i+2])) AS sg
-      |  FROM documents
-      |),
+    s"""WITH $shingleBlocksCte,
+      |p AS (${jaccardPairsSql(productionThreshold10)}),
       |m AS (SELECT max(doc_id) AS mx FROM documents)
-      |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-      |  CAST(floor(10000.0 * len(list_intersect(a.sg, b.sg))
-      |       / len(list_distinct(list_concat(a.sg, b.sg)))) AS BIGINT) AS jaccard_bp
-      |FROM sh a JOIN sh b
-      |  ON a.lang = b.lang AND a.lb = b.lb AND a.doc_id < b.doc_id
-      |CROSS JOIN m
-      |WHERE b.doc_id * 10 > m.mx * 9
-      |  AND len(a.sg) > 0 AND len(b.sg) > 0
-      |  AND len(list_intersect(a.sg, b.sg)) * 10
-      |      >= $productionThreshold10 * len(list_distinct(list_concat(a.sg, b.sg)))
+      |SELECT a_id, b_id, jaccard_bp FROM p CROSS JOIN m
+      |WHERE b_id * 10 > mx * 9
       |ORDER BY a_id, b_id""".stripMargin
 
   /** Persisted pre-exploded inverted shingle index, BUCKETED by
@@ -751,13 +669,7 @@ object LlmOps {
     val b = deltaSh.select(col("doc_id").as("b_id"), col("sz").as("b_sz"),
       col("lang").as("langb"), col("lb").as("lbb"),
       explode(col("sg")).as("shingleb"))
-    val stats = a.join(b,
-        col("shingle") === col("shingleb") && col("lang") === col("langb") &&
-          col("lb") === col("lbb") && col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"), col("a_sz"), col("b_sz"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("uni", col("a_sz") + col("b_sz") - col("inter"))
-    finishJaccard(stats, t10)
+    finishJaccard(pairStats(a, b), t10)
   }
 
   /** Delta-restricted inverted-index near-dup probe over a prepared
@@ -772,13 +684,7 @@ object LlmOps {
       col("lang"), col("lb"), explode(col("sg")).as("shingle"))
     val exNew = shDelta.select(col("doc_id").as("b_id"), col("sz").as("b_sz"),
       col("lang").as("langb"), col("lb").as("lbb"), explode(col("sg")).as("shingleb"))
-    val stats = exAll.join(exNew,
-        col("shingle") === col("shingleb") && col("lang") === col("langb") &&
-          col("lb") === col("lbb") && col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"), col("a_sz"), col("b_sz"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("uni", col("a_sz") + col("b_sz") - col("inter"))
-    finishJaccard(stats, t10)
+    finishJaccard(pairStats(exAll, exNew), t10)
   }
 
   private def finishJaccard(stats: DataFrame, t10: Int): DataFrame =
@@ -814,11 +720,7 @@ object LlmOps {
     val b = idx.select(col("doc_id").as("b_id"), col("sz").as("b_sz"),
       col("lang").as("langb"), col("lb").as("lbb"),
       col("shingle").as("shingleb"))
-    a.join(b, col("shingle") === col("shingleb") && col("lang") === col("langb") &&
-        col("lb") === col("lbb") && col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"), col("a_sz"), col("b_sz"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("uni", col("a_sz") + col("b_sz") - col("inter"))
+    pairStats(a, b)
   }
 
   /** CONSTRUCTION-TIME SIDE EFFECTS (ADVICE r9): routing through
@@ -848,13 +750,9 @@ object LlmOps {
       .filter(col("sz") > 0)
     val a = sh.select(col("doc_id").as("a_id"), col("sg").as("sga"), col("sz").as("a_sz"))
     val b = sh.select(col("doc_id").as("b_id"), col("sg").as("sgb"), col("sz").as("b_sz"))
-    a.join(b, col("a_id") < col("b_id"))
+    finishJaccard(a.join(b, col("a_id") < col("b_id"))
       .withColumn("inter", size(array_intersect(col("sga"), col("sgb"))))
-      .withColumn("uni", col("a_sz") + col("b_sz") - col("inter"))
-      .filter(col("inter") * 10 >= col("uni") * t10)
-      .select(col("a_id"), col("b_id"),
-        floor(lit(10000.0) * col("inter") / col("uni")).as("jaccard_bp"))
-      .orderBy(col("a_id"), col("b_id"))
+      .withColumn("uni", col("a_sz") + col("b_sz") - col("inter")), t10)
   }
 
   /** Prefix-filtered candidate generation + exact array verification
@@ -918,15 +816,11 @@ object LlmOps {
     // strictly after position pa in A AND after pb in B — so the exact
     // overlap is cnt + |A[pa+1..] ∩ B[pb+1..]|, never a whole-array
     // re-intersection.
-    cand.join(sa, "a_id").join(sb, "b_id")
+    finishJaccard(cand.join(sa, "a_id").join(sb, "b_id")
       .withColumn("inter", col("cnt") + size(array_intersect(
         slice(col("sga"), col("pa") + 1, greatest(col("a_sz") - col("pa"), lit(0))),
         slice(col("sgb"), col("pb") + 1, greatest(col("b_sz") - col("pb"), lit(0))))))
-      .withColumn("uni", col("a_sz") + col("b_sz") - col("inter"))
-      .filter(col("inter") * 10 >= col("uni") * t10)
-      .select(col("a_id"), col("b_id"),
-        floor(lit(10000.0) * col("inter") / col("uni")).as("jaccard_bp"))
-      .orderBy(col("a_id"), col("b_id"))
+      .withColumn("uni", col("a_sz") + col("b_sz") - col("inter")), t10)
   }
 
   // ---- adaptive join selection (SCALE.md finding 1's missing piece) ----
@@ -1156,7 +1050,7 @@ object LlmOps {
 
     // n-gram Jaccard near-dup: word-3-gram shingle sets, candidate pairs
     // blocked by (lang, length bucket) — never all-pairs.
-    Q("q43_ngram_jaccard", jaccardOracleSql)(jaccardCountJoin),
+    Q("q43_ngram_jaccard", jaccardOracleSqlAt(jaccardThreshold10))(jaccardCountJoin),
 
     // The PPJoin-style prefix filter, declared at t = 0.8 — its design
     // regime (the production near-dup dedup threshold): for J(A,B) ≥ t,
@@ -1197,15 +1091,7 @@ object LlmOps {
     // This is the documented re-computation invariant (SURVEY §5.1):
     // approximate candidate generation, exact verified output.
     Q("q44_minhash_lsh",
-      s"""WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-        |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-        |           || ' ' || string_split(text,' ')[i+2])) AS sg
-        |  FROM documents
-        |)
+      s"""WITH $shingleBlocksCte
         |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
         |  CAST(floor(10000.0 * len(list_intersect(a.sg, b.sg))
         |       / len(list_distinct(list_concat(a.sg, b.sg)))) AS BIGINT) AS jaccard_bp
@@ -1228,13 +1114,9 @@ object LlmOps {
         .select("a_id", "b_id").distinct()
       val sa = docs.select(col("doc_id").as("a_id"), col("shingles").as("sga"), col("sz").as("a_sz"))
       val sb = docs.select(col("doc_id").as("b_id"), col("shingles").as("sgb"), col("sz").as("b_sz"))
-      cand.join(sa, "a_id").join(sb, "b_id")
+      finishJaccard(cand.join(sa, "a_id").join(sb, "b_id")
         .withColumn("inter", size(array_intersect(col("sga"), col("sgb"))))
-        .withColumn("uni", col("a_sz") + col("b_sz") - col("inter"))
-        .filter(col("inter") * 10 >= col("uni") * productionThreshold10)
-        .select(col("a_id"), col("b_id"),
-          floor(lit(10000.0) * col("inter") / col("uni")).as("jaccard_bp"))
-        .orderBy("a_id", "b_id")
+        .withColumn("uni", col("a_sz") + col("b_sz") - col("inter")), productionThreshold10)
     },
 
     // Shingle CONTAINMENT pairs: C(A,B) = |A∩B| / min(|A|,|B|) ≥ 0.5 —
@@ -1247,15 +1129,7 @@ object LlmOps {
     // shape: cost is shingle co-occurrence volume within a language,
     // never corpus².
     Q("q89_containment",
-      """WITH sh AS (
-        |  SELECT doc_id, lang,
-        |    list_distinct(list_transform(
-        |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-        |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-        |           || ' ' || string_split(text,' ')[i+2])) AS sg
-        |  FROM documents
-        |)
+      s"""WITH $shingleBlocksCte
         |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
         |  CAST(floor(10000.0 * len(list_intersect(a.sg, b.sg))
         |       / least(len(a.sg), len(b.sg))) AS BIGINT) AS containment_bp
@@ -1276,7 +1150,8 @@ object LlmOps {
 
     // 32-bit SimHash document signatures, sha256-derived so the oracle
     // recomputes them exactly (generated SQL, see simhashOracleSql).
-    Q("q45_simhash", simhashOracleSql) { (s, d) =>
+    Q("q45_simhash",
+      s"${simhashOracleSql(32)}\nSELECT doc_id, simhash FROM sig ORDER BY doc_id") { (s, d) =>
       // shared memoized build — one signature aggregation feeds
       // q45/q216/q216c per corpus snapshot
       simhashSigs(s, d)._1.orderBy(col("doc_id"))
@@ -1326,14 +1201,13 @@ object LlmOps {
     // values are assembled independently as small positive ints (never
     // a shift of the negative 64-bit sig, where // and % semantics
     // diverge across engines).
-    Q("q216b_simhash64_neighbors", {
-      val sigSql = simhash64OracleSql
-      s"""$sigSql,
+    Q("q216b_simhash64_neighbors",
+      s"""${simhashOracleSql(64, bands = 4)},
          |bb AS (SELECT doc_id, simhash, band,
          |    CASE band WHEN 0 THEN bv0 WHEN 1 THEN bv1
          |              WHEN 2 THEN bv2 ELSE bv3 END AS bv
          |  FROM (SELECT doc_id, simhash, bv0, bv1, bv2, bv3,
-         |        unnest([0, 1, 2, 3]) AS band FROM sig64)),
+         |        unnest([0, 1, 2, 3]) AS band FROM sig)),
          |p AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
          |    a.simhash AS sa, b.simhash AS sb
          |  FROM bb a JOIN bb b
@@ -1341,36 +1215,18 @@ object LlmOps {
          |SELECT a_id, b_id,
          |  CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming
          |FROM p WHERE bit_count(xor(sa, sb)) <= 3
-         |ORDER BY a_id, b_id""".stripMargin
-    }) { (s, d) =>
+         |ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
       // fan out before the signature build: one sha256 per token makes
       // the serial single-split chain this query's hot spot
       // (r17 stage profile: a 740 ms single-task stage; no-op at scale)
       val tokens = Tables.documents(s, d).spread(col("doc_id"))
         .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("token"))
-      val sig = simhash64Agg(tokens).localCheckpoint() // members + distinct
+      val sig = simhashAgg(tokens, 64, bands = 4).localCheckpoint() // members + distinct
       val uniq = sig.select("simhash", "bv0", "bv1", "bv2", "bv3")
         .distinct().localCheckpoint()
       val bb = uniq.select(col("simhash"), posexplode(
           array(col("bv0"), col("bv1"), col("bv2"), col("bv3"))).as(Seq("band", "bv")))
-      val sigPairs = bb.select(col("simhash").as("sa"), col("band"), col("bv"))
-        .join(bb.select(col("simhash").as("sb"), col("band").as("bandb"),
-          col("bv").as("bvb")),
-          col("band") === col("bandb") && col("bv") === col("bvb")
-            && col("sa") < col("sb"))
-        .select(col("sa"), col("sb")).distinct()
-        .withColumn("hamming", expr("CAST(bit_count(sa ^ sb) AS BIGINT)"))
-        .where(col("hamming") <= 3)
-      val mA = sig.select(col("simhash").as("sa"), col("doc_id").as("da"))
-      val mB = sig.select(col("simhash").as("sb"), col("doc_id").as("db"))
-      val cross = sigPairs.join(mA, "sa").join(mB, "sb")
-        .select(least(col("da"), col("db")).as("a_id"),
-          greatest(col("da"), col("db")).as("b_id"), col("hamming"))
-      val within = sig.select(col("simhash"), col("doc_id").as("a_id"))
-        .join(sig.select(col("simhash"), col("doc_id").as("b_id")), "simhash")
-        .where(col("a_id") < col("b_id"))
-        .select(col("a_id"), col("b_id"), lit(0L).as("hamming"))
-      cross.unionByName(within).orderBy("a_id", "b_id")
+      simhashDocExpand(sig, bandedSigPairs(bb))
     },
 
     // Dedup threshold-sensitivity sweep: how many near-dup pairs each
@@ -1380,20 +1236,8 @@ object LlmOps {
     // fanned across the 7 thresholds by a broadcast cross join; never
     // re-joins the corpus per threshold.
     Q("q217_threshold_sweep",
-      """WITH sh AS (
-        |  SELECT doc_id, lang, n_chars // 100 AS lb,
-        |    list_distinct(list_transform(
-        |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-        |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-        |           || ' ' || string_split(text,' ')[i+2])) AS sg
-        |  FROM documents),
-        |p AS (SELECT len(list_intersect(a.sg, b.sg)) AS i,
-        |    len(a.sg) + len(b.sg) - len(list_intersect(a.sg, b.sg)) AS u
-        |  FROM sh a JOIN sh b
-        |    ON a.lang = b.lang AND a.lb = b.lb AND a.doc_id < b.doc_id
-        |  WHERE len(a.sg) > 0 AND len(b.sg) > 0
-        |    AND len(list_intersect(a.sg, b.sg)) > 0),
+      s"""WITH $shingleBlocksCte,
+        |p AS ($pairStatsSql),
         |t AS (SELECT unnest([3, 4, 5, 6, 7, 8, 9]) AS t10)
         |SELECT CAST(t.t10 AS BIGINT) AS t10,
         |  CAST(coalesce(sum(CASE WHEN p.i * 10 >= p.u * t.t10
@@ -1521,19 +1365,8 @@ object LlmOps {
     // invariant's expected value; a single out-of-envelope pair makes
     // n_within < n_pairs and the hash compare fail.
     Q("q224_minhash_est_audit",
-      """WITH sh AS (
-        |  SELECT doc_id, lang, n_chars // 100 AS lb,
-        |    list_distinct(list_transform(
-        |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-        |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-        |           || ' ' || string_split(text,' ')[i+2])) AS sg
-        |  FROM documents),
-        |p AS (SELECT 1 AS one
-        |  FROM sh a JOIN sh b
-        |    ON a.lang = b.lang AND a.lb = b.lb AND a.doc_id < b.doc_id
-        |  WHERE len(a.sg) > 0 AND len(b.sg) > 0
-        |    AND len(list_intersect(a.sg, b.sg)) > 0)
+      s"""WITH $shingleBlocksCte,
+        |p AS ($pairStatsSql)
         |SELECT CAST(count(*) AS BIGINT) AS n_pairs,
         |  CAST(count(*) AS BIGINT) AS n_within
         |FROM p""".stripMargin) { (s, d) =>
@@ -1584,20 +1417,8 @@ object LlmOps {
     // and the long tail separate). One pass over the memoized pair
     // graph; output ≤ 11 rows.
     Q("q226_jaccard_histogram",
-      """WITH sh AS (
-        |  SELECT doc_id, lang, n_chars // 100 AS lb,
-        |    list_distinct(list_transform(
-        |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-        |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-        |           || ' ' || string_split(text,' ')[i+2])) AS sg
-        |  FROM documents),
-        |p AS (SELECT len(list_intersect(a.sg, b.sg)) AS i,
-        |    len(a.sg) + len(b.sg) - len(list_intersect(a.sg, b.sg)) AS u
-        |  FROM sh a JOIN sh b
-        |    ON a.lang = b.lang AND a.lb = b.lb AND a.doc_id < b.doc_id
-        |  WHERE len(a.sg) > 0 AND len(b.sg) > 0
-        |    AND len(list_intersect(a.sg, b.sg)) > 0)
+      s"""WITH $shingleBlocksCte,
+        |p AS ($pairStatsSql)
         |SELECT CAST(CAST(floor(10000.0 * i / u) AS BIGINT) // 1000 AS BIGINT) AS bucket,
         |  CAST(count(*) AS BIGINT) AS n_pairs
         |FROM p GROUP BY 1 ORDER BY bucket""".stripMargin) { (s, d) =>
@@ -1642,7 +1463,7 @@ object LlmOps {
         |  substr(sha256(lower(text)), 1, 16) AS sha_fp
         |FROM documents
         |ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
+      GraftFunctions.register(s)
       Tables.documents(s, d)
         .select(col("doc_id"),
           TextFns.rollingHash(col("text")).as("rolling_hash"),
@@ -1653,26 +1474,15 @@ object LlmOps {
     // Brute-force cosine top-k: rank-only output (ids, no float values)
     // so cross-engine float noise cannot flip the hash; ties broken by
     // neighbor id.
-    Q("q49_cosine_topk",
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |     s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-        |             list_cosine_similarity(q.emb, c.emb) AS sim
-        |           FROM e q JOIN e c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-        |     r AS (SELECT query_id, neighbor_id,
-        |             CAST(row_number() OVER (PARTITION BY query_id
-        |               ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rank
-        |           FROM s)
-        |SELECT query_id, rank, neighbor_id FROM r
-        |WHERE rank <= 5
-        |ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      val e = embWithNorm(s, d)
+    Q("q49_cosine_topk", IvfAnn.cosineTopKOracleSql) { (s, d) =>
+      val e = IvfAnn.fullCorpus(s, d)
       val qside = e.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
       val cside = e.select(col("vec_id").as("neighbor_id"), col("emb").as("ce"), col("nrm").as("cn"))
       val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
       cside.join(broadcast(qside), col("query_id") =!= col("neighbor_id"))
         .withColumn("sim", VectorFns.cosineWithNorms(
-          fastDot(col("qe"), col("ce")), col("qn"), col("cn")))
+          GraftFunctions.dot(col("qe"), col("ce")), col("qn"), col("cn")))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 5)
         .select("query_id", "rank", "neighbor_id")
@@ -1687,18 +1497,14 @@ object LlmOps {
     // q50b_embedding_neardup_ivf (IvfAnn.thresholdPairsExact — the
     // threshold bound prunes cells, certified output-equal in
     // VectorSpec).
-    Q.baseline("q50_embedding_neardup", sibling = "q50c_embedding_neardup_routed",
-      sql = """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings)
-        |SELECT a.vec_id AS a_id, b.vec_id AS b_id
-        |FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(a.emb, b.emb) > 0.35
-        |ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
-      val e = embWithNorm(s, d)
+    Q.baseline("q50_embedding_neardup", IvfAnn.thresholdPairsOracleSql,
+      sibling = "q50c_embedding_neardup_routed") { (s, d) =>
+      val e = IvfAnn.fullCorpus(s, d)
       val a = e.select(col("vec_id").as("a_id"), col("emb").as("ea"), col("nrm").as("na"))
       val b = e.select(col("vec_id").as("b_id"), col("emb").as("eb"), col("nrm").as("nb"))
       a.join(b, col("a_id") < col("b_id"))
         .filter(VectorFns.cosineWithNorms(
-          fastDot(col("ea"), col("eb")), col("na"), col("nb")) > 0.35)
+          GraftFunctions.dot(col("ea"), col("eb")), col("na"), col("nb")) > 0.35)
         .select("a_id", "b_id")
         .orderBy("a_id", "b_id")
     },
@@ -1716,25 +1522,14 @@ object LlmOps {
     // contract); the production route is q222b_mutual_nn_ivf
     // (IvfAnn.mutualNnExact — IVF cells + triangle bound, certified
     // output-equal in VectorSpec).
-    Q.baseline("q222_mutual_nn", sibling = "q222b_mutual_nn_ivf",
-      sql = """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |n AS (SELECT vec_id, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e),
-        |p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-        |    CASE WHEN a.nrm = 0 OR b.nrm = 0 THEN 0.0
-        |         ELSE list_dot_product(a.emb, b.emb) / (a.nrm * b.nrm) END AS c
-        |  FROM n a JOIN n b ON a.vec_id <> b.vec_id),
-        |nn AS (SELECT a_id, (list(b_id ORDER BY c DESC, b_id))[1] AS nb
-        |  FROM p GROUP BY a_id)
-        |SELECT x.a_id AS a_id, CAST(x.nb AS BIGINT) AS b_id
-        |FROM nn x JOIN nn y ON x.nb = y.a_id AND y.nb = x.a_id
-        |WHERE x.a_id < x.nb
-        |ORDER BY a_id""".stripMargin) { (s, d) =>
-      val e = embWithNorm(s, d)
+    Q.baseline("q222_mutual_nn", IvfAnn.mutualNnOracleSql,
+      sibling = "q222b_mutual_nn_ivf") { (s, d) =>
+      val e = IvfAnn.fullCorpus(s, d)
       val a = e.select(col("vec_id").as("a_id"), col("emb").as("ea"), col("nrm").as("na"))
       val b = e.select(col("vec_id").as("b_id"), col("emb").as("eb"), col("nrm").as("nb"))
       val p = a.join(b, col("a_id") =!= col("b_id"))
         .select(col("a_id"), col("b_id"),
-          VectorFns.cosineWithNorms(fastDot(col("ea"), col("eb")),
+          VectorFns.cosineWithNorms(GraftFunctions.dot(col("ea"), col("eb")),
             col("na"), col("nb")).as("c"))
       val nn = p.groupBy("a_id")
         .agg(max(struct(col("c"), (-col("b_id")).as("negb"))).as("m"))
@@ -1754,7 +1549,7 @@ object LlmOps {
     // exact .5). Output is integer summaries so the hash is exact:
     // quantized sum, saturation count, and the scale in basis points.
     Q("q69_embed_quantize",
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH ${IvfAnn.fullCorpusSql},
         |     m AS (SELECT vec_id, emb,
         |             list_max(list_transform(emb, x -> abs(x))) AS mx FROM e),
         |     q AS (SELECT vec_id,
@@ -1786,32 +1581,12 @@ object LlmOps {
     // rounds at ANY diameter; small residual graphs finish in one
     // union-find task). Oracle: DuckDB recursive-CTE transitive
     // closure, min label per node.
-    Q("q70_dedup_clusters", {
-      val pairSql = ccPairSql
-      s"""WITH RECURSIVE sh AS (
-         |  SELECT doc_id, lang, n_chars // 100 AS lb,
-         |    list_distinct(list_transform(
-         |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-         |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-         |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-         |           || ' ' || string_split(text,' ')[i+2])) AS sg
-         |  FROM documents
-         |), pairs AS (
-         |  $pairSql
-         |), edges AS (
-         |  SELECT a_id AS a, b_id AS b FROM pairs
-         |  UNION SELECT b_id, a_id FROM pairs
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-         |)
-         |SELECT a AS doc_id, CAST(min(b) AS BIGINT) AS cluster_id,
-         |  CAST(min(b) = a AS BOOLEAN) AS keeper
-         |FROM (SELECT a, b FROM reach UNION SELECT a, a FROM edges) t
-         |GROUP BY a
-         |ORDER BY doc_id""".stripMargin
-    }) { (s, d) =>
+    Q("q70_dedup_clusters",
+      """WITH RECURSIVE CC_CLUSTER_CTES
+        |SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
+        |  CAST(cluster_id = doc_id AS BOOLEAN) AS keeper
+        |FROM cl ORDER BY doc_id""".stripMargin
+        .replace("CC_CLUSTER_CTES", ccClusterSql)) { (s, d) =>
       // Cluster collapse = connected components over the near-dup pair
       // graph, via alternating large-star/small-star with convergence
       // detection (graft.plans.ConnectedComponents): O(log n) rounds at
@@ -1834,29 +1609,7 @@ object LlmOps {
     // equality-join shape over cluster-sized frames; clusters come
     // from the same memoized pair graph + CC as q70.
     Q("q221_dedup_best_keeper", {
-      val pairSql = ccPairSql
-      s"""WITH RECURSIVE sh AS (
-         |  SELECT doc_id, lang, n_chars // 100 AS lb,
-         |    list_distinct(list_transform(
-         |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-         |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-         |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-         |           || ' ' || string_split(text,' ')[i+2])) AS sg
-         |  FROM documents
-         |), pairs AS (
-         |  $pairSql
-         |), edges AS (
-         |  SELECT a_id AS a, b_id AS b FROM pairs
-         |  UNION SELECT b_id, a_id FROM pairs
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-         |), clusters AS (
-         |  SELECT a AS doc_id, min(b) AS cluster_id
-         |  FROM (SELECT a, b FROM reach UNION SELECT a, a FROM edges) t
-         |  GROUP BY a
-         |), q AS (
+      s"""WITH RECURSIVE CC_CLUSTER_CTES, q AS (
          |  SELECT doc_id,
          |    CAST(floor(100.0 * ${duckHits("en")} / len(string_split(text, ' ')))
          |      AS BIGINT)
@@ -1865,7 +1618,7 @@ object LlmOps {
          |  FROM documents
          |), c AS (
          |  SELECT cl.cluster_id, cl.doc_id, q.quality
-         |  FROM clusters cl JOIN q ON cl.doc_id = q.doc_id
+         |  FROM cl JOIN q ON cl.doc_id = q.doc_id
          |), g AS (
          |  SELECT cluster_id, max(quality) AS mq,
          |    CAST(count(*) AS BIGINT) AS n_docs
@@ -1877,6 +1630,7 @@ object LlmOps {
          |FROM g JOIN c ON c.cluster_id = g.cluster_id AND c.quality = g.mq
          |GROUP BY g.cluster_id, g.n_docs, g.mq
          |ORDER BY cluster_id""".stripMargin
+        .replace("CC_CLUSTER_CTES", ccClusterSql)
     }) { (s, d) =>
       val pairs = jaccardCountJoin(s, d).select(col("a_id"), col("b_id"))
       val clusters = graft.plans.ConnectedComponents.components(pairs)
@@ -1909,39 +1663,17 @@ object LlmOps {
     // near-dup cluster it does not lead (cluster min = keeper). Both
     // collapse phases are the scale shapes proved above (hash groupBy;
     // bucketed pair join + star-contraction components).
-    Q("q82_dedup_pipeline", {
-      val pairSql = ccPairSql
-      s"""WITH RECURSIVE sh AS (
-         |  SELECT doc_id, lang, n_chars // 100 AS lb,
-         |    list_distinct(list_transform(
-         |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-         |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-         |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-         |           || ' ' || string_split(text,' ')[i+2])) AS sg
-         |  FROM documents
-         |), pairs AS (
-         |  $pairSql
-         |), edges AS (
-         |  SELECT a_id AS a, b_id AS b FROM pairs
-         |  UNION SELECT b_id, a_id FROM pairs
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-         |), clusters AS (
-         |  SELECT a AS doc_id, min(b) AS cluster_id
-         |  FROM (SELECT a, b FROM reach UNION SELECT a, a FROM edges) t
-         |  GROUP BY a
-         |), exact_keep AS (
+    Q("q82_dedup_pipeline",
+      """WITH RECURSIVE CC_CLUSTER_CTES, exact_keep AS (
          |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY sha256(text)
          |)
          |SELECT k.doc_id, d.lang, d.source
          |FROM exact_keep k
          |JOIN documents d ON d.doc_id = k.doc_id
-         |LEFT JOIN clusters c ON c.doc_id = k.doc_id
+         |LEFT JOIN cl c ON c.doc_id = k.doc_id
          |WHERE c.doc_id IS NULL OR c.cluster_id = k.doc_id
          |ORDER BY k.doc_id""".stripMargin
-    }) { (s, d) =>
+        .replace("CC_CLUSTER_CTES", ccClusterSql)) { (s, d) =>
       val docs = Tables.documents(s, d)
       val exactKeep = docs.groupBy(sha2(col("text"), 256))
         .agg(min(col("doc_id")).as("doc_id"))
@@ -1976,7 +1708,7 @@ object LlmOps {
         |  CASE WHEN bucket < 80 THEN 'train'
         |       WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split
         |FROM h ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
+      GraftFunctions.register(s)
       Tables.documents(s, d)
         .withColumn("bucket", TextFns.rollingHash(col("text")) % 100)
         .select(col("doc_id"), col("bucket"),
@@ -2026,7 +1758,7 @@ object LlmOps {
     // driver hash-checks the approximate algorithm's exact output; the
     // recall-vs-brute-force quality bar stays in ScalaTest.
     Q("q51_ann_lsh", annLshOracleSql) { (s, d) =>
-      val e = embWithNorm(s, d)
+      val e = IvfAnn.fullCorpus(s, d)
       // Candidate generation carries IDS ONLY: the multi-table collision
       // dedup (distinct) would otherwise shuffle ~1 KB of vector payload
       // per candidate row; payloads join back after the dedup (query
@@ -2048,7 +1780,7 @@ object LlmOps {
       val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id"))
       cand.join(broadcast(qpay), "query_id").join(cpay, "neighbor_id")
         .withColumn("sim", VectorFns.cosineWithNorms(
-          fastDot(col("qe"), col("ce")), col("qn"), col("cn")))
+          GraftFunctions.dot(col("qe"), col("ce")), col("qn"), col("cn")))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 5)
         .select("query_id", "rank", "neighbor_id")
@@ -2063,41 +1795,20 @@ object LlmOps {
     // the star-contraction components (q70); the profile above them is
     // cluster-frame-sized. CC clusters always have size ≥ 2, so the
     // singleton row (total docs − clustered docs) never collides.
-    Q("q178_dup_cluster_profile", {
-      val pairSql = ccPairSql
-      s"""WITH RECURSIVE sh AS (
-         |  SELECT doc_id, lang, n_chars // 100 AS lb,
-         |    list_distinct(list_transform(
-         |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-         |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-         |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-         |           || ' ' || string_split(text,' ')[i+2])) AS sg
-         |  FROM documents
-         |), pairs AS (
-         |  $pairSql
-         |), edges AS (
-         |  SELECT a_id AS a, b_id AS b FROM pairs
-         |  UNION SELECT b_id, a_id FROM pairs
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-         |), comp AS (
-         |  SELECT a AS doc_id, min(b) AS cluster_id
-         |  FROM (SELECT a, b FROM reach UNION SELECT a, a FROM edges) t
-         |  GROUP BY a
-         |), cs AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS size
-         |  FROM comp GROUP BY 1),
+    Q("q178_dup_cluster_profile",
+      """WITH RECURSIVE CC_CLUSTER_CTES,
+         |cs AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS size
+         |  FROM cl GROUP BY 1),
          |h AS (SELECT size, CAST(count(*) AS BIGINT) AS n_clusters FROM cs
          |  GROUP BY 1),
          |tot AS (SELECT CAST(count(*) AS BIGINT) AS ndocs FROM documents),
-         |cl AS (SELECT CAST(count(*) AS BIGINT) AS ncl FROM comp)
+         |ncl AS (SELECT CAST(count(*) AS BIGINT) AS ncl FROM cl)
          |SELECT size, n_clusters, size * n_clusters AS n_docs FROM h
          |UNION ALL
          |SELECT CAST(1 AS BIGINT), ndocs - ncl, ndocs - ncl
-         |  FROM tot CROSS JOIN cl WHERE ndocs > ncl
+         |  FROM tot CROSS JOIN ncl WHERE ndocs > ncl
          |ORDER BY size""".stripMargin
-    }) { (s, d) =>
+        .replace("CC_CLUSTER_CTES", ccClusterSql)) { (s, d) =>
       val comp = graft.plans.ConnectedComponents
         .components(jaccardCountJoin(s, d).select(col("a_id"), col("b_id")))
         .localCheckpoint() // histogram + clustered-count consumers
@@ -2161,31 +1872,10 @@ object LlmOps {
     // the corpus already has. Reuses the memoized pair graph and
     // star-contraction components; above them only a doc_id→source
     // join and two vocabulary-sized aggregates.
-    Q("q185_dedup_impact", {
-      val pairSql = ccPairSql
-      s"""WITH RECURSIVE sh AS (
-         |  SELECT doc_id, lang, n_chars // 100 AS lb,
-         |    list_distinct(list_transform(
-         |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-         |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-         |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-         |           || ' ' || string_split(text,' ')[i+2])) AS sg
-         |  FROM documents
-         |), pairs AS (
-         |  $pairSql
-         |), edges AS (
-         |  SELECT a_id AS a, b_id AS b FROM pairs
-         |  UNION SELECT b_id, a_id FROM pairs
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-         |), comp AS (
-         |  SELECT a AS doc_id, min(b) AS cluster_id
-         |  FROM (SELECT a, b FROM reach UNION SELECT a, a FROM edges) t
-         |  GROUP BY a
-         |), j AS (SELECT d.source, comp.doc_id, comp.cluster_id
-         |  FROM comp JOIN documents d USING (doc_id)),
+    Q("q185_dedup_impact",
+      """WITH RECURSIVE CC_CLUSTER_CTES,
+         |j AS (SELECT d.source, cl.doc_id, cl.cluster_id
+         |  FROM cl JOIN documents d USING (doc_id)),
          |per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_clustered,
          |    CAST(sum(CASE WHEN doc_id <> cluster_id THEN 1 ELSE 0 END)
          |      AS BIGINT) AS n_removed
@@ -2199,7 +1889,7 @@ object LlmOps {
          |    AS removal_ppm
          |FROM t2 LEFT JOIN per ON t2.source = per.source
          |ORDER BY t2.source""".stripMargin
-    }) { (s, d) =>
+        .replace("CC_CLUSTER_CTES", ccClusterSql)) { (s, d) =>
       val comp = graft.plans.ConnectedComponents
         .components(jaccardCountJoin(s, d).select(col("a_id"), col("b_id")))
       val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
@@ -2321,8 +2011,7 @@ object LlmOps {
     // side (5 vectors) broadcasts; the corpus never shuffles; the
     // per-query top-10 is a WindowGroupLimit.
     Q("q250_retrieval_eval",
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |n AS (SELECT vec_id, label, emb, sqrt(list_dot_product(emb, emb)) AS nrm FROM e),
+      s"""WITH ${IvfAnn.fullCorpusNormSql},
         |s AS (SELECT q.vec_id AS qid, q.label AS qlab, c.vec_id AS cid, c.label AS clab,
         |    CASE WHEN q.nrm = 0 OR c.nrm = 0 THEN 0.0
         |         ELSE list_dot_product(q.emb, c.emb) / (q.nrm * c.nrm) END AS sim
@@ -2337,10 +2026,7 @@ object LlmOps {
         |SELECT qid AS query_id, recall10, first_rank,
         |  CAST(CASE WHEN first_rank = 0 THEN 0 ELSE 1000000 // first_rank END AS BIGINT) AS mrr_micro
         |FROM t ORDER BY query_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
-      val e = Tables.embeddings(s, d)
-        .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-        .withColumn("nrm", sqrt(fastDot(col("emb"), col("emb"))))
+      val e = IvfAnn.fullCorpus(s, d)
       val qside = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("label").as("qlab"),
           col("emb").as("qe"), col("nrm").as("qn"))
@@ -2349,7 +2035,7 @@ object LlmOps {
       val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("cid"))
       cside.join(broadcast(qside), col("qid") =!= col("cid"))
         .withColumn("sim", VectorFns.cosineWithNorms(
-          fastDot(col("qe"), col("ce")), col("qn"), col("cn")))
+          GraftFunctions.dot(col("qe"), col("ce")), col("qn"), col("cn")))
         .withColumn("rnk", row_number().over(w))
         .filter(col("rnk") <= 10)
         .groupBy(col("qid").as("query_id"))
@@ -2427,25 +2113,10 @@ object LlmOps {
     // corpus (n²-within-block); with it the frame is the same pair
     // set every other t=0.3 consumer reads.
     Q("q260_doc_knn",
-      s"""WITH sh AS (
-        |  SELECT doc_id, lang, n_chars // 100 AS lb,
-        |    list_distinct(list_transform(
-        |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-        |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-        |           || ' ' || string_split(text,' ')[i+2])) AS sg
-        |  FROM documents
-        |),
-        |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    CAST(floor(10000.0 * len(list_intersect(a.sg, b.sg))
-        |         / len(list_distinct(list_concat(a.sg, b.sg)))) AS BIGINT) AS jb
-        |  FROM sh a JOIN sh b
-        |    ON a.lang = b.lang AND a.lb = b.lb AND a.doc_id < b.doc_id
-        |  WHERE len(a.sg) > 0 AND len(b.sg) > 0
-        |    AND len(list_intersect(a.sg, b.sg)) * 10
-        |        >= $jaccardThreshold10 * len(list_distinct(list_concat(a.sg, b.sg)))),
-        |sym AS (SELECT a_id AS id, b_id AS nb, jb FROM p
-        |        UNION ALL SELECT b_id AS id, a_id AS nb, jb FROM p),
+      s"""WITH $shingleBlocksCte,
+        |p AS (${jaccardPairsSql(jaccardThreshold10)}),
+        |sym AS (SELECT a_id AS id, b_id AS nb, jaccard_bp AS jb FROM p
+        |        UNION ALL SELECT b_id AS id, a_id AS nb, jaccard_bp AS jb FROM p),
         |r AS (SELECT id, nb, jb,
         |        row_number() OVER (PARTITION BY id ORDER BY jb DESC, nb) AS rk
         |      FROM sym)
@@ -2478,13 +2149,7 @@ object LlmOps {
     // so the occurrence join broadcasts; everything else is two
     // shuffles (df groupBy, per-doc groupBy) + a source-sized report.
     Q("q269_boilerplate_share",
-      """WITH sh AS (SELECT doc_id, source,
-        |    list_distinct(list_transform(
-        |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-        |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-        |           || ' ' || string_split(text,' ')[i+2])) AS sg
-        |  FROM documents),
+      s"""WITH sh AS (SELECT doc_id, source, $docShinglesSql AS sg FROM documents),
         |f AS (SELECT doc_id, source, sg FROM sh WHERE len(sg) > 0),
         |n AS (SELECT count(*) AS nd FROM f),
         |e AS (SELECT doc_id, source, unnest(sg) AS shingle FROM f),
@@ -2575,13 +2240,7 @@ object LlmOps {
     // HUGEINT cast error), never diverges. Two shuffles: the
     // (source, shingle) count and the source rollup.
     Q("q272_shingle_diversity",
-      """WITH sh AS (SELECT doc_id, source,
-        |    list_distinct(list_transform(
-        |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-        |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-        |           || ' ' || string_split(text,' ')[i+2])) AS sg
-        |  FROM documents),
+      s"""WITH sh AS (SELECT doc_id, source, $docShinglesSql AS sg FROM documents),
         |f AS (SELECT doc_id, source, unnest(sg) AS shingle FROM sh
         |      WHERE len(sg) > 0),
         |c AS (SELECT source, shingle, CAST(count(*) AS BIGINT) AS c
@@ -2663,14 +2322,9 @@ object LlmOps {
     // One pass over the SHARED memoized pair graph (the bucketed
     // build every t=0.3 consumer reads) + two doc_id joins to attach
     // sources; the (source, source) frame is report-sized.
-    Q("q266_source_leakage", {
-      val pairSql = jaccardOracleSqlAt(jaccardThreshold10)
-      // Substitute AFTER stripMargin: the pair SQL contains '||'
-      // string concatenation at line starts, which an outer
-      // stripMargin would truncate into bitwise-or garbage.
-      """WITH p AS (
-         |@PAIRS@
-         |),
+    Q("q266_source_leakage",
+      s"""WITH $shingleBlocksCte,
+         |p AS (${jaccardPairsSql(jaccardThreshold10)}),
          |m AS (SELECT doc_id, source FROM documents),
          |x AS (SELECT least(ma.source, mb.source) AS source_a,
          |        greatest(ma.source, mb.source) AS source_b,
@@ -2680,9 +2334,7 @@ object LlmOps {
          |SELECT source_a, source_b, CAST(count(*) AS BIGINT) AS n_pairs,
          |  CAST(sum(jb) // count(*) AS BIGINT) AS mean_jaccard_bp
          |FROM x GROUP BY 1, 2
-         |ORDER BY n_pairs DESC, source_a, source_b LIMIT 30""".stripMargin
-        .replace("@PAIRS@", pairSql)
-    }) { (s, d) =>
+         |ORDER BY n_pairs DESC, source_a, source_b LIMIT 30""".stripMargin) { (s, d) =>
       val m = Tables.documents(s, d).select(col("doc_id"), col("source"))
       jaccardCountJoin(s, d)
         .join(m.select(col("doc_id").as("a_id"), col("source").as("sa")), "a_id")
@@ -2749,7 +2401,7 @@ object LlmOps {
     // answer every ANN deployment needs before switching its index to
     // int8 storage.
     Q("q259_quant_fidelity",
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH ${IvfAnn.fullCorpusSql},
         |m AS (SELECT vec_id, emb, list_max(list_transform(emb, x -> abs(x))) AS mx FROM e),
         |q AS (SELECT vec_id, emb,
         |    list_transform(emb, x -> CAST(floor(x * (CASE WHEN mx = 0 THEN 0.0
@@ -2774,14 +2426,14 @@ object LlmOps {
         |SELECT qid AS query_id, overlap10,
         |  CAST(overlap10 * 10000 // (20 - overlap10) AS BIGINT) AS set_jaccard_bp
         |FROM t ORDER BY query_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
+      GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
         .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
         .withColumn("mx", array_max(transform(col("emb"), x => abs(x))))
         .withColumn("qv", transform(col("emb"), x =>
           floor(x * when(col("mx") === 0, lit(0.0)).otherwise(lit(127.0) / col("mx"))
             + lit(0.5)).cast("long")))
-        .withColumn("nrm", sqrt(fastDot(col("emb"), col("emb"))))
+        .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
         .withColumn("qn", sqrt(aggregate(
           zip_with(col("qv"), col("qv"), (x, y) => x * y),
           lit(0L), (acc, v) => acc + v).cast("double")))
@@ -2795,7 +2447,7 @@ object LlmOps {
         lit(0L), (acc, v) => acc + v)
       val joined = cside.join(broadcast(qside), col("qid") =!= col("cid"))
         .withColumn("fsim", VectorFns.cosineWithNorms(
-          fastDot(col("qe"), col("ce")), col("qnrm"), col("cnrm")))
+          GraftFunctions.dot(col("qe"), col("ce")), col("qnrm"), col("cnrm")))
         .withColumn("qsim", when(col("qqn") === 0 || col("cqn") === 0, lit(0.0))
           .otherwise(qdot.cast("double") / (col("qqn") * col("cqn"))))
       val wf = Window.partitionBy(col("qid")).orderBy(col("fsim").desc, col("cid"))
@@ -2824,24 +2476,9 @@ object LlmOps {
     // (amortized across the whole q43 family), the embedding joins and
     // the rollup are pair-sized.
     Q("q286_lexical_semantic_agreement",
-      """WITH sh AS (
-        |  SELECT doc_id, lang, n_chars // 100 AS lb,
-        |    list_distinct(list_transform(
-        |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-        |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-        |           || ' ' || string_split(text,' ')[i+2])) AS sg
-        |  FROM documents),
-        |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    CAST(floor(10000.0 * len(list_intersect(a.sg, b.sg))
-        |         / len(list_distinct(list_concat(a.sg, b.sg)))) AS BIGINT)
-        |      AS jaccard_bp
-        |  FROM sh a JOIN sh b
-        |    ON a.lang = b.lang AND a.lb = b.lb AND a.doc_id < b.doc_id
-        |  WHERE len(a.sg) > 0 AND len(b.sg) > 0
-        |    AND len(list_intersect(a.sg, b.sg)) * 10
-        |        >= 3 * len(list_distinct(list_concat(a.sg, b.sg)))),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH $shingleBlocksCte,
+        |p AS (${jaccardPairsSql(jaccardThreshold10)}),
+        |${IvfAnn.fullCorpusSql},
         |c AS (SELECT p.jaccard_bp,
         |    list_cosine_similarity(ea.emb, eb.emb) AS cos
         |  FROM p JOIN e ea ON p.a_id = ea.vec_id
@@ -2851,14 +2488,14 @@ object LlmOps {
         |  CAST(count(*) AS BIGINT) AS n_pairs
         |FROM c GROUP BY 1, 2
         |ORDER BY jaccard_band, semantic_hit""".stripMargin) { (s, d) =>
-      val e = embWithNorm(s, d)
+      val e = IvfAnn.fullCorpus(s, d)
       jaccardCountJoin(s, d)
         .join(e.select(col("vec_id").as("a_id"), col("emb").as("ea"),
           col("nrm").as("na")), "a_id")
         .join(e.select(col("vec_id").as("b_id"), col("emb").as("eb"),
           col("nrm").as("nb")), "b_id")
         .withColumn("cos", VectorFns.cosineWithNorms(
-          fastDot(col("ea"), col("eb")), col("na"), col("nb")))
+          GraftFunctions.dot(col("ea"), col("eb")), col("na"), col("nb")))
         .groupBy(expr("jaccard_bp div 2000").as("jaccard_band"),
           when(col("cos") > 0.35, 1L).otherwise(0L).as("semantic_hit"))
         .agg(count(lit(1)).as("n_pairs"))
@@ -2875,23 +2512,8 @@ object LlmOps {
     // truncation-dup head convention, q275) — a hard 256² cap per pair
     // — and the pair set is the memoized t=0.3 graph, never all-pairs.
     Q("q290_head_edit_verify",
-      """WITH sh AS (
-        |  SELECT doc_id, lang, n_chars // 100 AS lb,
-        |    list_distinct(list_transform(
-        |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-        |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-        |           || ' ' || string_split(text,' ')[i+2])) AS sg
-        |  FROM documents),
-        |p AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |    CAST(floor(10000.0 * len(list_intersect(a.sg, b.sg))
-        |         / len(list_distinct(list_concat(a.sg, b.sg)))) AS BIGINT)
-        |      AS jaccard_bp
-        |  FROM sh a JOIN sh b
-        |    ON a.lang = b.lang AND a.lb = b.lb AND a.doc_id < b.doc_id
-        |  WHERE len(a.sg) > 0 AND len(b.sg) > 0
-        |    AND len(list_intersect(a.sg, b.sg)) * 10
-        |        >= 3 * len(list_distinct(list_concat(a.sg, b.sg)))),
+      s"""WITH $shingleBlocksCte,
+        |p AS (${jaccardPairsSql(jaccardThreshold10)}),
         |h AS (SELECT doc_id, substr(text, 1, 256) AS head FROM documents),
         |c AS (SELECT p.jaccard_bp, levenshtein(ha.head, hb.head) AS ed
         |  FROM p JOIN h ha ON p.a_id = ha.doc_id

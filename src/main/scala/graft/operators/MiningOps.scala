@@ -51,20 +51,10 @@ object MiningOps {
   /** Neighbor window for sorted-neighborhood pairing. */
   private val snmWindow = 4
 
-  /** Distinct 3-gram shingle CTE shared by the q110/q113 oracles —
-    * textually identical to the q43 family's (LlmOps.jaccardOracleSqlAt)
-    * so every shingle consumer agrees on tokenization. Single-line:
-    * embedded fragments must not contain line-leading `|` (stripMargin
-    * would eat them). */
-  private val shingleSqlExpr =
-    "list_distinct(list_transform(range(1, CASE WHEN len(string_split(text,' ')) >= 3 " +
-      "THEN len(string_split(text,' ')) - 1 ELSE 1 END), " +
-      "i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] " +
-      "|| ' ' || string_split(text,' ')[i+2]))"
-
   /** (doc_id, lang, n_chars, sg) with non-empty distinct 3-gram
-    * shingle sets — same construction as LlmOps.docsWithShingles. */
-  /** `fan` (cf. LlmOps.docsWithShingles): interleaved A/B r17 measured
+    * shingle sets — same construction as LlmOps.docsWithShingles; the
+    * oracles spell it as [[LlmOps.docShinglesSql]].
+    * `fan` (cf. LlmOps.docsWithShingles): interleaved A/B r17 measured
     * the pre-shingle fan-out per consumer — neutral for q110, ~10%
     * loss for q113 (their aggregates ride the serial fused scan
     * pipeline fine), so the default stays serial; q174 opts in (its
@@ -85,7 +75,7 @@ object MiningOps {
     // plain count per shingle IS the distinct-doc count). dup_bp is
     // basis points in pure integer arithmetic.
     Q("q110_dup_ngram_fraction",
-      s"""WITH sh AS (SELECT doc_id, $shingleSqlExpr AS sg FROM documents),
+      s"""WITH sh AS (SELECT doc_id, ${LlmOps.docShinglesSql} AS sg FROM documents),
          |e AS (SELECT doc_id, unnest(sg) AS sg FROM sh WHERE len(sg) > 0),
          |c AS (SELECT sg, CAST(count(*) AS BIGINT) AS ndoc FROM e GROUP BY sg)
          |SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
@@ -230,7 +220,7 @@ object MiningOps {
     // each doc with its next 4 neighbors (explode of a 4-element
     // sequence — exactly w·n pairs), verify exact Jaccard ≥ 0.3.
     Q("q113_sorted_neighborhood",
-      s"""WITH sh AS (SELECT doc_id, lang, n_chars, $shingleSqlExpr AS sg FROM documents),
+      s"""WITH sh AS (SELECT doc_id, lang, n_chars, ${LlmOps.docShinglesSql} AS sg FROM documents),
          |f AS (SELECT * FROM sh WHERE len(sg) > 0),
          |r AS (SELECT doc_id, lang, sg,
          |  row_number() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rnk FROM f)
@@ -753,7 +743,7 @@ object MiningOps {
     // no match), then a map-side-combinable per-doc rollup. Cost
     // tracks shingle volume, never candidates × reference.
     Q("q174_ngram_novelty",
-      s"""WITH sh AS (SELECT doc_id, $shingleSqlExpr AS sg FROM documents),
+      s"""WITH sh AS (SELECT doc_id, ${LlmOps.docShinglesSql} AS sg FROM documents),
          |e AS (SELECT doc_id, unnest(sg) AS sg FROM sh WHERE len(sg) > 0),
          |ref AS (SELECT DISTINCT sg FROM e WHERE doc_id % 2 = 0)
          |SELECT e.doc_id, CAST(count(*) AS BIGINT) AS n_grams,

@@ -4,7 +4,7 @@ import graft.durable.Log
 import graft.plans.PrefixScan
 import graft.{Q, Tables}
 import graft.functions.{GraftFunctions, TextFns, VectorFns}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-10 training-pipeline planning batch: the index-health and
@@ -18,18 +18,6 @@ import org.apache.spark.sql.functions._
   * which training shard). All-integer / id-only outputs.
   */
 object PipelineOps {
-
-  /** Embeddings as double arrays with norms (the q49/q50 convention:
-    * identical summation order to every all-pairs oracle path). */
-  private def embWithNorm(s: SparkSession, d: String): DataFrame = {
-    GraftFunctions.register(s)
-    Tables.embeddings(s, d)
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
-      .drop("embedding")
-  }
-
-  private def fastDot(a: Column, b: Column): Column = GraftFunctions.dot(a, b)
 
   /** q283's rollup over a materialized 1-NN frame — factored out so
     * the amortization smoke (SCALE.md round 11, VERDICT r10 #5) can
@@ -47,20 +35,6 @@ object PipelineOps {
       .withColumn("purity_ppm", expr("(1000000 * n_same) div n_vecs"))
       .orderBy(col("label"))
   }
-
-  /** Inlined hyperplane VALUES rows for the DuckDB oracle — the q51
-    * convention (LlmOps.annLshOracleSql): deterministic seeded
-    * constants emitted as 17-significant-digit double literals (exact
-    * round-trip), Locale.ROOT so the decimal separator is always '.'. */
-  private def planeValuesSql: String =
-    (0 until LlmOps.lshTables).flatMap { t =>
-      (0 until LlmOps.lshBits).map { b =>
-        val arr = LlmOps.hyperplanes(t * LlmOps.lshBits + b)
-          .map(v => String.format(java.util.Locale.ROOT, "%.17e", Double.box(v)))
-          .mkString("[", ", ", "]")
-        s"($t, $b, CAST($arr AS DOUBLE[]))"
-      }
-    }.mkString(",\n      ")
 
   /** q285's planner core over a (doc_id, n_tok) frame: closed-form
     * shard assignment from an exclusive PrefixScan prefix sum (integer
@@ -434,7 +408,7 @@ object PipelineOps {
     // aggregation per eval id, an |eval|-row shuffle; no corpus-sized
     // shuffle, no pair materialization.
     Q("q282_embedding_decon",
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH ${IvfAnn.fullCorpusSql},
         |p AS (SELECT a.vec_id AS eval_id, b.vec_id AS match_id,
         |        list_cosine_similarity(a.emb, b.emb) AS c
         |      FROM e a JOIN e b ON a.vec_id % 29 = 0 AND b.vec_id % 29 <> 0),
@@ -451,14 +425,14 @@ object PipelineOps {
         |  g.n_contaminating
         |FROM b JOIN g USING (eval_id)
         |ORDER BY eval_id""".stripMargin) { (s, d) =>
-      val e = embWithNorm(s, d)
+      val e = IvfAnn.fullCorpus(s, d)
       val ev = e.filter(pmod(col("vec_id"), lit(29L)) === 0)
         .select(col("vec_id").as("eval_id"), col("emb").as("qe"), col("nrm").as("qn"))
       val cs = e.filter(pmod(col("vec_id"), lit(29L)) =!= 0)
         .select(col("vec_id").as("match_id"), col("emb").as("ce"), col("nrm").as("cn"))
       cs.crossJoin(broadcast(ev))
         .withColumn("c", VectorFns.cosineWithNorms(
-          fastDot(col("qe"), col("ce")), col("qn"), col("cn")))
+          GraftFunctions.dot(col("qe"), col("ce")), col("qn"), col("cn")))
         .groupBy(col("eval_id"))
         .agg(max(struct(col("c"), (-col("match_id")).as("nm"))).as("m"),
           sum(when(col("c") > 0.35, 1L).otherwise(0L)).as("n_contaminating"))
@@ -477,7 +451,7 @@ object PipelineOps {
     // all-pairs; the label join and per-label rollup are
     // labels-×-corpus-linear.
     Q("q283_knn_label_purity",
-      """WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH ${IvfAnn.fullCorpusSql},
         |p AS (SELECT a.vec_id AS a_id, a.label AS la, b.vec_id AS b_id,
         |        b.label AS lb,
         |        list_cosine_similarity(a.emb, b.emb) AS c
@@ -505,15 +479,8 @@ object PipelineOps {
     // One map-side bucket computation (24 codegen'd plane dots per
     // row) → a (4 × 64)-bounded aggregate.
     Q("q284_lsh_bucket_balance",
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |planes(t, bit, pl) AS (VALUES
-        |      PLANE_VALUES),
-        |buckets AS (
-        |    SELECT e.vec_id, p.t,
-        |      SUM(CASE WHEN list_dot_product(e.emb, p.pl) > 0
-        |               THEN 1 << p.bit ELSE 0 END) AS bucket
-        |    FROM e CROSS JOIN planes p
-        |    GROUP BY e.vec_id, p.t),
+      s"""WITH ${IvfAnn.fullCorpusSql},
+        |${LlmOps.lshBucketsSql},
         |sz AS (SELECT CAST(t AS BIGINT) AS t, bucket,
         |         CAST(count(*) AS BIGINT) AS sz
         |       FROM buckets GROUP BY 1, 2),
@@ -524,7 +491,7 @@ object PipelineOps {
         |  CAST((1000000 * max(sz.sz)) // max(n.n_vecs) AS BIGINT)
         |    AS max_share_ppm
         |FROM sz CROSS JOIN n GROUP BY sz.t
-        |ORDER BY t""".stripMargin.replace("PLANE_VALUES", planeValuesSql)) { (s, d) =>
+        |ORDER BY t""".stripMargin) { (s, d) =>
       GraftFunctions.register(s)
       val bk = Tables.embeddings(s, d)
         .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
@@ -787,8 +754,7 @@ object PipelineOps {
     // the lexical check is (|eval| × 9) pair-sized shingle joins.
     // Only inter = 0 is reported, so shingle multiplicity can't matter.
     Q("q293_hard_negatives",
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-        |    FROM embeddings),
+      s"""WITH ${IvfAnn.fullCorpusSql},
         |ev AS (SELECT vec_id AS eval_id, emb AS qe FROM e
         |       WHERE vec_id % 29 = 0),
         |cs AS (SELECT vec_id AS cand_id, emb AS ce FROM e
@@ -797,13 +763,7 @@ object PipelineOps {
         |    row_number() OVER (PARTITION BY eval_id
         |      ORDER BY list_cosine_similarity(qe, ce) DESC, cand_id) AS rnk
         |  FROM ev CROSS JOIN cs),
-        |sh AS (SELECT doc_id,
-        |    list_distinct(list_transform(
-        |      range(1, CASE WHEN len(string_split(text,' ')) >= 3
-        |                    THEN len(string_split(text,' ')) - 1 ELSE 1 END),
-        |      i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]
-        |           || ' ' || string_split(text,' ')[i+2])) AS sg
-        |  FROM documents),
+        |sh AS (SELECT doc_id, ${LlmOps.docShinglesSql} AS sg FROM documents),
         |p AS (SELECT t.eval_id, t.cand_id, t.rnk,
         |    len(list_intersect(se.sg, sc.sg)) AS inter
         |  FROM rk t JOIN sh se ON t.eval_id = se.doc_id
@@ -855,20 +815,12 @@ object PipelineOps {
     // recall. Work is pair-bounded (the routed threshold set — never
     // all-pairs) plus one map-side bucket pass per vector.
     Q("q295_lsh_calibration",
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-        |    FROM embeddings),
+      s"""WITH ${IvfAnn.fullCorpusSql},
         |p AS (SELECT a.vec_id AS a_id, b.vec_id AS b_id,
         |    list_cosine_similarity(a.emb, b.emb) AS c
         |  FROM e a JOIN e b ON a.vec_id < b.vec_id
         |  WHERE list_cosine_similarity(a.emb, b.emb) > 0.35),
-        |planes(t, bit, pl) AS (VALUES
-        |      PLANE_VALUES),
-        |buckets AS (
-        |    SELECT e.vec_id, p.t,
-        |      SUM(CASE WHEN list_dot_product(e.emb, p.pl) > 0
-        |               THEN 1 << p.bit ELSE 0 END) AS bucket
-        |    FROM e CROSS JOIN planes p
-        |    GROUP BY e.vec_id, p.t),
+        |${LlmOps.lshBucketsSql},
         |coll AS (SELECT pr.a_id, pr.b_id, pr.c,
         |    CAST(sum(CASE WHEN ba.bucket = bb.bucket THEN 1 ELSE 0 END)
         |      AS BIGINT) AS n_tables
@@ -882,9 +834,8 @@ object PipelineOps {
         |  CAST((1000000 * sum(CASE WHEN n_tables >= 1 THEN 1 ELSE 0 END))
         |    // count(*) AS BIGINT) AS collide_ppm
         |FROM coll GROUP BY 1
-        |ORDER BY cos_band""".stripMargin
-        .replace("PLANE_VALUES", planeValuesSql)) { (s, d) =>
-      val e = embWithNorm(s, d)
+        |ORDER BY cos_band""".stripMargin) { (s, d) =>
+      val e = IvfAnn.fullCorpus(s, d)
         .withColumn("bk", LlmOps.lshBuckets(col("emb")))
       IvfAnn.adaptiveThresholdPairs(s, d, 0.35)._2
         .join(e.select(col("vec_id").as("a_id"), col("emb").as("ea"),
@@ -892,7 +843,7 @@ object PipelineOps {
         .join(e.select(col("vec_id").as("b_id"), col("emb").as("eb"),
           col("nrm").as("nb"), col("bk").as("bb")), "b_id")
         .withColumn("c", VectorFns.cosineWithNorms(
-          fastDot(col("ea"), col("eb")), col("na"), col("nb")))
+          GraftFunctions.dot(col("ea"), col("eb")), col("na"), col("nb")))
         .withColumn("n_tables", aggregate(
           zip_with(col("ba"), col("bb"),
             (x, y) => when(x === y, 1L).otherwise(0L)),

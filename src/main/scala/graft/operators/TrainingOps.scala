@@ -24,12 +24,6 @@ object TrainingOps {
       .select(col("doc_id"), col("source"), TextFns.tokens(col("text")).as("words"))
       .withColumn("nw", size(col("words")))
 
-  /** DuckDB word-5-gram list expression over string_split alias `w`. */
-  private val duckGrams5 =
-    """list_distinct(list_transform(
-      |      range(1, CASE WHEN len(w) >= 5 THEN len(w) - 3 ELSE 1 END),
-      |      i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]))""".stripMargin
-
   /** Deterministic synthetic-PII text derived from doc fields, defined
     * identically in Spark and the oracle: the fixture corpus contains no
     * PII, so the redaction operator is exercised against planted
@@ -128,7 +122,7 @@ object TrainingOps {
     // from published LM data work (e.g. GPT-3 appendix C shape).
     Q("q73_decontaminate",
       s"""WITH g AS (
-         |  SELECT doc_id, $duckGrams5 AS gs
+         |  SELECT doc_id, list_distinct(${TextFns.shinglesSql("w", 5)}) AS gs
          |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
          |), eval_g AS (
          |  SELECT DISTINCT unnest(gs) AS gram FROM g WHERE doc_id % 97 = 0
@@ -187,9 +181,7 @@ object TrainingOps {
         |    CAST(count(*) AS BIGINT) AS nd, CAST(max(c) AS BIGINT) AS mx
         |  FROM uc GROUP BY doc_id
         |), bt AS (
-        |  SELECT doc_id, unnest(list_transform(
-        |    range(1, CASE WHEN len(w) >= 2 THEN len(w) ELSE 1 END),
-        |    i -> w[i] || ' ' || w[i+1])) AS b
+        |  SELECT doc_id, unnest(${TextFns.shinglesSql("w", 2)}) AS b
         |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
         |), bc AS (
         |  SELECT doc_id, b, count(*) AS c FROM bt GROUP BY doc_id, b
@@ -585,7 +577,7 @@ object TrainingOps {
     // aggregates per (query, cand) — both legs end in a per-query
     // top-50 TakeOrdered, and the fusion join is over ≤ 100 rows/query.
     Q("q151_rrf_hybrid",
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH ${IvfAnn.fullCorpusSql},
         |sem AS (SELECT query_id, cand, CAST(rnk AS BIGINT) AS rnk FROM (
         |    SELECT q.vec_id AS query_id, c.vec_id AS cand,
         |      row_number() OVER (PARTITION BY q.vec_id
@@ -613,11 +605,7 @@ object TrainingOps {
         |    PARTITION BY query_id ORDER BY score DESC, cand) AS rnk
         |  FROM fused)
         |WHERE rnk <= 10 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
-      val e = Tables.embeddings(s, d)
-        .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-        .select(col("vec_id"), col("emb"),
-          sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb"))).as("nrm"))
+      val e = IvfAnn.fullCorpus(s, d)
       val qSide = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
       val wSem = Window.partitionBy(col("query_id"))
@@ -751,12 +739,6 @@ object TrainingOps {
     // sets are small by nature) — the corpus is scanned per leg but
     // never shuffled on text; the report is 3 rows.
     Q("q294_decon_n_sweep", {
-      def gramsSql(n: Int): String = {
-        val cat = (0 until n).map(j => s"w[i+$j]").mkString(" || ' ' || ")
-        s"""list_distinct(list_transform(
-           |      range(1, CASE WHEN len(w) >= $n THEN len(w) - ${n - 2} ELSE 1 END),
-           |      i -> $cat))""".stripMargin
-      }
       def legSql(n: Int): String =
         s"""SELECT CAST($n AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS n_train,
            |  CAST(sum(CASE WHEN h.shared > 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -766,7 +748,7 @@ object TrainingOps {
            |  CAST(sum(h.shared) AS BIGINT) AS total_shared
            |FROM (
            |  WITH g AS (
-           |    SELECT doc_id, ${gramsSql(n)} AS gs
+           |    SELECT doc_id, list_distinct(${TextFns.shinglesSql("w", n)}) AS gs
            |    FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
            |  ), eval_g AS (
            |    SELECT DISTINCT unnest(gs) AS gram FROM g WHERE doc_id % 97 = 0

@@ -39,7 +39,7 @@ class JdbcSpec extends AnyFunSuite {
     p
   }
 
-  test("keyBounds pushes MIN/MAX planning to the source (A4)") {
+  test("keyBounds returns the key MIN/MAX, and None on an empty table (A4)") {
     val df = spark.read.jdbc(dbUrl, "BIG_TABLE_1", props)
     assert(Extract.keyBounds(df, "ID").contains((1L, nRows.toLong)))
     assert(Extract.keyBounds(df.filter("ID < 0"), "ID").isEmpty,
@@ -101,7 +101,6 @@ class JdbcSpec extends AnyFunSuite {
     assert(job.properties.getProperty("driver") == "com.mysql.cj.jdbc.Driver")
     assert(job.properties.getProperty("fetchsize") == "10000")
     assert(job.properties.getProperty("isolationLevel") == "READ_COMMITTED")
-    assert(job.properties.getProperty("pushDownAggregate") == "true")
     assert(job.stride == 10000L && job.maxRecordsPerFile == 100000L)
   }
 

@@ -20,6 +20,9 @@ class RegistrySpec extends AnyFunSuite {
           assert(s.get.scaleClass == Q.Production,
             s"${q.name}: sibling $sib must itself be Production, " +
               s"got ${s.get.scaleClass}")
+          // both are exact, so one oracle checks both
+          assert(q.oracle == s.get.oracle,
+            s"${q.name}: oracle differs from its sibling $sib's")
         case Q.Production => ()
       }
     }
@@ -34,6 +37,22 @@ class RegistrySpec extends AnyFunSuite {
       "q216_simhash_neighbors" -> "q216c_simhash_neighbors_routed",
       "q50_embedding_neardup" -> "q50c_embedding_neardup_routed",
       "q222_mutual_nn" -> "q222b_mutual_nn_ivf"))
+  }
+
+  /** Placeholders that oracle templates `.replace` after stripMargin
+    * (the NOTES splice convention); one left in an oracle is a missed
+    * splice. */
+  private val splicePlaceholders = Seq("CC_CLUSTER_CTES", "@PAIRS@", "PLANE_VALUES")
+
+  test("oracle SQL has no unspliced placeholder and no margin-eaten `||`") {
+    SparkEntry.oracleSql.foreach { case (name, sql) =>
+      splicePlaceholders.foreach(p =>
+        assert(!sql.contains(p), s"$name: placeholder $p was never spliced"))
+      // stripMargin eats the first `|` of a line-leading `||`
+      sql.linesIterator.map(_.trim)
+        .filter(l => l.startsWith("|") && !l.startsWith("||"))
+        .foreach(l => fail(s"$name: line starts with a single `|`: $l"))
+    }
   }
 
   test("registry names are unique and every oracle query has a fn") {
