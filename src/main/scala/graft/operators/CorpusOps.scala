@@ -191,13 +191,13 @@ object CorpusOps {
     // big corpora fail loudly, never wrap. One map-side (dim) sum →
     // 64-row frame → TakeOrderedAndProject top-5.
     Q("q278_dim_variance",
-      """WITH x AS (SELECT CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |e AS (SELECT i AS dim, CAST(floor(emb[i] * 1000) AS BIGINT) AS q3
-        |      FROM x, (SELECT unnest(range(1, 65)) AS i)),
+      s"""WITH ${IvfAnn.fullCorpusSql},
+        |v AS (SELECT i AS dim, CAST(floor(emb[i] * 1000) AS BIGINT) AS q3
+        |      FROM e, (SELECT unnest(range(1, 65)) AS i)),
         |s AS (SELECT CAST(dim AS BIGINT) AS dim, CAST(count(*) AS BIGINT) AS n,
         |        CAST(sum(q3) AS BIGINT) AS sx,
         |        sum(CAST(q3 AS HUGEINT) * q3) AS sxx
-        |      FROM e GROUP BY 1)
+        |      FROM v GROUP BY 1)
         |SELECT dim, n, sx, CAST(sxx AS BIGINT) AS sxx,
         |  CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS BIGINT) AS var_num
         |FROM s ORDER BY var_num DESC, dim LIMIT 5""".stripMargin) { (s, d) =>

@@ -74,7 +74,7 @@ object CurationOps {
     // pipeline in DuckDB with the hyperplane constants inlined, so the
     // driver hash-checks cells, the pair predicate, and the keep rule.
     Q("q84_semdedup",
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH ${IvfAnn.fullCorpusSql},
          |  planes(bit, pl) AS (VALUES
          |      $planeRowsSql),
          |  cells AS (
@@ -117,7 +117,7 @@ object CurationOps {
     // ORDERING of similarities matters, and a window rank with the
     // identical tie-break reproduces the argmax exactly.
     Q("q87_anchor_classify",
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      s"""WITH ${IvfAnn.fullCorpusSql},
          |  anchors(aid, av) AS (VALUES
          |      $anchorRowsSql),
          |  scored AS (

@@ -1562,8 +1562,7 @@ object LlmOps {
         |  CAST(floor(scale * 10000) AS BIGINT) AS scale_bp
         |FROM q
         |ORDER BY vec_id""".stripMargin) { (s, d) =>
-      Tables.embeddings(s, d)
-        .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
+      IvfAnn.fullCorpus(s, d)
         .withColumn("mx", array_max(transform(col("emb"), x => abs(x))))
         .withColumn("scale", when(col("mx") === 0, lit(0.0)).otherwise(lit(127.0) / col("mx")))
         .withColumn("q", transform(col("emb"), x => floor(x * col("scale") + lit(0.5))))
@@ -2428,7 +2427,7 @@ object LlmOps {
         |FROM t ORDER BY query_id""".stripMargin) { (s, d) =>
       GraftFunctions.register(s)
       val e = Tables.embeddings(s, d)
-        .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
+        .withColumn("emb", IvfAnn.embAsDoubles)
         .withColumn("mx", array_max(transform(col("emb"), x => abs(x))))
         .withColumn("qv", transform(col("emb"), x =>
           floor(x * when(col("mx") === 0, lit(0.0)).otherwise(lit(127.0) / col("mx"))

@@ -492,9 +492,7 @@ object PipelineOps {
         |    AS max_share_ppm
         |FROM sz CROSS JOIN n GROUP BY sz.t
         |ORDER BY t""".stripMargin) { (s, d) =>
-      GraftFunctions.register(s)
-      val bk = Tables.embeddings(s, d)
-        .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
+      val bk = IvfAnn.fullCorpus(s, d)
         .select(col("vec_id"),
           posexplode(LlmOps.lshBuckets(col("emb"))).as(Seq("t", "bucket")))
       val sz = bk.groupBy(col("t").cast("long").as("t"), col("bucket"))

@@ -361,16 +361,16 @@ object ScienceOps {
     // map-side-combinable groupBy on (dim_i, dim_j) — 2080 cells for
     // d=64 regardless of corpus size.
     Q("q249_embedding_gram",
-      """WITH x AS (SELECT CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |e AS (SELECT i, j,
+      s"""WITH ${IvfAnn.fullCorpusSql},
+        |v AS (SELECT i, j,
         |    CAST(floor(emb[i] * 1000) AS BIGINT) AS qi,
         |    CAST(floor(emb[j] * 1000) AS BIGINT) AS qj
-        |  FROM x, (SELECT unnest(range(1, 65)) AS i), (SELECT unnest(range(1, 65)) AS j)
+        |  FROM e, (SELECT unnest(range(1, 65)) AS i), (SELECT unnest(range(1, 65)) AS j)
         |  WHERE i <= j)
         |SELECT CAST(i AS BIGINT) AS dim_i, CAST(j AS BIGINT) AS dim_j,
         |  CAST(count(*) AS BIGINT) AS n, CAST(sum(qi) AS BIGINT) AS sx,
         |  CAST(sum(qj) AS BIGINT) AS sy, CAST(sum(qi * qj) AS BIGINT) AS sxy
-        |FROM e GROUP BY 1, 2 ORDER BY dim_i, dim_j""".stripMargin) { (s, d) =>
+        |FROM v GROUP BY 1, 2 ORDER BY dim_i, dim_j""".stripMargin) { (s, d) =>
       val q3 = Tables.embeddings(s, d)
         .select(transform(col("embedding"),
           x => floor(x.cast("double") * 1000).cast("long")).as("q"))
@@ -683,13 +683,13 @@ object ScienceOps {
     // entirely from these integers. Join-free posexplode, map-side
     // combined to labels × dims rows.
     Q("q263_class_moments",
-      """WITH x AS (SELECT label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |e AS (SELECT label, i AS dim, CAST(floor(emb[i] * 1000) AS BIGINT) AS q3
-        |      FROM x, (SELECT unnest(range(1, 65)) AS i))
+      s"""WITH ${IvfAnn.fullCorpusSql},
+        |v AS (SELECT label, i AS dim, CAST(floor(emb[i] * 1000) AS BIGINT) AS q3
+        |      FROM e, (SELECT unnest(range(1, 65)) AS i))
         |SELECT CAST(label AS BIGINT) AS label, CAST(dim AS BIGINT) AS dim,
         |  CAST(count(*) AS BIGINT) AS n, CAST(sum(q3) AS BIGINT) AS sx,
         |  CAST(sum(q3 * q3) AS BIGINT) AS sxx
-        |FROM e GROUP BY 1, 2 ORDER BY label, dim""".stripMargin) { (s, d) =>
+        |FROM v GROUP BY 1, 2 ORDER BY label, dim""".stripMargin) { (s, d) =>
       Tables.embeddings(s, d)
         .select(col("label").cast("long").as("label"),
           posexplode(transform(col("embedding"),
@@ -712,11 +712,11 @@ object ScienceOps {
     // between two labels says the embedding space cannot separate
     // them — the go/no-go for training a linear probe on it.
     Q("q268_class_separation",
-      """WITH x AS (SELECT label, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |e AS (SELECT label, i AS dim, CAST(floor(emb[i] * 1000) AS BIGINT) AS q3
-        |      FROM x, (SELECT unnest(range(1, 65)) AS i)),
+      s"""WITH ${IvfAnn.fullCorpusSql},
+        |v AS (SELECT label, i AS dim, CAST(floor(emb[i] * 1000) AS BIGINT) AS q3
+        |      FROM e, (SELECT unnest(range(1, 65)) AS i)),
         |s AS (SELECT CAST(label AS BIGINT) AS label, dim, CAST(sum(q3) AS BIGINT) AS sx
-        |      FROM e GROUP BY 1, 2),
+        |      FROM v GROUP BY 1, 2),
         |p AS (SELECT a.label AS label_a, b.label AS label_b,
         |        CAST(sum(CAST(a.sx AS HUGEINT) * b.sx) AS BIGINT) AS dot,
         |        CAST(sum(CAST(a.sx AS HUGEINT) * a.sx) AS BIGINT) AS na2,

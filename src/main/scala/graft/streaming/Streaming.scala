@@ -440,12 +440,10 @@ object Streaming {
   def annStream(queries: DataFrame, corpus: DataFrame,
       index: graft.operators.IvfAnn.IvfIndex, k: Int,
       emit: (DataFrame, Long) => Unit) = {
-    import graft.functions.GraftFunctions
     queries.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val qs = batch.select(col("query_id"),
-            transform(col("embedding"), x => x.cast("double")).as("qe"))
-          .withColumn("qn", sqrt(GraftFunctions.dot(col("qe"), col("qe"))))
+        val qs = graft.operators.IvfAnn.prepEmbeddings(batch)
+          .select(col("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
         emit(graft.operators.IvfAnn
           .boundedTopK(corpus, qs, k, Some(index))._2, batchId)
       }
@@ -535,7 +533,7 @@ object Streaming {
     private val corpusRef = new java.util.concurrent.atomic.AtomicReference(
       initialCorpus.select(col("vec_id"), col("emb"), col("nrm")).localCheckpoint())
     private val indexRef = new java.util.concurrent.atomic.AtomicReference(
-      presetIndex.getOrElse(IvfAnn.buildIndexWithRadii(corpusRef.get)))
+      presetIndex.getOrElse(IvfAnn.buildIndex(corpusRef.get)))
     @volatile private var rebuildCount = 0
     private var sinceCompact = 0
     // TWO counters where round 13 had one (ADVICE r13): both count
@@ -740,13 +738,8 @@ object Streaming {
       * inline compactLogEvery cadence is due (acted on by the wrapper
       * AFTER the monitor is released — see the lock-order note there). */
     private def applyBatchInner(batch: DataFrame, batchId: Long): Boolean = synchronized {
-      import graft.functions.GraftFunctions
       if (gate.admit(batchId)) {
-        val prepped = batch
-          .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-          .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
-          .drop("embedding")
-          .localCheckpoint()
+        val prepped = IvfAnn.prepEmbeddings(batch).localCheckpoint()
         if (!prepped.isEmpty) {
           // delta log first (crash between the write and the stream
           // commit ⇒ re-delivery overwrites the same dir — idempotent),
@@ -809,7 +802,7 @@ object Streaming {
           appended0.copy(assigned = appended0.assigned.localCheckpoint())
         else appended0
       val rebuilt = rebuildWhen(appended)
-      val next = if (rebuilt) IvfAnn.buildIndexWithRadii(grown) else appended
+      val next = if (rebuilt) IvfAnn.buildIndex(grown) else appended
       // ---- no failable work below: ref swaps + counters only ----
       corpusRef.set(grown)
       indexRef.set(next)
@@ -832,7 +825,7 @@ object Streaming {
         persist: Boolean = true): Unit = synchronized {
       if (rebuildWhen(indexRef.get)) {
         rebuildCount += 1
-        indexRef.set(IvfAnn.buildIndexWithRadii(corpusRef.get))
+        indexRef.set(IvfAnn.buildIndex(corpusRef.get))
         if (persist) log.foreach { l =>
           l.delete(s"quantizer/$baseGen/_SUCCESS")
           writeQuantizer(l, baseGen, indexRef.get)
@@ -1751,18 +1744,14 @@ object Streaming {
             size(split(col("text"), " ")).cast("long").as("n_tok"))
           .groupBy(col("source")).agg(sum(col("n_tok")).as("d"))
         if (!delta.isEmpty) {
-          val m = countsRef.get.join(delta, Seq("source"), "full_outer")
-            .select(col("source"),
-              (coalesce(col("tok"), lit(0L)) + coalesce(col("d"), lit(0L)))
-                .as("tok"))
-            .localCheckpoint()
-          // STATS RESET (the appendToIndex/MAINT10X lesson):
-          // localCheckpoint preserves Catalyst statistics and this plan
-          // joins the previous counts frame, so the inherited
-          // sizeInBytes would compound per micro-batch on a long-lived
-          // stream; re-wrapping the checkpointed RDD resets it — the
-          // frame is sources-sized and never needs an estimate.
-          val reset = m.sparkSession.createDataFrame(m.rdd, m.schema)
+          // joins the previous counts frame: without FreshStats the
+          // size estimate compounds per micro-batch on a long-lived
+          // stream (the frame is sources-sized)
+          val reset = graft.plans.FreshStats.checkpoint(
+            countsRef.get.join(delta, Seq("source"), "full_outer")
+              .select(col("source"),
+                (coalesce(col("tok"), lit(0L)) + coalesce(col("d"), lit(0L)))
+                  .as("tok")))
           // Durable snapshot FIRST, in-memory refs after: a snapshot
           // write that crashes must leave the planner's in-memory state
           // UNTOUCHED, because the gate has not advanced and the

@@ -7,7 +7,9 @@ import scala.concurrent.duration._
 import graft.{Bench, GraftSession, SparkEntry}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.{ExplainUtils, FormattedMode}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** The dev harness: every mode times declared queries through Bench's
   * one timing rep ([[Bench.runOnce]]), so a dev number and a bench
@@ -26,7 +28,8 @@ import org.apache.spark.sql.execution.FormattedMode
   *    printed slowest-first (wall, summed task time, max task, tasks).
   *  - `ab`: interleaved reps with the SQL conf at A and at B — same JVM,
   *    same caches, so the delta is the conf; prints min and median.
-  *  - `plan`: the formatted physical plan.
+  *  - `plan`: the formatted physical plan, after the plans of the
+  *    actions run while the frame was built.
   *  - `scale`: cold and min-of-2-warm times at 1× (`dir`) and on an
   *    N× [[Corpora]] corpus synthesized from it (default N = 10).
   */
@@ -83,12 +86,33 @@ object Dev {
     } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  def plan(spark: SparkSession, names: Seq[String], dir: String): Unit =
-    names.foreach { n =>
+  /** Under each query's header: every plan executed while its frame
+    * was built (eager checkpoints, planning reads), each under a
+    * `----- <action>` line in execution order, then the returned
+    * frame's plan. An executed plan is printed as Spark first planned
+    * it: adaptive execution's final form depends on which stage
+    * finished first (a join's build side, stage and codegen ids), so it
+    * differs between two runs of the same tree. */
+  def plan(spark: SparkSession, names: Seq[String], dir: String): Unit = {
+    val executed = new ExecutedPlans
+    spark.listenerManager.register(executed)
+    try names.foreach { n =>
       println(s"===== $n")
-      println(SparkEntry.queries(n)(spark, dir).queryExecution.explainString(FormattedMode))
+      executed.drain(spark) // plans of earlier work are not this build's
+      val df = SparkEntry.queries(n)(spark, dir)
+      executed.drain(spark).foreach { case (action, qe) =>
+        println(s"----- $action")
+        val planned = qe.executedPlan.transformUp {
+          case a: AdaptiveSparkPlanExec => a.initialPlan
+        }
+        // nodes shared with the final plan keep its codegen-stage ids
+        planned.foreach(_.unsetTagValue(QueryPlan.CODEGEN_ID_TAG))
+        ExplainUtils.processPlan(planned, s => print(s))
+      }
+      println(df.queryExecution.explainString(FormattedMode))
       graft.plans.DerivationCache.dropOrphans(spark.sparkContext)
-    }
+    } finally spark.listenerManager.unregister(executed)
+  }
 
   def scale(spark: SparkSession, corpus: String, names: Seq[String], n: Int,
       dir: String): Unit = {

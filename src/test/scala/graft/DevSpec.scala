@@ -48,9 +48,11 @@ class DevSpec extends AnyFunSuite {
   }
 
   test("Dev plan: the formatted physical plan per query") {
-    val out = dev("plan", "q01_pricing_summary", d)
+    val out = dev("plan", "q01_pricing_summary,q101_price_histogram", d)
     assert(out.head == "===== q01_pricing_summary")
     assert(out.contains("== Physical Plan =="), out)
+    // q101 checkpoints while its frame is built: that plan is printed too
+    assert(out.dropWhile(_ != "===== q101_price_histogram").contains("----- localCheckpoint"), out)
   }
 
   test("Dev scale: cold and warm times at 1x and Nx") {

@@ -1,18 +1,16 @@
 package graft
 
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.tools.ExecutedPlans
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, PartialMerge}
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{col, row_number}
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -134,7 +132,8 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def audit(build: => DataFrame): Seq[String] = {
     executed.drain(spark) // plans of earlier work are not this build's
     val result = build.queryExecution.executedPlan
-    (executed.drain(spark) :+ ("result" -> result)).flatMap { case (from, plan) =>
+    (executed.drain(spark).map { case (action, qe) => action -> qe.executedPlan }
+        :+ ("result" -> result)).flatMap { case (from, plan) =>
       offendingNodes(plan).map(n => s"$n ($from)")
     }.distinct
   }
@@ -186,29 +185,5 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val noLongerGlobal = boundedGlobal.keys.filter(audited(_).isEmpty)
     assert(noLongerGlobal.isEmpty,
       s"allowlisted but now clean (remove the entries): $noLongerGlobal")
-  }
-}
-
-/** Every plan Spark executes under an action (`localCheckpoint`,
-  * `head`, `collect`, `isEmpty`, …), named by the action. The listener
-  * bus is asynchronous and delivers in order, so [[drain]] runs a
-  * job-free sentinel action and takes plans until the sentinel's
-  * arrives: by then every plan executed before it has arrived too. */
-private final class ExecutedPlans extends QueryExecutionListener {
-  private val plans = new LinkedBlockingQueue[(String, QueryExecution)]()
-
-  override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-    plans.put(funcName -> qe)
-  override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-
-  def drain(spark: SparkSession): Seq[(String, SparkPlan)] = {
-    val sentinel = spark.emptyDataFrame.select()
-    sentinel.collect()
-    def next() = Option(plans.poll(60, TimeUnit.SECONDS)).getOrElse(
-      throw new IllegalStateException("listener bus did not deliver the sentinel in 60 s"))
-    Iterator.continually(next())
-      .takeWhile(_._2 ne sentinel.queryExecution)
-      .map { case (action, qe) => action -> qe.executedPlan }
-      .toList
   }
 }

@@ -63,7 +63,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
 
   private lazy val fullAnswers: Seq[(Long, Int, Long)] = {
     val full = IvfAnn.fullCorpus(spark, dir)
-    answers(full, IvfAnn.buildIndexWithRadii(full))
+    answers(full, IvfAnn.buildIndex(full))
   }
 
   private def rawBatch(lo: Long, hi: Long) =
@@ -97,7 +97,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     val n3 = cut + 3 * k
     def partialAnswers(bound: Long): Seq[(Long, Int, Long)] = {
       val c = full.filter(col("vec_id") < bound)
-      answers(c, IvfAnn.buildIndexWithRadii(c))
+      answers(c, IvfAnn.buildIndex(c))
     }
     val fs = fsFor(ppath)
     assert(fs.exists(p(ppath, "compact/1/_SUCCESS")),
@@ -496,7 +496,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     val bounds = (0 to 3).map(i => cut + (i + 1) * k)
     val expected: Set[Seq[(Long, Int, Long)]] = bounds.map { b =>
       val c = full.filter(col("vec_id") < b)
-      answers(c, IvfAnn.buildIndexWithRadii(c))
+      answers(c, IvfAnn.buildIndex(c))
     }.toSet
     val ppath = "graftfs://" +
       java.nio.file.Files.createTempDirectory("graft_replica_soak")

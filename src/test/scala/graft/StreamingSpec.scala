@@ -616,7 +616,7 @@ class StreamingSpec extends AnyFunSuite {
       val viaMaintained = IvfAnn.boundedTopK(m.corpus, queries, 5,
         Some(m.index))._2.as[(Long, Int, Long)].collect().toSeq
       val viaRebuild = IvfAnn.boundedTopK(full, queries, 5,
-        Some(IvfAnn.buildIndexWithRadii(full)))._2
+        Some(IvfAnn.buildIndex(full)))._2
         .as[(Long, Int, Long)].collect().toSeq
       assert(viaMaintained.nonEmpty && viaMaintained == viaRebuild)
     } finally q.stop()
@@ -797,7 +797,7 @@ class StreamingSpec extends AnyFunSuite {
     val viaRO = IvfAnn.boundedTopK(m2.corpus, queries, 5,
       Some(m2.index))._2.as[(Long, Int, Long)].collect().toSeq
     val viaRebuild = IvfAnn.boundedTopK(m2.corpus, queries, 5,
-      Some(IvfAnn.buildIndexWithRadii(m2.corpus)))._2
+      Some(IvfAnn.buildIndex(m2.corpus)))._2
       .as[(Long, Int, Long)].collect().toSeq
     assert(viaRO.nonEmpty && viaRO == viaRebuild)
     // Path B — snapshot-quantizer adoption (no tail deltas): the
@@ -904,7 +904,7 @@ class StreamingSpec extends AnyFunSuite {
     val viaRestored = IvfAnn.boundedTopK(m2.corpus, queries, 5,
       Some(m2.index))._2.as[(Long, Int, Long)].collect().toSeq
     val viaRebuild = IvfAnn.boundedTopK(full, queries, 5,
-      Some(IvfAnn.buildIndexWithRadii(full)))._2
+      Some(IvfAnn.buildIndex(full)))._2
       .as[(Long, Int, Long)].collect().toSeq
     assert(viaRestored.nonEmpty && viaRestored == viaRebuild)
     // the idempotence guard resumed at the post-compaction head: a
@@ -1371,7 +1371,7 @@ class StreamingSpec extends AnyFunSuite {
       val viaRestored = IvfAnn.boundedTopK(m2.corpus, queries, 5,
         Some(m2.index))._2.as[(Long, Int, Long)].collect().toSeq
       val viaRebuild = IvfAnn.boundedTopK(full, queries, 5,
-        Some(IvfAnn.buildIndexWithRadii(full)))._2
+        Some(IvfAnn.buildIndex(full)))._2
         .as[(Long, Int, Long)].collect().toSeq
       assert(viaRestored.nonEmpty && viaRestored == viaRebuild)
     } finally q2.stop()
@@ -1630,7 +1630,7 @@ class StreamingSpec extends AnyFunSuite {
     val queries = full.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
     val viaRebuild = IvfAnn.boundedTopK(full, queries, 5,
-      Some(IvfAnn.buildIndexWithRadii(full)))._2
+      Some(IvfAnn.buildIndex(full)))._2
       .as[(Long, Int, Long)].collect().toSeq
     assert(IvfAnn.boundedTopK(m.corpus, queries, 5, Some(m.index))._2
       .as[(Long, Int, Long)].collect().toSeq == viaRebuild,
@@ -1690,7 +1690,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(IvfAnn.boundedTopK(m2.corpus, queries, 5, Some(m2.index))._2
       .as[(Long, Int, Long)].collect().toSeq
       == IvfAnn.boundedTopK(full, queries, 5,
-        Some(IvfAnn.buildIndexWithRadii(full)))._2
+        Some(IvfAnn.buildIndex(full)))._2
         .as[(Long, Int, Long)].collect().toSeq)
   }
 

@@ -141,7 +141,7 @@ class VectorSpec extends AnyFunSuite {
         col("embedding"), x => x.cast("double")))
       .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
       .drop("embedding")
-    val (assigned, _, _) = graft.operators.IvfAnn.buildIndex(corpus)
+    val assigned = graft.operators.IvfAnn.buildIndex(corpus).assigned
     val path = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/idx"
     graft.operators.IvfAnn.writeClustered(corpus, assigned, path)
 
@@ -218,13 +218,13 @@ class VectorSpec extends AnyFunSuite {
       val noise = Array.fill(64)(rnd.nextGaussian() * 0.05)
       ((c * 25 + i).toLong, centers(c).zip(noise).map { case (a, b) => (a + b).toFloat })
     }
-    val coherent = IvfAnn.buildIndexWithRadii(mkCorpus(tight))
+    val coherent = IvfAnn.buildIndex(mkCorpus(tight))
     assert(IvfAnn.thresholdPrunability(coherent, 0.35) > 0.5,
       "tight clusters must make most cells prunable at t=0.35")
     // Incoherent: 400 uniform random directions — every cell aggregates
     // unrelated vectors, radius ≈ 90°, nothing prunable at t = 0.9.
     val noise = (0 until 400).map(i => (i.toLong, unit().map(_.toFloat)))
-    val incoherent = IvfAnn.buildIndexWithRadii(mkCorpus(noise))
+    val incoherent = IvfAnn.buildIndex(mkCorpus(noise))
     assert(IvfAnn.thresholdPrunability(incoherent, 0.9) == 0.0,
       "random directions must leave no cell prunable at t=0.9")
   }
@@ -458,7 +458,7 @@ class VectorSpec extends AnyFunSuite {
     import graft.operators.IvfAnn
     GraftFunctions.register(spark)
     val base = IvfAnn.fullCorpus(spark, plantedDir)
-    val idx0 = IvfAnn.buildIndexWithRadii(base.filter(col("vec_id") < 300))
+    val idx0 = IvfAnn.buildIndex(base.filter(col("vec_id") < 300))
     val delta = base.filter(col("vec_id") >= 300)
     val appended = IvfAnn.appendToIndex(idx0, delta)
     // appended radii still cover every member → boundedTopK stays exact:
@@ -468,11 +468,54 @@ class VectorSpec extends AnyFunSuite {
     val viaAppend = IvfAnn.boundedTopK(base, queries, 5, Some(appended))._2
       .collect().toSeq
     val viaRebuild = IvfAnn.boundedTopK(base, queries, 5,
-      Some(IvfAnn.buildIndexWithRadii(base)))._2.collect().toSeq
+      Some(IvfAnn.buildIndex(base)))._2.collect().toSeq
     assert(viaAppend == viaRebuild)
     assert(viaAppend.nonEmpty)
     // every appended vector is assigned (index covers the full corpus)
     assert(appended.assigned.count() == base.count())
+  }
+
+  test("IVF cell radius covers every member: base, refined and appended indexes") {
+    // Every probe bound cos(max(0, θ − r)) is exact only if no member of
+    // a cell lies farther from its centroid than the cell's radius r.
+    import graft.functions.GraftFunctions
+    import graft.operators.IvfAnn
+    GraftFunctions.register(spark)
+    val rnd = new scala.util.Random(41)
+    def unit(): Array[Double] = {
+      val v = Array.fill(64)(rnd.nextGaussian())
+      val n = math.sqrt(v.map(x => x * x).sum)
+      v.map(_ / n)
+    }
+    // 32 tight clusters of 16 in 23 cells: some cells hold unrelated
+    // clusters, so refinement at t = 0.9 has cells to split
+    val centers = Seq.fill(32)(unit())
+    val vecs = for (c <- 0 until 32; i <- 0 until 16) yield {
+      val noise = Array.fill(64)(rnd.nextGaussian() * 0.03)
+      ((c * 16 + i).toLong, centers(c).zip(noise).map { case (a, b) => (a + b).toFloat })
+    }
+    val corpus = vecs.toDF("vec_id", "embedding")
+      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
+      .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
+      .drop("embedding")
+      .localCheckpoint()
+    val n = corpus.count()
+    val base = IvfAnn.buildIndex(corpus)
+    val refined = IvfAnn.refineForThreshold(corpus, base, 0.9)
+    assert(refined.nlist > base.nlist, "fixture must make refinement split cells")
+    val appended = IvfAnn.appendToIndex(
+      IvfAnn.buildIndex(corpus.filter(col("vec_id") < 384)),
+      corpus.filter(col("vec_id") >= 384))
+    for ((name, idx) <- Seq("base" -> base, "refined" -> refined, "appended" -> appended)) {
+      val members = corpus.join(idx.assigned, "vec_id").join(idx.cmeta, "cell")
+        .withColumn("ang", acos(greatest(lit(-1.0), least(lit(1.0),
+          GraftFunctions.dot(col("emb"), col("cemb")) / (col("nrm") * col("cnrm"))))))
+      assert(members.count() == n, s"$name: every vector has exactly one cell")
+      val outside = members.filter(col("ang") > col("radius") + lit(1e-9))
+        .select(col("vec_id"), col("cell"), col("ang"), col("radius"))
+      assert(outside.count() == 0,
+        s"$name: members outside their cell radius, e.g. ${outside.take(5).toSeq}")
+    }
   }
 
   test("approx_count_distinct within rsd of exact on events fixture") {
