@@ -782,7 +782,7 @@ object IvfAnn {
     * rebuild). Radius growth is the re-cluster signal: appends that
     * stretch cells erode pruning, and [[thresholdPrunability]] on the
     * updated cmeta is the same planning read that routes q50c — a
-    * maintainer rebuilds when it degrades (Streaming.IvfMaintainer). */
+    * maintainer rebuilds when it degrades (graft.streaming.IvfMaintainer). */
   def appendToIndex(index: IvfIndex, newCorpus: DataFrame): IvfIndex = {
     val centroids = index.cmeta.select(col("cell"), col("cemb"), col("cnrm"))
     val newAssigned = assign(newCorpus, centroids).localCheckpoint()
@@ -791,7 +791,7 @@ object IvfAnn {
     // checkpointed leaves (re-materializing it here would make every
     // append linear in TOTAL index size). Callers that append in a
     // loop bound the union-chain depth by periodically compacting
-    // (Streaming.IvfMaintainer re-checkpoints every 32 batches).
+    // (graft.streaming.IvfMaintainer re-checkpoints every 32 batches).
     val assigned = index.assigned.unionByName(newAssigned)
     val newRadii = radii(newCorpus.join(newAssigned, "vec_id"), centroids, Seq("cell"),
       "nradius")

@@ -499,15 +499,28 @@ object LlmOps {
       |  WHERE len(a.sg) > 0 AND len(b.sg) > 0
       |    AND len(list_intersect(a.sg, b.sg)) > 0""".stripMargin
 
+  /** Unblocked twin of [[pairStatsSql]]: every pair sharing a shingle,
+    * enumerated through the shingle (a pair with J > 0 shares one), with
+    * i counted and u = |A| + |B| − i (`sg` is distinct). */
+  private val sharedShinglePairsSql: String =
+    """SELECT a_id, b_id, i, n - i AS u FROM (
+      |  SELECT x.doc_id AS a_id, y.doc_id AS b_id, count(*) AS i,
+      |      any_value(x.n + y.n) AS n
+      |    FROM (SELECT doc_id, len(sg) AS n, unnest(sg) AS s FROM sh) x
+      |    JOIN (SELECT doc_id, len(sg) AS n, unnest(sg) AS s FROM sh) y
+      |      ON x.s = y.s AND x.doc_id < y.doc_id
+      |    GROUP BY 1, 2)""".stripMargin
+
   /** Oracle twin of [[finishJaccard]] before its sort: the pairs at
-    * J ≥ t10/10 as (a_id, b_id, jaccard_bp). */
-  private def jaccardPairsSql(t10: Int): String =
+    * J ≥ t10/10 as (a_id, b_id, jaccard_bp), from `pairs` (a_id, b_id,
+    * i, u). */
+  private def jaccardPairsSql(t10: Int, pairs: String = pairStatsSql): String =
     s"""SELECT a_id, b_id, CAST(floor(10000.0 * i / u) AS BIGINT) AS jaccard_bp
-       |  FROM ($pairStatsSql)
+       |  FROM ($pairs)
        |  WHERE i * 10 >= $t10 * u""".stripMargin
 
-  private def jaccardOracleSqlAt(t10: Int): String =
-    s"WITH $shingleBlocksCte\n${jaccardPairsSql(t10)}\nORDER BY a_id, b_id"
+  private def jaccardOracleSqlAt(t10: Int, pairs: String = pairStatsSql): String =
+    s"WITH $shingleBlocksCte\n${jaccardPairsSql(t10, pairs)}\nORDER BY a_id, b_id"
 
   /** Shared connected-component oracle scaffold (shingles → t = 0.3
     * pairs → symmetric edges → transitive closure → min-label clusters
@@ -1087,19 +1100,12 @@ object LlmOps {
     // unsound for any mid-similarity pair), and DedupSpec certifies
     // recall is exactly 1.0 on the shipped sf0.01 fixture by comparing
     // against the unblocked O(n²) exact pair set — so the DuckDB oracle
-    // (ALL pairs with J ≥ 0.8) recomputes the output deterministically.
+    // (ALL pairs with J ≥ 0.8, enumerated through a shared shingle, with
+    // no lang or length blocking) recomputes the output deterministically.
     // This is the documented re-computation invariant (SURVEY §5.1):
     // approximate candidate generation, exact verified output.
     Q("q44_minhash_lsh",
-      s"""WITH $shingleBlocksCte
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  CAST(floor(10000.0 * len(list_intersect(a.sg, b.sg))
-        |       / len(list_distinct(list_concat(a.sg, b.sg)))) AS BIGINT) AS jaccard_bp
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE len(a.sg) > 0 AND len(b.sg) > 0
-        |  AND len(list_intersect(a.sg, b.sg)) * 10
-        |      >= $productionThreshold10 * len(list_distinct(list_concat(a.sg, b.sg)))
-        |ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
+      jaccardOracleSqlAt(productionThreshold10, sharedShinglePairsSql)) { (s, d) =>
       val docs = docsWithShingles(s, d, fan = true) // A/B r17: 2.0 -> 1.1 s
         .filter(size(col("shingles")) > 0)
         .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz"))
@@ -1976,15 +1982,15 @@ object LlmOps {
     // per-row flat map — embarrassingly parallel, and the groupBy(dim)
     // aggregate is map-side combined to 64 rows per task.
     Q("q241_embedding_dim_profile",
-      """WITH x AS (SELECT CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-        |e AS (SELECT i AS dim, emb[i] AS v
-        |      FROM x, (SELECT unnest(range(1, 65)) AS i))
+      s"""WITH ${IvfAnn.fullCorpusSql},
+        |p AS (SELECT i AS dim, emb[i] AS v
+        |      FROM e, (SELECT unnest(range(1, 65)) AS i))
         |SELECT CAST(dim AS BIGINT) AS dim, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(floor(v * 1000000) AS BIGINT)) AS BIGINT) AS sum_q6,
         |  CAST(min(CAST(floor(v * 1000000) AS BIGINT)) AS BIGINT) AS min_q6,
         |  CAST(max(CAST(floor(v * 1000000) AS BIGINT)) AS BIGINT) AS max_q6,
         |  CAST(sum(CAST(floor(v * 1000) AS BIGINT) * CAST(floor(v * 1000) AS BIGINT)) AS BIGINT) AS sum_sq_q3
-        |FROM e GROUP BY 1 ORDER BY dim""".stripMargin) { (s, d) =>
+        |FROM p GROUP BY 1 ORDER BY dim""".stripMargin) { (s, d) =>
       Tables.embeddings(s, d)
         .select(posexplode(col("embedding")).as(Seq("pos", "f")))
         .select((col("pos") + 1).cast("long").as("dim"),

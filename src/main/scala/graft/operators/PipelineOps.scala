@@ -314,7 +314,7 @@ object PipelineOps {
     * ULP-corrected integer isqrt weights, half-corpus budget, largest
     * remainder via the long-safe split-division identity, per-source
     * epoch factors. Shared by the batch query and the streaming
-    * [[graft.streaming.Streaming.MixturePlanner]] (one definition so
+    * [[graft.streaming.MixturePlanner]] (one definition so
     * the live plan can't drift from the certified batch one). */
   private[graft] def temperatureAllocation(t: DataFrame): DataFrame = {
     val s0 = floor(sqrt(col("tok").cast("double"))).cast("long")

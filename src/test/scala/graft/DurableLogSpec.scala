@@ -46,6 +46,7 @@ class DurableLogSpec extends AnyFunSuite {
     assert(log.read("head/2").contains("graft-head-v1\ngen=4\ntail=5,7\nend\n"),
       "the record bytes changed — logs written before would not restore")
     Seq("graft-head-v1\ngen=4\ntail=5,7\n", // torn: no sentinel
+      "graft-head-v1\ngen=1\ntail=", // torn mid-line
       "graft-head-v1\ngen=4\ntail=5,,7\nend\n",
       "graft-head-v1\ngen=99999999999999999999\ntail=\nend\n",
       "graft-head-v1\ngen=٤\ntail=\nend\n", // a non-ASCII digit
@@ -61,6 +62,9 @@ class DurableLogSpec extends AnyFunSuite {
     try {
       assert(log.readRecord(2L).isEmpty)
       assert(GraftFs.faultsFired.get() > 0, "the open fault never fired")
+      // the unreadable newest record is absence: discovery steps back one
+      assert(log.discover().contains(Frontier(1L, -1L, Nil)),
+        "discovery did not step back past the vanishing record")
     } finally GraftFs.disarm()
     assert(log.readRecord(2L).contains((4L, Seq(5L, 7L))))
   }
@@ -75,6 +79,9 @@ class DurableLogSpec extends AnyFunSuite {
     // across an even seq gap, where a parity rule would repeat a slot
     log.writeAnchor(2L)
     log.writeAnchor(4L)
+    assert(log.read("head/anchor0").contains("2") &&
+      log.read("head/anchor1").contains("4"),
+      "anchor slots did not alternate (slot 0, then slot 1)")
     (5L to 6L).foreach(n => log.writeRecord(n, n, Nil))
     log.writeAnchor(6L)
     assert(log.read("head/anchor0").contains("6") &&
@@ -220,6 +227,19 @@ class DurableLogSpec extends AnyFunSuite {
     assert(!log.adopt { evaluated = true; Some((9L, Nil)) })
     assert(!evaluated, "adopt evaluated the legacy walk over a record-bearing log")
     assert(log.frontier("gen", Some("tail")) == Frontier(1L, 5L, Seq(6L)))
+    // crash window: the anchor create dies after the record write. The
+    // record alone is discoverable (gallop from 1 needs no anchor until
+    // retention runs), and a re-run adopts nothing.
+    val torn = fresh("adopt_crash")
+    GraftFs.armFault("create", "anchor")
+    try {
+      intercept[java.io.FileNotFoundException](torn.adopt(Some((-1L, Seq(0L)))))
+      assert(GraftFs.faultsFired.get() == 1, "the anchor create fault never fired")
+    } finally GraftFs.disarm()
+    assert(torn.exists("head/1") && !torn.exists("head/anchor0"),
+      "the crash window left a different state than record-without-anchor")
+    assert(torn.discover().contains(Frontier(1L, -1L, Seq(0L))))
+    assert(!torn.adopt(Some((-1L, Seq(0L)))), "a re-run adopted over a discoverable record")
   }
 
   test("stream gate: re-delivered ids are no-ops; only the first delivery after a restore may not regress") {

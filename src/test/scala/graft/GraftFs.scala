@@ -188,6 +188,22 @@ object GraftFs {
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.hadoopConfiguration
       .set(s"fs.$scheme.impl", classOf[GraftFs].getName)
+
+  /** A copy of the log dir `src` (a local path, or graftfs:// over one)
+    * in a fresh temp dir named after `tag`, addressed on graftfs:// when
+    * `gfs`. The specs build a recurring log once and give every law
+    * that only restores from it, or damages it, its own copy. */
+  def copyLog(spark: org.apache.spark.sql.SparkSession, src: String,
+      tag: String, gfs: Boolean): String = {
+    import scala.jdk.CollectionConverters._
+    val from = java.nio.file.Paths.get(src.stripPrefix(s"$scheme://"))
+    val to = java.nio.file.Files.createTempDirectory(tag)
+    val walk = java.nio.file.Files.walk(from)
+    try walk.iterator().asScala.filter(_ != from).foreach { f =>
+      java.nio.file.Files.copy(f, to.resolve(from.relativize(f).toString))
+    } finally walk.close()
+    if (gfs) { register(spark); s"$scheme://$to" } else to.toString
+  }
 }
 
 class GraftFs extends RawLocalFileSystem {

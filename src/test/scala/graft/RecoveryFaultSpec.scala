@@ -2,7 +2,7 @@ package graft
 
 import graft.durable.Log
 import graft.durable.Log.Frontier
-import graft.streaming.Streaming
+import graft.streaming.{IvfMaintainer, IvfReplica, IvfStats, MixturePlanner}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    graftfs:// scheme proof could not reach (rename returning false
   *    mid-pairing, mkdirs returning false pre-record, create crashing
   *    mid-ensemble, delete throwing mid-retention);
-  *  - the replica-invalidation contract in code ([[Streaming.IvfReplica]]:
+  *  - the replica-invalidation contract in code ([[IvfReplica]]:
   *    owner compacts under a live replica → the replica's next search
   *    self-heals with parity; a second consecutive invalidation throws
   *    the runbook message);
@@ -51,25 +51,86 @@ class RecoveryFaultSpec extends AnyFunSuite {
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def p(base: String, s: String) = new org.apache.hadoop.fs.Path(s"$base/$s")
 
+  // ---- shared read-only fixtures, built once per spec -------------
+  // The corpus, its halves, the query set and every exact answer set a
+  // law compares against. Laws only read them; each writer under test
+  // still builds its own index and log.
+  private lazy val full = IvfAnn.fullCorpus(spark, dir)
+  private lazy val nTotal = full.count()
+  private lazy val cut = nTotal / 2
+  private lazy val queries = full.filter(col("vec_id") < 10)
+    .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
+
   /** top-5 answers for the first 10 vectors through (corpus, index). */
   private def answers(corpus: org.apache.spark.sql.DataFrame,
-      idx: IvfAnn.IvfIndex): Seq[(Long, Int, Long)] = {
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val queries = full.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
+      idx: IvfAnn.IvfIndex): Seq[(Long, Int, Long)] =
     IvfAnn.boundedTopK(corpus, queries, 5, Some(idx))._2
       .as[(Long, Int, Long)].collect().toSeq
-  }
 
-  private lazy val fullAnswers: Seq[(Long, Int, Long)] = {
-    val full = IvfAnn.fullCorpus(spark, dir)
+  private lazy val fullAnswers: Seq[(Long, Int, Long)] =
     answers(full, IvfAnn.buildIndex(full))
+
+  private val prefixAnswerSets =
+    scala.collection.mutable.Map.empty[Long, Seq[(Long, Int, Long)]]
+  /** The exact answers over the corpus prefix vec_id < `bound`, through
+    * a from-scratch index; one build per bound per spec. */
+  private def prefixAnswers(bound: Long): Seq[(Long, Int, Long)] =
+    prefixAnswerSets.getOrElseUpdate(bound, {
+      val c = full.filter(col("vec_id") < bound)
+      answers(c, IvfAnn.buildIndex(c))
+    })
+
+  private def localLog(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString
+  /** A fresh log dir on the graftfs:// scheme (fault injection, stale
+    * listings and copy+delete renames; see [[GraftFs]]). */
+  private def gfsLog(tag: String): String = {
+    GraftFs.register(spark)
+    "graftfs://" + java.nio.file.Files.createTempDirectory(tag)
+  }
+  /** A fresh owner seeded with the first half of the corpus. */
+  private def freshOwner(ppath: String, compactLogEvery: Int = 0,
+      rebuildWhen: IvfAnn.IvfIndex => Boolean = _ => false): IvfMaintainer =
+    new IvfMaintainer(full.filter(col("vec_id") < cut), rebuildWhen,
+      persistPath = Some(ppath), compactLogEvery = compactLogEvery)
+
+  private def copyLog(src: String, tag: String, gfs: Boolean): String =
+    GraftFs.copyLog(spark, src, tag, gfs)
+
+  /** A fresh owner logging to a new graftfs:// dir, after the raw
+    * batches `bounds(i) until bounds(i + 1)` (batch id i). */
+  private def fedOwner(tag: String, bounds: Seq[Long]): (String, IvfMaintainer) = {
+    val ppath = gfsLog(tag)
+    val m = freshOwner(ppath)
+    bounds.sliding(2).zipWithIndex.foreach { case (Seq(lo, hi), i) =>
+      m.applyBatch(rawBatch(lo, hi), i.toLong)
+    }
+    (ppath, m)
+  }
+  private def feedLog(tag: String, bounds: Seq[Long]): String = fedOwner(tag, bounds)._1
+  /** The second half fed as two batches, [cut, cut + k) and
+    * [cut + k, nTotal) with k = (nTotal - cut) / 2: built once per spec,
+    * and every law that only restores from (or damages) it gets a copy. */
+  private lazy val twoBatchLog: String = {
+    val k = (nTotal - cut) / 2
+    feedLog("graft_two_batch", Seq(cut, cut + k, nTotal))
+  }
+  /** The same two batches, then one compaction by the owner that fed
+    * them: generation 1 with no tail. Copied like [[twoBatchLog]]. */
+  private lazy val compactedTwoBatchLog: String = {
+    val k = (nTotal - cut) / 2
+    val (ppath, m) = fedOwner("graft_two_batch_cmp", Seq(cut, cut + k, nTotal))
+    val fs = fsFor(ppath)
+    // two appended records before any compaction; no anchor yet
+    assert(fs.exists(p(ppath, "head/1")) && fs.exists(p(ppath, "head/2")))
+    assert(m.compactLog()) // compact/1 complete, covered deltas gone
+    ppath
   }
 
+  private lazy val raw = spark.read.parquet(s"$dir/embeddings.parquet")
+    .select(col("vec_id"), col("embedding"))
   private def rawBatch(lo: Long, hi: Long) =
-    spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter(col("vec_id") >= lo && col("vec_id") < hi)
-      .select(col("vec_id"), col("embedding"))
+    raw.filter(col("vec_id") >= lo && col("vec_id") < hi)
 
   test("two-phase compactLog: a batch arriving mid-stage is neither lost nor blocked on O(corpus) work") {
     // The head-moved finalize branch: capture at head 1, stage, then
@@ -77,13 +138,9 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // frames from snapshot(1) ∪ delta(2) (never lb's snapshot alone),
     // retire only the covered deltas, and carry batch 2's data toward
     // the NEXT generation's gate.
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 5
-    val ppath = java.nio.file.Files.createTempDirectory("graft_midstage").toString
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val ppath = localLog("graft_midstage")
+    val m = freshOwner(ppath)
     m.applyBatch(rawBatch(cut, cut + k), 0L)
     m.applyBatch(rawBatch(cut + k, cut + 2 * k), 1L)
     var hookRan = false
@@ -95,10 +152,6 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(m.compactLog(), "compaction with data applied returned false")
     assert(hookRan, "the mid-stage seam never ran — the law is vacuous")
     val n3 = cut + 3 * k
-    def partialAnswers(bound: Long): Seq[(Long, Int, Long)] = {
-      val c = full.filter(col("vec_id") < bound)
-      answers(c, IvfAnn.buildIndex(c))
-    }
     val fs = fsFor(ppath)
     assert(fs.exists(p(ppath, "compact/1/_SUCCESS")),
       "the staged generation (head at capture) is missing")
@@ -111,7 +164,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(m.corpus.count() == n3,
       "head-moved finalize lost (or duplicated) the mid-stage batch")
     assert(m.index.assigned.select("vec_id").distinct().count() == n3)
-    assert(answers(m.corpus, m.index) == partialAnswers(n3),
+    assert(answers(m.corpus, m.index) == prefixAnswers(n3),
       "search through the head-moved-finalized index diverged")
     // the mid-stage batch counts toward the NEXT generation: another
     // compactLog does real work and retires it; a third is a no-op
@@ -126,7 +179,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // (O(tail) bulk appendToIndex) BEFORE the deletion passes retire
     // that ensemble, or every later search dies with
     // FileNotFoundException.
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == n3)
     m2.applyBatch(rawBatch(cut + 3 * k, cut + 4 * k), 3L)
     var hook2 = false
@@ -149,7 +202,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(m2.compactLog()) // retires the mid-stage delta 4
     assert(!m2.compactLog())
     // and the log restores to the full corpus with parity
-    val m3 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m3 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m3.corpus.count() == nTotal)
     assert(answers(m3.corpus, m3.index) == fullAnswers)
   }
@@ -159,14 +212,10 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // FRESH quantizer whose lineage finalize cannot cheaply re-root —
     // the generation still completes but the deletion passes defer to
     // the next compaction (disk, not correctness).
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 3
-    val ppath = java.nio.file.Files.createTempDirectory("graft_midrebuild").toString
+    val ppath = localLog("graft_midrebuild")
     @volatile var fire = false
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => fire, persistPath = Some(ppath))
+    val m = freshOwner(ppath, rebuildWhen = _ => fire)
     m.applyBatch(rawBatch(cut, cut + k), 0L)
     m.applyBatch(rawBatch(cut + k, cut + 2 * k), 1L)
     m.midStageHook = () => {
@@ -192,32 +241,24 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(!fs.exists(p(ppath, "delta/0")) && !fs.exists(p(ppath, "delta/1"))
       && !fs.exists(p(ppath, "delta/2")) && !fs.exists(p(ppath, "compact/1")),
       "the follow-up compaction did not subsume the deferred deletions")
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == nTotal)
     assert(answers(m2.corpus, m2.index) == fullAnswers)
   }
 
   test("restore seeds only the no-op gate, not the inline cadence (ADVICE r13)") {
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 4
-    def buildLog(): String = {
-      val ppath = java.nio.file.Files.createTempDirectory("graft_seedsplit").toString
-      // cadence OFF for the original run so three uncompacted tail
-      // deltas accumulate
-      val m0 = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-        rebuildWhen = _ => false, persistPath = Some(ppath))
-      (0 to 2).foreach(i => m0.applyBatch(rawBatch(cut + i * k, cut + (i + 1) * k), i.toLong))
-      ppath
-    }
+    // cadence OFF for the original run so three uncompacted tail deltas
+    // accumulate; each leg restores its own copy of that log
+    val threeBatchLog = feedLog("graft_seedsplit", (0 to 3).map(i => cut + i * k))
+    def buildLog(): String = copyLog(threeBatchLog, "graft_seedsplit", gfs = false)
     // Leg 1: an owner restore with compactLogEvery=2 over a 3-delta
     // tail must NOT compact inside the FIRST post-restore batch (the
     // r13 seeding fed the cadence counter too, so it did) — the
     // cadence counts post-restore batches only.
     val ppathA = buildLog()
     val fsA = fsFor(ppathA)
-    val mA = Streaming.IvfMaintainer.restore(spark, ppathA, _ => false,
+    val mA = IvfMaintainer.restore(spark, ppathA, _ => false,
       compactLogEvery = 2)
     mA.applyBatch(rawBatch(cut + 3 * k, cut + 3 * k + k / 2), 3L)
     assert(!fsA.exists(p(ppathA, "compact/3")),
@@ -235,7 +276,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // compactLog directly after restore (zero post-restore batches)
     // still does real durable work at the uncompacted head.
     val ppathB = buildLog()
-    val mB = Streaming.IvfMaintainer.restore(spark, ppathB, _ => false)
+    val mB = IvfMaintainer.restore(spark, ppathB, _ => false)
     assert(mB.compactLog(),
       "a post-restore compaction at an uncompacted head was a no-op — " +
         "the tail deltas never seeded the data gate")
@@ -244,14 +285,11 @@ class RecoveryFaultSpec extends AnyFunSuite {
   }
 
   test("injected faults cross the pairing guard arms: mkdirs false, rename false — nothing recorded, retry safe") {
-    GraftFs.register(spark)
     implicit val sqlCtx = spark.sqlContext
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_fault_pair")
-    val ckpt = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_fault_ck") + "/ck"
+    val ppath = gfsLog("graft_fault_pair")
+    val ckpt = gfsLog("graft_fault_ck") + "/ck"
     val mem = MemoryStream[(Long, String, String)]
-    val m = new Streaming.MixturePlanner(spark, Some(ppath))
+    val m = new MixturePlanner(spark, Some(ppath))
     // arm 1: the pre-record mkdirs of the checkpoint dir returns false
     GraftFs.armFault("mkdirs", "/ck")
     try {
@@ -286,14 +324,8 @@ class RecoveryFaultSpec extends AnyFunSuite {
   }
 
   test("injected fault: create crashing mid-ensemble leaves an adoptable-free generation; the next compaction repairs it") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_fault_ens")
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val ppath = gfsLog("graft_fault_ens")
+    val m = freshOwner(ppath)
     m.applyBatch(rawBatch(cut, nTotal), 0L)
     // the snapshot write (compact/) must land; the FIRST create under
     // the quantizer ensemble crashes — a mid-ensemble death
@@ -309,7 +341,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
       "the crashed ensemble carries a completion marker")
     // restore falls back to re-learning from the snapshot (correct,
     // slower) — and does NOT trust the partial ensemble
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == nTotal)
     assert(answers(m2.corpus, m2.index) == fullAnswers,
       "search through the fallback re-learned index diverged")
@@ -318,7 +350,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(m2.compactLog(), "the repair compaction never ran")
     assert(fs.exists(p(ppath, "quantizer/0/_SUCCESS")),
       "the repair compaction did not complete the ensemble")
-    val m3 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m3 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m3.rebuilds == 0
       && m3.index.cmeta.collect().map(_.toString).sorted.toSeq
         == m2.index.cmeta.collect().map(_.toString).sorted.toSeq,
@@ -326,15 +358,9 @@ class RecoveryFaultSpec extends AnyFunSuite {
   }
 
   test("injected fault: delete throwing mid-retention leaves a retryable, restorable log") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 2
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_fault_del")
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val ppath = gfsLog("graft_fault_del")
+    val m = freshOwner(ppath)
     m.applyBatch(rawBatch(cut, cut + k), 0L)
     m.applyBatch(rawBatch(cut + k, nTotal), 1L)
     GraftFs.armFault("delete", "delta/0")
@@ -350,7 +376,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
       "a thrown retention delete corrupted the live corpus")
     assert(answers(m.corpus, m.index) == fullAnswers)
     // a restore RIGHT NOW is correct — stale deltas are skipped by id
-    val mMid = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val mMid = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(mMid.corpus.count() == nTotal,
       "restore double-applied a stale (covered) delta")
     // the retry finishes the retention idempotently
@@ -361,21 +387,13 @@ class RecoveryFaultSpec extends AnyFunSuite {
   }
 
   test("IvfReplica: the owner's compaction invalidates a live replica; its next search self-heals with parity (VERDICT r13 #3)") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 3
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_replica")
-    val owner = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val ppath = gfsLog("graft_replica")
+    val owner = freshOwner(ppath)
     owner.applyBatch(rawBatch(cut, cut + k), 0L)
     owner.compactLog()
     // replica adopts generation 0 (snapshot + logged quantizer)
-    val replica = new Streaming.IvfReplica(spark, ppath.toString)
-    val queries = full.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
+    val replica = new IvfReplica(spark, ppath.toString)
     val preAnswers = replica.searchTopK(queries, 5)
       .as[(Long, Int, Long)].collect().toSeq
     assert(preAnswers.nonEmpty && replica.reRestores == 0)
@@ -411,17 +429,11 @@ class RecoveryFaultSpec extends AnyFunSuite {
   }
 
   test("injected fault: a crashed seed write never becomes a truncated seed — construction throws, restore refuses, a fresh run recovers the path") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_fault_seed")
+    val ppath = gfsLog("graft_fault_seed")
     GraftFs.armFault("create", "graft_fault_seed", sticky = false)
     try {
       intercept[Throwable] {
-        new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-          rebuildWhen = _ => false, persistPath = Some(ppath))
+        freshOwner(ppath)
       }
       assert(GraftFs.faultsFired.get() == 1, "the seed create fault never fired")
     } finally GraftFs.disarm()
@@ -429,25 +441,22 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // (reading it would silently rebuild from a TRUNCATED corpus)
     assert(!fsFor(ppath).exists(p(ppath, "seed/_SUCCESS")))
     val ex = intercept[IllegalArgumentException] {
-      Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+      IvfMaintainer.restore(spark, ppath, _ => false)
     }
     assert(ex.getMessage.contains("no _SUCCESS"))
     // and the fresh-construction guard keys on the COMPLETION marker,
     // so a retry at the same path is admitted and overwrites cleanly
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val m = freshOwner(ppath)
     m.applyBatch(rawBatch(cut, nTotal), 0L)
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == nTotal)
     assert(answers(m2.corpus, m2.index) == fullAnswers)
   }
 
   test("injected fault: a crashed counts-snapshot write leaves the planner re-deliverable — no double count (round-14 ordering fix)") {
-    GraftFs.register(spark)
     implicit val sqlCtx = spark.sqlContext
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_fault_counts")
-    val m = new Streaming.MixturePlanner(spark, Some(ppath))
+    val ppath = gfsLog("graft_fault_counts")
+    val m = new MixturePlanner(spark, Some(ppath))
     m.applyBatch(Seq((1L, "a b c", "s")).toDF("doc_id", "text", "source"), 0L)
     assert(m.counts.agg(sum(col("tok"))).head().getLong(0) == 3L)
     GraftFs.armFault("create", "counts/1")
@@ -467,7 +476,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(m.counts.agg(sum(col("tok"))).head().getLong(0) == 5L,
       "re-delivery after a crashed persist double-counted (or lost) the batch")
     // and the durable log agrees
-    val m2 = Streaming.MixturePlanner.restore(spark, ppath.toString)
+    val m2 = MixturePlanner.restore(spark, ppath.toString)
     assert(m2.counts.agg(sum(col("tok"))).head().getLong(0) == 5L)
   }
 
@@ -487,26 +496,15 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // CONSTRUCTED), and this soak guards the exception/liveness
     // surface around it. A deterministic final invalidation pins the
     // heal non-vacuity the race itself can't guarantee.
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 5
     // generation after batch i (i = 0..3) holds the prefix < bounds(i)
     val bounds = (0 to 3).map(i => cut + (i + 1) * k)
-    val expected: Set[Seq[(Long, Int, Long)]] = bounds.map { b =>
-      val c = full.filter(col("vec_id") < b)
-      answers(c, IvfAnn.buildIndex(c))
-    }.toSet
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_replica_soak")
-    val owner = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val expected: Set[Seq[(Long, Int, Long)]] = bounds.map(prefixAnswers).toSet
+    val ppath = gfsLog("graft_replica_soak")
+    val owner = freshOwner(ppath)
     owner.applyBatch(rawBatch(cut, bounds(0)), 0L)
     owner.compactLog()
-    val replica = new Streaming.IvfReplica(spark, ppath.toString)
-    val queries = full.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
+    val replica = new IvfReplica(spark, ppath.toString)
     val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     @volatile var ownerDone = false
@@ -569,18 +567,13 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // The old order set corpusRef BEFORE that evaluation, so the
     // at-least-once re-delivery of the same batchId re-appended the
     // batch into the already-merged corpus and duplicated vec_ids.
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
-    val ppath = java.nio.file.Files.createTempDirectory("graft_midappend").toString
+    val ppath = localLog("graft_midappend")
     @volatile var boom = false
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => {
-        if (boom) { boom = false
-          throw new RuntimeException("injected mid-append failure") }
-        false
-      },
-      persistPath = Some(ppath))
+    val m = freshOwner(ppath, rebuildWhen = _ => {
+      if (boom) { boom = false
+        throw new RuntimeException("injected mid-append failure") }
+      false
+    })
     boom = true
     intercept[RuntimeException] { m.applyBatch(rawBatch(cut, nTotal), 0L) }
     // the failed append left corpus, index and the idempotence guard
@@ -600,7 +593,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(answers(m.corpus, m.index) == fullAnswers)
     // and the durable log agrees (the delta write is keyed by batchId,
     // so the re-delivery overwrote the same dir — idempotent)
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == nTotal)
     assert(answers(m2.corpus, m2.index) == fullAnswers)
   }
@@ -611,14 +604,9 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // maintenance pass is mid-stage must return promptly (tryLock-and-
     // skip), not wait out the corpus-proportional staging wall — and
     // the skipped batch's data must reach a later generation.
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 4
-    val ppath = java.nio.file.Files.createTempDirectory("graft_cadenceskip").toString
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath),
-      compactLogEvery = 2)
+    val ppath = localLog("graft_cadenceskip")
+    val m = freshOwner(ppath, compactLogEvery = 2)
     m.applyBatch(rawBatch(cut, cut + k), 0L) // cadence counter 1 of 2
     val entered = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
@@ -668,7 +656,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(!fs.exists(p(ppath, "delta/1")),
       "the skipped batch's delta was never retired — its data missed " +
         "the follow-up generation")
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == nTotal)
     assert(answers(m2.corpus, m2.index) == fullAnswers)
   }
@@ -682,14 +670,9 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // mid-stage of the outer one (capturing the moved head, staging a
     // second generation, and retiring the dirs the outer pass is still
     // rooted on). This law IS that violating hook.
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 2
-    val ppath = java.nio.file.Files.createTempDirectory("graft_reentrant").toString
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath),
-      compactLogEvery = 2)
+    val ppath = localLog("graft_reentrant")
+    val m = freshOwner(ppath, compactLogEvery = 2)
     m.applyBatch(rawBatch(cut, cut + k), 0L) // cadence counter 1 of 2
     val fs = fsFor(ppath)
     @volatile var hookRan = false
@@ -715,20 +698,14 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(fs.exists(p(ppath, "compact/0/_SUCCESS")))
     assert(m.corpus.count() == nTotal)
     assert(m.compactLog(), "the mid-stage batch never re-armed the gate")
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == nTotal)
     assert(answers(m2.corpus, m2.index) == fullAnswers)
   }
 
   test("IvfReplica construction self-heals a mid-construction invalidation (ADVICE r14)") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_replica_ctor")
-    val owner = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val ppath = gfsLog("graft_replica_ctor")
+    val owner = freshOwner(ppath)
     owner.applyBatch(rawBatch(cut, nTotal), 0L)
     assert(owner.compactLog())
     // the first read of the adopted generation dies file-gone — the
@@ -736,27 +713,22 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // signature), not throw where a search heal would have recovered
     GraftFs.armFault("open", "compact/0")
     val replica =
-      try new Streaming.IvfReplica(spark, ppath.toString)
+      try new IvfReplica(spark, ppath.toString)
       finally GraftFs.disarm()
     assert(GraftFs.faultsFired.get() == 1,
       "the open fault never fired — the law is vacuous")
     import spark.implicits._
-    val queries = full.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
     val got = replica.searchTopK(queries, 5).as[(Long, Int, Long)].collect().toSeq
     assert(got == fullAnswers,
       "the retried construction adopted a divergent generation")
   }
 
   test("object-store rename (copy+delete): a mid-rename crash leaves a COMPLETE pairing record; the retry verifies it and mismatches still throw") {
-    GraftFs.register(spark)
     implicit val sqlCtx = spark.sqlContext
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_oss_pair")
-    val ckpt = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_oss_ck") + "/ck"
+    val ppath = gfsLog("graft_oss_pair")
+    val ckpt = gfsLog("graft_oss_ck") + "/ck"
     val mem = MemoryStream[(Long, String, String)]
-    val m = new Streaming.MixturePlanner(spark, Some(ppath))
+    val m = new MixturePlanner(spark, Some(ppath))
     val fs = fsFor(ppath)
     GraftFs.renameAsCopyDelete = true
     GraftFs.renameCrashAfterCopy = true
@@ -794,50 +766,42 @@ class RecoveryFaultSpec extends AnyFunSuite {
     }
     // the leftover .tmp is inert debris: the restored planner reads the
     // completed log, not the temp record
-    val m2 = Streaming.MixturePlanner.restore(spark, ppath.toString)
+    val m2 = MixturePlanner.restore(spark, ppath.toString)
     assert(m2.counts.agg(sum(col("tok"))).head().getLong(0) == 3L)
   }
 
   test("IvfStats: owner and replica counters move exactly as the replica-fleet scenario documents — one own heal per invalidating generation, adoption counted separately (VERDICT r15 #4)") {
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 2
-    val ppath = java.nio.file.Files
-      .createTempDirectory("graft_stats").toString
-    val owner = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
-    assert(owner.stats == Streaming.IvfStats(0, -1, 0, 0, 0, 0))
+    val ppath = localLog("graft_stats")
+    val owner = freshOwner(ppath)
+    assert(owner.stats == IvfStats(0, -1, 0, 0, 0, 0))
     owner.applyBatch(rawBatch(cut, cut + k), 0L)
     assert(owner.compactLog())
-    assert(owner.stats == Streaming.IvfStats(1, 0, 0, 0, 0, 0),
+    assert(owner.stats == IvfStats(1, 0, 0, 0, 0, 0),
       "the owner's compaction pass never moved (compactions, generations)")
-    val replica = new Streaming.IvfReplica(spark, ppath)
-    assert(replica.stats == Streaming.IvfStats(0, 0, 0, 0, 0, 0),
+    val replica = new IvfReplica(spark, ppath)
+    assert(replica.stats == IvfStats(0, 0, 0, 0, 0, 0),
       "construction is a restore, not a heal — no counter may move")
     import spark.implicits._
-    val queries = full.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("qe"),
-        col("nrm").as("qn"))
     replica.searchTopK(queries, 5).collect()
-    assert(replica.stats == Streaming.IvfStats(0, 0, 0, 0, 0, 1))
+    assert(replica.stats == IvfStats(0, 0, 0, 0, 0, 1))
     // the owner's next generation retires the files the replica serves
     owner.applyBatch(rawBatch(cut + k, nTotal), 1L)
     assert(owner.compactLog())
-    assert(owner.stats == Streaming.IvfStats(2, 1, 0, 0, 0, 0))
+    assert(owner.stats == IvfStats(2, 1, 0, 0, 0, 0))
     // one invalidating generation ⇒ exactly one OWN heal, zero
     // adoptions (no racing search to adopt from), and the replica's
     // served generation catches up to the owner's
     val got = replica.searchTopK(queries, 5).as[(Long, Int, Long)]
       .collect().toSeq
     assert(got == fullAnswers)
-    assert(replica.stats == Streaming.IvfStats(0, 1, 1, 1, 0, 2),
+    assert(replica.stats == IvfStats(0, 1, 1, 1, 0, 2),
       s"post-invalidation stats ${replica.stats}: expected one own " +
         "heal for one invalidating generation")
     // a healthy follow-up search heals nothing — reRestores is the
     // alarm counter, and it must NOT climb without an invalidation
     replica.searchTopK(queries, 5).collect()
-    assert(replica.stats == Streaming.IvfStats(0, 1, 1, 1, 0, 3))
+    assert(replica.stats == IvfStats(0, 1, 1, 1, 0, 3))
     // the runbook alarm arithmetic is now API: replica.stats.reRestores
     // (1) vs owner.stats.compactions since the replica attached (1
     // invalidating of the 2 total) — a ratio above one own-restore per
@@ -848,12 +812,12 @@ class RecoveryFaultSpec extends AnyFunSuite {
     val ownerGot = owner.searchTopK(queries, 5).as[(Long, Int, Long)]
       .collect().toSeq
     assert(ownerGot == fullAnswers)
-    assert(owner.stats == Streaming.IvfStats(2, 1, 0, 0, 0, 1),
+    assert(owner.stats == IvfStats(2, 1, 0, 0, 0, 1),
       s"owner stats ${owner.stats}: the served search never counted")
     // ---- the lag alarm is ONE call (VERDICT r16 #5) ----------------
     assert(replica.lagBehind(owner) == 0L,
       "a healed replica reads as lagging")
-    val straggler = new Streaming.IvfReplica(spark, ppath) // attaches at gen 1
+    val straggler = new IvfReplica(spark, ppath) // attaches at gen 1
     owner.applyBatch(rawBatch(0, 1), 2L)
     assert(owner.compactLog()) // gen 2 — retires the files gen 1 served
     assert(straggler.lagBehind(owner) == 1L,
@@ -864,14 +828,11 @@ class RecoveryFaultSpec extends AnyFunSuite {
   }
 
   test("object-store rename (copy+delete): an injected fault on the DELETE half is observable and leaves the same retryable both-paths state (ADVICE r15)") {
-    GraftFs.register(spark)
     implicit val sqlCtx = spark.sqlContext
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_oss_delhalf")
-    val ckpt = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_oss_delhalf_ck") + "/ck"
+    val ppath = gfsLog("graft_oss_delhalf")
+    val ckpt = gfsLog("graft_oss_delhalf_ck") + "/ck"
     val mem = MemoryStream[(Long, String, String)]
-    val m = new Streaming.MixturePlanner(spark, Some(ppath))
+    val m = new MixturePlanner(spark, Some(ppath))
     val fs = fsFor(ppath)
     GraftFs.renameAsCopyDelete = true
     // the delete half of the emulated rename used to bypass the
@@ -902,15 +863,9 @@ class RecoveryFaultSpec extends AnyFunSuite {
   }
 
   test("stale LIST during retention: invisible dirs are skipped — disk debris, never data loss; the next pass retires them once visible") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 3
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_stale_ret")
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val ppath = gfsLog("graft_stale_ret")
+    val m = freshOwner(ppath)
     m.applyBatch(rawBatch(cut, cut + k), 0L)
     m.applyBatch(rawBatch(cut + k, cut + 2 * k), 1L)
     val fs = fsFor(ppath)
@@ -929,7 +884,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     } finally GraftFs.resetStaleListing()
     // restore is exact despite the debris: stale deltas ≤ the
     // generation are skipped by id, never re-applied
-    val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val r = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(r.corpus.count() == cut + 2 * k,
       "a stale (covered) delta was re-applied on restore")
     // the next compaction subsumes the debris once the listing catches up
@@ -937,28 +892,18 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(m.compactLog())
     assert(!fs.exists(p(ppath, "delta/0")),
       "the caught-up retention pass never retired the debris")
-    val r2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val r2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(r2.corpus.count() == nTotal)
     assert(answers(r2.corpus, r2.index) == fullAnswers)
   }
 
   test("head records close the stale-LIST restore truncation (VERDICT r15 #1): restore is EXACT with the newest delta or generation invisible to LIST") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
-    val k = (nTotal - cut) / 2
     // ---- leg A: the newest DELTA invisible at restore time ----------
     // Round 15 PINNED this as silent truncation to cut + k (frontier
     // discovery walked listStatus); the head record now NAMES delta/1,
     // and discovery probes it with strongly-consistent GETs — the
     // restore must be byte-equal to a caught-up one.
-    val pA = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_stale_delta")
-    val mA = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(pA))
-    mA.applyBatch(rawBatch(cut, cut + k), 0L)
-    mA.applyBatch(rawBatch(cut + k, nTotal), 1L)
+    val pA = copyLog(twoBatchLog, "graft_stale_delta", gfs = true)
     // Suffix-anchored staleness: delta/1's ENTRY is invisible in the
     // delta dir's listing (the frontier-metadata surface the log
     // protocol owns — the r15 pinned truncation), while the part
@@ -971,7 +916,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
       // does truncate inside this exact window
       assert(Log(spark, pA).completed("delta") == Seq(0L),
         "the staleness window hid nothing — the law is vacuous")
-      val r = Streaming.IvfMaintainer.restore(spark, pA, _ => false)
+      val r = IvfMaintainer.restore(spark, pA, _ => false)
       assert(r.corpus.count() == nTotal,
         "restore truncated under a stale delta listing — frontier " +
           "discovery regressed to the LIST walk")
@@ -980,46 +925,29 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // ---- leg B: the newest GENERATION invisible after its covered ---
     // deltas were retired — round 15's truncation-to-the-seed leg; the
     // compaction's head record names gen 1 directly.
-    val pB = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_stale_gen")
-    val mB = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(pB))
-    mB.applyBatch(rawBatch(cut, cut + k), 0L)
-    mB.applyBatch(rawBatch(cut + k, nTotal), 1L)
-    assert(mB.compactLog()) // compact/1 complete, covered deltas gone
+    val pB = copyLog(compactedTwoBatchLog, "graft_stale_gen", gfs = true)
     GraftFs.markStaleListing("compact/1$")
     try {
       assert(Log(spark, pB).completed("compact").isEmpty,
         "the staleness window hid nothing — the law is vacuous")
-      val r = Streaming.IvfMaintainer.restore(spark, pB, _ => false)
+      val r = IvfMaintainer.restore(spark, pB, _ => false)
       assert(r.corpus.count() == nTotal,
         "restore fell back to the seed under a stale generation " +
           "listing — the head record was not consulted")
       assert(answers(r.corpus, r.index) == fullAnswers)
     } finally GraftFs.resetStaleListing()
     // a caught-up listing agrees, and resumed appends continue the log
-    val okB = Streaming.IvfMaintainer.restore(spark, pB, _ => false)
+    val okB = IvfMaintainer.restore(spark, pB, _ => false)
     assert(okB.corpus.count() == nTotal)
     assert(answers(okB.corpus, okB.index) == fullAnswers)
   }
 
   test("head records: retention keeps only the newest generation's records behind an anchor; a LEGACY log (no head dir) still restores via the LIST walk") {
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
-    val k = (nTotal - cut) / 2
-    val ppath = java.nio.file.Files
-      .createTempDirectory("graft_head_ret").toString
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
-    m.applyBatch(rawBatch(cut, cut + k), 0L)
-    m.applyBatch(rawBatch(cut + k, nTotal), 1L)
+    val ppath = copyLog(compactedTwoBatchLog, "graft_head_ret", gfs = false)
     val fs = fsFor(ppath)
-    // two appended records before any compaction; no anchor yet
-    assert(fs.exists(p(ppath, "head/1")) && fs.exists(p(ppath, "head/2")))
-    assert(m.compactLog())
-    // the compaction wrote record 3 (gen=1, empty tail), advanced its
-    // anchor slot, and retired records 1–2
+    // the shared log's two appends wrote records 1–2 (asserted in its
+    // builder); its compaction wrote record 3 (gen=1, empty tail),
+    // advanced its anchor slot, and retired records 1–2
     assert(fs.exists(p(ppath, "head/3")))
     assert(!fs.exists(p(ppath, "head/1")) && !fs.exists(p(ppath, "head/2")),
       "superseded head records survived the retention pass")
@@ -1027,7 +955,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
       "the compaction never advanced its anchor slot (first advance → slot 0)")
     assert(Log(spark, ppath).discover()
       .contains(Frontier(3L, 1L, Seq.empty[Long])))
-    val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val r = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(r.corpus.count() == nTotal)
     assert(answers(r.corpus, r.index) == fullAnswers)
     // ---- legacy fallback: a log written before head records ---------
@@ -1035,7 +963,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // LIST walk — which is exactly why the runbook keeps the
     // strong-LIST note for legacy logs only
     fs.delete(p(ppath, "head"), true)
-    val legacy = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val legacy = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(legacy.corpus.count() == nTotal)
     assert(answers(legacy.corpus, legacy.index) == fullAnswers)
     // and the restored legacy maintainer RE-SEEDS the head log: its
@@ -1043,41 +971,23 @@ class RecoveryFaultSpec extends AnyFunSuite {
     legacy.applyBatch(rawBatch(0, 1), 2L)
     assert(Log(spark, ppath).discover()
       .contains(Frontier(1L, 1L, Seq(2L))))
-    // anchor-slot ALTERNATION (review r16 pass 1: parity-chosen slots
-    // could rewrite one slot twice in a row, voiding the torn-rewrite
-    // invariant — each advance must land OPPOSITE the best slot):
-    // two further compactions land in slot 0 then slot 1, each naming
-    // its own record, and discovery tracks the head throughout
+    // two further compactions each write and anchor their own record
+    // (the slots' alternation is DurableLogSpec's anchor law), and
+    // discovery tracks the head throughout
     assert(legacy.compactLog())
     assert(Log(spark, ppath).readRecord(2L).exists(_._1 == 2L))
     assert(Log(spark, ppath).discover()
       .contains(Frontier(2L, 2L, Seq.empty[Long])))
     legacy.applyBatch(rawBatch(1, 2), 3L)
     assert(legacy.compactLog())
-    val anchors = Seq(0, 1).map(i => {
-      val ap = p(ppath, s"head/anchor$i")
-      val in = fs.open(ap)
-      val buf = new Array[Byte](fs.getFileStatus(ap).getLen.toInt)
-      try in.readFully(0L, buf) finally in.close()
-      new String(buf, "UTF-8").trim.toLong
-    })
-    assert(anchors == Seq(2L, 4L),
-      s"anchor slots $anchors: expected strict alternation (slot 0 = " +
-        "first post-reseed compaction's record 2, slot 1 = the next's 4)")
     assert(Log(spark, ppath).discover()
       .contains(Frontier(4L, 3L, Seq.empty[Long])))
   }
 
   test("head records: a crash DURING the record write is exactly-once under re-delivery, and a restore inside the window resumes one batch back") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 2
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_head_crash")
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val ppath = gfsLog("graft_head_crash")
+    val m = freshOwner(ppath)
     m.applyBatch(rawBatch(cut, cut + k), 0L)
     // batch 1's delta write completes; its head-record create dies —
     // the crash window between the two failable writes
@@ -1093,7 +1003,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // a restore INSIDE the window sees the frontier one batch back —
     // delta/1 is durable but unnamed, exactly the shape of a delta
     // whose _SUCCESS never landed: the stream checkpoint re-delivers
-    val mid = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val mid = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(mid.corpus.count() == cut + k,
       "restore adopted an unnamed delta — or a torn record was parsed")
     mid.applyBatch(rawBatch(cut + k, nTotal), 1L) // the re-delivery
@@ -1106,15 +1016,9 @@ class RecoveryFaultSpec extends AnyFunSuite {
   }
 
   test("head records: a crash during the COMPACTION's record write leaves the pass retryable at the same head; the retry completes the generation") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 2
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_head_cpcrash")
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val ppath = gfsLog("graft_head_cpcrash")
+    val m = freshOwner(ppath)
     m.applyBatch(rawBatch(cut, cut + k), 0L)
     m.applyBatch(rawBatch(cut + k, nTotal), 1L)
     // records 1-2 are the appends'; the compaction's is seq 3 — its
@@ -1131,7 +1035,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // inside the window is exact via the old generation + tail
     assert(Log(spark, ppath.toString).discover()
       .contains(Frontier(2L, -1L, Seq(0L, 1L))))
-    val mid = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val mid = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(mid.corpus.count() == nTotal)
     // the gate never advanced, so the retry is NOT a no-op: it reuses
     // the completed snapshot (never rewritten in place), writes record
@@ -1139,7 +1043,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     assert(m.compactLog(), "the retry treated the crashed pass as done")
     assert(Log(spark, ppath.toString).discover()
       .contains(Frontier(3L, 1L, Seq.empty[Long])))
-    val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val r = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(r.corpus.count() == nTotal)
     assert(answers(r.corpus, r.index) == fullAnswers)
   }
@@ -1151,53 +1055,35 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // copy+delete. The runbook's rename-independence claim for the
     // persist log gets the same end-to-end law the curation run log
     // got in r15.
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 2
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_head_oss")
+    val ppath = gfsLog("graft_head_oss")
     GraftFs.renameAsCopyDelete = true
     try {
-      val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-        rebuildWhen = _ => false, persistPath = Some(ppath))
+      val m = freshOwner(ppath)
       m.applyBatch(rawBatch(cut, cut + k), 0L)
       assert(m.compactLog())
       m.applyBatch(rawBatch(cut + k, nTotal), 1L)
       assert(Log(spark, ppath.toString).discover()
         .contains(Frontier(3L, 0L, Seq(1L))))
-      val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+      val r = IvfMaintainer.restore(spark, ppath, _ => false)
       assert(r.corpus.count() == nTotal)
       assert(answers(r.corpus, r.index) == fullAnswers)
     } finally GraftFs.renameAsCopyDelete = false
   }
 
   test("head records: a TORN newest record (partial write, no sentinel) steps discovery back to the previous complete record") {
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
-    val k = (nTotal - cut) / 2
-    val ppath = java.nio.file.Files
-      .createTempDirectory("graft_head_torn").toString
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
-    m.applyBatch(rawBatch(cut, cut + k), 0L)
-    m.applyBatch(rawBatch(cut + k, nTotal), 1L)
+    val ppath = copyLog(twoBatchLog, "graft_head_torn", gfs = false)
     val fs = fsFor(ppath)
     // tear a PHANTOM newest record: seq 3 exists but its write died
     // mid-content (no `end` sentinel) — the local-filesystem shape of
     // the crash the exactly-once law injects at create time
+    // (DurableLogSpec pins that such a record reads as torn and that
+    // discovery steps back over it)
     val out = fs.create(p(ppath, "head/3"), true)
     out.write("graft-head-v1\ngen=1\ntail=".getBytes("UTF-8")); out.close()
-    assert(Log(spark, ppath).readRecord(3L).isEmpty,
-      "a sentinel-less record parsed as complete — the torn-write " +
-        "gate is broken")
-    // discovery steps back to record 2, whose frontier is the full
-    // corpus — the torn record named nothing that isn't re-deliverable
-    assert(Log(spark, ppath).discover()
-      .contains(Frontier(2L, -1L, Seq(0L, 1L))))
-    val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    // restore resumes from record 2, whose frontier is the full corpus —
+    // the torn record named nothing that isn't re-deliverable
+    val r = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(r.corpus.count() == nTotal)
     assert(answers(r.corpus, r.index) == fullAnswers)
   }
@@ -1208,14 +1094,12 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // the hidden newest snapshot's batch is already committed to the
     // stream checkpoint, so it never re-delivers and the counts are
     // silently short forever.
-    GraftFs.register(spark)
     import spark.implicits._
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_mix_stale")
-    val m = new Streaming.MixturePlanner(spark, Some(ppath))
+    val ppath = gfsLog("graft_mix_stale")
+    val m = new MixturePlanner(spark, Some(ppath))
     m.applyBatch(Seq((1L, "a b", "s")).toDF("doc_id", "text", "source"), 0L)
     m.applyBatch(Seq((2L, "c d e", "s")).toDF("doc_id", "text", "source"), 1L)
-    def tok(p: Streaming.MixturePlanner) =
+    def tok(p: MixturePlanner) =
       p.counts.agg(sum(col("tok"))).head().getLong(0)
     assert(tok(m) == 5L)
     GraftFs.markStaleListing("counts/1$")
@@ -1224,7 +1108,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
       // snapshot back inside this exact window
       assert(Log(spark, ppath).completed("counts") == Seq(0L),
         "the staleness window hid nothing — the law is vacuous")
-      val r = Streaming.MixturePlanner.restore(spark, ppath.toString)
+      val r = MixturePlanner.restore(spark, ppath.toString)
       assert(tok(r) == 5L,
         "restore resumed from the older snapshot under a stale " +
           "listing — the head record was not consulted")
@@ -1233,14 +1117,14 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // the LIST walk, and the restored planner re-seeds the head log
     val fs = fsFor(ppath)
     fs.delete(p(ppath, "head"), true)
-    val legacy = Streaming.MixturePlanner.restore(spark, ppath.toString)
+    val legacy = MixturePlanner.restore(spark, ppath.toString)
     assert(tok(legacy) == 5L)
     legacy.applyBatch(
       Seq((3L, "f", "s")).toDF("doc_id", "text", "source"), 2L)
     assert(tok(legacy) == 6L)
     assert(Log(spark, ppath.toString).discover()
       .contains(Frontier(1L, 2L, Seq.empty[Long])))
-    val r2 = Streaming.MixturePlanner.restore(spark, ppath.toString)
+    val r2 = MixturePlanner.restore(spark, ppath.toString)
     assert(tok(r2) == 6L)
     // the fresh-construction guard refuses a used log even when a
     // stale LIST hides every snapshot — the head-record probe (GETs)
@@ -1251,7 +1135,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
       assert(Log(spark, ppath).completed("counts").isEmpty,
         "the staleness window hid nothing — the guard leg is vacuous")
       val ex = intercept[IllegalArgumentException] {
-        new Streaming.MixturePlanner(spark, Some(ppath))
+        new MixturePlanner(spark, Some(ppath))
       }
       assert(ex.getMessage.contains("already holds counts snapshots"))
     } finally GraftFs.resetStaleListing()
@@ -1259,19 +1143,19 @@ class RecoveryFaultSpec extends AnyFunSuite {
 
   test("MixturePlanner cleanup lock: an exclusive-create lock fences concurrent cleaners; an orphaned lock fails closed (ADVICE r13)") {
     implicit val sqlCtx = spark.sqlContext
-    val ppath = java.nio.file.Files.createTempDirectory("graft_cleanlock").toString
-    val ckptA = java.nio.file.Files.createTempDirectory("graft_cleanlock_ck").toString
+    val ppath = localLog("graft_cleanlock")
+    val ckptA = localLog("graft_cleanlock_ck")
     val fs = fsFor(ppath)
     // run 1 records its pairing, never snapshots, "crashes"
     val mem = MemoryStream[(Long, String, String)]
-    val m1 = new Streaming.MixturePlanner(spark, Some(ppath))
+    val m1 = new MixturePlanner(spark, Some(ppath))
     m1.start(mem.toDS().toDF("doc_id", "text", "source"), Some(ckptA)).stop()
     assert(fs.exists(p(ppath, "pairing.txt")))
     // fencing act: the dead run's checkpoint dir is deleted — cleanup
     // WOULD fire, but another cleaner holds the exclusive-create lock
     fs.delete(new org.apache.hadoop.fs.Path(ckptA), true)
     fs.create(p(ppath, "cleanup.lock"), false).close()
-    new Streaming.MixturePlanner(spark, Some(ppath))
+    new MixturePlanner(spark, Some(ppath))
     assert(fs.exists(p(ppath, "pairing.txt")),
       "a fresh construction cleaned the record despite a held cleanup lock")
     assert(fs.exists(p(ppath, "cleanup.lock")),
@@ -1279,7 +1163,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // lock released (the runbook's manual remediation for an orphaned
     // lock): the next fresh construction cleans and releases
     fs.delete(p(ppath, "cleanup.lock"), false)
-    new Streaming.MixturePlanner(spark, Some(ppath))
+    new MixturePlanner(spark, Some(ppath))
     assert(!fs.exists(p(ppath, "pairing.txt")),
       "cleanup never fired once the lock was free")
     assert(!fs.exists(p(ppath, "cleanup.lock")),
@@ -1287,16 +1171,14 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // a lock create that fails for a reason other than a held lock is a
     // real failure: it propagates instead of silently skipping cleanup
     // (which would surface later as a misleading pairing mismatch)
-    GraftFs.register(spark)
-    val gpath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_cleanlock_fault")
+    val gpath = gfsLog("graft_cleanlock_fault")
     val gfs = fsFor(gpath)
     val rec = gfs.create(p(gpath, "pairing.txt"), false)
     try rec.write(s"$gpath/dead_ck\n".getBytes("UTF-8")) finally rec.close()
     GraftFs.armFault("create", "cleanup.lock")
     try {
       intercept[java.io.IOException] {
-        new Streaming.MixturePlanner(spark, Some(gpath))
+        new MixturePlanner(spark, Some(gpath))
       }
       assert(GraftFs.faultsFired.get() == 1,
         "the lock create fault never fired — the leg is vacuous")
@@ -1305,87 +1187,67 @@ class RecoveryFaultSpec extends AnyFunSuite {
       "the failed lock create left a lock behind")
     assert(gfs.exists(p(gpath, "pairing.txt")),
       "cleanup ran without holding the lock")
-    new Streaming.MixturePlanner(spark, Some(gpath))
+    new MixturePlanner(spark, Some(gpath))
     assert(!gfs.exists(p(gpath, "pairing.txt")),
       "cleanup never fired once the filesystem behaved")
   }
 
   test("head-record reads treat a vanishing file as absence (ADVICE r16): the exists→read TOCTOU against the owner's retention degrades discovery to the step-back/legacy arms, never a raw FNFE") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 2
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_head_toctou")
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
-    m.applyBatch(rawBatch(cut, cut + k), 0L)
-    m.applyBatch(rawBatch(cut + k, nTotal), 1L)
+    val ppath = copyLog(twoBatchLog, "graft_head_toctou", gfs = true)
     // records 1 and 2 exist; the STICKY open fault emulates the
     // retention race — exists() sees head/2, every read of it raises
     // FileNotFoundException (deleted between the probe and the open)
     GraftFs.armFault("open", "head/2", sticky = true)
     try {
-      // the unreadable newest record is absence: discovery steps back
-      // one, exactly the torn-newest contract
-      assert(Log(spark, ppath).discover()
-        .contains(Frontier(1L, -1L, Seq(0L))),
-        "discovery did not step back past the vanishing record")
+      // the unreadable newest record is absence (DurableLogSpec: the
+      // discovery steps back one), so a restore inside the window
+      // resumes one batch back (the stream checkpoint re-delivers the
+      // stepped-over batch) instead of crashing with a raw FNFE
+      val r = IvfMaintainer.restore(spark, ppath, _ => false)
       assert(GraftFs.faultsFired.get() > 0,
         "the open fault never fired — the law is vacuous")
-      // a restore inside the window resumes one batch back (the
-      // stream checkpoint re-delivers the stepped-over batch) instead
-      // of crashing with the unhandled FNFE the ADVICE pinned
-      val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
       assert(r.corpus.count() == cut + k,
         "restore under the vanishing-record window did not resume one batch back")
-      // the ADVICE crash site: a replica construction + search inside
-      // the window heal/fall back instead of throwing
-      val rep = new Streaming.IvfReplica(spark, ppath)
-      assert(rep.searchTopK(full.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("emb").as("qe"),
-          col("nrm").as("qn")), 5).count() == 50L)
+      // a replica construction + search inside the window heal/fall
+      // back instead of throwing
+      val rep = new IvfReplica(spark, ppath)
+      assert(rep.searchTopK(queries, 5).count() == 50L)
     } finally GraftFs.disarm()
     // caught up: the full frontier is back
-    val ok = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val ok = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(ok.corpus.count() == nTotal)
     assert(answers(ok.corpus, ok.index) == fullAnswers)
-    // anchor leg (symmetric fix): unreadable anchor slots degrade the
-    // start to the gallop-from-1 arm; with records 1–2 retired by the
-    // compaction below, discovery lands on the legacy LIST walk — the
-    // already-correct fallback — instead of crashing
+    // anchor leg: unreadable anchor slots degrade the start to the
+    // gallop-from-1 arm; with records 1–2 retired by the compaction
+    // below, discovery finds nothing (DurableLogSpec's anchor law) and
+    // restore lands on the legacy LIST walk instead of crashing
     assert(ok.compactLog()) // record 3, anchor0 = 3, records 1–2 retired
     GraftFs.armFault("open", "anchor", sticky = true)
     try {
-      assert(Log(spark, ppath).discover().isEmpty,
-        "discovery used an anchor it could not read")
+      val r2 = IvfMaintainer.restore(spark, ppath, _ => false)
       assert(GraftFs.faultsFired.get() > 0,
         "the anchor open fault never fired — the leg is vacuous")
-      val r2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
       assert(r2.corpus.count() == nTotal)
       assert(answers(r2.corpus, r2.index) == fullAnswers)
     } finally GraftFs.disarm()
     // pairing leg: a fresh planner reads pairing.txt before it takes
     // cleanup.lock, and a concurrent cleaner can delete the record in
     // between — the vanished record reads as unpaired, not as a crash
-    val mpath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_pairing_toctou")
+    val mpath = gfsLog("graft_pairing_toctou")
     val mfs = fsFor(mpath)
     val rec = mfs.create(p(mpath, "pairing.txt"), false)
     try rec.write(s"$mpath/dead_ck\n".getBytes("UTF-8")) finally rec.close()
     GraftFs.armFault("open", "pairing.txt", sticky = true)
     try {
-      new Streaming.MixturePlanner(spark, Some(mpath))
+      new MixturePlanner(spark, Some(mpath))
       assert(GraftFs.faultsFired.get() > 0,
         "the pairing open fault never fired — the leg is vacuous")
     } finally GraftFs.disarm()
   }
 
   test("IvfMaintainer.stats is lock-free (ADVICE r16): a scrape completes while the maintainer monitor is held, as it is across a full micro-batch") {
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val cut = full.count() / 2
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
+    val m = new IvfMaintainer(full.filter(col("vec_id") < cut),
       rebuildWhen = _ => false)
     val entered = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
@@ -1397,22 +1259,20 @@ class RecoveryFaultSpec extends AnyFunSuite {
     })
     holder.start(); entered.await()
     try {
-      val got = new java.util.concurrent.atomic.AtomicReference[Streaming.IvfStats]
+      val got = new java.util.concurrent.atomic.AtomicReference[IvfStats]
       val scraper = new Thread(() => got.set(m.stats))
       scraper.start(); scraper.join(5000)
       assert(!scraper.isAlive && got.get() != null,
         "stats blocked on the held maintainer monitor — the runbook " +
           "alarm would stall for a full micro-batch")
-      assert(got.get() == Streaming.IvfStats(0, -1, 0, 0, 0, 0))
+      assert(got.get() == IvfStats(0, -1, 0, 0, 0, 0))
     } finally { release.countDown(); holder.join() }
   }
 
   test("MixturePlanner restore sweeps orphaned head records (ADVICE r16): a crash between the anchor write and the predecessor delete leaks one record per crash — restore retires the debris") {
-    GraftFs.register(spark)
     import spark.implicits._
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_mix_orphan")
-    val m = new Streaming.MixturePlanner(spark, Some(ppath))
+    val ppath = gfsLog("graft_mix_orphan")
+    val m = new MixturePlanner(spark, Some(ppath))
     m.applyBatch(Seq((1L, "a b", "s")).toDF("doc_id", "text", "source"), 0L)
     val fs = fsFor(ppath)
     assert(fs.exists(p(ppath, "head/1")))
@@ -1431,7 +1291,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // seeds headSeq from the discovered record and every later batch
     // deletes only its OWN predecessor — one leaked file per crash,
     // contradicting the dense-retention claim
-    val r = Streaming.MixturePlanner.restore(spark, ppath.toString)
+    val r = MixturePlanner.restore(spark, ppath.toString)
     assert(r.counts.agg(sum(col("tok"))).head().getLong(0) == 5L,
       "restore missed the snapshot the completed record names")
     assert(!fs.exists(p(ppath, "head/1")),
@@ -1446,24 +1306,16 @@ class RecoveryFaultSpec extends AnyFunSuite {
   }
 
   test("owner searchTopK heals the compaction-retire race (review r17 pass 3): a restored owner's parquet-backed frames retired mid-search re-resolve once; answers exact, search counted once") {
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 2
-    val ppath = java.nio.file.Files
-      .createTempDirectory("graft_ownerheal").toString
-    val m0 = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val ppath = localLog("graft_ownerheal")
+    val m0 = freshOwner(ppath)
     m0.applyBatch(rawBatch(cut, cut + k), 0L)
     assert(m0.compactLog()) // gen 0 with a logged quantizer ensemble
     // the hazard requires a RESTORED owner: its adopted index is
     // parquet-backed by gen 0's quantizer files until a head-moved
     // finalize re-roots it
-    val m = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m = IvfMaintainer.restore(spark, ppath, _ => false)
     m.applyBatch(rawBatch(cut + k, nTotal), 1L)
-    val queries = full.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("qe"),
-        col("nrm").as("qn"))
     // the seam fires INSIDE the accessor-capture window (refs
     // resolved, frames not yet materialized): a maintenance
     // compaction completes gen 1 and its retention deletes the gen-0
@@ -1490,20 +1342,11 @@ class RecoveryFaultSpec extends AnyFunSuite {
   }
 
   test("adoptHeadRecords migrates a legacy log (VERDICT r16 #1): the record-free LIST walk truncates under a stale listing; after the one-shot adoption the SAME window restores FULLY, and the owner resumes the dense seq") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = (nTotal - cut) / 2
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_adopt")
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
-    m.applyBatch(rawBatch(cut, cut + k), 0L)
-    m.applyBatch(rawBatch(cut + k, nTotal), 1L)
+    val ppath = copyLog(twoBatchLog, "graft_adopt", gfs = true)
     // a live-protocol log is untouched — adoption must never collide
     // with the owner's own record numbering
-    assert(!Streaming.IvfMaintainer.adoptHeadRecords(spark, ppath),
+    assert(!IvfMaintainer.adoptHeadRecords(spark, ppath),
       "adoption rewrote a log that already holds head records")
     val fs = fsFor(ppath)
     assert(fs.exists(p(ppath, "head/2")))
@@ -1514,13 +1357,13 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // walk silently truncates when the stale listing hides delta/1
     GraftFs.markStaleListing("delta/1$")
     try {
-      val truncated = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+      val truncated = IvfMaintainer.restore(spark, ppath, _ => false)
       assert(truncated.corpus.count() == cut + k,
         "the legacy walk did not truncate — the counterfactual is " +
           "vacuous (is the record-free fallback still a LIST walk?)")
     } finally GraftFs.resetStaleListing()
     // ---- the migration: ONE guarded strong-LIST pass ----------------
-    assert(Streaming.IvfMaintainer.adoptHeadRecords(spark, ppath))
+    assert(IvfMaintainer.adoptHeadRecords(spark, ppath))
     assert(fs.exists(p(ppath, "head/1")) && fs.exists(p(ppath, "head/anchor0")),
       "adoption did not write the record + anchor pair")
     assert(Log(spark, ppath).discover()
@@ -1530,18 +1373,18 @@ class RecoveryFaultSpec extends AnyFunSuite {
     try {
       assert(Log(spark, ppath).completed("delta") == Seq(0L),
         "the staleness window hid nothing — the law is vacuous")
-      val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+      val r = IvfMaintainer.restore(spark, ppath, _ => false)
       assert(r.corpus.count() == nTotal,
         "the adopted log still truncated under a stale listing — " +
           "restore is not consulting the adopted record")
       assert(answers(r.corpus, r.index) == fullAnswers)
     } finally GraftFs.resetStaleListing()
     // idempotent: a second invocation is a no-op on the adopted log
-    assert(!Streaming.IvfMaintainer.adoptHeadRecords(spark, ppath))
+    assert(!IvfMaintainer.adoptHeadRecords(spark, ppath))
     // the adopted log resumes seamlessly: restore seeds headSeq from
     // record 1, the next applied batch writes record 2, and a
     // compaction continues the anchor/retention discipline
-    val res = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val res = IvfMaintainer.restore(spark, ppath, _ => false)
     res.applyBatch(rawBatch(0, 1), 2L)
     assert(Log(spark, ppath).discover()
       .contains(Frontier(2L, -1L, Seq(0L, 1L, 2L))))
@@ -1550,49 +1393,34 @@ class RecoveryFaultSpec extends AnyFunSuite {
       .contains(Frontier(3L, 2L, Seq.empty[Long])))
     assert(!fs.exists(p(ppath, "head/1")) && !fs.exists(p(ppath, "head/2")),
       "the post-adoption compaction's retention skipped the adopted record")
-    val fin = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val fin = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(fin.corpus.count() == nTotal + 1)
     // adopting a path that never held a complete maintainer fails fast
     // (the restore seed-gate contract, not a silent empty adoption)
     intercept[IllegalArgumentException] {
-      Streaming.IvfMaintainer.adoptHeadRecords(spark, "graftfs://" +
-        java.nio.file.Files.createTempDirectory("graft_adopt_empty"))
+      IvfMaintainer.adoptHeadRecords(spark, gfsLog("graft_adopt_empty"))
     }
   }
 
   test("adoptHeadRecords crash window: the anchor create dying after the record write leaves a fully-discoverable log — gallop-from-1 needs no anchor until the first compaction writes one") {
-    GraftFs.register(spark)
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_adopt_crash")
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
-      rebuildWhen = _ => false, persistPath = Some(ppath))
+    val ppath = gfsLog("graft_adopt_crash")
+    val m = freshOwner(ppath)
     m.applyBatch(rawBatch(cut, nTotal), 0L)
     val fs = fsFor(ppath)
     fs.delete(p(ppath, "head"), true) // the legacy shape
     // adoption writes record 1, then its anchor dies — the two-object
-    // crash window
+    // crash window. The record-without-anchor state, its discovery by
+    // the gallop from 1 and the re-run's no-op are Log.adopt's crash
+    // law in DurableLogSpec.
     GraftFs.armFault("create", "anchor")
     intercept[java.io.FileNotFoundException] {
-      Streaming.IvfMaintainer.adoptHeadRecords(spark, ppath)
+      IvfMaintainer.adoptHeadRecords(spark, ppath)
     }
     assert(GraftFs.faultsFired.get() == 1,
       "the anchor create fault never fired — the law is vacuous")
-    assert(fs.exists(p(ppath, "head/1")) &&
-      !fs.exists(p(ppath, "head/anchor0")),
-      "the crash window left a different state than record-without-anchor")
-    // anchor-less discovery gallops from 1 — correct, because
-    // retention has never run (records are contiguous from 1)
-    assert(Log(spark, ppath).discover()
-      .contains(Frontier(1L, -1L, Seq(0L))))
-    val r = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val r = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(r.corpus.count() == nTotal)
     assert(answers(r.corpus, r.index) == fullAnswers)
-    // a RE-RUN of the migration is a no-op (the frontier is
-    // discoverable), never a duplicate record at a colliding seq
-    assert(!Streaming.IvfMaintainer.adoptHeadRecords(spark, ppath))
     // the first compaction completes the pair: record 2 + anchor,
     // retention retires the adopted record, discovery tracks
     assert(r.compactLog())
@@ -1605,14 +1433,12 @@ class RecoveryFaultSpec extends AnyFunSuite {
   }
 
   test("MixturePlanner.adoptHeadRecords: the planner's legacy counts logs migrate the same way — stale-LIST resume-from-older-snapshot before, GET-only after") {
-    GraftFs.register(spark)
     import spark.implicits._
-    val ppath = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_mix_adopt")
-    val m = new Streaming.MixturePlanner(spark, Some(ppath))
+    val ppath = gfsLog("graft_mix_adopt")
+    val m = new MixturePlanner(spark, Some(ppath))
     m.applyBatch(Seq((1L, "a b", "s")).toDF("doc_id", "text", "source"), 0L)
     m.applyBatch(Seq((2L, "c d e", "s")).toDF("doc_id", "text", "source"), 1L)
-    assert(!Streaming.MixturePlanner.adoptHeadRecords(spark, ppath),
+    assert(!MixturePlanner.adoptHeadRecords(spark, ppath),
       "adoption rewrote a live-protocol planner log")
     val fs = fsFor(ppath)
     fs.delete(p(ppath, "head"), true)
@@ -1621,28 +1447,27 @@ class RecoveryFaultSpec extends AnyFunSuite {
     // are ones the stream checkpoint will never re-deliver
     GraftFs.markStaleListing("counts/1$")
     try {
-      val stale = Streaming.MixturePlanner.restore(spark, ppath)
+      val stale = MixturePlanner.restore(spark, ppath)
       assert(stale.counts.agg(sum(col("tok"))).head().getLong(0) == 2L,
         "the legacy walk did not resume from the older snapshot — " +
           "the counterfactual is vacuous")
     } finally GraftFs.resetStaleListing()
     // a snapshotless log has no frontier to adopt
-    assert(!Streaming.MixturePlanner.adoptHeadRecords(spark, "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_mix_adopt_empty")))
+    assert(!MixturePlanner.adoptHeadRecords(spark, gfsLog("graft_mix_adopt_empty")))
     // the migration, then the SAME window restores the newest snapshot
-    assert(Streaming.MixturePlanner.adoptHeadRecords(spark, ppath))
+    assert(MixturePlanner.adoptHeadRecords(spark, ppath))
     assert(Log(spark, ppath).discover()
       .contains(Frontier(1L, 1L, Seq.empty[Long])))
     GraftFs.markStaleListing("counts/1$")
     val r = try {
       assert(!Log(spark, ppath).completed("counts")
         .contains(1L), "the staleness window hid nothing — vacuous")
-      val r0 = Streaming.MixturePlanner.restore(spark, ppath)
+      val r0 = MixturePlanner.restore(spark, ppath)
       assert(r0.counts.agg(sum(col("tok"))).head().getLong(0) == 5L,
         "the adopted planner log still resumed from the older snapshot")
       r0
     } finally GraftFs.resetStaleListing()
-    assert(!Streaming.MixturePlanner.adoptHeadRecords(spark, ppath))
+    assert(!MixturePlanner.adoptHeadRecords(spark, ppath))
     // the resumed planner continues the dense head-record discipline
     r.applyBatch(Seq((3L, "f", "s")).toDF("doc_id", "text", "source"), 2L)
     assert(fs.exists(p(ppath, "head/2")) && !fs.exists(p(ppath, "head/1")),

@@ -1,6 +1,8 @@
 package graft
 
-import graft.streaming.Streaming
+import graft.operators.IvfAnn
+import graft.streaming.{IvfMaintainer, MixturePlanner, Streaming}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -40,6 +42,125 @@ class StreamingSpec extends AnyFunSuite {
     }
     cond
   }
+
+  /** Run `f` with the RocksDB state store provider, which the
+    * transformWithState operators require, restoring the previous
+    * provider afterwards. */
+  private def withRocksDB[A](f: => A): A = {
+    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try f finally prev match {
+      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
+  }
+
+  // ---- shared read-only fixtures, built once per spec -------------
+  // Each recurring corpus, index-free answer set and batch-query result
+  // below used to be rebuilt inline by every law that reads it. Laws
+  // only read them; every writer still builds its own state.
+
+  private val dir = "/root/testdata/sf0.001"
+  private lazy val full = IvfAnn.fullCorpus(spark, dir)
+  private lazy val nTotal = full.count()
+  private lazy val cut = nTotal / 2
+  private lazy val raw = spark.read.parquet(s"$dir/embeddings.parquet")
+    .select(col("vec_id"), col("embedding"))
+  /** The second half of the corpus as stream input rows. */
+  private lazy val arriving: Seq[(Long, Seq[Float])] =
+    raw.filter(col("vec_id") >= cut).as[(Long, Seq[Float])].collect().toSeq
+  private lazy val queries = full.filter(col("vec_id") < 10)
+    .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
+  private def top5(corpus: DataFrame, idx: IvfAnn.IvfIndex): Seq[(Long, Int, Long)] =
+    IvfAnn.boundedTopK(corpus, queries, 5, Some(idx))._2
+      .as[(Long, Int, Long)].collect().toSeq
+  /** Top-5 through a from-scratch index over the full corpus: the exact
+    * answer every maintained, restored or compacted index must give. */
+  private lazy val rebuiltAnswers = top5(full, IvfAnn.buildIndex(full))
+
+  private def unitVec(rnd: scala.util.Random, dim: Int): Array[Float] = {
+    val v = Array.fill(dim)(rnd.nextGaussian())
+    val n = math.sqrt(v.map(x => x * x).sum)
+    v.map(x => (x / n).toFloat)
+  }
+  /** The degraded-geometry fixture: a seed of 8 tight clusters of 8
+    * (prunable at t = 0.9), and 64 uniform arrivals (ids 100–163), each
+    * of which lands in some tight cell and blows its radius to ~90°. */
+  private lazy val (clusterSeed, degradedArrivals) = {
+    val rnd = new scala.util.Random(53)
+    val centers = Seq.fill(8)(unitVec(rnd, 64))
+    val seedVecs = for (c <- 0 until 8; i <- 0 until 8) yield {
+      val noise = Array.fill(64)(rnd.nextGaussian() * 0.02f)
+      ((c * 8 + i).toLong,
+        centers(c).zip(noise).map { case (a, b) => a + b }.toSeq)
+    }
+    (IvfAnn.prepEmbeddings(seedVecs.toDF("vec_id", "embedding")),
+      (100L until 164L).map(i => (i, unitVec(rnd, 64).toSeq)))
+  }
+  private def degradedPrunability(idx: IvfAnn.IvfIndex): Boolean =
+    IvfAnn.thresholdPrunability(idx, 0.9) < 0.5
+
+  /** Batch q289 and the documents it plans over, in doc_id order. */
+  private lazy val q289 = SparkEntry.queries("q289_temperature_mixture")(spark, dir)
+    .as[(String, Long, Long, Long, Long)].collect().toSeq
+  private lazy val docs = Tables.documents(spark, dir)
+    .select(col("doc_id"), col("text"), col("source"))
+    .as[(Long, String, String)].collect().toSeq.sortBy(_._1)
+
+  /** Batch q93 as (user_id, v, c, p, stage) in epoch micros, -1 absent. */
+  private lazy val q93 = SparkEntry.queries("q93_funnel")(spark, dir)
+    .select(col("user_id"),
+      coalesce(unix_micros(col("v_ts").cast("timestamp")), lit(-1L)).as("v"),
+      coalesce(unix_micros(col("c_ts").cast("timestamp")), lit(-1L)).as("c"),
+      coalesce(unix_micros(col("p_ts").cast("timestamp")), lit(-1L)).as("p"),
+      col("stage"))
+    .as[(Long, Long, Long, Long, Int)].collect()
+  private def assertFunnelParity(streamed: Map[Long, Streaming.FunnelRow]): Unit = {
+    assert(streamed.keySet == q93.map(_._1).toSet)
+    q93.foreach { case (u, v, c, p, st) =>
+      val r = streamed(u)
+      assert((r.v_us, r.c_us, r.p_us, r.stage) == ((v, c, p, st)),
+        s"user $u: streamed $r vs batch ($v,$c,$p,$st)")
+    }
+  }
+  /** The events in per-key event-time order at full µs precision (the
+    * watermark discipline), as funnel input. */
+  private lazy val funnelEvents = fixtureEvents
+    .sortBy(e => (e.ts.getEpochSecond, e.ts.getNano, e.event_id))
+    .map(e => Streaming.FunnelEvent(e.user_id, e.event_type, java.sql.Timestamp.from(e.ts)))
+
+  /** The planted near-dup corpus: 10 families × 3 docs (1 canonical + 2
+    * one-word mutants → pairwise J ≈ 0.85-0.95) + 10 unrelated docs,
+    * and batch q44's pair set over it. */
+  private lazy val (nearDupDocs, q44Pairs) = {
+    def word(f: Int, i: Int) = s"w${math.abs((f * 131 + i) * 2654435761L % 7919)}_$f"
+    val docs: Seq[(Long, String)] =
+      (0 until 10).flatMap { f =>
+        val base = (0 until 40).map(i => word(f, i))
+        (0 until 3).map { m =>
+          val id = (f * 3 + m).toLong
+          val words = if (m == 0) base else base.updated(7 * m, s"mut_${id}")
+          (id, words.mkString(" "))
+        }
+      } ++ (100L until 110L).map(id =>
+        (id, (0 until 40).map(i => s"solo${id}_$i").mkString(" ")))
+    val d = java.nio.file.Files.createTempDirectory("graft_sndd").toString
+    docs.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(s"$d/documents.parquet")
+    val pairs = SparkEntry.queries("q44_minhash_lsh")(spark, d)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(pairs.nonEmpty, "planted corpus produced no batch pairs — vacuous")
+    (docs, pairs)
+  }
+
+  private def tmp(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString
+  private def fsFor(path: String) = new org.apache.hadoop.fs.Path(path)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def exists(base: String, rel: String): Boolean =
+    fsFor(base).exists(new org.apache.hadoop.fs.Path(s"$base/$rel"))
 
   test("tumbling agg: stream replay == batch result") {
     implicit val sqlCtx = spark.sqlContext
@@ -117,22 +238,6 @@ class StreamingSpec extends AnyFunSuite {
         .select(col("window.start").as("win_start"), col("event_type"), col("n"))
         .as[(Instant, String, Long)].collect().toSet
       assert(streamed == batch)
-    } finally q.stop()
-  }
-
-  test("mapGroupsWithState running counts accumulate across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long)]
-    val q = Streaming.runningUserCounts(mem.toDS())
-      .writeStream.format("memory").queryName("state_out")
-      .outputMode(OutputMode.Update).start()
-    try {
-      mem.addData(Seq((1L, 1L), (1L, 2L), (2L, 1L))); q.processAllAvailable()
-      mem.addData(Seq((1L, 3L))); q.processAllAvailable()
-      val last = spark.table("state_out")
-        .groupBy("user_id").agg(max("n").as("n"))
-        .as[(Long, Long)].collect().toMap
-      assert(last == Map(1L -> 3L, 2L -> 1L))
     } finally q.stop()
   }
 
@@ -239,51 +344,42 @@ class StreamingSpec extends AnyFunSuite {
 
   test("transformWithState ListState entries expire under TTL") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-    val mem = MemoryStream[(Long, Long)]
-    val ttl = java.time.Duration.ofSeconds(2)
-    // ProcessingTime-mode TWS always reports "run another batch" (TTL
-    // eviction needs the clock), so processAllAvailable() never settles
-    // for this operator — poll the sink with a deadline instead.
-    val q = Streaming.recentIdsTtl(mem.toDS(), ttl)
-      .writeStream.format("memory").queryName("ttl_out")
-      .outputMode(OutputMode.Update).start()
-    try {
-      mem.addData(Seq((1L, 100L), (1L, 101L)))
-      assert(eventually(60000) {
-        spark.table("ttl_out").as[(Long, Seq[Long])].collect()
-          .exists(r => r._1 == 1L && r._2.sorted == Seq(100L, 101L))
-      }, "live buffer never held both ids")
-      Thread.sleep(ttl.toMillis + 1500) // let the TTL horizon pass
-      mem.addData(Seq((1L, 200L)))
-      assert(eventually(60000) {
-        val rows = spark.table("ttl_out").as[(Long, Seq[Long])].collect()
-        val afterTtl = rows.filter(r => r._1 == 1L && r._2.contains(200L))
-        afterTtl.nonEmpty && afterTtl.forall(_._2 == Seq(200L))
-      }, "pre-TTL ids did not expire")
-    } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+    withRocksDB {
+      val mem = MemoryStream[(Long, Long)]
+      val ttl = java.time.Duration.ofSeconds(2)
+      // ProcessingTime-mode TWS always reports "run another batch" (TTL
+      // eviction needs the clock), so processAllAvailable() never settles
+      // for this operator — poll the sink with a deadline instead.
+      val q = Streaming.recentIdsTtl(mem.toDS(), ttl)
+        .writeStream.format("memory").queryName("ttl_out")
+        .outputMode(OutputMode.Update).start()
+      try {
+        mem.addData(Seq((1L, 100L), (1L, 101L)))
+        assert(eventually(60000) {
+          spark.table("ttl_out").as[(Long, Seq[Long])].collect()
+            .exists(r => r._1 == 1L && r._2.sorted == Seq(100L, 101L))
+        }, "live buffer never held both ids")
+        Thread.sleep(ttl.toMillis + 1500) // let the TTL horizon pass
+        mem.addData(Seq((1L, 200L)))
+        assert(eventually(60000) {
+          val rows = spark.table("ttl_out").as[(Long, Seq[Long])].collect()
+          val afterTtl = rows.filter(r => r._1 == 1L && r._2.contains(200L))
+          afterTtl.nonEmpty && afterTtl.forall(_._2 == Seq(200L))
+        }, "pre-TTL ids did not expire")
+      } finally q.stop()
     }
   }
 
   test("transformWithState running counts (RocksDB state store)") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDB {
       val mem = MemoryStream[(Long, Long)]
       val q = Streaming.runningUserCountsTws(mem.toDS())
         .writeStream.format("memory").queryName("tws_out")
         .outputMode(OutputMode.Update).start()
       try {
+        // the running-count law: user 1's count accumulates across
+        // batches (2, then 3), user 2 keeps its count, user 3 starts at 1
         mem.addData(Seq((1L, 1L), (1L, 2L), (2L, 1L))); q.processAllAvailable()
         mem.addData(Seq((1L, 3L), (3L, 1L))); q.processAllAvailable()
         val last = spark.table("tws_out")
@@ -291,18 +387,12 @@ class StreamingSpec extends AnyFunSuite {
           .as[(Long, Long)].collect().toMap
         assert(last == Map(1L -> 3L, 2L -> 1L, 3L -> 1L))
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("transformWithState event-time timers close idle sessions") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDB {
       val mem = MemoryStream[Streaming.UserEvent]
       def ue(user: Long, epochS: Long) =
         Streaming.UserEvent(user, new java.sql.Timestamp(epochS * 1000))
@@ -325,9 +415,6 @@ class StreamingSpec extends AnyFunSuite {
           .as[(Long, Long, Long)].collect().toSet
         assert(got == Set((1L, 1000L, 3L)), s"got $got")
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
@@ -347,10 +434,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming CDC upsert keeps the highest version per key, idempotent on replays") {
     implicit val sqlCtx = spark.sqlContext
     import Streaming.CdcRow
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDB {
       val mem = MemoryStream[CdcRow]
       val q = Streaming.upsertStream(mem.toDS())
         .writeStream.format("memory").queryName("cdc_upsert")
@@ -381,39 +465,13 @@ class StreamingSpec extends AnyFunSuite {
         assert(sink.count(_.key == 0L) == 2 && sink.count(_.key == 7L) == 2,
           s"stale replays must emit nothing: ${sink.filter(r => r.key == 0L || r.key == 7L).toSeq}")
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("streaming MinHash-LSH near-dup: replayed corpus == batch q44 pair set") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // Planted corpus: 10 families × 3 docs (1 canonical + 2 one-word
-      // mutants → pairwise J ≈ 0.85-0.95) + 10 unrelated docs.
-      def word(f: Int, i: Int) = s"w${math.abs((f * 131 + i) * 2654435761L % 7919)}_$f"
-      val docs: Seq[(Long, String)] =
-        (0 until 10).flatMap { f =>
-          val base = (0 until 40).map(i => word(f, i))
-          (0 until 3).map { m =>
-            val id = (f * 3 + m).toLong
-            val words = if (m == 0) base else base.updated(7 * m, s"mut_${id}")
-            (id, words.mkString(" "))
-          }
-        } ++ (100L until 110L).map(id =>
-          (id, (0 until 40).map(i => s"solo${id}_$i").mkString(" ")))
-      val dir = java.nio.file.Files.createTempDirectory("graft_sndd").toString
-      docs.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.parquet(s"$dir/documents.parquet")
-      val expect = SparkEntry.queries("q44_minhash_lsh")(spark, dir)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(expect.nonEmpty, "planted corpus produced no batch pairs — vacuous")
-
+    withRocksDB {
+      val expect = q44Pairs
       val mem = MemoryStream[(Long, String)]
       val q = Streaming.nearDupStream(mem.toDS().toDF("doc_id", "text"),
           t10 = 8, ttl = java.time.Duration.ofDays(1))
@@ -421,7 +479,7 @@ class StreamingSpec extends AnyFunSuite {
         .outputMode(OutputMode.Update).start()
       try {
         // Replay in 3 arrival chunks that split families across batches.
-        val chunks = docs.grouped((docs.size + 2) / 3).toSeq
+        val chunks = nearDupDocs.grouped((nearDupDocs.size + 2) / 3).toSeq
         chunks.foreach(mem.addData(_))
         assert(eventually(90000) {
           spark.table("near_dup_out").as[(Long, Long, Long)].collect().toSet == expect
@@ -429,20 +487,12 @@ class StreamingSpec extends AnyFunSuite {
           spark.table("near_dup_out").as[(Long, Long, Long)].collect().toSet
         } want $expect")
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("streaming near-dup: TTL evicts horizon-expired band members") {
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDB {
       val text = (0 until 30).map(i => s"tok$i").mkString(" ")
       val ttl = java.time.Duration.ofSeconds(2)
       val mem = MemoryStream[(Long, String)]
@@ -471,55 +521,26 @@ class StreamingSpec extends AnyFunSuite {
           && Set(2L, 3L).contains(p._2))
         assert(crossHorizon.isEmpty, s"TTL failed to evict: $crossHorizon")
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
   test("transformWithState funnel: event-time-ordered stream replay == batch q93") {
     implicit val sqlCtx = spark.sqlContext
     import Streaming.FunnelEvent
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-    val mem = MemoryStream[FunnelEvent]
-    val q = Streaming.funnelStream(mem.toDS())
-      .writeStream.format("memory").queryName("funnel_out")
-      .outputMode(OutputMode.Update).start()
-    try {
-      // per-key event-time order via a global sort at FULL µs precision
-      // (the watermark discipline); 3 chunks so state crosses batch
-      // boundaries
-      val evs = fixtureEvents
-        .sortBy(e => (e.ts.getEpochSecond, e.ts.getNano, e.event_id))
-        .map(e => FunnelEvent(e.user_id, e.event_type, java.sql.Timestamp.from(e.ts)))
-      evs.grouped(400).foreach { chunk => mem.addData(chunk); q.processAllAvailable() }
-      // stage is monotone per user and timestamps are write-once, so the
-      // most advanced emission per user IS the final state
-      val streamed = spark.table("funnel_out")
-        .as[Streaming.FunnelRow].collect()
-        .groupBy(_.user_id).map { case (u, rs) => u -> rs.maxBy(_.stage) }
-      val batch = SparkEntry.queries("q93_funnel")(spark, "/root/testdata/sf0.001")
-        .select(col("user_id"),
-          coalesce(unix_micros(col("v_ts").cast("timestamp")), lit(-1L)).as("v"),
-          coalesce(unix_micros(col("c_ts").cast("timestamp")), lit(-1L)).as("c"),
-          coalesce(unix_micros(col("p_ts").cast("timestamp")), lit(-1L)).as("p"),
-          col("stage"))
-        .as[(Long, Long, Long, Long, Int)].collect()
-      assert(streamed.keySet == batch.map(_._1).toSet)
-      batch.foreach { case (u, v, c, p, st) =>
-        val r = streamed(u)
-        assert((r.v_us, r.c_us, r.p_us, r.stage) == ((v, c, p, st)),
-          s"user $u: streamed $r vs batch ($v,$c,$p,$st)")
-      }
-    } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    withRocksDB {
+      val mem = MemoryStream[FunnelEvent]
+      val q = Streaming.funnelStream(mem.toDS())
+        .writeStream.format("memory").queryName("funnel_out")
+        .outputMode(OutputMode.Update).start()
+      try {
+        // 3 chunks so state crosses batch boundaries
+        funnelEvents.grouped(400).foreach { chunk => mem.addData(chunk); q.processAllAvailable() }
+        // stage is monotone per user and timestamps are write-once, so the
+        // most advanced emission per user IS the final state
+        assertFunnelParity(spark.table("funnel_out")
+          .as[Streaming.FunnelRow].collect()
+          .groupBy(_.user_id).map { case (u, rs) => u -> rs.maxBy(_.stage) })
+      } finally q.stop()
     }
   }
 
@@ -530,10 +551,7 @@ class StreamingSpec extends AnyFunSuite {
     // DISTINCT docs, each separated by > TTL: the state-row total after
     // wave 3 must stay near one wave's footprint, never ~3 waves'.
     implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDB {
       val ttl = java.time.Duration.ofSeconds(2)
       val mem = MemoryStream[(Long, String)]
       // TTL runs in TimeMode.ProcessingTime, where the query self-
@@ -578,31 +596,19 @@ class StreamingSpec extends AnyFunSuite {
           s"state grew unbounded across TTL windows: $afterOne → ${stateRows()} " +
             "(expected ≈ one wave's rows, got ≈ all waves')")
       } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
   test("IvfMaintainer: appended index answers == from-scratch rebuild after N streamed vectors") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.IvfAnn
-    val dir = "/root/testdata/sf0.001"
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     // maintainer seeded with the first half; the second half arrives
     // as a 3-chunk vector stream. rebuildWhen = never, so the final
     // index is pure append-assign — the exactness claim under test.
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
+    val m = new IvfMaintainer(full.filter(col("vec_id") < cut),
       rebuildWhen = _ => false)
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = m.start(mem.toDS().toDF("vec_id", "embedding"))
     try {
-      val arriving = spark.read.parquet(s"$dir/embeddings.parquet")
-        .filter(col("vec_id") >= cut)
-        .select(col("vec_id"), col("embedding"))
-        .as[(Long, Seq[Float])].collect().toSeq
       arriving.grouped(math.max(1, arriving.size / 3)).foreach { chunk =>
         mem.addData(chunk); q.processAllAvailable()
       }
@@ -611,103 +617,74 @@ class StreamingSpec extends AnyFunSuite {
       // exact-parity law: top-5 through the maintained (append-only)
       // index == top-5 through a from-scratch rebuild over the same
       // corpus (both exact by the triangle bound ⇒ identical output)
-      val queries = full.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
-      val viaMaintained = IvfAnn.boundedTopK(m.corpus, queries, 5,
-        Some(m.index))._2.as[(Long, Int, Long)].collect().toSeq
-      val viaRebuild = IvfAnn.boundedTopK(full, queries, 5,
-        Some(IvfAnn.buildIndex(full)))._2
-        .as[(Long, Int, Long)].collect().toSeq
-      assert(viaMaintained.nonEmpty && viaMaintained == viaRebuild)
+      val viaMaintained = top5(m.corpus, m.index)
+      assert(viaMaintained.nonEmpty && viaMaintained == rebuiltAnswers)
     } finally q.stop()
   }
 
   test("IvfMaintainer: degraded prunability triggers the re-cluster diagnostic") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.IvfAnn
-    // seed: 8 tight clusters of 8 (prunable at t=0.9); appends land FAR
-    // from every centroid, stretching radii — the diagnostic must fire.
-    val rnd = new scala.util.Random(53)
-    def unit(): Array[Float] = {
-      val v = Array.fill(64)(rnd.nextGaussian())
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(x => (x / n).toFloat)
-    }
-    val centers = Seq.fill(8)(unit())
-    val seedVecs = for (c <- 0 until 8; i <- 0 until 8) yield {
-      val noise = Array.fill(64)(rnd.nextGaussian() * 0.02f)
-      ((c * 8 + i).toLong,
-        centers(c).zip(noise).map { case (a, b) => a + b }.toSeq)
-    }
-    val seed = seedVecs.toDF("vec_id", "embedding")
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb"))))
-      .drop("embedding")
-    val m = new Streaming.IvfMaintainer(seed,
-      rebuildWhen = idx => IvfAnn.thresholdPrunability(idx, 0.9) < 0.5)
-    assert(IvfAnn.thresholdPrunability(m.index, 0.9) >= 0.5, "seed index must start prunable")
+    // appends land FAR from every centroid, stretching radii — the
+    // diagnostic must fire
+    val m = new IvfMaintainer(clusterSeed, rebuildWhen = degradedPrunability)
+    assert(!degradedPrunability(m.index), "seed index must start prunable")
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = m.start(mem.toDS().toDF("vec_id", "embedding"))
     try {
-      // 64 uniform random arrivals — each lands in some tight cell and
-      // blows its radius to ~90°, collapsing prunability
-      mem.addData((100L until 164L).map(i => (i, unit().toSeq)))
+      mem.addData(degradedArrivals)
       q.processAllAvailable()
       assert(m.rebuilds >= 1, "radius-growth diagnostic never fired")
       assert(m.index.assigned.count() == 64 + 64)
     } finally q.stop()
   }
 
+  /** cmeta rows as sorted strings: bit-exact quantizer identity. */
+  private def cmetaRows(idx: IvfAnn.IvfIndex): Seq[String] =
+    idx.cmeta.collect().map(_.toString).sorted.toSeq
+
+  /** The degraded fixture's persist logs, built once per spec; laws
+    * restore from copies. A: the seed plus the arrivals as batch 0 under
+    * rebuildWhen = never, so the degraded geometry lives only in the
+    * log's tail. B: the same run compacted (no tail deltas), with its
+    * degraded quantizer's cmeta rows. */
+  private lazy val (degradedLogA, degradedLogB, degradedCmeta) = {
+    def fed(tag: String): (String, IvfMaintainer) = {
+      val ppath = tmp(tag)
+      val m = new IvfMaintainer(clusterSeed, rebuildWhen = _ => false,
+        persistPath = Some(ppath))
+      m.applyBatch(degradedArrivals.toDF("vec_id", "embedding"), 0L)
+      assert(m.rebuilds == 0, "live run must not rebuild (rebuildWhen = never)")
+      (ppath, m)
+    }
+    val (a, _) = fed("graft_degraded_logA")
+    val (b, mb) = fed("graft_degraded_logB")
+    mb.compactLog()
+    (a, b, cmetaRows(mb.index))
+  }
+  private def copyLog(src: String, tag: String): String =
+    GraftFs.copyLog(spark, src, tag, gfs = false)
+
   test("IvfMaintainer: restore re-evaluates rebuildWhen on the bulk-appended index") {
     // The restore scaladoc claims rebuildWhen is evaluated once on the
-    // bulk-appended index, so a restore into a degraded geometry still
-    // triggers the re-cluster — pinned here: same fixture as the
-    // degraded-prunability law, but the radius-blowing arrivals land in
-    // the PERSIST LOG (rebuildWhen = never on the live run) and the
-    // rebuild must fire during restore() itself.
-    import graft.operators.IvfAnn
-    val rnd = new scala.util.Random(67)
-    def unit(): Array[Float] = {
-      val v = Array.fill(64)(rnd.nextGaussian())
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(x => (x / n).toFloat)
-    }
-    val centers = Seq.fill(8)(unit())
-    val seedVecs = for (c <- 0 until 8; i <- 0 until 8) yield {
-      val noise = Array.fill(64)(rnd.nextGaussian() * 0.02f)
-      ((c * 8 + i).toLong,
-        centers(c).zip(noise).map { case (a, b) => a + b }.toSeq)
-    }
-    val seed = seedVecs.toDF("vec_id", "embedding")
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb"))))
-      .drop("embedding")
-    // Scenario A — the BULK-APPEND path: the radius-blowing arrivals
-    // sit in the delta log; restore's append() evaluates rebuildWhen
-    // and must fire. The rebuild happened PAST the snapshot-able base,
-    // so restore persists it as one compaction at the restored head
-    // (review r13, pass 2 — otherwise a crash-looping deployment
-    // re-pays the full re-cluster on every restart).
-    val ppathA = java.nio.file.Files.createTempDirectory("graft_rbw_logA").toString
-    val m1a = new Streaming.IvfMaintainer(seed, rebuildWhen = _ => false,
-      persistPath = Some(ppathA))
-    m1a.applyBatch((100L until 164L).map(i => (i, unit().toSeq))
-      .toDF("vec_id", "embedding"), 0L)
-    assert(m1a.rebuilds == 0, "live run must not rebuild (rebuildWhen = never)")
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppathA,
-      rebuildWhen = idx => IvfAnn.thresholdPrunability(idx, 0.9) < 0.5)
+    // restored index, so a restore into a degraded geometry still
+    // triggers the re-cluster — pinned here: the radius-blowing
+    // arrivals land in the PERSIST LOG (rebuildWhen = never on the live
+    // run) and the rebuild must fire during restore() itself.
+    //
+    // Scenario A — the BULK-APPEND path: the arrivals sit in the delta
+    // log; restore's append() evaluates rebuildWhen and must fire. The
+    // rebuild happened PAST the snapshot-able base, so restore persists
+    // it as one compaction at the restored head (otherwise a
+    // crash-looping deployment re-pays the re-cluster on every restart).
+    val ppathA = copyLog(degradedLogA, "graft_rbw_logA")
+    val m2 = IvfMaintainer.restore(spark, ppathA, rebuildWhen = degradedPrunability)
     assert(m2.rebuilds == 1,
       "restore into a degraded geometry must trigger the re-cluster")
     assert(m2.index.assigned.count() == 64 + 64)
-    val fsA = new org.apache.hadoop.fs.Path(ppathA)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fsA.exists(new org.apache.hadoop.fs.Path(s"$ppathA/compact/0/_SUCCESS"))
-      && fsA.exists(new org.apache.hadoop.fs.Path(s"$ppathA/quantizer/0/_SUCCESS")),
+    assert(exists(ppathA, "compact/0/_SUCCESS") && exists(ppathA, "quantizer/0/_SUCCESS"),
       "the restore-time re-cluster was not persisted as a compaction")
-    val m2b = Streaming.IvfMaintainer.restore(spark, ppathA, _ => false)
-    assert(m2b.index.cmeta.collect().map(_.toString).sorted.toSeq
-      == m2.index.cmeta.collect().map(_.toString).sorted.toSeq
-      && m2b.rebuilds == 0,
+    val m2b = IvfMaintainer.restore(spark, ppathA, _ => false)
+    assert(cmetaRows(m2b.index) == cmetaRows(m2.index) && m2b.rebuilds == 0,
       "the next restart did not adopt the persisted rebuilt quantizer")
 
     // Scenario B — the SNAPSHOT-QUANTIZER path: a compacted log with no
@@ -715,23 +692,16 @@ class StreamingSpec extends AnyFunSuite {
     // so restore must evaluate rebuildWhen on the adopted index
     // explicitly (reclusterIfDegraded), and the re-cluster RE-LOGS the
     // rebuilt ensemble over the degraded generation it supersedes.
-    val ppathB = java.nio.file.Files.createTempDirectory("graft_rbw_logB").toString
-    val m1b = new Streaming.IvfMaintainer(seed, rebuildWhen = _ => false,
-      persistPath = Some(ppathB))
-    m1b.applyBatch((100L until 164L).map(i => (i, unit().toSeq))
-      .toDF("vec_id", "embedding"), 0L)
-    m1b.compactLog()
-    val degradedCmeta = m1b.index.cmeta.collect().map(_.toString).sorted.toSeq
-    val m3 = Streaming.IvfMaintainer.restore(spark, ppathB,
-      rebuildWhen = idx => IvfAnn.thresholdPrunability(idx, 0.9) < 0.5)
+    val ppathB = copyLog(degradedLogB, "graft_rbw_logB")
+    val m3 = IvfMaintainer.restore(spark, ppathB, rebuildWhen = degradedPrunability)
     assert(m3.rebuilds == 1,
       "snapshot-quantizer restore skipped the degraded-geometry re-cluster")
     assert(m3.index.assigned.count() == 64 + 64)
-    val rebuiltCmeta = m3.index.cmeta.collect().map(_.toString).sorted.toSeq
+    val rebuiltCmeta = cmetaRows(m3.index)
     assert(rebuiltCmeta != degradedCmeta, "re-cluster produced the same geometry — pin vacuous")
-    val m4 = Streaming.IvfMaintainer.restore(spark, ppathB, _ => false)
+    val m4 = IvfMaintainer.restore(spark, ppathB, _ => false)
     assert(m4.rebuilds == 0)
-    assert(m4.index.cmeta.collect().map(_.toString).sorted.toSeq == rebuiltCmeta,
+    assert(cmetaRows(m4.index) == rebuiltCmeta,
       "the generation's ensemble is not the rebuilt quantizer — every restart would re-pay the re-cluster")
   }
 
@@ -752,39 +722,17 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("IvfMaintainer: restore(persistRebuild = false) is write-free — the re-cluster stays in memory (review r13)") {
-    // The r13 write-backs (ensemble rewrite / restored-head compaction)
-    // make a rebuild-firing restore a log WRITER; a serving replica or
-    // a read-only mount needs the pre-r13 contract back. Same degraded
-    // fixture as the rebuildWhen-restore law, both paths, and the
+    // A rebuild-firing restore is a log WRITER (ensemble rewrite or
+    // restored-head compaction); a serving replica or a read-only mount
+    // needs it write-free. The degraded fixture, both paths, and the
     // whole-log listing must be bit-for-bit stable across the restore.
-    import graft.operators.IvfAnn
-    val rnd = new scala.util.Random(73)
-    def unit(): Array[Float] = {
-      val v = Array.fill(64)(rnd.nextGaussian())
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(x => (x / n).toFloat)
-    }
-    val centers = Seq.fill(8)(unit())
-    val seedVecs = for (c <- 0 until 8; i <- 0 until 8) yield {
-      val noise = Array.fill(64)(rnd.nextGaussian() * 0.02f)
-      ((c * 8 + i).toLong,
-        centers(c).zip(noise).map { case (a, b) => a + b }.toSeq)
-    }
-    val seed = seedVecs.toDF("vec_id", "embedding")
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb"))))
-      .drop("embedding")
-    val degraded = (100L until 164L).map(i => (i, unit().toSeq))
     // Path A — rebuild fires in the bulk append (tail deltas present):
     // the persisting restore would compact at the restored head.
-    val ppathA = java.nio.file.Files.createTempDirectory("graft_ro_logA").toString
-    val m1a = new Streaming.IvfMaintainer(seed, rebuildWhen = _ => false,
-      persistPath = Some(ppathA))
-    m1a.applyBatch(degraded.toDF("vec_id", "embedding"), 0L)
+    val ppathA = copyLog(degradedLogA, "graft_ro_logA")
     val beforeA = logListing(ppathA)
     // rebuildWhen fires deterministically — the contract under test is
     // write-free-ness when the re-cluster runs, not the diagnostic
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppathA,
+    val m2 = IvfMaintainer.restore(spark, ppathA,
       rebuildWhen = _ => true, persistRebuild = false)
     assert(m2.rebuilds == 1, "read-only restore skipped the re-cluster")
     assert(m2.index.assigned.count() == 64 + 64)
@@ -792,23 +740,19 @@ class StreamingSpec extends AnyFunSuite {
       "restore(persistRebuild = false) wrote to the log")
     // the in-memory rebuild answers like a from-scratch rebuild over
     // the same corpus (the kill/resume parity convention)
-    val queries = seed.limit(5)
+    val seedQueries = clusterSeed.limit(5)
       .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
-    val viaRO = IvfAnn.boundedTopK(m2.corpus, queries, 5,
+    val viaRO = IvfAnn.boundedTopK(m2.corpus, seedQueries, 5,
       Some(m2.index))._2.as[(Long, Int, Long)].collect().toSeq
-    val viaRebuild = IvfAnn.boundedTopK(m2.corpus, queries, 5,
+    val viaRebuild = IvfAnn.boundedTopK(m2.corpus, seedQueries, 5,
       Some(IvfAnn.buildIndex(m2.corpus)))._2
       .as[(Long, Int, Long)].collect().toSeq
     assert(viaRO.nonEmpty && viaRO == viaRebuild)
     // Path B — snapshot-quantizer adoption (no tail deltas): the
     // persisting restore would rewrite the generation's ensemble.
-    val ppathB = java.nio.file.Files.createTempDirectory("graft_ro_logB").toString
-    val m1b = new Streaming.IvfMaintainer(seed, rebuildWhen = _ => false,
-      persistPath = Some(ppathB))
-    m1b.applyBatch(degraded.toDF("vec_id", "embedding"), 0L)
-    m1b.compactLog()
+    val ppathB = copyLog(degradedLogB, "graft_ro_logB")
     val beforeB = logListing(ppathB)
-    val m3 = Streaming.IvfMaintainer.restore(spark, ppathB,
+    val m3 = IvfMaintainer.restore(spark, ppathB,
       rebuildWhen = _ => true, persistRebuild = false)
     assert(m3.rebuilds == 1,
       "read-only snapshot restore skipped the degraded-geometry re-cluster")
@@ -817,8 +761,7 @@ class StreamingSpec extends AnyFunSuite {
       "restore(persistRebuild = false) rewrote the quantizer ensemble")
     // and the log still restores for the next owner: a later OWNING
     // restore persists the re-cluster as before (the default contract)
-    val m4 = Streaming.IvfMaintainer.restore(spark, ppathB,
-      rebuildWhen = _ => true)
+    val m4 = IvfMaintainer.restore(spark, ppathB, rebuildWhen = _ => true)
     assert(m4.rebuilds == 1 && logListing(ppathB) != beforeB,
       "the owning restore no longer persists the re-cluster")
   }
@@ -829,23 +772,14 @@ class StreamingSpec extends AnyFunSuite {
     // would see a 'new' head and a cadenced compaction would rewrite
     // the full corpus + quantizer for byte-identical content.
     val rnd = new scala.util.Random(79)
-    def unit(): Seq[Float] = {
-      val v = Array.fill(16)(rnd.nextGaussian())
-      val n = math.sqrt(v.map(x => x * x).sum)
-      v.map(x => (x / n).toFloat).toSeq
-    }
-    val seed = (0L until 32L).map(i => (i, unit())).toDF("vec_id", "embedding")
-      .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
-      .withColumn("nrm", sqrt(graft.functions.GraftFunctions.dot(col("emb"), col("emb"))))
-      .drop("embedding")
-    val ppath = java.nio.file.Files.createTempDirectory("graft_noop_cmp").toString
-    val m = new Streaming.IvfMaintainer(seed, rebuildWhen = _ => false,
-      persistPath = Some(ppath))
-    m.applyBatch((100L until 110L).map(i => (i, unit())).toDF("vec_id", "embedding"), 0L)
+    def vecs(ids: Seq[Long]) = ids.map(i => (i, unitVec(rnd, 16).toSeq))
+    val ppath = tmp("graft_noop_cmp")
+    val m = new IvfMaintainer(
+      IvfAnn.prepEmbeddings(vecs(0L until 32L).toDF("vec_id", "embedding")),
+      rebuildWhen = _ => false, persistPath = Some(ppath))
+    m.applyBatch(vecs(100L until 110L).toDF("vec_id", "embedding"), 0L)
     m.compactLog()
-    val fs = new org.apache.hadoop.fs.Path(ppath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/compact/0/_SUCCESS")))
+    assert(exists(ppath, "compact/0/_SUCCESS"))
     // an empty delivery advances the idempotence head but applies no data
     m.applyBatch(Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding"), 1L)
     val before = logListing(ppath)
@@ -854,148 +788,114 @@ class StreamingSpec extends AnyFunSuite {
       "compactLog after an empty batch rewrote the log for identical content")
     // a real batch re-opens the gate: the next compaction advances the
     // generation and retires the old one
-    m.applyBatch((110L until 120L).map(i => (i, unit())).toDF("vec_id", "embedding"), 2L)
+    m.applyBatch(vecs(110L until 120L).toDF("vec_id", "embedding"), 2L)
     m.compactLog()
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/compact/2/_SUCCESS"))
-      && !fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/compact/0")),
+    assert(exists(ppath, "compact/2/_SUCCESS") && !exists(ppath, "compact/0"),
       "a data batch after the empty one did not re-open the compaction gate")
     assert(m.corpus.count() == 32 + 20)
   }
 
   test("IvfMaintainer: compactLog collapses the covered deltas; restore from snapshot + later deltas ≡ uninterrupted") {
-    ivfCompactionLaw(java.nio.file.Files.createTempDirectory("graft_cmp_log").toString)
+    ivfCompactionLaw(tmp("graft_cmp_log"))
   }
 
   /** The compaction law, parameterized by the persist-log location so it
     * runs unchanged on file:// (the temp-dir test above) AND on a second
-    * registered FileSystem scheme (the graftfs:// test below — VERDICT
-    * r12 #1). */
+    * registered FileSystem scheme (the graftfs:// test below). */
   private def ivfCompactionLaw(ppath: String): Unit = {
-    import graft.operators.IvfAnn
-    val dir = "/root/testdata/sf0.001"
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = math.max(1L, (nTotal - cut) / 3)
-    val raw = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
     def chunk(i: Long) = raw.filter(col("vec_id") >= cut + i * k &&
       (if (i == 2) lit(true) else col("vec_id") < cut + (i + 1) * k))
-    val m1 = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
+    val m1 = new IvfMaintainer(full.filter(col("vec_id") < cut),
       rebuildWhen = _ => false, persistPath = Some(ppath))
     m1.applyBatch(chunk(0), 0L)
     m1.applyBatch(chunk(1), 1L)
     m1.compactLog()
-    val fs = new org.apache.hadoop.fs.Path(ppath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/compact/1/_SUCCESS")),
+    assert(exists(ppath, "compact/1/_SUCCESS"),
       "compaction snapshot missing or incomplete")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/delta/0"))
-      && !fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/delta/1")),
+    assert(!exists(ppath, "delta/0") && !exists(ppath, "delta/1"),
       "compaction left the deltas it covers")
     // a post-compaction delta lands in the (now mostly empty) delta log
     m1.applyBatch(chunk(2), 2L)
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == nTotal,
       "restore from snapshot + later deltas lost vectors")
     // search parity vs from-scratch rebuild (the kill/resume law's bar)
-    val queries = full.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
-    val viaRestored = IvfAnn.boundedTopK(m2.corpus, queries, 5,
-      Some(m2.index))._2.as[(Long, Int, Long)].collect().toSeq
-    val viaRebuild = IvfAnn.boundedTopK(full, queries, 5,
-      Some(IvfAnn.buildIndex(full)))._2
-      .as[(Long, Int, Long)].collect().toSeq
-    assert(viaRestored.nonEmpty && viaRestored == viaRebuild)
+    val viaRestored = top5(m2.corpus, m2.index)
+    assert(viaRestored.nonEmpty && viaRestored == rebuiltAnswers)
     // the idempotence guard resumed at the post-compaction head: a
     // mispaired batch 0 on the first post-restore delivery still throws
     val ex = intercept[IllegalArgumentException] {
       m2.applyBatch(chunk(0), 0L)
     }
     assert(ex.getMessage.contains("checkpointLocation"))
-    // compacting a RESTORED maintainer (review r12): its corpus still
-    // references the delta parquet files as un-checkpointed lineage
-    // leaves, so compactLog must re-root the live frames on the new
-    // snapshot BEFORE deleting those files — the actions below threw
-    // FileNotFoundException before the fix
+    // compacting a RESTORED maintainer: its corpus still references the
+    // delta parquet files as un-checkpointed lineage leaves, so
+    // compactLog must re-root the live frames on the new snapshot
+    // BEFORE deleting those files (else FileNotFoundException below)
     m2.compactLog()
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/delta/2"))
-      && fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/compact/2/_SUCCESS"))
-      && !fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/compact/1")),
+    assert(!exists(ppath, "delta/2") && exists(ppath, "compact/2/_SUCCESS")
+      && !exists(ppath, "compact/1"),
       "second compaction did not advance the generation")
     assert(m2.corpus.count() == nTotal,
       "post-compaction corpus lost its lineage to the deleted deltas")
-    assert(IvfAnn.boundedTopK(m2.corpus, queries, 5, Some(m2.index))._2
-      .as[(Long, Int, Long)].collect().toSeq == viaRebuild,
+    assert(top5(m2.corpus, m2.index) == rebuiltAnswers,
       "post-compaction search through the live index diverged")
     // re-compaction at the same head is a no-op that must NOT touch
     // the completed snapshot (the crash-window guard)
     m2.compactLog()
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/compact/2/_SUCCESS")))
-    val m3 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    assert(exists(ppath, "compact/2/_SUCCESS"))
+    val m3 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m3.corpus.count() == nTotal)
-    // round 13: each generation also logs its quantizer (retired with
-    // the generation), and a snapshot restore ADOPTS it — read, never
-    // re-learned (RESTORE100X measured the re-learn at ~4× the read at
-    // 600k vectors). Adoption is provable from the geometry: m1's
+    // each generation also logs its quantizer (retired with the
+    // generation), and a snapshot restore ADOPTS it — read, never
+    // re-learned. Adoption is provable from the geometry: m1's
     // quantizer was LEARNED on the seed half and only radius-extended
     // by the appends, so a re-learn over the full corpus would move the
     // centroids — bit-exact cmeta equality + a zero rebuild count pin
     // the read path.
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/quantizer/2/_SUCCESS")),
+    assert(exists(ppath, "quantizer/2/_SUCCESS"),
       "compaction did not log its quantizer")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/quantizer/1")),
+    assert(!exists(ppath, "quantizer/1"),
       "the superseded quantizer generation survived")
-    val wantC = m2.index.cmeta.collect().map(_.toString).sorted.toSeq
-    val gotC = m3.index.cmeta.collect().map(_.toString).sorted.toSeq
-    assert(gotC == wantC,
+    assert(cmetaRows(m3.index) == cmetaRows(m2.index),
       "snapshot restore re-learned (or corrupted) the logged quantizer")
     assert(m3.rebuilds == 0)
     assert((m3.index.nlist, m3.index.nprobe) == ((m2.index.nlist, m2.index.nprobe)),
       "logged probe constants diverged")
-    // review r13, pass 2: a generation whose ensemble write crashed
-    // (no marker) must be REPAIRABLE — restore falls back to the
-    // re-learn (correct, just slower), must NOT seed the no-op gate,
-    // and the first compactLog at that head rewrites the missing
-    // ensemble so later restarts stop re-paying the re-learn.
-    fs.delete(new org.apache.hadoop.fs.Path(s"$ppath/quantizer/2/_SUCCESS"), false)
-    val m5 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    // a generation whose ensemble write crashed (no marker) must be
+    // REPAIRABLE — restore falls back to the re-learn (correct, just
+    // slower), must NOT seed the no-op gate, and the first compactLog
+    // at that head rewrites the missing ensemble so later restarts stop
+    // re-paying the re-learn.
+    fsFor(ppath).delete(new org.apache.hadoop.fs.Path(s"$ppath/quantizer/2/_SUCCESS"), false)
+    val m5 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m5.corpus.count() == nTotal)
     m5.compactLog()
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/quantizer/2/_SUCCESS")),
+    assert(exists(ppath, "quantizer/2/_SUCCESS"),
       "crash-incomplete ensemble was never repaired by the next compaction")
-    val m6 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
-    assert(m6.rebuilds == 0
-      && m6.index.cmeta.collect().map(_.toString).sorted.toSeq
-        == m5.index.cmeta.collect().map(_.toString).sorted.toSeq,
+    val m6 = IvfMaintainer.restore(spark, ppath, _ => false)
+    assert(m6.rebuilds == 0 && cmetaRows(m6.index) == cmetaRows(m5.index),
       "the repaired ensemble was not adopted")
-    assert(IvfAnn.boundedTopK(m6.corpus, queries, 5, Some(m6.index))._2
-      .as[(Long, Int, Long)].collect().toSeq == viaRebuild,
+    assert(top5(m6.corpus, m6.index) == rebuiltAnswers,
       "search through the repaired-ensemble index diverged")
   }
 
   test("IvfMaintainer: a re-delivered batchId is a no-op (at-least-once idempotence)") {
-    import graft.operators.IvfAnn
-    val dir = "/root/testdata/sf0.001"
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
+    val m = new IvfMaintainer(full.filter(col("vec_id") < cut),
       rebuildWhen = _ => false)
-    val arriving = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter(col("vec_id") >= cut)
-      .select(col("vec_id"), col("embedding"))
+    val batch = raw.filter(col("vec_id") >= cut)
     // foreachBatch re-invokes the handler with the SAME batchId after a
     // pre-commit failure; the guard must make the second apply a no-op,
     // or corpus/index would carry duplicate vec_ids.
-    m.applyBatch(arriving, 0L)
+    m.applyBatch(batch, 0L)
     val afterFirst = (m.corpus.count(), m.index.assigned.count())
     assert(afterFirst == ((nTotal, nTotal)), "first apply incomplete")
-    m.applyBatch(arriving, 0L) // re-delivery
+    m.applyBatch(batch, 0L) // re-delivery
     assert((m.corpus.count(), m.index.assigned.count()) == afterFirst,
       "re-delivered batch mutated maintainer state")
     // a LOWER batchId (stale replay) is equally a no-op
-    m.applyBatch(arriving.limit(3), -1L)
+    m.applyBatch(batch.limit(3), -1L)
     assert((m.corpus.count(), m.index.assigned.count()) == afterFirst)
     // distinctness law: no vec_id appears twice after the re-delivery
     assert(m.index.assigned.select("vec_id").distinct().count() == nTotal)
@@ -1003,7 +903,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming ANN: micro-batched query stream equals batch q67 on the same index") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
     // Batch anchor: q67's exact IVF top-5 for queries vec_id < 10.
     val expect = SparkEntry.queries("q67_ann_ivf")(spark, dir)
       .as[(Long, Int, Long)].collect().toSet
@@ -1034,16 +933,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("MixturePlanner: replayed corpus plan == batch q289; re-delivered batch is a no-op") {
-    val dir = "/root/testdata/sf0.001"
-    val want = SparkEntry.queries("q289_temperature_mixture")(spark, dir)
-      .as[(String, Long, Long, Long, Long)].collect().toSeq
+    val want = q289
     assert(want.nonEmpty, "batch q289 produced no rows — vacuous")
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .as[(Long, String, String)].collect().toSeq.sortBy(_._1)
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String, String)]
-    val m = new Streaming.MixturePlanner(spark)
+    val m = new MixturePlanner(spark)
     val q = m.start(mem.toDS().toDF("doc_id", "text", "source"))
     try {
       docs.grouped(250).foreach { c => mem.addData(c); q.processAllAvailable() }
@@ -1061,16 +955,6 @@ class StreamingSpec extends AnyFunSuite {
   // with no lost state and no double emission beyond the documented
   // Update-mode contract; the driver-held maintainers must survive via
   // their persist/restore logs.
-
-  private def withRocksDB[A](f: => A): A = {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
 
   test("upsertStream: ValueState survives a checkpoint kill/resume (stale replays stay absorbed)") {
     implicit val sqlCtx = spark.sqlContext
@@ -1124,9 +1008,7 @@ class StreamingSpec extends AnyFunSuite {
           b.collect().foreach(sink.add))
         .option("checkpointLocation", ckpt)
         .outputMode(OutputMode.Update).start()
-      val evs = fixtureEvents
-        .sortBy(e => (e.ts.getEpochSecond, e.ts.getNano, e.event_id))
-        .map(e => FunnelEvent(e.user_id, e.event_type, java.sql.Timestamp.from(e.ts)))
+      val evs = funnelEvents
       val half = evs.size / 2
       val q1 = startQ()
       try { mem.addData(evs.take(half)); q1.processAllAvailable() } finally q1.stop()
@@ -1140,21 +1022,8 @@ class StreamingSpec extends AnyFunSuite {
         // emissions stuck below and pre-restart ones short of the end
         // state, so either way some user diverges)
         import scala.jdk.CollectionConverters._
-        val streamed = sink.asScala.toSeq
-          .groupBy(_.user_id).map { case (u, rs) => u -> rs.maxBy(_.stage) }
-        val batch = SparkEntry.queries("q93_funnel")(spark, "/root/testdata/sf0.001")
-          .select(col("user_id"),
-            coalesce(unix_micros(col("v_ts").cast("timestamp")), lit(-1L)).as("v"),
-            coalesce(unix_micros(col("c_ts").cast("timestamp")), lit(-1L)).as("c"),
-            coalesce(unix_micros(col("p_ts").cast("timestamp")), lit(-1L)).as("p"),
-            col("stage"))
-          .as[(Long, Long, Long, Long, Int)].collect()
-        assert(streamed.keySet == batch.map(_._1).toSet)
-        batch.foreach { case (u, v, c, p, st) =>
-          val r = streamed(u)
-          assert((r.v_us, r.c_us, r.p_us, r.stage) == ((v, c, p, st)),
-            s"user $u: streamed $r vs batch ($v,$c,$p,$st)")
-        }
+        assertFunnelParity(sink.asScala.toSeq
+          .groupBy(_.user_id).map { case (u, rs) => u -> rs.maxBy(_.stage) })
       } finally q2.stop()
     }
   }
@@ -1162,31 +1031,13 @@ class StreamingSpec extends AnyFunSuite {
   test("nearDupStream: kill/resume == batch q44; state footprint matches uninterrupted run") {
     implicit val sqlCtx = spark.sqlContext
     withRocksDB {
-      // the q44-parity planted corpus: 10 families × 3 near-dup docs +
-      // 10 solo docs; the restart cut splits EVERY family across the
-      // kill (member 0 pre-kill; members 1,2 post-resume), so every
-      // cross-member pair only exists if the band-bucket ListState
-      // recovered from the checkpoint
-      def word(f: Int, i: Int) = s"w${math.abs((f * 131 + i) * 2654435761L % 7919)}_$f"
-      val docs: Seq[(Long, String)] =
-        (0 until 10).flatMap { f =>
-          val base = (0 until 40).map(i => word(f, i))
-          (0 until 3).map { m =>
-            val id = (f * 3 + m).toLong
-            val words = if (m == 0) base else base.updated(7 * m, s"mut_${id}")
-            (id, words.mkString(" "))
-          }
-        } ++ (100L until 110L).map(id =>
-          (id, (0 until 40).map(i => s"solo${id}_$i").mkString(" ")))
-      val dir = java.nio.file.Files.createTempDirectory("graft_rndd").toString
-      docs.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
-        .toDF("doc_id", "text", "lang", "source", "n_chars")
-        .coalesce(1).write.parquet(s"$dir/documents.parquet")
-      val expect = SparkEntry.queries("q44_minhash_lsh")(spark, dir)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(expect.nonEmpty, "planted corpus produced no batch pairs — vacuous")
-      val preKill = docs.filter { case (id, _) => id >= 100L || id % 3 == 0 }
-      val postResume = docs.filterNot(preKill.contains)
+      // the q44-parity planted corpus; the restart cut splits EVERY
+      // family across the kill (member 0 pre-kill; members 1,2
+      // post-resume), so every cross-member pair only exists if the
+      // band-bucket ListState recovered from the checkpoint
+      val expect = q44Pairs
+      val preKill = nearDupDocs.filter { case (id, _) => id >= 100L || id % 3 == 0 }
+      val postResume = nearDupDocs.filterNot(preKill.contains)
       val ttl = java.time.Duration.ofDays(1) // no eviction inside the test
 
       def stateRows(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
@@ -1328,7 +1179,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("IvfMaintainer: kill + restore from persist log + checkpoint resume ≡ uninterrupted") {
-    ivfKillResumeLaw(java.nio.file.Files.createTempDirectory("graft_ivfm_log").toString)
+    ivfKillResumeLaw(tmp("graft_ivfm_log"))
   }
 
   /** The kill/resume law, parameterized by the persist-log location
@@ -1337,24 +1188,15 @@ class StreamingSpec extends AnyFunSuite {
     * log is scheme-portable; Spark owns the checkpoint's FS contract). */
   private def ivfKillResumeLaw(ppath: String): Unit = {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.IvfAnn
-    val dir = "/root/testdata/sf0.001"
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ivfm_ckpt").toString
-    val arriving = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter(col("vec_id") >= cut)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().toSeq
+    val ckpt = tmp("graft_ivfm_ckpt")
     val chunks = arriving.grouped(math.max(1, arriving.size / 3)).toSeq
     val mem = MemoryStream[(Long, Seq[Float])]
-    val m1 = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
+    val m1 = new IvfMaintainer(full.filter(col("vec_id") < cut),
       rebuildWhen = _ => false, persistPath = Some(ppath))
     val q1 = m1.start(mem.toDS().toDF("vec_id", "embedding"), Some(ckpt))
     try { mem.addData(chunks.head); q1.processAllAvailable() } finally q1.stop()
     // driver restart: m1's in-JVM refs are gone; restore from the log
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == cut + chunks.head.size,
       "restore lost the logged first-segment delta")
     val q2 = m2.start(mem.toDS().toDF("vec_id", "embedding"), Some(ckpt))
@@ -1366,19 +1208,13 @@ class StreamingSpec extends AnyFunSuite {
       // ≡ uninterrupted: exact answers through the restored+resumed
       // index equal a from-scratch rebuild over the same corpus (the
       // same law the uninterrupted maintainer test pins)
-      val queries = full.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
-      val viaRestored = IvfAnn.boundedTopK(m2.corpus, queries, 5,
-        Some(m2.index))._2.as[(Long, Int, Long)].collect().toSeq
-      val viaRebuild = IvfAnn.boundedTopK(full, queries, 5,
-        Some(IvfAnn.buildIndex(full)))._2
-        .as[(Long, Int, Long)].collect().toSeq
-      assert(viaRestored.nonEmpty && viaRestored == viaRebuild)
+      val viaRestored = top5(m2.corpus, m2.index)
+      assert(viaRestored.nonEmpty && viaRestored == rebuiltAnswers)
     } finally q2.stop()
   }
 
   test("MixturePlanner: kill + restore from snapshot + checkpoint resume == batch q289") {
-    mixKillResumeLaw(java.nio.file.Files.createTempDirectory("graft_mix_log").toString)
+    mixKillResumeLaw(tmp("graft_mix_log"))
   }
 
   /** The MixturePlanner kill/resume law, parameterized by the
@@ -1387,25 +1223,20 @@ class StreamingSpec extends AnyFunSuite {
     * run on whichever scheme the caller passes. */
   private def mixKillResumeLaw(ppath: String): Unit = {
     implicit val sqlCtx = spark.sqlContext
-    val dir = "/root/testdata/sf0.001"
-    val want = SparkEntry.queries("q289_temperature_mixture")(spark, dir)
-      .as[(String, Long, Long, Long, Long)].collect().toSeq
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"), col("source"))
-      .as[(Long, String, String)].collect().toSeq.sortBy(_._1)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mix_ckpt").toString
+    val want = q289
+    val ckpt = tmp("graft_mix_ckpt")
     // ≥4 chunks regardless of fixture size: the resumed query must
     // process real post-restore batches (they consume the resume-
     // pairing guard; the stale-replay no-op below is only the contract
     // AFTER a legitimate first batch)
     val chunks = docs.grouped(math.max(1, docs.size / 4)).toSeq
     val mem = MemoryStream[(Long, String, String)]
-    val m1 = new Streaming.MixturePlanner(spark, Some(ppath))
+    val m1 = new MixturePlanner(spark, Some(ppath))
     val q1 = m1.start(mem.toDS().toDF("doc_id", "text", "source"), Some(ckpt))
     try {
       chunks.take(2).foreach { c => mem.addData(c); q1.processAllAvailable() }
     } finally q1.stop()
-    val m2 = Streaming.MixturePlanner.restore(spark, ppath)
+    val m2 = MixturePlanner.restore(spark, ppath)
     assert(m2.counts.count() > 0, "restore found no snapshot")
     val q2 = m2.start(mem.toDS().toDF("doc_id", "text", "source"), Some(ckpt))
     try {
@@ -1422,7 +1253,7 @@ class StreamingSpec extends AnyFunSuite {
     // restored planner whose first delivery regresses below the
     // snapshot id was resumed without its checkpoint — it must throw,
     // not silently drop the data through the idempotence guard
-    val m3 = Streaming.MixturePlanner.restore(spark, ppath)
+    val m3 = MixturePlanner.restore(spark, ppath)
     val ex = intercept[IllegalArgumentException] {
       m3.applyBatch(chunks.head.toDF("doc_id", "text", "source"), 0L)
     }
@@ -1430,63 +1261,55 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("IvfMaintainer guards: fresh construction refuses a used log; foreign dirs don't break restore") {
-    import graft.operators.IvfAnn
-    val dir = "/root/testdata/sf0.001"
-    val seed = IvfAnn.fullCorpus(spark, dir).filter(col("vec_id") < 64)
-    val ppath = java.nio.file.Files.createTempDirectory("graft_guard_ivfm").toString
-    val m1 = new Streaming.IvfMaintainer(seed, _ => false, persistPath = Some(ppath))
+    val seed = full.filter(col("vec_id") < 64)
+    val ppath = tmp("graft_guard_ivfm")
+    val m1 = new IvfMaintainer(seed, _ => false, persistPath = Some(ppath))
     // ADVICE r11 (medium): a FRESH maintainer pointed at a path that
     // already holds a completed log must throw, not silently adopt the
     // stale seed and produce a two-run chimera on the next restore.
     val ex1 = intercept[IllegalArgumentException] {
-      new Streaming.IvfMaintainer(seed, _ => false, persistPath = Some(ppath))
+      new IvfMaintainer(seed, _ => false, persistPath = Some(ppath))
     }
     assert(ex1.getMessage.contains("restore"))
     // one real delta, then FOREIGN dirs planted in the delta log — a
     // non-numeric name and an all-digit name too long for a Long (a
     // `[0-9]+` filter followed by toLong threw NumberFormatException on
     // it). The walk must skip both (and their _SUCCESS) entirely.
-    val batch = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter(col("vec_id") >= 64 && col("vec_id") < 96)
-      .select(col("vec_id"), col("embedding"))
-    m1.applyBatch(batch, 0L)
-    val fs = new org.apache.hadoop.fs.Path(ppath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    m1.applyBatch(raw.filter(col("vec_id") >= 64 && col("vec_id") < 96), 0L)
+    val fs = fsFor(ppath)
     val foreign = Seq("stray", "99999999999999999999")
     foreign.foreach(n => fs.create(
       new org.apache.hadoop.fs.Path(s"$ppath/delta/$n/_SUCCESS"), true).close())
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == 64 + 32,
       "restore over a log with a foreign dir lost the real delta")
     // compaction's deletion passes walk the same dir: they must retire
     // the covered delta and leave every foreign dir in place
     assert(m2.compactLog())
-    foreign.foreach(n => assert(
-      fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/delta/$n")),
+    foreign.foreach(n => assert(exists(ppath, s"delta/$n"),
       s"compactLog deleted the foreign dir delta/$n"))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/delta/0")))
-    assert(Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    assert(!exists(ppath, "delta/0"))
+    assert(IvfMaintainer.restore(spark, ppath, _ => false)
       .corpus.count() == 64 + 32,
       "restore after compacting past foreign dirs lost data")
   }
 
   test("MixturePlanner guards: used-log refusal, checkpoint pairing at start(), crash-debris retention") {
     implicit val sqlCtx = spark.sqlContext
-    val ppath = java.nio.file.Files.createTempDirectory("graft_guard_mix").toString
-    val ckptA = java.nio.file.Files.createTempDirectory("graft_guard_ckA").toString
-    val ckptB = java.nio.file.Files.createTempDirectory("graft_guard_ckB").toString
+    val ppath = tmp("graft_guard_mix")
+    val ckptA = tmp("graft_guard_ckA")
+    val ckptB = tmp("graft_guard_ckB")
     // crash debris: a numeric snapshot dir with no _SUCCESS (a write
     // that died mid-flight before any snapshot completed). It must not
     // block fresh construction (nothing completed) and must be retired
     // by the retention pass once real snapshots exist (ADVICE r11: the
     // completed-only walk left unmarked dirs to accumulate forever).
-    val fs = new org.apache.hadoop.fs.Path(ppath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = fsFor(ppath)
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$ppath/counts/7"))
     // a non-numeric foreign dir is NOT ours to delete — must survive
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$ppath/counts/keepme"))
     val mem = MemoryStream[(Long, String, String)]
-    val m1 = new Streaming.MixturePlanner(spark, Some(ppath))
+    val m1 = new MixturePlanner(spark, Some(ppath))
     val q1 = m1.start(mem.toDS().toDF("doc_id", "text", "source"), Some(ckptA))
     try {
       // three singleton batches: retention keeps the two newest
@@ -1496,19 +1319,19 @@ class StreamingSpec extends AnyFunSuite {
         mem.addData(Seq((i, "a b c", "s"))); q1.processAllAvailable()
       }
     } finally q1.stop()
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/counts/7")),
+    assert(!exists(ppath, "counts/7"),
       "unmarked crash-debris snapshot dir survived retention")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/counts/keepme")),
+    assert(exists(ppath, "counts/keepme"),
       "retention deleted a foreign non-numeric dir")
     // fresh construction over a log with completed snapshots → throw
     val exF = intercept[IllegalArgumentException] {
-      new Streaming.MixturePlanner(spark, Some(ppath))
+      new MixturePlanner(spark, Some(ppath))
     }
     assert(exF.getMessage.contains("restore"))
     // ADVICE r11 (low): the batch-id guard can't catch a mispaired
     // resume when only one batch was ever logged — the structural
     // pairing record catches it at start(), before any data flows.
-    val m2 = Streaming.MixturePlanner.restore(spark, ppath)
+    val m2 = MixturePlanner.restore(spark, ppath)
     val exB = intercept[IllegalArgumentException] {
       m2.start(mem.toDS().toDF("doc_id", "text", "source"), Some(ckptB))
     }
@@ -1533,11 +1356,11 @@ class StreamingSpec extends AnyFunSuite {
     // idempotence guard. The round-12 review found the (Some, None) and
     // (None, None) pairing arms passed this case; both must throw.
     implicit val sqlCtx = spark.sqlContext
-    val ppath = java.nio.file.Files.createTempDirectory("graft_unpaired").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_unpaired_ck").toString
-    val m = new Streaming.MixturePlanner(spark, Some(ppath))
+    val ppath = tmp("graft_unpaired")
+    val ckpt = tmp("graft_unpaired_ck")
+    val m = new MixturePlanner(spark, Some(ppath))
     m.applyBatch(Seq((1L, "a b", "s")).toDF("doc_id", "text", "source"), 0L)
-    val m2 = Streaming.MixturePlanner.restore(spark, ppath)
+    val m2 = MixturePlanner.restore(spark, ppath)
     val mem = MemoryStream[(Long, String, String)]
     val exCk = intercept[IllegalArgumentException] {
       m2.start(mem.toDS().toDF("doc_id", "text", "source"), Some(ckpt))
@@ -1589,20 +1412,11 @@ class StreamingSpec extends AnyFunSuite {
     // consistent (corpus, lastBatch) pair: zero lost vectors, search
     // parity, restore from the live-compacted log, guard resumption.
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.IvfAnn
-    val dir = "/root/testdata/sf0.001"
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
-    val ppath = java.nio.file.Files.createTempDirectory("graft_livecmp").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_livecmp_ck").toString
-    val arriving = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter(col("vec_id") >= cut)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])].collect().toSeq
+    val ppath = tmp("graft_livecmp")
+    val ckpt = tmp("graft_livecmp_ck")
     val chunks = arriving.grouped(math.max(1, arriving.size / 6)).toSeq
     val mem = MemoryStream[(Long, Seq[Float])]
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
+    val m = new IvfMaintainer(full.filter(col("vec_id") < cut),
       rebuildWhen = _ => false, persistPath = Some(ppath))
     val q = m.start(mem.toDS().toDF("vec_id", "embedding"), Some(ckpt))
     val stopFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -1627,23 +1441,16 @@ class StreamingSpec extends AnyFunSuite {
     assert(m.corpus.count() == nTotal,
       "concurrent compaction lost (or duplicated) streamed vectors")
     assert(m.index.assigned.select("vec_id").distinct().count() == nTotal)
-    val queries = full.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
-    val viaRebuild = IvfAnn.boundedTopK(full, queries, 5,
-      Some(IvfAnn.buildIndex(full)))._2
-      .as[(Long, Int, Long)].collect().toSeq
-    assert(IvfAnn.boundedTopK(m.corpus, queries, 5, Some(m.index))._2
-      .as[(Long, Int, Long)].collect().toSeq == viaRebuild,
+    assert(top5(m.corpus, m.index) == rebuiltAnswers,
       "search through the live-compacted index diverged from a rebuild")
     // one final deterministic compaction, then the restore path: the
     // log a concurrently-compacted run leaves behind must restore to
     // the identical corpus and answers
     m.compactLog()
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false)
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m2.corpus.count() == nTotal,
       "restore from the live-compacted log lost vectors")
-    assert(IvfAnn.boundedTopK(m2.corpus, queries, 5, Some(m2.index))._2
-      .as[(Long, Int, Long)].collect().toSeq == viaRebuild)
+    assert(top5(m2.corpus, m2.index) == rebuiltAnswers)
     // guard resumption: the restored maintainer still rejects a
     // mispaired first delivery (batch ids restart below the head)
     val ex = intercept[IllegalArgumentException] {
@@ -1653,72 +1460,55 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("IvfMaintainer: opt-in compactLogEvery compacts the durable log on its own cadence") {
-    import graft.operators.IvfAnn
-    val dir = "/root/testdata/sf0.001"
-    val full = IvfAnn.fullCorpus(spark, dir)
-    val nTotal = full.count()
-    val cut = nTotal / 2
     val k = math.max(1L, (nTotal - cut) / 5)
-    val raw = spark.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
     def chunk(i: Long) = raw.filter(col("vec_id") >= cut + i * k &&
       (if (i == 4) lit(true) else col("vec_id") < cut + (i + 1) * k))
-    val ppath = java.nio.file.Files.createTempDirectory("graft_cle_log").toString
-    val m = new Streaming.IvfMaintainer(full.filter(col("vec_id") < cut),
+    val ppath = tmp("graft_cle_log")
+    val m = new IvfMaintainer(full.filter(col("vec_id") < cut),
       rebuildWhen = _ => false, persistPath = Some(ppath),
       compactLogEvery = 2)
-    val fs = new org.apache.hadoop.fs.Path(ppath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s"$ppath/$s")
     (0L to 4L).foreach(i => m.applyBatch(chunk(i), i))
     // cadence 2 over 5 non-empty batches → generations at batch 1 and
     // 3 (each retiring the previous), batch 4's delta still live
-    assert(fs.exists(p("compact/3/_SUCCESS")),
+    assert(exists(ppath, "compact/3/_SUCCESS"),
       "compactLogEvery=2 did not produce the batch-3 generation")
-    assert(!fs.exists(p("compact/1")),
+    assert(!exists(ppath, "compact/1"),
       "the superseded batch-1 generation survived")
-    assert(!fs.exists(p("delta/2")) && !fs.exists(p("delta/3")),
+    assert(!exists(ppath, "delta/2") && !exists(ppath, "delta/3"),
       "covered deltas survived the cadence compaction")
-    assert(fs.exists(p("delta/4/_SUCCESS")),
+    assert(exists(ppath, "delta/4/_SUCCESS"),
       "the post-compaction delta is missing")
     // restore sees snapshot + tail delta; search parity as always
-    val m2 = Streaming.IvfMaintainer.restore(spark, ppath, _ => false,
+    val m2 = IvfMaintainer.restore(spark, ppath, _ => false,
       compactLogEvery = 2)
     assert(m2.corpus.count() == nTotal)
-    val queries = full.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
-    assert(IvfAnn.boundedTopK(m2.corpus, queries, 5, Some(m2.index))._2
-      .as[(Long, Int, Long)].collect().toSeq
-      == IvfAnn.boundedTopK(full, queries, 5,
-        Some(IvfAnn.buildIndex(full)))._2
-        .as[(Long, Int, Long)].collect().toSeq)
+    assert(top5(m2.corpus, m2.index) == rebuiltAnswers)
   }
 
   test("MixturePlanner: fresh construction over a snapshot-free crashed log clears the stale pairing record — only once its checkpoint is gone (ADVICE r12 + review r13)") {
     implicit val sqlCtx = spark.sqlContext
-    val ppath = java.nio.file.Files.createTempDirectory("graft_stale_pair").toString
-    val ckptA = java.nio.file.Files.createTempDirectory("graft_stale_ckA").toString
-    val ckptB = java.nio.file.Files.createTempDirectory("graft_stale_ckB").toString
-    val ckptC = java.nio.file.Files.createTempDirectory("graft_stale_ckC").toString
-    val fs = new org.apache.hadoop.fs.Path(ppath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ppath = tmp("graft_stale_pair")
+    val ckptA = tmp("graft_stale_ckA")
+    val ckptB = tmp("graft_stale_ckB")
+    val ckptC = tmp("graft_stale_ckC")
+    val fs = fsFor(ppath)
     // A record-FREE log with in-flight (unmarked) snapshot dirs is NOT
     // cleaned (review r13, pass 3): an unpaired run fed by applyBatch
     // directly never writes pairing.txt, so its mid-write snapshot is
     // indistinguishable from dead debris — a fresh planner must leave
     // it alone (dead debris is retired by the retention pass later).
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$ppath/counts/7"))
-    new Streaming.MixturePlanner(spark, Some(ppath))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/counts/7")),
+    new MixturePlanner(spark, Some(ppath))
+    assert(exists(ppath, "counts/7"),
       "fresh construction over a record-free log deleted an in-flight " +
         "unpaired run's snapshot dir")
     fs.delete(new org.apache.hadoop.fs.Path(s"$ppath/counts/7"), true)
     // run 1: start() records the pairing, then "crashes" before any
     // snapshot completes (no batch ever flows)
     val mem = MemoryStream[(Long, String, String)]
-    val m1 = new Streaming.MixturePlanner(spark, Some(ppath))
+    val m1 = new MixturePlanner(spark, Some(ppath))
     m1.start(mem.toDS().toDF("doc_id", "text", "source"), Some(ckptA)).stop()
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/pairing.txt")),
+    assert(exists(ppath, "pairing.txt"),
       "run 1 never recorded its pairing — fixture broken")
     // plant crash debris: a counts dir that never reached _SUCCESS
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$ppath/counts/3"))
@@ -1727,10 +1517,10 @@ class StreamingSpec extends AnyFunSuite {
     // planner constructs, but it must NOT clean the record, and its
     // start() with a new checkpoint must still throw the structural
     // mismatch.
-    val mLive = new Streaming.MixturePlanner(spark, Some(ppath))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/pairing.txt")),
+    val mLive = new MixturePlanner(spark, Some(ppath))
+    assert(exists(ppath, "pairing.txt"),
       "cleanup fired while the recorded checkpoint still existed")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/counts/3")),
+    assert(exists(ppath, "counts/3"),
       "debris cleanup fired while the recorded checkpoint still existed")
     val exLive = intercept[IllegalArgumentException] {
       mLive.start(mem.toDS().toDF("doc_id", "text", "source"), Some(ckptB))
@@ -1741,10 +1531,10 @@ class StreamingSpec extends AnyFunSuite {
     // record and the debris are cleared at construction and the new
     // pairing records cleanly.
     fs.delete(new org.apache.hadoop.fs.Path(ckptA), true)
-    val m2 = new Streaming.MixturePlanner(spark, Some(ppath))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/counts/3")),
+    val m2 = new MixturePlanner(spark, Some(ppath))
+    assert(!exists(ppath, "counts/3"),
       "fresh construction left the crash-debris snapshot dir")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$ppath/pairing.txt")),
+    assert(!exists(ppath, "pairing.txt"),
       "fresh construction left the dead run's pairing record")
     val q2 = m2.start(mem.toDS().toDF("doc_id", "text", "source"), Some(ckptB))
     try {
@@ -1753,7 +1543,7 @@ class StreamingSpec extends AnyFunSuite {
     } finally q2.stop()
     // and the NEW pairing is the one on record now: a third start with
     // a different checkpoint is the mispairing
-    val m3 = Streaming.MixturePlanner.restore(spark, ppath)
+    val m3 = MixturePlanner.restore(spark, ppath)
     val ex = intercept[IllegalArgumentException] {
       m3.start(mem.toDS().toDF("doc_id", "text", "source"), Some(ckptC))
     }
