@@ -1,8 +1,13 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.jdbc.JDBCOptions
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** The reference's whole extract pipeline, Spark-first.
   *
@@ -10,7 +15,11 @@ import org.apache.spark.sql.types._
   *  - A1/A3 JDBC range scan (`extractor.go:41-112`): [[jdbcRangeRead]] —
   *    Spark's partitioned JDBC read generates the identical
   *    `pk >= x AND pk < y` stride predicates per partition.
-  *  - A4 MIN/MAX planning query (`extractor.go:195-211`): [[keyBounds]].
+  *  - A4 MIN/MAX planning query (`extractor.go:195-211`):
+  *    [[sourceKeyBounds]] sends the reference's `SELECT MIN(pk), MAX(pk)`
+  *    down one driver-side connection, so the source answers it (MySQL
+  *    from the primary-key index) and no Spark job runs. [[keyBounds]]
+  *    computes the same bounds over a DataFrame.
   *  - A5 range partitioner with 10 000-key strides and `max+1` tail
   *    (`extractor.go:270-287`): [[stridePlan]] (driver-side math) and
   *    [[stridePlanDf]] (distributed, used by the oracle query).
@@ -76,18 +85,52 @@ object Extract {
     }
   }
 
-  /** A4: MIN/MAX of the primary key, the reference's
-    * `SELECT MIN(pk), MAX(pk)`. NOT pushed down on a `spark.read.jdbc`
-    * (DSv1) frame: it plans as a Spark HashAggregate over
-    * `Scan JDBCRelation [numPartitions=1]` with no pushed filters, so
-    * every key crosses one connection before the ranged read (the DSv2
-    * catalog of [[registerJdbcCatalog]] is the path that pushes it). An
-    * EMPTY table aggregates to null bounds → None: the caller extracts
-    * nothing (an empty span, matching the reference's no-slices path)
-    * instead of NPEing on Row.getLong(null). */
+  /** A4 over a DataFrame: MIN/MAX of `pk`, None when the frame is empty.
+    * On a `spark.read.jdbc` (DSv1) frame this is NOT pushed down: it
+    * plans as a Spark HashAggregate over `Scan JDBCRelation
+    * [numPartitions=1]`, so every key crosses one connection. The
+    * extract no longer uses it: it plans with [[sourceKeyBounds]]. This
+    * stays for frames that are not a JDBC table and for perfbench's
+    * `etl.bounds_s` probe. */
   def keyBounds(df: DataFrame, pk: String): Option[(Long, Long)] = {
     val row = df.agg(min(col(pk)).cast("long"), max(col(pk)).cast("long")).head()
     if (row.isNullAt(0)) None else Some((row.getLong(0), row.getLong(1)))
+  }
+
+  /** A4 at the source: the reference's `SELECT MIN(pk), MAX(pk) FROM
+    * table` on one driver-side connection, with no Spark job. The
+    * connection comes from the dialect's factory over the job's
+    * properties, and the job's `sessionInitStatement` runs first, as
+    * for the range read's connections. `primaryKey` is resolved against
+    * the table's columns case-insensitively and quoted by the dialect,
+    * as Spark resolves `partitionColumn`, so `id` finds a column stored
+    * as `ID`. An EMPTY table has NULL bounds → None: the caller extracts
+    * nothing (the reference's no-slices path). */
+  def sourceKeyBounds(job: TableJob): Option[(Long, Long)] = {
+    val options = new JDBCOptions(job.url, job.tableName,
+      job.properties.asScala.toMap)
+    val dialect = JdbcDialects.get(job.url)
+    Using.Manager { use =>
+      val conn = use(dialect.createConnectionFactory(options)(-1)) // -1: the driver
+      def statement(sql: String) = {
+        val st = use(conn.prepareStatement(sql))
+        st.setQueryTimeout(options.queryTimeout)
+        st
+      }
+      options.sessionInitStatement.foreach(statement(_).execute())
+      val md = use(statement(dialect.getSchemaQuery(job.tableName)).executeQuery()).getMetaData
+      val columns = (1 to md.getColumnCount).map(md.getColumnLabel)
+      val pk = columns.find(c => c.equalsIgnoreCase(job.primaryKey) ||
+          dialect.quoteIdentifier(c).equalsIgnoreCase(job.primaryKey))
+        .getOrElse(throw new IllegalArgumentException(
+          s"primary key ${job.primaryKey} is not a column of ${job.tableName}: " +
+            columns.mkString(", ")))
+      val q = dialect.quoteIdentifier(pk)
+      val rs = use(statement(s"SELECT MIN($q), MAX($q) FROM ${job.tableName}").executeQuery())
+      rs.next()
+      val lo = rs.getLong(1)
+      if (rs.wasNull()) None else Some((lo, rs.getLong(2)))
+    }.get
   }
 
   /** A1: partitioned JDBC scan. numPartitions = ceil(span/stride) keeps
@@ -108,8 +151,8 @@ object Extract {
     * path on which Catalyst pushes aggregates (MIN/MAX planning) and
     * filters INTO the remote database — `SELECT min(pk), max(pk) FROM
     * cat.schema.table` plans as a `PushedAggregates` scan (asserted in
-    * JdbcSpec). The DSv1 `spark.read.jdbc` path still computes the same
-    * bounds, just source-side unpushed. */
+    * JdbcSpec). The extract itself sends its bounds query down a plain
+    * connection ([[sourceKeyBounds]]). */
   def registerJdbcCatalog(spark: SparkSession, name: String, url: String,
       driver: String, extra: Map[String, String] = Map.empty): Unit = {
     spark.conf.set(s"spark.sql.catalog.$name",
@@ -187,17 +230,15 @@ object Extract {
     sink(job, raw)
   }
 
-  /** A4 → A1: plan the key bounds of the job's table, then range-read
-    * it in strides. An empty table has no slices to plan, so its
-    * (empty) full scan is extracted directly rather than fabricating a
-    * [0,0] stride. */
-  private def jdbcRead(spark: SparkSession, job: TableJob): DataFrame = {
-    val full = spark.read.jdbc(job.url, job.tableName, job.properties)
-    keyBounds(full, job.primaryKey) match {
+  /** A4 → A1: ask the source for the key bounds of the job's table,
+    * then range-read it in strides. An empty table has no slices to
+    * plan, so its (empty) full scan is extracted directly rather than
+    * fabricating a [0,0] stride. */
+  private def jdbcRead(spark: SparkSession, job: TableJob): DataFrame =
+    sourceKeyBounds(job) match {
       case Some((lo, hi)) => jdbcRangeRead(spark, job, lo, hi)
-      case None           => full
+      case None           => spark.read.jdbc(job.url, job.tableName, job.properties)
     }
-  }
 
   /** normalize → conform → Snappy parquet, the tail of every job. */
   private def sink(job: TableJob, raw: DataFrame): Unit = {

@@ -33,9 +33,6 @@ object AnalyticsOps {
   private val chunkWidth = 32
   private val chunkStride = 24 // overlap = 8 tokens
 
-  // one temp-dir scheme for ALL format round-trips (q59/q60/q80/q86/q104)
-  private def roundTripDir(fmt: String): String = Extras.roundTripDir(fmt)
-
   /** Equi-depth histogram from value-level counts: for each distinct
     * value, its rank range [s, e] within the total order, then the
     * overlap of that range with each touched bucket's rank range.
@@ -173,7 +170,7 @@ object AnalyticsOps {
       """SELECT s_suppkey, s_name, s_nationkey, CAST(floor(s_acctbal * 100) AS BIGINT) AS acct_c
         |FROM supplier
         |ORDER BY s_suppkey""".stripMargin) { (s, d) =>
-      val tmp = roundTripDir("xml")
+      val tmp = Extras.roundTripDir("xml")
       Tables.supplier(s, d)
         .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
           floor(col("s_acctbal") * 100).as("acct_c"))

@@ -116,8 +116,16 @@ object Extras {
       .orderBy(col("dirty_key"), col("match_key"))
   }
 
-  private[operators] def roundTripDir(fmt: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_roundtrip/$fmt"
+  /** The format round-trips' (q59/q60/q80/q86/q104) scratch dir for
+    * `fmt`, under one temp dir per JVM, so two processes on a host never
+    * write the same path. The dir is made on first use and deleted at
+    * JVM exit. */
+  private[graft] def roundTripDir(fmt: String): String = s"$roundTripRoot/$fmt"
+  private lazy val roundTripRoot: java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory("graft_roundtrip")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    d
+  }
 
   val qs: Seq[Q] = Seq(
 

@@ -11,13 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * The writer laws (kill/restore, two-phase compaction, replica heal,
   * curation resume, retire) stay in StreamingSpec, RecoveryFaultSpec
   * and PipelineSpec. */
-class DurableLogSpec extends AnyFunSuite {
+class DurableLogSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
 
   private def fresh(tag: String): Log = {
     GraftFs.register(spark)
     Log(spark, "graftfs://" +
-      java.nio.file.Files.createTempDirectory(s"graft_log_$tag"))
+      tempDir(s"graft_log_$tag"))
   }
 
   private def refuse(why: String): Nothing = throw new IllegalStateException(why)

@@ -81,6 +81,17 @@ class EtlSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).count() == 2500)
   }
 
+  test("format round-trips write under one private temp dir per JVM") {
+    import graft.operators.Extras.roundTripDir
+    import java.nio.file.{Files, Paths}
+    val csv = Paths.get(roundTripDir("csv"))
+    assert(Paths.get(roundTripDir("csv")) == csv, "a second call moved the dir")
+    assert(Paths.get(roundTripDir("xml")).getParent == csv.getParent)
+    assert(Files.isDirectory(csv.getParent))
+    assert(csv.getParent != Paths.get(System.getProperty("java.io.tmpdir"), "graft_roundtrip"),
+      "round trips must not write to the host-wide shared path")
+  }
+
   test("unionShards = A12 fan-in") {
     val a = Seq((1L, "x")).toDF("id", "data")
     val b = Seq((2L, "y")).toDF("id", "data")

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stride partitioning, A13 job driver) running against a real SQL
   * source, not a file stand-in.
   */
-class JdbcSpec extends AnyFunSuite {
+class JdbcSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
 
   private val nRows = 5000
@@ -39,11 +39,111 @@ class JdbcSpec extends AnyFunSuite {
     p
   }
 
+  /** One embedded Derby shard holding BIG_TABLE_1 rows `lo to hi` (none
+    * when hi < lo), a stand-in for one of the reference's MySQL
+    * containers. */
+  private def mkShard(lo: Long, hi: Long): String = {
+    val url = s"jdbc:derby:${tempDir("graft_derby_sh")}/db;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      conn.createStatement().execute(
+        "CREATE TABLE BIG_TABLE_1 (ID BIGINT NOT NULL PRIMARY KEY, DATA VARCHAR(255))")
+      val ps = conn.prepareStatement("INSERT INTO BIG_TABLE_1 VALUES (?, ?)")
+      (lo to hi).foreach { i =>
+        ps.setLong(1, i); ps.setString(2, s"payload_$i"); ps.addBatch()
+      }
+      ps.executeBatch()
+    } finally conn.close()
+    url
+  }
+
+  private def shardJob(out: String, maxRecordsPerFile: Long = 100000L) =
+    TableJob("BIG_TABLE_1", output = out, primaryKey = "ID", url = "",
+      format = "jdbc", stride = 500L, maxRecordsPerFile = maxRecordsPerFile,
+      properties = props)
+
+  private def outDir(tag: String): String = s"${tempDir(tag)}/t"
+
+  /** The order-independent checksum of an extract: row count, sum(ID)
+    * and sum(xxhash64(DATA)), the sums as decimals so they cannot
+    * overflow. */
+  private def checksum(df: org.apache.spark.sql.DataFrame): (Long, BigDecimal, BigDecimal) = {
+    import org.apache.spark.sql.functions._
+    val r = df.agg(count(lit(1)), sum(col("ID").cast("decimal(38,0)")),
+      sum(xxhash64(col("DATA")).cast("decimal(38,0)"))).head()
+    (r.getLong(0), BigDecimal(r.getDecimal(1)), BigDecimal(r.getDecimal(2)))
+  }
+
   test("keyBounds returns the key MIN/MAX, and None on an empty table (A4)") {
     val df = spark.read.jdbc(dbUrl, "BIG_TABLE_1", props)
     assert(Extract.keyBounds(df, "ID").contains((1L, nRows.toLong)))
     assert(Extract.keyBounds(df.filter("ID < 0"), "ID").isEmpty,
       "empty table must yield no bounds, not an NPE")
+  }
+
+  test("sourceKeyBounds asks the source for keyBounds' MIN/MAX, and None on an empty table (A4)") {
+    val job = TableJob("BIG_TABLE_1", output = "", primaryKey = "ID", url = dbUrl,
+      properties = props)
+    val viaSpark = Extract.keyBounds(spark.read.jdbc(dbUrl, "BIG_TABLE_1", props), "ID")
+    assert(viaSpark.contains((1L, nRows.toLong)))
+    assert(Extract.sourceKeyBounds(job) == viaSpark)
+    assert(Extract.sourceKeyBounds(job.copy(url = mkShard(1L, 0L))).isEmpty,
+      "empty table must yield no bounds, not an NPE")
+    val missing = intercept[IllegalArgumentException](
+      Extract.sourceKeyBounds(job.copy(primaryKey = "NO_SUCH_COLUMN")))
+    assert(missing.getMessage.contains("NO_SUCH_COLUMN"))
+  }
+
+  test("primary_key resolves case-insensitively: 'id' extracts every row of column ID") {
+    val out = outDir("graft_jdbc_lc")
+    val Seq(job) = graft.etl.JobsYaml.parse(
+      s"""jobs:
+         |  - table: BIG_TABLE_1
+         |    output: $out
+         |    primary_key: id
+         |    url: "$dbUrl"
+         |    stride: 1000
+         |""".stripMargin)
+    Extract.runJob(spark, job)
+    assert(checksum(spark.read.parquet(out)) ==
+      checksum(spark.read.jdbc(dbUrl, "BIG_TABLE_1", props)))
+  }
+
+  test("runShardedJob: an empty shard next to a full one writes the full shard's rows") {
+    val full = mkShard(1L, 1200L)
+    val out = outDir("graft_shard_empty")
+    Extract.runShardedJob(spark, shardJob(out), Seq(mkShard(1L, 0L), full))
+    assert(checksum(spark.read.parquet(out)) ==
+      checksum(spark.read.jdbc(full, "BIG_TABLE_1", props)))
+  }
+
+  test("runShardedJob over two shards runs exactly one Spark job (bounds at the source)") {
+    val shards = Seq(mkShard(1L, 1500L), mkShard(100001L, 101200L))
+    val out = outDir("graft_shard_jobs")
+    val sc = spark.sparkContext
+    val group = s"graft_extract_jobs_${System.nanoTime()}"
+    sc.setJobGroup(group, "sharded extract")
+    try Extract.runShardedJob(spark, shardJob(out), shards)
+    finally sc.clearJobGroup()
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.length == 1, s"jobs ${jobs.mkString(",")}: only the write should run")
+    assert(spark.read.parquet(out).count() == 2700)
+  }
+
+  test("runShardedJob: checksum and file cap gate a two-shard extract") {
+    import org.apache.spark.sql.functions._
+    val shards = Seq(mkShard(1L, 1500L), mkShard(100001L, 101200L))
+    val out = outDir("graft_shard_sum")
+    val cap = 150L
+    Extract.runShardedJob(spark, shardJob(out, maxRecordsPerFile = cap), shards)
+    val back = spark.read.parquet(out)
+    val source = shards.map(u => spark.read.jdbc(u, "BIG_TABLE_1", props)).reduce(_ union _)
+    val got = checksum(back)
+    assert(got._1 == 2700L)
+    assert(got == checksum(source), s"output checksum $got != source")
+    val perFile = back.groupBy(input_file_name()).count().collect().map(_.getLong(1))
+    assert(perFile.sum == 2700L && perFile.max <= cap,
+      s"a file holds more than $cap rows: ${perFile.sorted.mkString(",")}")
   }
 
   test("jdbcRangeRead partitions by key strides and reads everything (A1+A5)") {
@@ -118,21 +218,6 @@ class JdbcSpec extends AnyFunSuite {
     // disjoint key ranges (extractor.go:233-258), per-shard min/max
     // planning + stride reads, unioned into one parquet output. Two
     // embedded Derby databases stand in for the two MySQL containers.
-    def mkShard(lo: Long, hi: Long): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_derby_sh").toString
-      val url = s"jdbc:derby:$dir/db;create=true"
-      val conn = java.sql.DriverManager.getConnection(url)
-      try {
-        conn.createStatement().execute(
-          "CREATE TABLE BIG_TABLE_1 (ID BIGINT NOT NULL PRIMARY KEY, DATA VARCHAR(255))")
-        val ps = conn.prepareStatement("INSERT INTO BIG_TABLE_1 VALUES (?, ?)")
-        (lo to hi).foreach { i =>
-          ps.setLong(1, i); ps.setString(2, s"payload_$i"); ps.addBatch()
-        }
-        ps.executeBatch()
-      } finally conn.close()
-      url
-    }
     val out = java.nio.file.Files.createTempDirectory("graft_shard_out").toString + "/t"
     Extract.runShardedJob(spark,
       TableJob("BIG_TABLE_1", output = out, primaryKey = "ID",

@@ -41,7 +41,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * runbook states the strong-listing deployment requirement (every
   * object store since Dec 2020) instead of claiming tolerance.
   */
-class RecoveryFaultSpec extends AnyFunSuite {
+class RecoveryFaultSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
   import graft.operators.IvfAnn
@@ -81,12 +81,12 @@ class RecoveryFaultSpec extends AnyFunSuite {
     })
 
   private def localLog(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
+    tempDir(tag).toString
   /** A fresh log dir on the graftfs:// scheme (fault injection, stale
     * listings and copy+delete renames; see [[GraftFs]]). */
   private def gfsLog(tag: String): String = {
     GraftFs.register(spark)
-    "graftfs://" + java.nio.file.Files.createTempDirectory(tag)
+    "graftfs://" + tempDir(tag)
   }
   /** A fresh owner seeded with the first half of the corpus. */
   private def freshOwner(ppath: String, compactLogEvery: Int = 0,
@@ -95,7 +95,7 @@ class RecoveryFaultSpec extends AnyFunSuite {
       persistPath = Some(ppath), compactLogEvery = compactLogEvery)
 
   private def copyLog(src: String, tag: String, gfs: Boolean): String =
-    GraftFs.copyLog(spark, src, tag, gfs)
+    GraftFs.copyLog(spark, src, tempDir(tag), gfs)
 
   /** A fresh owner logging to a new graftfs:// dir, after the raw
     * batches `bounds(i) until bounds(i + 1)` (batch id i). */

@@ -17,7 +17,7 @@ final case class Ev(event_id: Long, ts: Instant, user_id: Long,
 /** Batch/stream parity (SURVEY §5.4): the same event-time aggregations
   * must produce identical results whether the events table is read as a
   * batch DataFrame or replayed through a MemoryStream in chunks. */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -145,7 +145,7 @@ class StreamingSpec extends AnyFunSuite {
         }
       } ++ (100L until 110L).map(id =>
         (id, (0 until 40).map(i => s"solo${id}_$i").mkString(" ")))
-    val d = java.nio.file.Files.createTempDirectory("graft_sndd").toString
+    val d = tempDir("graft_sndd").toString
     docs.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$d/documents.parquet")
@@ -156,7 +156,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
+    tempDir(tag).toString
   private def fsFor(path: String) = new org.apache.hadoop.fs.Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def exists(base: String, rel: String): Boolean =
@@ -419,7 +419,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("exactly-once parquet sink via checkpoint (file-replay source)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val tmp = tempDir("graft_stream").toString
     // stage fixture events as NTZ-typed parquet for the file source
     Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -662,7 +662,7 @@ class StreamingSpec extends AnyFunSuite {
     (a, b, cmetaRows(mb.index))
   }
   private def copyLog(src: String, tag: String): String =
-    GraftFs.copyLog(spark, src, tag, gfs = false)
+    GraftFs.copyLog(spark, src, tempDir(tag), gfs = false)
 
   test("IvfMaintainer: restore re-evaluates rebuildWhen on the bulk-appended index") {
     // The restore scaladoc claims rebuildWhen is evaluated once on the
@@ -961,7 +961,7 @@ class StreamingSpec extends AnyFunSuite {
     import Streaming.CdcRow
     withRocksDB {
       val mem = MemoryStream[CdcRow]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ckpt").toString
+      val ckpt = tempDir("graft_cdc_ckpt").toString
       // foreachBatch sink: the memory sink refuses checkpoint recovery
       // outside Complete mode, and foreachBatch is the recoverable
       // carrier a real deployment uses anyway
@@ -1000,7 +1000,7 @@ class StreamingSpec extends AnyFunSuite {
     import Streaming.FunnelEvent
     withRocksDB {
       val mem = MemoryStream[FunnelEvent]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_funnel_ckpt").toString
+      val ckpt = tempDir("graft_funnel_ckpt").toString
       val sink = new java.util.concurrent.ConcurrentLinkedQueue[Streaming.FunnelRow]()
       def startQ() = Streaming.funnelStream(mem.toDS())
         .writeStream
@@ -1055,7 +1055,7 @@ class StreamingSpec extends AnyFunSuite {
       // recovery outside Complete mode, and the restarted run below
       // must use the identical sink shape)
       val memC = MemoryStream[(Long, String)]
-      val ckptC = java.nio.file.Files.createTempDirectory("graft_rndd_ckc").toString
+      val ckptC = tempDir("graft_rndd_ckc").toString
       val outC = pairSink()
       val qc = Streaming.nearDupStream(memC.toDS().toDF("doc_id", "text"), 8, ttl)
         .writeStream
@@ -1076,7 +1076,7 @@ class StreamingSpec extends AnyFunSuite {
       // restarted run: kill after the first chunk, resume from the
       // SAME checkpoint, feed the rest
       val mem = MemoryStream[(Long, String)]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_rndd_ckpt").toString
+      val ckpt = tempDir("graft_rndd_ckpt").toString
       val out = pairSink()
       def startQ() = Streaming.nearDupStream(
           mem.toDS().toDF("doc_id", "text"), 8, ttl)
@@ -1113,7 +1113,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     withRocksDB {
       val mem = MemoryStream[Streaming.UserEvent]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_twstimer_ckpt").toString
+      val ckpt = tempDir("graft_twstimer_ckpt").toString
       val sink = new java.util.concurrent.ConcurrentLinkedQueue[Streaming.SessionAgg]()
       def ue(user: Long, epochS: Long) =
         Streaming.UserEvent(user, new java.sql.Timestamp(epochS * 1000))
@@ -1149,7 +1149,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     withRocksDB {
       val mem = MemoryStream[(Long, Long)]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ttl_ckpt").toString
+      val ckpt = tempDir("graft_ttl_ckpt").toString
       val sink = new java.util.concurrent.ConcurrentLinkedQueue[Streaming.UserRecent]()
       val ttl = java.time.Duration.ofMinutes(5) // restart happens inside the window
       def startQ() = Streaming.recentIdsTtl(mem.toDS(), ttl)
@@ -1391,13 +1391,13 @@ class StreamingSpec extends AnyFunSuite {
     GraftFs.register(spark)
     val before = GraftFs.ops.get()
     ivfKillResumeLaw("graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_gfs_kr"))
+      tempDir("graft_gfs_kr"))
     ivfCompactionLaw("graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_gfs_cmp"))
+      tempDir("graft_gfs_cmp"))
     // beyond the ask: MixturePlanner's snapshot/retention/pairing walk
     // is a separate recovery surface — same scheme, same proof
     mixKillResumeLaw("graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_gfs_mix"))
+      tempDir("graft_gfs_mix"))
     assert(GraftFs.ops.get() > before,
       "the graftfs:// wrapper was never exercised — persist-log paths " +
         "must have re-resolved to file:// somewhere")
@@ -1559,7 +1559,7 @@ class StreamingSpec extends AnyFunSuite {
     val rows = Seq(
       (1L, clean, "s"), (2L, clean, "s"), (3L, "a b c d e", "s"),
       (4L, repet, "s"), (5L, longw, "s"), (9L, clean, "s"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_sfunnel").toString
+    val dir = tempDir("graft_sfunnel").toString
     rows.map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
