@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table loaders (see TESTDATA.md): one parquet file per table
   * under a scale-factor directory such as /root/testdata/sf0.01.
@@ -9,14 +10,35 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * place. Parquet scans get column pruning + predicate pushdown from
   * Catalyst for free; at 100 TB the same call reads a partitioned
   * directory tree and prunes partitions — no code change needed.
+  *
+  * Each table's schema is inferred from its Parquet footers once per
+  * (session, table path, fingerprint of that path) and later loads
+  * pass it to `spark.read.schema(...)`, which starts no Spark job. This
+  * reuses metadata, not results: an in-place overwrite of one table
+  * changes its fingerprint and re-resolves that table only, and
+  * [[graft.plans.DerivationCache.evictAll]] drops every schema. The
+  * fingerprint reads the local file system: a path it cannot see
+  * fingerprints as 0 and keeps its first schema.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas = new graft.plans.DerivationCache[StructType]
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    // The load that infers the schema returns the frame it inferred it
+    // from, so it plans exactly as an uncached read does.
+    var inferred: Option[DataFrame] = None
+    val schema = schemas.getOrCompute(spark, path) {
+      val df = spark.read.parquet(path)
+      inferred = Some(df)
+      df.schema
+    }
+    inferred.getOrElse(spark.read.schema(schema).parquet(path))
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

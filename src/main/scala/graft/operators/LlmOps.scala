@@ -1583,8 +1583,8 @@ object LlmOps {
     // pair graph — production dedup keeps one doc per component, not
     // per pair. Spark side: alternating large-star/small-star with
     // convergence detection (plans.ConnectedComponents — O(log n)
-    // rounds at ANY diameter; small residual graphs finish in one
-    // union-find task). Oracle: DuckDB recursive-CTE transitive
+    // rounds at ANY diameter; small graphs finish in a driver
+    // union-find). Oracle: DuckDB recursive-CTE transitive
     // closure, min label per node.
     Q("q70_dedup_clusters",
       """WITH RECURSIVE CC_CLUSTER_CTES

@@ -27,29 +27,59 @@ import org.apache.spark.sql.functions._
   * rooted at its minimum — is detected by an order-insensitive link-set
   * fingerprint (count + bounded xxhash sum) going stable, one scalar
   * job per round over the checkpointed frame.
+  *
+  * Small graphs take no rounds: the canonical edge list is checkpointed
+  * once and read by one bounded collect, and the one union-find here
+  * ([[ConnectedComponents.unionFind]]) labels it on the driver. The
+  * same union-find finishes the residual graph of a star-round run.
   */
 object ConnectedComponents {
 
   /** `pairs`: undirected edges as (a, b) integral columns, any
     * orientation; self-loops tolerated. Returns (node, label) with
-    * label = component minimum, one row per distinct node in `pairs`.
+    * label = component minimum, one row per distinct node in `pairs`,
+    * both of the ids' type.
     *
-    * `smallGraphEdges`: when the (contracted) link set is at or below
-    * this count it fits one partition comfortably (~16 MB per 2^20
-    * edges), so the residual graph is finished with a single in-memory
-    * union-find pass instead of more multi-stage rounds — the
-    * small-graph finish Kiveris et al. §6 recommend and production CC
-    * implementations use. Star rounds remain the path for anything
-    * larger; the spec exercises them by forcing the threshold to 0. */
+    * `smallGraphEdges`: a graph whose canonical edge list holds at most
+    * this many edges fits one machine comfortably (~16 MB per 2^20
+    * edges), so it is read once with a bounded `limit(smallGraphEdges +
+    * 1).collect()` and finished on the driver by [[unionFind]], and the
+    * labels come back as a local relation — the small-graph finish
+    * Kiveris et al. §6 recommend and production CC implementations use.
+    * A larger graph runs the star rounds until its residual link set
+    * falls to that size, and the same driver union-find finishes the
+    * residual, whose labels join back to the distributed node list. The
+    * spec exercises the star rounds by forcing the threshold to 0. */
   def components(pairs: DataFrame, smallGraphEdges: Long = 1L << 20): DataFrame = {
     val sym0 = pairs.toDF("u", "v")
     // ONE materialization of the (possibly expensive) upstream pipeline:
     // the canonical (hi, lo) edge list, self-loops included so isolated
-    // self-loop nodes stay in the node set. Nodes and the round-state
-    // links both derive from this checkpoint.
+    // self-loop nodes stay in the node set. The small-graph read, the
+    // nodes and the round-state links all derive from this checkpoint.
     val canon = sym0
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .distinct().localCheckpoint()
+    driverFinish(canon, canon, smallGraphEdges, "node", "label")
+      .getOrElse(starRounds(canon, smallGraphEdges))
+  }
+
+  /** Labels the graph `edges` on the driver: one bounded collect, then
+    * [[unionFind]], returned as a local relation of (id, label) columns
+    * named `a` and `b` in `canon`'s id type. None when `edges` holds
+    * more than `n` edges. */
+  private def driverFinish(canon: DataFrame, edges: DataFrame, n: Long, a: String,
+      b: String): Option[DataFrame] = {
+    val got = edges.limit(math.min(n, Int.MaxValue - 1L).toInt + 1).collect()
+      .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
+    val idType = canon.schema("u").dataType
+    if (got.length > n) None
+    else Some(canon.sparkSession.createDataFrame(unionFind(got).sortBy(_._1).toSeq)
+      .select(col("_1").cast(idType).as(a), col("_2").cast(idType).as(b)))
+  }
+
+  /** Star rounds over the checkpointed canonical edge list `canon` until
+    * the link set converges or shrinks to `smallGraphEdges`. */
+  private def starRounds(canon: DataFrame, smallGraphEdges: Long): DataFrame = {
     val nodes = canon.select(col("u").as("node"))
       .union(canon.select(col("v").as("node"))).distinct()
     var links = canon.filter(col("u") =!= col("v"))
@@ -110,33 +140,32 @@ object ConnectedComponents {
         // Converged star state: links already hold (node, root).
         links.groupBy(col("u")).agg(min(col("v")).as("parent"))
       } else {
-        // Residual graph fits one partition: single union-find pass.
-        import org.apache.spark.sql.Encoders
-        links.select(col("u").cast("long"), col("v").cast("long"))
-          .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-          .coalesce(1)
-          .mapPartitions { it =>
-            val parent = scala.collection.mutable.Map[Long, Long]()
-            def find(x: Long): Long = {
-              var r = parent.getOrElseUpdate(x, x)
-              while (parent(r) != r) r = parent(r)
-              var c = x
-              while (parent(c) != r) { val p = parent(c); parent(c) = r; c = p }
-              r
-            }
-            it.foreach { case (a, b) =>
-              val (ra, rb) = (find(a), find(b))
-              if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-            }
-            // Materialize keys BEFORE mapping: find() path-compresses
-            // (mutates the map) and iterating a mutable HashMap while
-            // writing to it is unspecified even for value-only updates.
-            parent.keys.toArray.iterator
-              .map(x => (x, find(x))).filter(t => t._1 != t._2)
-          }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-          .toDF("u", "parent")
+        // The residual graph fits one machine: driver union-find.
+        driverFinish(canon, links, smallGraphEdges, "u", "parent").get
       }
     nodes.join(parents, nodes("node") === parents("u"), "left")
       .select(col("node"), coalesce(col("parent"), col("node")).as("label"))
+  }
+
+  /** Union-find over `edges`, merging roots under the smaller id, so
+    * every node's root is its component minimum. Returns (node, root)
+    * for every node of `edges`. */
+  private def unionFind(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val p = parent(c); parent(c) = r; c = p }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    // Materialize keys BEFORE mapping: find() path-compresses (mutates
+    // the map) and iterating a mutable HashMap while writing to it is
+    // unspecified even for value-only updates.
+    parent.keys.toArray.map(x => (x, find(x)))
   }
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * them) keyed by (session, fixture dir, dir fingerprint) — the
   * single-process stand-in for the persisted intermediates a production
   * pipeline writes once per corpus snapshot (IVF index, near-dup pair
-  * graph, percentile stats table).
+  * graph, percentile stats table), and the per-table Parquet schemas
+  * of [[graft.Tables]], keyed by table path.
   *
   * CONTRACT: the derivation must be RNG-free, so a cached value is
   * bit-identical to a recomputation (certified for the pair graph in
@@ -120,14 +121,15 @@ object DerivationCache {
       case i: Iterable[_] => i.foreach(collectRddIds(_, b))
       case _              => ()
     }
-  /** Order-independent fingerprint of a fixture dir: XOR-folded 64-bit
-    * hash of (relative path, length, mtime) for every regular file under
-    * it. Metadata-only (no reads), one directory walk — microseconds for
+  /** Order-independent fingerprint of a fixture dir, or of one table
+    * (a Parquet file or directory): XOR-folded 64-bit hash of (relative
+    * path, length, mtime) for every regular file under it, or for the
+    * file itself. Metadata-only (no reads), one walk — microseconds for
     * a fixture tree, and in exchange an in-place overwrite of any table
     * becomes a cache miss instead of a stale hit. The walk is deliberately
     * NOT memoized: it is the only thing standing between an overwritten
     * fixture and a stale cache hit, and at µs per call the TTL bookkeeping
-    * would cost more than it saves. A missing dir (e.g. a JDBC-only "dir"
+    * would cost more than it saves. A missing path (e.g. a JDBC-only "dir"
     * key that is really a URL) fingerprints as 0 — those callers key on
     * content-stable identifiers already. A walk that races with a
     * concurrent rewrite (file vanishing mid-walk) falls back to a
@@ -136,7 +138,7 @@ object DerivationCache {
     */
   private[graft] def dirFingerprint(dir: String): Long = {
     val root = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(root)) return 0L
+    if (!java.nio.file.Files.exists(root)) return 0L
     var acc = 0L
     try {
       val stream = java.nio.file.Files.walk(root)

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * histogram == row-level rank replay, integer TVD endpoints, triangle
   * counting (planted cliques + orientation-invariance vs the naive
   * enumeration), and BFS min-distance semantics. */
-class AnalyticsSpec extends AnyFunSuite {
+class AnalyticsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -76,7 +76,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("mixture TVD: single source is 0 bp; disjoint halves are 5000 bp") {
     def run(docs: Seq[(Long, String, String)]) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_tvd").toString
+      val dir = tempDir("graft_tvd").toString
       docs.toDF("doc_id", "source", "text")
         .coalesce(1).write.parquet(s"$dir/documents.parquet")
       SparkEntry.queries("q102_mixture_tvd")(spark, dir)
@@ -124,7 +124,7 @@ class AnalyticsSpec extends AnyFunSuite {
   // ---- q106 integer covariance ---------------------------------------
 
   test("grouped covariance: exact correlation makes covn² == varxn·varyn") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cov").toString
+    val dir = tempDir("graft_cov").toString
     val ts = java.sql.Timestamp.valueOf("1995-03-15 00:00:00")
     // y = quantity, x = 7·quantity (perfectly correlated) for flag A;
     // x = −3·quantity + 200 (perfectly anti-correlated) for flag B
@@ -148,7 +148,7 @@ class AnalyticsSpec extends AnyFunSuite {
   // ---- q107 IQR outliers ---------------------------------------------
 
   test("IQR outliers: quartiles and whisker counts match brute force") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_iqr").toString
+    val dir = tempDir("graft_iqr").toString
     val rnd = new scala.util.Random(7)
     val vals = Seq.fill(200)(rnd.nextInt(1000) + 1000) ++ Seq(50, 60, 99999, 88888)
     vals.map(v => ("A", v / 100.0))
@@ -246,7 +246,7 @@ class AnalyticsSpec extends AnyFunSuite {
     val gC = Seq.fill(5)(7.0) :+ 7.5
     val rows = (gA.map(("gA", _)) ++ gB.map(("gB", _)) ++ gC.map(("gC", _)))
       .zipWithIndex.map { case ((g, p), i) => (i.toLong, g, p) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_mad").toString
+    val dir = tempDir("graft_mad").toString
     rows.toDF("o_orderkey", "o_orderpriority", "o_totalprice")
       .repartition(4).write.parquet(s"$dir/orders.parquet")
     val got = SparkEntry.queries("q141_mad_outliers")(spark, dir)
@@ -274,7 +274,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // the explode-across-buckets path; plus a spread tail.
     val vals = Seq.fill(23)(5.0) ++ (1 to 9).map(i => 10.0 + i)
     val rows = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_edh").toString
+    val dir = tempDir("graft_edh").toString
     rows.toDF("l_orderkey", "l_extendedprice")
       .repartition(3).write.parquet(s"$dir/lineitem.parquet")
     val got = SparkEntry.queries("q143_equidepth_hist")(spark, dir)
@@ -303,7 +303,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // values (cents): 100 ×5, 200 ×3, 300 ×2 → below = 0, 5, 8 of 10.
     val vals = Seq.fill(5)(1.0) ++ Seq.fill(3)(2.0) ++ Seq.fill(2)(3.0)
     val rows = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_qt").toString
+    val dir = tempDir("graft_qt").toString
     rows.toDF("o_orderkey", "o_totalprice")
       .repartition(3).write.parquet(s"$dir/orders.parquet")
     val got = SparkEntry.queries("q145_quantile_transform")(spark, dir)
@@ -335,7 +335,7 @@ class AnalyticsSpec extends AnyFunSuite {
       (102L, 10L, ts("03"), 30.00),
       (200L, 20L, ts("01"), 10.00), (201L, 20L, ts("02"), 9.99),
       (202L, 20L, ts("06"), 9.98))
-    val dir = java.nio.file.Files.createTempDirectory("graft_trend").toString
+    val dir = tempDir("graft_trend").toString
     nations.toDF("n_nationkey", "n_name")
       .write.parquet(s"$dir/nation.parquet")
     custs.toDF("c_custkey", "c_nationkey")
@@ -357,7 +357,7 @@ class AnalyticsSpec extends AnyFunSuite {
     val orders = Seq(
       (1L, 10L, 1.00), (2L, 10L, 2.00), (3L, 10L, 3.00), (4L, 10L, 4.00),
       (5L, 20L, 1.00), (6L, 20L, 1.00), (7L, 20L, 1.00), (8L, 20L, 2.00))
-    val dir = java.nio.file.Files.createTempDirectory("graft_bands").toString
+    val dir = tempDir("graft_bands").toString
     custs.toDF("c_custkey", "c_nationkey").write.parquet(s"$dir/customer.parquet")
     orders.toDF("o_orderkey", "o_custkey", "o_totalprice")
       .repartition(2).write.parquet(s"$dir/orders.parquet")
@@ -371,7 +371,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // k95 = ceil(19) = 19 → hi = 1900; only 2000 clips → sum 20900.
     val custs = Seq((10L, 1L))
     val orders = (1 to 20).map(i => (i.toLong, 10L, i.toDouble))
-    val dir = java.nio.file.Files.createTempDirectory("graft_winsor").toString
+    val dir = tempDir("graft_winsor").toString
     custs.toDF("c_custkey", "c_nationkey").write.parquet(s"$dir/customer.parquet")
     orders.toDF("o_orderkey", "o_custkey", "o_totalprice")
       .repartition(2).write.parquet(s"$dir/orders.parquet")
@@ -385,7 +385,7 @@ class AnalyticsSpec extends AnyFunSuite {
     def d(s: String) = java.sql.Date.valueOf(s)
     val rows = Seq(d("2024-01-01")) ++ Seq.fill(2)(d("2024-01-02")) ++
       Seq.fill(3)(d("2024-01-04"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_acf").toString
+    val dir = tempDir("graft_acf").toString
     rows.zipWithIndex.map { case (dt, i) => (i.toLong, dt) }
       .toDF("o_orderkey", "o_orderdate")
       .repartition(2).write.parquet(s"$dir/orders.parquet")
@@ -408,7 +408,7 @@ class AnalyticsSpec extends AnyFunSuite {
         Seq(d("2024-01-02"), d("2024-01-03"), d("2024-01-06")).map((3L, _)) ++
         Seq(d("2024-01-01"), d("2024-01-02"), d("2024-01-03"), d("2024-01-04"))
           .map((4L, _))
-    val dir = java.nio.file.Files.createTempDirectory("graft_rfm").toString
+    val dir = tempDir("graft_rfm").toString
     rows.zipWithIndex.map { case ((c, dt), i) => (i.toLong, c, dt, 1.0) }
       .toDF("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
       .repartition(2).write.parquet(s"$dir/orders.parquet")
@@ -422,7 +422,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("region share: share-of-parent and share-of-total ppm exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_regshare").toString
+    val dir = tempDir("graft_regshare").toString
     Seq((1L, "R1"), (2L, "R2")).toDF("r_regionkey", "r_name")
       .write.parquet(s"$dir/region.parquet")
     Seq((10L, "A", 1L), (11L, "B", 1L), (12L, "C", 2L))
@@ -445,7 +445,7 @@ class AnalyticsSpec extends AnyFunSuite {
     val rows = (1 to 4).map(i => (i.toLong, "en", "srcA")) ++
       Seq((5L, "en", "srcB"), (6L, "en", "srcB"),
         (7L, "de", "srcB"), (8L, "de", "srcB"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_gini").toString
+    val dir = tempDir("graft_gini").toString
     rows.map { case (id, lg, src) => (id, s"text $id", lg, src, 7L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -456,7 +456,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("order aging: 30-day buckets against the latest order date, exact cents") {
     def d(s: String) = java.sql.Date.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_aging").toString
+    val dir = tempDir("graft_aging").toString
     Seq((1L, "O", d("2024-03-01"), 1.00),  // age 0  → bucket 0
         (2L, "O", d("2024-01-31"), 2.00),  // age 30 → bucket 1
         (3L, "F", d("2024-02-29"), 3.00))  // age 1  → bucket 0
@@ -470,7 +470,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("ship lag: 30-day bucket boundary and negative-lag truncation toward zero") {
     def d(s: String) = java.sql.Date.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_shiplag").toString
+    val dir = tempDir("graft_shiplag").toString
     Seq((1L, d("2024-01-01"), "1-URGENT"), (2L, d("2024-01-01"), "5-LOW"))
       .toDF("o_orderkey", "o_orderdate", "o_orderpriority")
       .write.parquet(s"$dir/orders.parquet")
@@ -488,7 +488,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("custdist: zero-order customers survive the left join into the k=0 bin") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_custdist").toString
+    val dir = tempDir("graft_custdist").toString
     Seq(1L, 2L, 3L).toDF("c_custkey").write.parquet(s"$dir/customer.parquet")
     Seq((10L, 1L), (11L, 1L), (12L, 2L))
       .toDF("o_orderkey", "o_custkey").write.parquet(s"$dir/orders.parquet")
@@ -499,7 +499,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("promo share: exact monthly ppm, promo-free month reports 0") {
     def d(s: String) = java.sql.Date.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_promo").toString
+    val dir = tempDir("graft_promo").toString
     Seq((1L, "PROMO"), (2L, "STANDARD"))
       .toDF("p_partkey", "p_type").write.parquet(s"$dir/part.parquet")
     Seq((1L, d("2024-01-05"), 1.00), (2L, d("2024-01-20"), 3.00),
@@ -514,7 +514,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("repeat buyers: per-nation ppm of buyers, zero-buyer nation reports 0") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_repeat").toString
+    val dir = tempDir("graft_repeat").toString
     Seq((10, "ALPHA"), (11, "BETA"))
       .toDF("n_nationkey", "n_name").write.parquet(s"$dir/nation.parquet")
     Seq((100L, 10), (101L, 10), (102L, 10), (103L, 11))
@@ -528,7 +528,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("local supplier volume: cross-nation lines drop inside the supplier join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_localvol").toString
+    val dir = tempDir("graft_localvol").toString
     Seq((0, "R0")).toDF("r_regionkey", "r_name").write.parquet(s"$dir/region.parquet")
     Seq((10, "ALPHA", 0), (11, "BETA", 0))
       .toDF("n_nationkey", "n_name", "n_regionkey").write.parquet(s"$dir/nation.parquet")
@@ -550,7 +550,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("top supplier per quarter: revenue ties keep ALL winners") {
     def d(s: String) = java.sql.Date.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_topsupp").toString
+    val dir = tempDir("graft_topsupp").toString
     Seq((1L, d("2024-01-05"), 0.50), (1L, d("2024-02-10"), 0.50), // supp1 Q1: 100
         (2L, d("2024-03-01"), 1.00),                              // supp2 Q1: 100 (tie)
         (3L, d("2024-01-20"), 0.40),                              // supp3 Q1: 40
@@ -567,7 +567,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("top-customer share: exact top-3 ppm over per-customer collapse") {
     def d(s: String) = java.sql.Date.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_topcust").toString
+    val dir = tempDir("graft_topcust").toString
     Seq((10, "ALPHA")).toDF("n_nationkey", "n_name").write.parquet(s"$dir/nation.parquet")
     Seq((100L, 10), (101L, 10), (102L, 10), (103L, 10))
       .toDF("c_custkey", "c_nationkey").write.parquet(s"$dir/customer.parquet")
@@ -584,7 +584,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("order gaps: per-customer lag, week buckets, same-day repeat lands in bucket 0") {
     def d(s: String) = java.sql.Date.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_gaps").toString
+    val dir = tempDir("graft_gaps").toString
     // cust A: 01-01, 01-01, 01-05, 01-20 → gaps 0, 4, 15 → buckets 0, 0, 2
     // cust B: 01-01, 01-08 → gap 7 → bucket 1
     Seq((1L, 100L, d("2024-01-01")), (2L, 100L, d("2024-01-01")),
@@ -598,7 +598,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("price elasticity: exact integer OLS sums per brand") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_elast").toString
+    val dir = tempDir("graft_elast").toString
     // brand B1: (x=0, y=10), (x=5, y=20) → n=2 sx=5 sy=30 sxy=100 sxx=25
     // brand B2: (x=10, y=4)              → n=1 sx=10 sy=4 sxy=40 sxx=100
     Seq((1L, 1L, 0.00, 10.0), (2L, 1L, 0.05, 20.0), (3L, 2L, 0.10, 4.0))
@@ -613,7 +613,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("return rate: counts, returned cents, integer ppm per brand") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rr").toString
+    val dir = tempDir("graft_rr").toString
     // B1: 3 lines, 1 returned (2.50 → 250 cents) → 333333 ppm
     // B2: 1 line, 0 returned → 0 ppm
     Seq((1L, 1L, "R", 2.50), (2L, 1L, "N", 1.00), (3L, 1L, "A", 1.00),
@@ -629,7 +629,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("quartile migration: per-year value-level quartiles, absent = 0") {
     def d(s: String) = java.sql.Date.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_qm").toString
+    val dir = tempDir("graft_qm").toString
     // 1999 spends: c1=100, c2=200, c3=300, c4=400 → type-1 quartile
     // thresholds t1=100 t2=200 t3=300 → quartiles 1,2,3,4.
     // 2000 spends: c1=400 (q4 of {50,400}: t1=50 t2=50 t3=400 → c1=3?)
@@ -649,7 +649,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("priority mix shift: ppm shares and per-priority quarter deltas") {
     def d(s: String) = java.sql.Date.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mix").toString
+    val dir = tempDir("graft_mix").toString
     // Q1-2024 (qtr 8096): HIGH 1, LOW 3 → 250000 / 750000 ppm.
     // Q2-2024 (qtr 8097): HIGH 1, LOW 1 → 500000 / 500000 ppm.
     // deltas: HIGH +250000 (vs 250000), LOW −250000; first quarter
@@ -671,7 +671,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("trade matrix: cross-nation pairs only, discounted cents, year filter") {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_trade").toString
+    val dir = tempDir("graft_trade").toString
     // line 1: FR customer ← DE supplier, 10.00 @ 10% → 900 cents (kept)
     // line 2: FR ← FR (same nation, dropped)
     // line 3: 1999 shipdate (dropped by year filter)
@@ -695,7 +695,7 @@ class AnalyticsSpec extends AnyFunSuite {
 
   test("seasonal index: trailing-12-observed-months sums and counts") {
     def d(s: String) = java.sql.Date.valueOf(s)
-    val dir = java.nio.file.Files.createTempDirectory("graft_season").toString
+    val dir = tempDir("graft_season").toString
     // months: 2024-01 (100), 2024-02 (200), 2024-03 (50) → trailing
     // sums 100, 300, 350 with counts 1, 2, 3.
     Seq((1L, d("2024-01-05"), 1.00), (2L, d("2024-02-05"), 2.00),
@@ -710,7 +710,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("supplier reach: distinct nations per supplier, distribution rollup") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_reach").toString
+    val dir = tempDir("graft_reach").toString
     // supp 10 ships to nations {0, 1} (via two customers, one dup
     // line); supp 11 to {0} → distribution: 1 nation × 1 supplier,
     // 2 nations × 1 supplier.
@@ -727,7 +727,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("nation HHI: exact integer ppm shares, monopoly = 1e12") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hhi").toString
+    val dir = tempDir("graft_hhi").toString
     // nation A: suppliers 1 (3.00) + 2 (1.00) → shares 750000/250000 →
     // HHI 625e9; nation B: single supplier → HHI 1e12.
     Seq((1L, 1L, 3.00), (2L, 2L, 1.00), (3L, 3L, 7.77))
@@ -744,7 +744,7 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("discount profile: per-mille quantization, exact cents per band") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_disc").toString
+    val dir = tempDir("graft_disc").toString
     Seq(("A", 0.04, 1.00), ("A", 0.04, 1.00), ("N", 0.00, 2.00),
         ("N", 0.07, 3.00))
       .toDF("l_returnflag", "l_discount", "l_extendedprice")

@@ -10,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * (vocab ≫ counters) with a strict-inequality support edge, orphan
   * counting on every FK edge, null/NDV profiling, and exact
   * microsecond time-weighted averaging with degenerate users. */
-class AuditSpec extends AnyFunSuite {
+class AuditSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
   private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   // ---- q116 heavy hitters -------------------------------------------
 

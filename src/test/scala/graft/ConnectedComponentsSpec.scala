@@ -67,4 +67,58 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val got = sparkCC(edges)
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L))
   }
+
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("empty pairs give an empty (node, label) frame") {
+    for (n <- Seq(0L, 1L << 20)) {
+      val got = graft.plans.ConnectedComponents
+        .components(Seq.empty[(Long, Long)].toDF("a", "b"), n)
+      assert(got.columns.toSeq == Seq("node", "label"))
+      assert(got.schema.map(_.dataType).toSet ==
+        Set(org.apache.spark.sql.types.LongType))
+      assert(got.collect().isEmpty)
+    }
+  }
+
+  test("IntegerType ids keep their type on the driver finish and the star rounds") {
+    val rnd = new scala.util.Random(31)
+    val edges = Seq.fill(60)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      .filter(e => e._1 != e._2)
+    for (n <- Seq(1L << 20, 0L)) {
+      val got = graft.plans.ConnectedComponents
+        .components(edges.map(e => (e._1.toInt, e._2.toInt)).toDF("a", "b"), n)
+      assert(got.schema.map(_.dataType).toSet ==
+        Set(org.apache.spark.sql.types.IntegerType), s"smallGraphEdges=$n")
+      assert(got.as[(Int, Int)].collect().map(t => (t._1.toLong, t._2.toLong)).toMap ==
+        unionFind(edges), s"smallGraphEdges=$n")
+    }
+  }
+
+  test("smallGraphEdges edges finish on the driver; one more takes the star rounds") {
+    val rnd = new scala.util.Random(47)
+    // Canonical, distinct, loop-free: the edge count is exactly edges.size.
+    val edges = Seq.fill(120)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+      .filter(e => e._1 != e._2).map(e => (e._1 max e._2, e._1 min e._2)).distinct
+    val n = edges.size.toLong
+    def run(limit: Long) =
+      graft.plans.ConnectedComponents.components(edges.toDF("a", "b"), limit)
+    val atLimit = run(n)
+    assert(isLocal(atLimit), "exactly smallGraphEdges edges: driver union-find")
+    assert(atLimit.as[(Long, Long)].collect().toMap == unionFind(edges))
+    val overLimit = run(n - 1)
+    assert(!isLocal(overLimit), "smallGraphEdges + 1 edges: star rounds")
+    assert(overLimit.as[(Long, Long)].collect().toMap == unionFind(edges))
+  }
+
+  test("the small-graph path runs at most 3 Spark jobs while the frame is built") {
+    val edges = (0L until 40L).sliding(2).map(s => (s(1), s(0))).toSeq
+    val pairs = edges.toDF("a", "b")
+    val (got, jobs) = TestSession.withJobCount(
+      graft.plans.ConnectedComponents.components(pairs))
+    assert(jobs <= 3, s"$jobs construct jobs")
+    assert(got.as[(Long, Long)].collect().toMap == unionFind(edges))
+  }
 }

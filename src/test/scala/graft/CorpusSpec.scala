@@ -6,12 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Planted-fixture laws for the round-10 corpus-profiling batch
   * (q273–q278): each query's semantics pinned on a hand-computable
   * corpus, independent of the DuckDB oracle. */
-class CorpusSpec extends AnyFunSuite {
+class CorpusSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_corpus").toString
+    val dir = tempDir("graft_corpus").toString
     rows.map { case (id, t, lang, src) => (id, t, lang, src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -98,7 +98,7 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("q281: lower-median MAD flags the planted exploded-norm vector") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_normout").toString
+    val dir = tempDir("graft_normout").toString
     // ten 1-dim vectors at 0.5 (nq2 = 250 000) + one at 5.0 (nq2 =
     // 25 000 000). Lower median = 250 000; devs are ten 0s and one big
     // → lower-median MAD = 0; the strict > 4·mad filter flags exactly
@@ -113,7 +113,7 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("q278: variance numerator is exact; constant dims rank zero") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dimvar").toString
+    val dir = tempDir("graft_dimvar").toString
     // dim1 constant 0.5 (var 0), dim2 = ±1.0 (var_num = 2·2e6 − 0 =
     // 4e6), dims 3..64 all zero — top-5 is dim2 then the dim-ordered
     // zero-variance ties (1, 3, 4, 5).

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * 1.0) and keep the near-orthogonal rest; chunk dedup must keep exactly
   * the globally-first occurrence of every 16-word chunk, including
   * intra-document repeats and whole-document copies. */
-class CurationSpec extends AnyFunSuite {
+class CurationSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -18,7 +18,7 @@ class CurationSpec extends AnyFunSuite {
     def randVec() = Array.fill(64)(rnd.nextGaussian().toFloat)
     val base = (0L until 20L).map(i => (i, randVec(), 0))
     val dups = Seq((100L, base(3)._2.clone(), 1), (101L, base(3)._2.clone(), 1))
-    val dir = java.nio.file.Files.createTempDirectory("graft_semdedup").toString
+    val dir = tempDir("graft_semdedup").toString
     (base ++ dups).toDF("vec_id", "embedding", "label")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     dir
@@ -38,7 +38,7 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("anchor classification routes a vector equal to an anchor to that anchor") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_anchor").toString
+    val dir = tempDir("graft_anchor").toString
     val anchors = graft.operators.CurationOps.anchors
     // vec i = anchor i exactly (cosine 1.0 with itself, < 1 elsewhere),
     // plus one scaled copy (cosine is scale-invariant).
@@ -65,7 +65,7 @@ class CurationSpec extends AnyFunSuite {
       2L -> w.mkString(" "),
       3L -> (1 to 10).map(i => s"y$i").mkString(" "),
       4L -> (z ++ z).mkString(" "))
-    val dir = java.nio.file.Files.createTempDirectory("graft_chunk").toString
+    val dir = tempDir("graft_chunk").toString
     texts.map { case (id, t) => (id, t, "en", "srcA", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")

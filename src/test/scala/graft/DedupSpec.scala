@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Planted-duplicate verification for the dedup operators whose hashes
   * are Spark-native (no DuckDB oracle): MinHash-LSH and SimHash, plus
   * cross-checks of exact dedup and n-gram Jaccard on the same corpus. */
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -29,7 +29,7 @@ class DedupSpec extends AnyFunSuite {
       (4L, randText(60), "en", "srcD", 0L),
       (5L, base, "en", "srcE", base.length.toLong)
     ).map { case (id, t, l, s, _) => (id, t, l, s, t.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_docs").toString
+    val dir = tempDir("graft_docs").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     dir
@@ -117,7 +117,7 @@ class DedupSpec extends AnyFunSuite {
       val t = mkText(if (id > 200) id - 200 else id)
       (id, t, "en", "src", t.length.toLong)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val dir = tempDir("graft_skew").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     dir
@@ -200,7 +200,7 @@ class DedupSpec extends AnyFunSuite {
     // produce the identical pair set — the k = 3 pigeonhole holds for
     // 4×8-bit bands and for 2×16-bit half-expansion alike, and the
     // exact bit_count verify is shared.
-    val dir = java.nio.file.Files.createTempDirectory("graft_simhash_dense").toString
+    val dir = tempDir("graft_simhash_dense").toString
     val rows = (1L to 3000L).map { id =>
       val src = if (id == 3000L) 1L else id // 3000 duplicates doc 1
       val t = (1 to 8).map(i => s"d${src}w$i").mkString(" ")
@@ -226,7 +226,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("threshold sweep: pair counts step down at the planted Jaccard values") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sweep").toString
+    val dir = tempDir("graft_sweep").toString
     // A = B (J = 1.0, counted at every threshold); C shares 7 of its 10
     // shingles with each of A/B → J = 7/13 ≈ 0.538: counted at t10 =
     // 3, 4, 5 only. Expect n_pairs = 3, 3, 3, 1, 1, 1, 1.
@@ -243,7 +243,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("minhash estimator audit: every pair in envelope on the planted sweep corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_est").toString
+    val dir = tempDir("graft_est").toString
     // Same 3-doc shape as the sweep test: (1,2) at J = 1.0 and
     // (1,3)/(2,3) at J = 7/13 — 3 co-occurring pairs, all of which the
     // deterministic 32-perm estimate must place within ±0.35.
@@ -259,7 +259,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("jaccard histogram: planted pairs land in their deciles") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jhist").toString
+    val dir = tempDir("graft_jhist").toString
     // (1,2): J = 1.0 → 10000 bp → bucket 10; (1,3)/(2,3): J = 7/13 →
     // 5384 bp → bucket 5.
     val base = (1 to 12).map(i => s"w$i").mkString(" ")
@@ -274,7 +274,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("vocab growth: per-decile first occurrences with cumulative curve") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vocab").toString
+    val dir = tempDir("graft_vocab").toString
     // 10 docs: doc k carries its own token tk plus the shared token
     // 'common' (first seen in decile 1) → decile 1 gets 2 new tokens,
     // every later decile exactly 1.
@@ -289,7 +289,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("best-quality keeper: beats keep-lowest-id; ties fall back to min id") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_keeper").toString
+    val dir = tempDir("graft_keeper").toString
     // Cluster {1, 3}: identical text (J = 1), same length bucket
     // (450 // 100 == 400 // 100 == 4) but doc 3 gets the 100-400
     // n_chars quality bonus → keeper 3, NOT the lower id.
@@ -306,7 +306,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("lang-id confusion matrix: correct cell and planted confusion cell") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_conf").toString
+    val dir = tempDir("graft_conf").toString
     // doc 1: labeled en, English stopwords → (en, en).
     // doc 2: labeled de, English stopwords → predicted en → (de, en).
     // doc 3: labeled de, German stopwords → (de, de).
@@ -343,7 +343,7 @@ class DedupSpec extends AnyFunSuite {
       (10L, "new batch text", "en", "srcB"),
       (15L, "unique new text", "en", "srcB"))
       .map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_incdedup").toString
+    val dir = tempDir("graft_incdedup").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q137_incremental_dedup")(spark, dir)
@@ -363,7 +363,7 @@ class DedupSpec extends AnyFunSuite {
     val c = "one two three four five six"
     val rows = Seq((1L, a), (2L, a), (3L, a), (4L, b), (5L, b), (6L, c))
       .map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_clprof").toString
+    val dir = tempDir("graft_clprof").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q178_dup_cluster_profile")(spark, dir)
@@ -383,7 +383,7 @@ class DedupSpec extends AnyFunSuite {
       (1L, a, "srcA"), (2L, a, "srcA"), (3L, a, "srcB"),
       (4L, b, "srcB"), (5L, b, "srcB"), (6L, c, "srcC"))
       .map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedupimp").toString
+    val dir = tempDir("graft_dedupimp").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q185_dedup_impact")(spark, dir)

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Each `tools.Dev` mode and `Verify`'s name filter, once, on sf0.001:
   * nothing else runs them, so they would otherwise rot unseen. */
-class DevSpec extends AnyFunSuite {
+class DevSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   private val d = "/root/testdata/sf0.001"
 
@@ -83,7 +83,7 @@ class DevSpec extends AnyFunSuite {
   }
 
   test("Verify name filter: exactly the named result dirs and oracle keys") {
-    val out = Files.createTempDirectory("graft_verify_filter")
+    val out = tempDir("graft_verify_filter")
     val want = Set("q01_pricing_summary", "q02_filter_scan")
     Verify.run(spark, d, out.toString, Some(want))
     val dirs = Files.list(out).iterator().asScala.filter(Files.isDirectory(_))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit coverage for the reference-parity ETL surface (SURVEY §2A). */
-class EtlSpec extends AnyFunSuite {
+class EtlSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -74,7 +74,7 @@ class EtlSpec extends AnyFunSuite {
   }
 
   test("writeParquet honors maxRecordsPerFile (A10 batching parity)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_etl").toString + "/out"
+    val dir = tempDir("graft_etl").toString + "/out"
     Extract.writeParquet(spark.range(2500).toDF(), dir, maxRecordsPerFile = 1000)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.length >= 3) // 2500 rows / ≤1000 per file
@@ -139,7 +139,7 @@ class EtlSpec extends AnyFunSuite {
   }
 
   test("runJob end-to-end on a file source (A13)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_job").toString
+    val tmp = tempDir("graft_job").toString
     spark.range(100).selectExpr("id", "CAST(concat('v', id) AS BINARY) AS data")
       .write.parquet(s"$tmp/in")
     Extract.runJob(spark, TableJob(
@@ -157,7 +157,7 @@ class EtlSpec extends AnyFunSuite {
     // time (a column added upstream). mergeSchema reads the union
     // schema; older rows surface the new column as null — the
     // schema-drift contract a long-lived ETL landing zone relies on.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+    val tmp = tempDir("graft_evolve").toString
     Seq((1L, "a"), (2L, "b")).toDF("id", "name")
       .write.parquet(s"$tmp/t/batch=1")
     Seq((3L, "c", 42L)).toDF("id", "name", "score")
@@ -198,7 +198,7 @@ class EtlSpec extends AnyFunSuite {
     // changed; everything else unchanged. Key 0 hits BOTH added (as 0)
     // and removed (as the 10⁹ phantom).
     val keys = 0L until 500L
-    val dir = java.nio.file.Files.createTempDirectory("graft_snapdiff").toString
+    val dir = tempDir("graft_snapdiff").toString
     keys.map(k => (k, 10.0 + k, "S")).toDF(
       "o_orderkey", "o_totalprice", "o_orderstatus")
       .repartition(3).write.parquet(s"$dir/orders.parquet")

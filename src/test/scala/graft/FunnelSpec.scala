@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * so a click that precedes (or ties) the first view must not advance
   * the user. Retention cohorts users by the week of their first event
   * and counts distinct actives per (cohort, week offset). */
-class FunnelSpec extends AnyFunSuite {
+class FunnelSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -19,7 +19,7 @@ class FunnelSpec extends AnyFunSuite {
 
   /** (user, type, ts) rows written as an events table fixture. */
   private def eventsDir(rows: Seq[(Long, String, Timestamp)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel").toString
+    val dir = tempDir("graft_funnel").toString
     rows.zipWithIndex
       .map { case ((u, et, ts), i) => (i.toLong, ts, u, et, 1.0, "{}") }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -147,7 +147,7 @@ class FunnelSpec extends AnyFunSuite {
     val u1 = Seq(ev(1, 1L, 1, 1.0), ev(2, 1L, 2, 2.0), ev(3, 1L, 3, 3.0))
     val u2 = (1 to 10).map(i => ev(10 + i, 2L, i, i.toDouble))
     val u3 = Seq(ev(30, 3L, 1, 7.77))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ewma").toString
+    val dir = tempDir("graft_ewma").toString
     (u1 ++ u2 ++ u3)
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .repartition(3).write.parquet(s"$dir/events.parquet")

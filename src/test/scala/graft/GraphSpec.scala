@@ -6,14 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * graph: the hub must outrank every leaf, structurally-symmetric
   * leaves must get EXACTLY equal integer ranks (fixed-point arithmetic
   * has no float drift), and total mass stays bounded by the scale. */
-class GraphSpec extends AnyFunSuite {
+class GraphSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
   /** Orders/lineitem fixture: each (cust, supp) pair becomes one order
     * (key = index) with one lineitem. */
   private def graphDir(pairs: Seq[(Long, Long)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_graph").toString
+    val dir = tempDir("graft_graph").toString
     pairs.zipWithIndex.map { case ((c, _), i) => (i.toLong, c) }
       .toDF("o_orderkey", "o_custkey")
       .coalesce(1).write.parquet(s"$dir/orders.parquet")
@@ -68,7 +68,7 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("k-core peel: pendant node drops round 1, triangle core is stable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kcore").toString
+    val dir = tempDir("graft_kcore").toString
     // order 1 links suppliers {1,2,3} (triangle), order 2 links {3,4}
     // (pendant edge). Degrees 1:2 2:2 3:3 4:1 → round 1 peels node 4;
     // the triangle (3 nodes, 3 edges) survives rounds 2 and 3 intact.
@@ -85,7 +85,7 @@ class GraphSpec extends AnyFunSuite {
     // edges (dup line p1-s1 must collapse): p1-s1, p1-s2, p2-s1.
     // deg: p1=2, p2=1, s1=2, s2=1. Edge-level sums:
     // dp 2+2+1=5, ds 2+1+2=5, dpds 4+2+2=8, dp2 4+4+1=9, ds2 4+1+4=9.
-    val dir = java.nio.file.Files.createTempDirectory("graft_deg").toString
+    val dir = tempDir("graft_deg").toString
     Seq((1L, 1L, 1L), (2L, 1L, 1L), (3L, 1L, 2L), (4L, 2L, 1L))
       .toDF("l_orderkey", "l_partkey", "l_suppkey")
       .coalesce(1).write.parquet(s"$dir/lineitem.parquet")

@@ -5,12 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** q96 bucketed interval join: half-open [lo, lo+200) semantics, the
   * cross-bucket case (a point in the interval's SECOND bucket must
   * still match), and empty-band preservation. */
-class IntervalJoinSpec extends AnyFunSuite {
+class IntervalJoinSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
   test("bucketed interval join matches the half-open band, keeps empty bands") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivj").toString
+    val dir = tempDir("graft_ivj").toString
     // supplier 1: band [100, 300) — spans buckets 0 and 1.
     // supplier 2: band [1000, 1200) — no points → empty band row.
     Seq((1L, 100.0), (2L, 1000.0)).toDF("s_suppkey", "s_acctbal")

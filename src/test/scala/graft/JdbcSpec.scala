@@ -15,7 +15,7 @@ class JdbcSpec extends AnyFunSuite with TempDirs {
   /** Embedded Derby with the reference's table shape
     * (tmp/data_seed.go:36-41): BIGINT pk + VARCHAR(255) payload. */
   lazy val dbUrl: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_derby").toString
+    val dir = tempDir("graft_derby").toString
     val url = s"jdbc:derby:$dir/db;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
     try {
@@ -205,7 +205,7 @@ class JdbcSpec extends AnyFunSuite with TempDirs {
   }
 
   test("runJob: full JDBC → snappy parquet extract (A13 end-to-end)") {
-    val out = java.nio.file.Files.createTempDirectory("graft_jdbc_out").toString + "/t"
+    val out = tempDir("graft_jdbc_out").toString + "/t"
     Extract.runJob(spark, TableJob("BIG_TABLE_1", output = out, primaryKey = "ID",
       url = dbUrl, format = "jdbc", stride = 1000L, properties = props))
     val back = spark.read.parquet(out)
@@ -218,7 +218,7 @@ class JdbcSpec extends AnyFunSuite with TempDirs {
     // disjoint key ranges (extractor.go:233-258), per-shard min/max
     // planning + stride reads, unioned into one parquet output. Two
     // embedded Derby databases stand in for the two MySQL containers.
-    val out = java.nio.file.Files.createTempDirectory("graft_shard_out").toString + "/t"
+    val out = tempDir("graft_shard_out").toString + "/t"
     Extract.runShardedJob(spark,
       TableJob("BIG_TABLE_1", output = out, primaryKey = "ID",
         url = "", format = "jdbc", stride = 500L, properties = props),

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Algebraic-law checks (SURVEY §5.3) over seeded random inputs:
   * pushdown/commutation identities the optimizer relies on, verified
   * against the engine's actual results. */
-class LawsSpec extends AnyFunSuite {
+class LawsSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -47,7 +47,7 @@ class LawsSpec extends AnyFunSuite {
 
   test("parquet round-trip preserves schema and rows") {
     val df = randDf(7)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rt").toString
+    val dir = tempDir("graft_rt").toString
     df.write.parquet(s"$dir/t")
     val back = spark.read.parquet(s"$dir/t")
     assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -115,7 +115,7 @@ class LawsSpec extends AnyFunSuite {
   test("DerivationCache invalidates on fixture overwrite (no stale frames)") {
     // Unit level: same dir + same content → memoized (one computation);
     // overwriting a file under the dir → fingerprint change → recompute.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dc").toString
+    val dir = tempDir("graft_dc").toString
     val f = java.nio.file.Paths.get(dir, "part-0.parquet")
     java.nio.file.Files.write(f, "v1-contents".getBytes)
     val cache = new graft.plans.DerivationCache[Int]
@@ -132,7 +132,7 @@ class LawsSpec extends AnyFunSuite {
     // Overwrite the documents table in place with a corpus whose
     // near-dup structure differs — the declared query must reflect the
     // new corpus, not the cached pair graph of the old one.
-    val dir = java.nio.file.Files.createTempDirectory("graft_docs_ow").toString
+    val dir = tempDir("graft_docs_ow").toString
     def write(rows: Seq[(Long, String)]): Unit =
       rows.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")

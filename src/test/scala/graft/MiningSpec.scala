@@ -10,12 +10,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * min-count cut), trailing-window spike semantics (full weeks only),
   * sorted-neighborhood window hits/misses, co-purchase counting with
   * multi-line dedup, and integer linear interpolation endpoints. */
-class MiningSpec extends AnyFunSuite {
+class MiningSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
   private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def writeDocs(dir: String, rows: Seq[(Long, String, String)]): Unit =
     rows.map { case (id, text, lang) => (id, text, lang, "src", text.length.toLong) }

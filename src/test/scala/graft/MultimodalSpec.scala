@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * path feeds the same decode pipeline q52c runs on a synthesized
   * binary column — write deterministic PNGs as FILES, read them back
   * via binaryFile, decode with javax.imageio, and check the pixels. */
-class MultimodalSpec extends AnyFunSuite {
+class MultimodalSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -19,7 +19,7 @@ class MultimodalSpec extends AnyFunSuite {
     // local function value: the executor closure must not capture the
     // (non-serializable) suite instance
     val pixel = (id: Long, x: Int, y: Int) => ((id * 31 + x * 7 + y * 13) % 256).toInt
-    val dir = java.nio.file.Files.createTempDirectory("graft_media")
+    val dir = tempDir("graft_media")
     val ids = 0L until 8L
     ids.foreach { id =>
       val (w, h) = ((8 + id % 9).toInt, (8 + id % 7).toInt)

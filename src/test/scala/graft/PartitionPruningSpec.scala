@@ -6,11 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Partitioned sink layout + partition pruning: the mechanism that
   * turns a 100 TB scan into a read of only the matching directories. */
-class PartitionPruningSpec extends AnyFunSuite {
+class PartitionPruningSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
 
   test("partitionBy layout prunes non-matching partitions at scan time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/orders"
+    val dir = tempDir("graft_part").toString + "/orders"
     val orders = Tables.orders(spark, "/root/testdata/sf0.001")
       .withColumn("order_year", year(col("o_orderdate")))
     Extract.writeParquet(orders, dir, partitionBy = Seq("order_year"))

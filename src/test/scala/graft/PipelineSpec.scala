@@ -7,12 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Planted-fixture laws for the round-10 pipeline-planning batch
   * (q282–q285): each query's semantics pinned on a hand-computable
   * corpus, independent of the DuckDB oracle. */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
   private def writeEmb(rows: Seq[(Long, Array[Float], Int)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pipe").toString
+    val dir = tempDir("graft_pipe").toString
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     dir
@@ -108,7 +108,7 @@ class PipelineSpec extends AnyFunSuite {
     // Docs 1↔2 and 3↔4 are exact text dups (J = 1 → band 5); 1/2's
     // embeddings are parallel (cos 1 → semantic hit), 3/4's orthogonal
     // (cos 0 → miss). Doc 5 pairs with nothing.
-    val dir = java.nio.file.Files.createTempDirectory("graft_agree").toString
+    val dir = tempDir("graft_agree").toString
     Seq((1L, "a b c d", "en", "s", 7L), (2L, "a b c d", "en", "s", 7L),
       (3L, "p q r t", "en", "s", 7L), (4L, "p q r t", "en", "s", 7L),
       (5L, "z z z z", "en", "s", 7L))
@@ -127,7 +127,7 @@ class PipelineSpec extends AnyFunSuite {
   test("q285: docs pack greedily at the 2000-token boundary, never split") {
     // Token counts 1500/1000/600/2500 → exclusive prefix sums
     // 0/1500/2500/3100 → shards 0/0/1/1.
-    val dir = java.nio.file.Files.createTempDirectory("graft_shard").toString
+    val dir = tempDir("graft_shard").toString
     def doc(n: Int): String = Seq.fill(n)("w").mkString(" ")
     Seq((1L, doc(1500), "en", "s", 0L), (2L, doc(1000), "en", "s", 0L),
       (3L, doc(600), "en", "s", 0L), (4L, doc(2500), "en", "s", 0L))
@@ -141,7 +141,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pipe").toString
+    val dir = tempDir("graft_pipe").toString
     rows.map { case (id, t, lang, src) => (id, t, lang, src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -365,7 +365,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(counts.zip(counts.tail).forall { case (a, b) => a >= b },
       s"funnel stage counts must be non-increasing: $counts")
     // plan parity over the materialized survivor corpus
-    val sdir = java.nio.file.Files.createTempDirectory("graft_cur").toString
+    val sdir = tempDir("graft_cur").toString
     Tables.documents(spark, dir).join(r.survivors.select("doc_id"), "doc_id")
       .write.parquet(s"$sdir/documents.parquet")
     assert(r.mixture.collect().toSeq.map(_.toString)
@@ -397,8 +397,7 @@ class PipelineSpec extends AnyFunSuite {
   test("curationRun runDir: a driver death between stages resumes at the first unmarked stage — completed frontiers read, not recomputed") {
     GraftFs.register(spark)
     val dir = "/root/testdata/sf0.001"
-    val runDir = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_rundir")
+    val runDir = "graftfs://" + tempDir("graft_rundir")
     def marker(n: Int) =
       Log(spark, runDir).marker(s"stage_$n")
     // run stages 1-2, then "die" before stage 3 computes (the probe
@@ -477,8 +476,7 @@ class PipelineSpec extends AnyFunSuite {
     // completes with outputs identical to the in-memory reference.
     GraftFs.register(spark)
     val dir = "/root/testdata/sf0.001"
-    val runDir = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_runoss")
+    val runDir = "graftfs://" + tempDir("graft_runoss")
     GraftFs.renameAsCopyDelete = true
     val r =
       try operators.PipelineOps.curationRun(spark, dir, Some(runDir))
@@ -494,8 +492,7 @@ class PipelineSpec extends AnyFunSuite {
   test("curationRun runDir: a create crashing mid-frontier leaves an unmarked dir; resume redoes exactly that stage") {
     GraftFs.register(spark)
     val dir = "/root/testdata/sf0.001"
-    val runDir = "graftfs://" +
-      java.nio.file.Files.createTempDirectory("graft_runfault")
+    val runDir = "graftfs://" + tempDir("graft_runfault")
     GraftFs.armFault("create", "stage_2")
     val seen1 =
       try probed(_ => ()) {
@@ -531,8 +528,7 @@ class PipelineSpec extends AnyFunSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def pth(s: String) = new org.apache.hadoop.fs.Path(s)
     // ---- a completed run retires cleanly --------------------------
-    val done = java.nio.file.Files
-      .createTempDirectory("graft_retire_done").toString
+    val done = tempDir("graft_retire_done").toString
     operators.PipelineOps.curationRun(spark, dir, Some(done))
     assert(operators.PipelineOps.retireRun(spark, done))
     (1 to 5).foreach(n => assert(!fs.exists(pth(s"$done/stage_$n")),
@@ -542,8 +538,7 @@ class PipelineSpec extends AnyFunSuite {
     val r2 = operators.PipelineOps.curationRun(spark, dir, Some(done))
     assert(runOutputs(r2) == refRun)
     // ---- an IN-FLIGHT run (crashed between stages) is refused ------
-    val inflight = java.nio.file.Files
-      .createTempDirectory("graft_retire_mid").toString
+    val inflight = tempDir("graft_retire_mid").toString
     probed(n => if (n == 4) throw new RuntimeException("injected driver death")) {
       intercept[RuntimeException] {
         operators.PipelineOps.curationRun(spark, dir, Some(inflight))
@@ -563,8 +558,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(seen == Seq(4, 5), s"post-refusal resume computed $seen")
     // ---- a retirement that crashed mid-delete finishes on retry ----
     assert(operators.PipelineOps.retireRun(spark, inflight))
-    val crashed = java.nio.file.Files
-      .createTempDirectory("graft_retire_crash").toString
+    val crashed = tempDir("graft_retire_crash").toString
     operators.PipelineOps.curationRun(spark, dir, Some(crashed))
     // emulate the crash window: intent written, stage_5 deleted, then
     // death — the surviving markers no longer read "complete"
@@ -586,8 +580,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("forceUnlockRun unlocks only a provably-dead writer's lock (VERDICT r16 #6): a dead-pid orphan unlocks and the re-invocation resumes; same-process, foreign-host, live-pid and unstamped locks are refused") {
     val dir = "/root/testdata/sf0.001"
-    val runDir = java.nio.file.Files
-      .createTempDirectory("graft_forceunlock").toString
+    val runDir = tempDir("graft_forceunlock").toString
     def pth(s: String) = new org.apache.hadoop.fs.Path(s)
     val fs = pth(runDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lock = pth(s"$runDir/run.lock")
@@ -672,8 +665,7 @@ class PipelineSpec extends AnyFunSuite {
     // loser's exclusive create throws. Staged deterministically via
     // the seam — the "winner" writes its intent inside the loser's
     // check→create window.
-    val raceDir = java.nio.file.Files
-      .createTempDirectory("graft_retire_race").toString
+    val raceDir = tempDir("graft_retire_race").toString
     val fs = pth(raceDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fabricate(raceDir, fs)
     val intent = pth(s"$raceDir/retired")
@@ -694,8 +686,7 @@ class PipelineSpec extends AnyFunSuite {
     // fix must not widen the catch into reading every failure as a
     // lost race), and the failed pass stays cleanly retryable
     GraftFs.register(spark)
-    val failDir = "graftfs://" + java.nio.file.Files
-      .createTempDirectory("graft_retire_fail")
+    val failDir = "graftfs://" + tempDir("graft_retire_fail")
     val gfs = pth(failDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fabricate(failDir, gfs)
     GraftFs.armFault("create", "retired")

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * or bounded frame, or a conservation identity — so a silent
   * aggregation/join/window bug cannot pass both the oracle and the law.
   */
-class ScienceSpec extends AnyFunSuite {
+class ScienceSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   private val d = "/root/testdata/sf0.001"
   import spark.implicits._
@@ -627,7 +627,7 @@ class ScienceSpec extends AnyFunSuite {
   // ---- round-9 batch: q266/q267/q268 ---------------------------------
 
   private def writeDocs(rows: Seq[(Long, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r9docs").toString
+    val dir = tempDir("graft_r9docs").toString
     rows.map { case (id, src, t) => (id, t, "en", src, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -720,7 +720,7 @@ class ScienceSpec extends AnyFunSuite {
   }
 
   test("q268: identical class directions read 10000 bp, orthogonal read 0") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r9emb").toString
+    val dir = tempDir("graft_r9emb").toString
     def axis(k: Int): Seq[Float] = Seq.tabulate(64)(i => if (i == k) 1f else 0f)
     // labels 0 and 1 point along e1; label 2 along e2
     val rows = Seq(

@@ -8,8 +8,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 /** Temp dirs a spec makes through [[tempDir]] are deleted when the spec
-  * ends, so repeated runs of the crash-law specs do not fill the host's
-  * temp dir with logs, checkpoints and fixture copies. */
+  * ends, so repeated suite runs do not fill the host's temp dir with
+  * logs, checkpoints, fixture copies and query outputs. */
 trait TempDirs extends BeforeAndAfterAll { this: Suite =>
   private val made = new ConcurrentLinkedQueue[Path]()
 

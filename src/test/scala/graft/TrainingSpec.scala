@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * on a planted fixture: contamination via a copied 5-gram, PII
   * multiplicity by doc_id parity, a pathologically repetitive doc, and
   * quota/determinism properties of the stratified sample. */
-class TrainingSpec extends AnyFunSuite {
+class TrainingSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -20,7 +20,7 @@ class TrainingSpec extends AnyFunSuite {
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota", "en", "srcB"),
       (3L, "spam spam spam spam spam spam", "en", "srcB")
     ).map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_train").toString
+    val dir = tempDir("graft_train").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     dir
@@ -90,7 +90,7 @@ class TrainingSpec extends AnyFunSuite {
       .contaminationCounts(docs.filter(col("doc_id") % 97 =!= 0), evalGrams)
       .as[(Long, Long, Boolean)].collect().toSet
     // readStream needs a directory; the fixture is a single file.
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_docs")
+    val streamDir = tempDir("graft_stream_docs")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/documents.parquet"),
       streamDir.resolve("part-0.parquet"))
@@ -133,7 +133,7 @@ class TrainingSpec extends AnyFunSuite {
       (2L, "a b", "en", "srcB"),
       (3L, ("x " * 500).trim, "en", "srcB")
     ).map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_degen").toString
+    val dir = tempDir("graft_degen").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     for (q <- Seq("q73_decontaminate", "q74_pii_scrub", "q75_repetition_stats",
@@ -167,7 +167,7 @@ class TrainingSpec extends AnyFunSuite {
     val batch = graft.operators.TrainingOps
       .piiScrub(graft.operators.TrainingOps.withPiiText(docs))
       .as[(Long, Int, Int, Int, String)].collect().toSet
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_pii")
+    val streamDir = tempDir("graft_stream_pii")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/documents.parquet"),
       streamDir.resolve("part-0.parquet"))
@@ -215,7 +215,7 @@ class TrainingSpec extends AnyFunSuite {
     val ids = (0L to 19L)
     val rows = ids.map(i => (i, s"text $i", "en",
       if (i < 15) "srcA" else "srcB", 6L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_psamp").toString
+    val dir = tempDir("graft_psamp").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q135_priority_sample")(spark, dir)
@@ -247,7 +247,7 @@ class TrainingSpec extends AnyFunSuite {
       (3L, words(100, "d"), "en", "srcB"),
       (4L, words(100, "e"), "en", "srcB"))
       .map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_budget").toString
+    val dir = tempDir("graft_budget").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q136_token_budget")(spark, dir)
@@ -272,7 +272,7 @@ class TrainingSpec extends AnyFunSuite {
     val texts = Seq(
       (0L, "a b c d"), (1L, "a b c x"), (2L, "a b y z"),
       (3L, "p q r s"), (4L, "a p q r"), (5L, "m n o u"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_rrf").toString
+    val dir = tempDir("graft_rrf").toString
     embs.map { case (i, e) => (i, e, 0) }
       .toDF("vec_id", "embedding", "label")
       .repartition(2).write.parquet(s"$dir/embeddings.parquet")
@@ -326,7 +326,7 @@ class TrainingSpec extends AnyFunSuite {
       (1L to 3L).map(row(_, "P1", "O", "2024-01-15")) ++
         (11L to 17L).map(row(_, "P1", "O", "2024-02-15")) ++
         (21L to 50L).map(row(_, "P2", "F", "2024-01-15"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_kanon").toString
+    val dir = tempDir("graft_kanon").toString
     rows.toDF("o_orderkey", "o_orderpriority", "o_orderstatus", "o_orderdate")
       .repartition(3).write.parquet(s"$dir/orders.parquet")
     val got = SparkEntry.queries("q144_k_anonymity")(spark, dir)
@@ -349,7 +349,7 @@ class TrainingSpec extends AnyFunSuite {
         (11L to 14L).map(row(_, "P2", "O", "2024-01-15")) ++
         (21L to 25L).map(i => row(i, "P3", if (i % 2 == 0) "O" else "F",
           "2024-02-15"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ldiv").toString
+    val dir = tempDir("graft_ldiv").toString
     rows.toDF("o_orderkey", "o_orderpriority", "o_orderstatus", "o_orderdate")
       .repartition(3).write.parquet(s"$dir/orders.parquet")
     val got = SparkEntry.queries("q156_l_diversity")(spark, dir)
@@ -363,7 +363,7 @@ class TrainingSpec extends AnyFunSuite {
     val rows = (1 to 5).map(i => (i.toLong, "srcA")) ++
       (6 to 8).map(i => (i.toLong, "srcB")) ++
       (9 to 10).map(i => (i.toLong, "srcC"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_alloc").toString
+    val dir = tempDir("graft_alloc").toString
     rows.map { case (id, src) => (id, s"doc $id text", "en", src, 10L) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -386,7 +386,7 @@ class TrainingSpec extends AnyFunSuite {
       (2L, "e1 e2 e3 e4 e5 e6 e7 e8", "en", "s"),
       (3L, "q1 r1 s1 t1 u1 v1 w1 x2", "en", "s")
     ).map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_nsweep").toString
+    val dir = tempDir("graft_nsweep").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q294_decon_n_sweep")(spark, dir)
@@ -406,7 +406,7 @@ class TrainingSpec extends AnyFunSuite {
       (1L, "x1 x2 e1 e2 e3 e4 e5 e6 e7 y1 y2 y3 f1 f2 f3 f4 f5", "en", "s"),
       (2L, "q1 q2 q3 q4 q5 q6 q7", "en", "s")
     ).map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
-    val dir = java.nio.file.Files.createTempDirectory("graft_extent").toString
+    val dir = tempDir("graft_extent").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val got = SparkEntry.queries("q298_contamination_extent")(spark, dir)

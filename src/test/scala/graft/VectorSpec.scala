@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Vector math + ANN verification: exact cosine values on known
   * vectors, and planted-neighbor recall for the LSH-bucketed ANN
   * (which has no DuckDB oracle). */
-class VectorSpec extends AnyFunSuite {
+class VectorSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
   import spark.implicits._
 
@@ -33,14 +33,14 @@ class VectorSpec extends AnyFunSuite {
     val queries = (0L until 10L).map(i => (i, randVec(), 0))
     val copies = queries.map { case (i, v, _) => (100L + i, v.clone(), 1) }
     val filler = (200L until 400L).map(i => (i, randVec(), 2))
-    val dir = java.nio.file.Files.createTempDirectory("graft_emb").toString
+    val dir = tempDir("graft_emb").toString
     (queries ++ copies ++ filler).toDF("vec_id", "embedding", "label")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     dir
   }
 
   test("mutual NN: reciprocal top-1 pairs only, one-sided NNs excluded") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mnn").toString
+    val dir = tempDir("graft_mnn").toString
     // v1↔v2 are each other's top-1 (mutual). v3's NN is v2 (whose NN
     // is v1) and v4's NN is v3 (whose NN is v2) → a one-sided chain
     // that must yield NO further pairs.
@@ -142,7 +142,7 @@ class VectorSpec extends AnyFunSuite {
       .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
       .drop("embedding")
     val assigned = graft.operators.IvfAnn.buildIndex(corpus).assigned
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/idx"
+    val path = tempDir("graft_ivf").toString + "/idx"
     graft.operators.IvfAnn.writeClustered(corpus, assigned, path)
 
     val probe = spark.read.parquet(path).filter(col("cell").isin(0, 1))
@@ -240,7 +240,7 @@ class VectorSpec extends AnyFunSuite {
       v.map(_ / n)
     }
     def writeVecs(vecs: Seq[(Long, Array[Float])]): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_q50c").toString
+      val dir = tempDir("graft_q50c").toString
       vecs.toDF("vec_id", "embedding")
         .withColumn("label", lit(0))
         .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
@@ -293,7 +293,7 @@ class VectorSpec extends AnyFunSuite {
       ((c * 16 + i).toLong,
         centers(c).zip(noise).map { case (a, b) => (a + b).toFloat })
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_coarse").toString
+    val dir = tempDir("graft_coarse").toString
     vecs.toDF("vec_id", "embedding").withColumn("label", lit(0))
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     val t = 0.9
@@ -342,7 +342,7 @@ class VectorSpec extends AnyFunSuite {
       ((c * 12 + i).toLong,
         centers(c).zip(noise).map { case (a, b) => (a + b).toFloat })
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_gadj").toString
+    val dir = tempDir("graft_gadj").toString
     vecs.toDF("vec_id", "embedding").withColumn("label", lit(0))
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     val t = 0.9
@@ -439,7 +439,7 @@ class VectorSpec extends AnyFunSuite {
       val n = math.sqrt(v.map(x => x * x).sum)
       v.map(x => (x / n).toFloat)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_incoh").toString
+    val dir = tempDir("graft_incoh").toString
     (0 until 300).map(i => (i.toLong, unit())).toDF("vec_id", "embedding")
       .withColumn("label", lit(0))
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
@@ -541,7 +541,7 @@ class VectorSpec extends AnyFunSuite {
     val rows = Seq(
       (0L, Array(0.1f, 0.2f), 0), (1L, Array(0.3f, 0.4f), 0),
       (2L, Array(-0.1f, 0.5f), 1), (3L, Array(-0.1f, 0.5f), 1))
-    val dir = java.nio.file.Files.createTempDirectory("graft_embdrift").toString
+    val dir = tempDir("graft_embdrift").toString
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     val got = SparkEntry.queries("q181_embedding_drift")(spark, dir)
@@ -558,7 +558,7 @@ class VectorSpec extends AnyFunSuite {
     val rows = Seq(
       (0L, Array(0.1f, 0.2f), 0), (1L, Array(-0.1f, 0.5f), 0),
       (2L, Array(0.3f, 0.4f), 1))
-    val dir = java.nio.file.Files.createTempDirectory("graft_embnorm").toString
+    val dir = tempDir("graft_embnorm").toString
     rows.toDF("vec_id", "embedding", "label")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     val got = SparkEntry.queries("q193_embedding_norms")(spark, dir)
@@ -569,7 +569,7 @@ class VectorSpec extends AnyFunSuite {
   }
 
   test("embedding coverage: per-source ppm of docs with a vector") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cov").toString
+    val dir = tempDir("graft_cov").toString
     Seq((1L, "a b", "en", "srcA", 3L), (2L, "c d", "en", "srcA", 3L),
         (3L, "e f", "en", "srcB", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

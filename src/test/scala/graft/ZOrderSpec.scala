@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * [min,max] ranges overlap the box — exactly what parquet min/max
   * skipping prunes on — must be much smaller under z-order than under a
   * single-column sort. */
-class ZOrderSpec extends AnyFunSuite {
+class ZOrderSpec extends AnyFunSuite with TempDirs {
   lazy val spark = TestSession.spark
 
   test("zvalue interleaves bits") {
@@ -51,7 +51,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("2-D box query overlaps far fewer files under z-order than linear sort") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_z").toString
+    val tmp = tempDir("graft_z").toString
     val orders = Tables.orders(spark, "/root/testdata/sf0.01") // 15k rows
     val nFiles = 32
 

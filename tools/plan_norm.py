@@ -16,6 +16,8 @@ it with every per-run token replaced by a fixed placeholder:
   - fresh lambda names        `x_12#`                 -> `x_N#`
   - warehouse locations       `file:/a/b/spark-warehouse/` -> `file:<warehouse>/`
     (so checkouts in different directories compare equal)
+  - round-trip dirs           `graft_roundtrip8013..` -> `graft_roundtrip<N>`
+    (one temp dir per JVM, see `Extras.roundTripDir`)
 
 Everything before the first `===== <query>` header and sbt's own status
 lines (`[success]`, `[warn]`, `[error]`, ...) are dropped. Two dumps of
@@ -34,6 +36,7 @@ RULES = [
     (re.compile(r" at [\w$.]+\.scala:\d+"), " at <site>"),
     (re.compile(r"@[0-9a-f]{5,}"), "@<hash>"),
     (re.compile(r"file:\S*/spark-warehouse/"), "file:<warehouse>/"),
+    (re.compile(r"graft_roundtrip\d+"), "graft_roundtrip<N>"),
 ]
 
 SBT_STATUS = re.compile(r"^\[(success|warn|error|debug)\]")
