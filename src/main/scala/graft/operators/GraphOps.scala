@@ -123,25 +123,14 @@ object GraphOps {
   /** Min-distance BFS levels: `rounds` unrolled iterations of
     * dist ← min(dist, min over in-neighbors + 1). Each round is one
     * shuffle (min-combine on id); the frontier table is node-sized, the
-    * edge table is scanned in place. */
-  private[graft] def bfsLevels(edges: DataFrame, seeds: DataFrame,
-      rounds: Int, checkpointEvery: Int = 3): DataFrame = {
+    * edge table is scanned in place.
+    * No checkpoint: replay ends at materialized shuffle outputs (NOTES.md). */
+  private[graft] def bfsLevels(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     var dist = seeds.select(col("id"), lit(0L).as("dist"))
-    for (r <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       val cand = edges.join(dist, col("src") === col("id"))
         .select(col("dst").as("id"), (col("dist") + 1).as("dist"))
-      // Checkpoint cadence, MEASURED at 10× edges (20M edges, SCALE.md):
-      // every-round 5.07 s, every-2 4.06 s, none-within-3-rounds
-      // 3.06 s. dist is consumed twice per round so the logical plan
-      // doubles per un-checkpointed round — but the
-      // replayed stages end at ALREADY-MATERIALIZED shuffle outputs
-      // (Spark skips them via shuffle-file reuse), so replay is nearly
-      // free at small round counts while every checkpoint pays a real
-      // node-sized materialization. Cadence 3 bounds plan growth at 8×
-      // for deeper BFS; for the 3-round queries it means no
-      // mid-iteration checkpoint at all.
       dist = dist.unionByName(cand).groupBy("id").agg(min(col("dist")).as("dist"))
-      if (r % checkpointEvery == 0 && r < rounds) dist = dist.localCheckpoint()
     }
     dist
   }

@@ -59,9 +59,7 @@ object LlmOps {
     * more than the parallelism buys. */
   private def docsWithShingles(s: SparkSession, d: String, fan: Boolean = false): DataFrame = {
     val base = Tables.documents(s, d)
-    (if (fan) base.spread(col("doc_id")) else base)
-      .withColumn("words", TextFns.tokens(col("text")))
-      .withColumn("shingles", array_distinct(TextFns.shingles(col("words"), 3)))
+    withShingles(if (fan) base.spread(col("doc_id")) else base)
   }
 
   /** Base shingle hashes: xxhash64 mod P, computed ONCE per shingle —
@@ -93,10 +91,7 @@ object LlmOps {
     * a streaming DataFrame unchanged (that identity is what the
     * StreamingSpec batch-parity law certifies). */
   private[graft] def bandedDocRows(s: SparkSession, docs: DataFrame): DataFrame = {
-    val sh = docs
-      .withColumn("words", TextFns.tokens(col("text")))
-      .withColumn("shingles", array_distinct(TextFns.shingles(col("words"), 3)))
-      .filter(size(col("shingles")) > 0)
+    val sh = withShingles(docs).filter(size(col("shingles")) > 0)
     sh.withColumn("hx", shingleHashes(col("shingles")))
       .withColumn("sig", minhashSig(s, col("hx")))
       .select(explode(bandKeys(col("sig"))).as("band_key"),
@@ -476,9 +471,16 @@ object LlmOps {
   // Oracle twins of the shingle/pair/cluster derivations below. Each is
   // written once; every near-dup oracle composes them.
 
-  /** Oracle twin of a doc's distinct 3-gram shingle set
-    * (`array_distinct(shingles(tokens(text), 3))`, [[docsWithShingles]]).
-    * Single-line, like [[TextFns.shinglesSql]]. */
+  /** A doc's distinct 3-gram shingle set: `docs` plus `words`
+    * (`tokens(text)`) and `shingles` (`array_distinct(shingles(words, 3))`).
+    * MiningOps spells it inline (see its `shingledDocs`); the oracle
+    * spells it [[docShinglesSql]]. */
+  private[graft] def withShingles(docs: DataFrame): DataFrame =
+    docs.withColumn("words", TextFns.tokens(col("text")))
+      .withColumn("shingles", array_distinct(TextFns.shingles(col("words"), 3)))
+
+  /** Oracle twin of [[withShingles]]. Single-line, like
+    * [[TextFns.shinglesSql]]. */
   private[graft] val docShinglesSql: String =
     s"list_distinct(${TextFns.shinglesSql(TextFns.tokensSql("text"), 3)})"
 
@@ -542,6 +544,18 @@ object LlmOps {
        |  FROM (SELECT a, b FROM reach UNION SELECT a, a FROM edges) t
        |  GROUP BY a
        |)""".stripMargin
+
+  /** Near-dup clusters, the Spark twin of [[ccClusterSql]]: (node, label)
+    * connected components ([[graft.plans.ConnectedComponents]]) of the
+    * t = 0.3 pair graph, label = component minimum, one row per clustered
+    * doc. Derived once per corpus snapshot beside the pair graph, in its
+    * own cache: the build reads [[cachedPairStats]], and a nested
+    * `computeIfAbsent` on one `ConcurrentHashMap` throws. */
+  private val clusterCache = new graft.plans.DerivationCache[DataFrame]
+
+  private[graft] def nearDupClusters(s: SparkSession, d: String): DataFrame =
+    clusterCache.getOrCompute(s, d)(graft.plans.ConnectedComponents.components(
+      jaccardCountJoin(s, d).select(col("a_id"), col("b_id"))))
 
   /** Distinct shingle sets per doc with blocking keys and set size. */
   private[graft] def shingleBlocks(s: SparkSession, d: String, fan: Boolean = false): DataFrame =
@@ -1581,25 +1595,17 @@ object LlmOps {
 
     // Near-dup CLUSTERS: connected components over the exact Jaccard
     // pair graph — production dedup keeps one doc per component, not
-    // per pair. Spark side: alternating large-star/small-star with
-    // convergence detection (plans.ConnectedComponents — O(log n)
-    // rounds at ANY diameter; small graphs finish in a driver
-    // union-find). Oracle: DuckDB recursive-CTE transitive
-    // closure, min label per node.
+    // per pair. Spark side: the memoized labels of nearDupClusters
+    // (alternating large-star/small-star, O(log n) rounds at ANY
+    // diameter; small graphs finish in a driver union-find). Oracle:
+    // DuckDB recursive-CTE transitive closure, min label per node.
     Q("q70_dedup_clusters",
       """WITH RECURSIVE CC_CLUSTER_CTES
         |SELECT doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
         |  CAST(cluster_id = doc_id AS BOOLEAN) AS keeper
         |FROM cl ORDER BY doc_id""".stripMargin
         .replace("CC_CLUSTER_CTES", ccClusterSql)) { (s, d) =>
-      // Cluster collapse = connected components over the near-dup pair
-      // graph, via alternating large-star/small-star with convergence
-      // detection (graft.plans.ConnectedComponents): O(log n) rounds at
-      // any diameter, vs O(diameter) for plain min-label propagation —
-      // a chain A~B~C~… of pairwise near-dups is the common adversarial
-      // shape at corpus scale.
-      val pairs = jaccardCountJoin(s, d).select(col("a_id"), col("b_id"))
-      graft.plans.ConnectedComponents.components(pairs)
+      nearDupClusters(s, d)
         .select(col("node").as("doc_id"), col("label").as("cluster_id"),
           (col("label") === col("node")).as("keeper"))
         .orderBy(col("doc_id"))
@@ -1611,8 +1617,8 @@ object LlmOps {
     // curation policy real pipelines ship, because the canonical copy
     // of a near-dup family should be the cleanest one, not the one
     // ingested first. Group-argmax is the q199 broadcast-maxima +
-    // equality-join shape over cluster-sized frames; clusters come
-    // from the same memoized pair graph + CC as q70.
+    // equality-join shape over cluster-sized frames; clusters are
+    // q70's memoized nearDupClusters.
     Q("q221_dedup_best_keeper", {
       s"""WITH RECURSIVE CC_CLUSTER_CTES, q AS (
          |  SELECT doc_id,
@@ -1637,8 +1643,7 @@ object LlmOps {
          |ORDER BY cluster_id""".stripMargin
         .replace("CC_CLUSTER_CTES", ccClusterSql)
     }) { (s, d) =>
-      val pairs = jaccardCountJoin(s, d).select(col("a_id"), col("b_id"))
-      val clusters = graft.plans.ConnectedComponents.components(pairs)
+      val clusters = nearDupClusters(s, d)
         .select(col("node").as("doc_id"), col("label").as("cluster_id"))
       val q = Tables.documents(s, d)
         .withColumn("words", TextFns.tokens(col("text")))
@@ -1683,8 +1688,7 @@ object LlmOps {
       val exactKeep = docs.groupBy(sha2(col("text"), 256))
         .agg(min(col("doc_id")).as("doc_id"))
         .select("doc_id")
-      val pairs = jaccardCountJoin(s, d).select(col("a_id"), col("b_id"))
-      val clusters = graft.plans.ConnectedComponents.components(pairs)
+      val clusters = nearDupClusters(s, d)
         .select(col("node").as("doc_id"), col("label").as("cluster_id"))
       exactKeep
         .join(docs.select(col("doc_id"), col("lang"), col("source")), "doc_id")
@@ -1796,10 +1800,10 @@ object LlmOps {
     // sizes plus the un-paired singleton mass — the curation audit that
     // says how much of the corpus dedup will actually remove (and flags
     // a degenerate "everything is one cluster" blocking failure before
-    // a full dedup run). Reuses the memoized near-dup pair graph and
-    // the star-contraction components (q70); the profile above them is
-    // cluster-frame-sized. CC clusters always have size ≥ 2, so the
-    // singleton row (total docs − clustered docs) never collides.
+    // a full dedup run). Reuses q70's memoized near-dup clusters; the
+    // profile above them is cluster-frame-sized. CC clusters always have
+    // size ≥ 2, so the singleton row (total docs − clustered docs) never
+    // collides.
     Q("q178_dup_cluster_profile",
       """WITH RECURSIVE CC_CLUSTER_CTES,
          |cs AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS size
@@ -1814,9 +1818,7 @@ object LlmOps {
          |  FROM tot CROSS JOIN ncl WHERE ndocs > ncl
          |ORDER BY size""".stripMargin
         .replace("CC_CLUSTER_CTES", ccClusterSql)) { (s, d) =>
-      val comp = graft.plans.ConnectedComponents
-        .components(jaccardCountJoin(s, d).select(col("a_id"), col("b_id")))
-        .localCheckpoint() // histogram + clustered-count consumers
+      val comp = nearDupClusters(s, d)
       val h = comp.groupBy("label").agg(count(lit(1)).as("size"))
         .groupBy("size").agg(count(lit(1)).as("n_clusters"))
         .withColumn("n_docs", col("size") * col("n_clusters"))
@@ -1874,8 +1876,8 @@ object LlmOps {
     // cluster — which IS the component label, so membership alone
     // decides removal), and removal ppm. The procurement-decision
     // readout: a source whose removal ppm is high is paying for data
-    // the corpus already has. Reuses the memoized pair graph and
-    // star-contraction components; above them only a doc_id→source
+    // the corpus already has. Reuses q70's memoized near-dup clusters;
+    // above them only a doc_id→source
     // join and two vocabulary-sized aggregates.
     Q("q185_dedup_impact",
       """WITH RECURSIVE CC_CLUSTER_CTES,
@@ -1895,8 +1897,7 @@ object LlmOps {
          |FROM t2 LEFT JOIN per ON t2.source = per.source
          |ORDER BY t2.source""".stripMargin
         .replace("CC_CLUSTER_CTES", ccClusterSql)) { (s, d) =>
-      val comp = graft.plans.ConnectedComponents
-        .components(jaccardCountJoin(s, d).select(col("a_id"), col("b_id")))
+      val comp = nearDupClusters(s, d)
       val src = Tables.documents(s, d).select(col("doc_id"), col("source"))
       val per = comp.join(src, comp("node") === src("doc_id"))
         .groupBy("source")
@@ -2562,8 +2563,7 @@ object LlmOps {
         |FROM f GROUP BY 1 ORDER BY fold""".stripMargin
         .replace("CC_CLUSTER_CTES", ccClusterSql)
     }) { (s, d) =>
-      val pairs = jaccardCountJoin(s, d).select(col("a_id"), col("b_id"))
-      val comp = graft.plans.ConnectedComponents.components(pairs)
+      val comp = nearDupClusters(s, d)
         .select(col("node").as("doc_id"), col("label"))
       Tables.documents(s, d)
         .select(col("doc_id"),
@@ -2606,8 +2606,7 @@ object LlmOps {
         |GROUP BY 1, 2 ORDER BY kept, quality_pass""".stripMargin
         .replace("CC_CLUSTER_CTES", ccClusterSql)
     }) { (s, d) =>
-      val pairs = jaccardCountJoin(s, d).select(col("a_id"), col("b_id"))
-      val comp = graft.plans.ConnectedComponents.components(pairs)
+      val comp = nearDupClusters(s, d)
         .select(col("node").as("doc_id"), col("label"))
       val docs = Tables.documents(s, d)
       val u = TrainingOps.unigramStats(docs)
@@ -2656,8 +2655,7 @@ object LlmOps {
         |GROUP BY 1, 2 ORDER BY source""".stripMargin
         .replace("CC_CLUSTER_CTES", ccClusterSql)
     }) { (s, d) =>
-      val pairs = jaccardCountJoin(s, d).select(col("a_id"), col("b_id"))
-      val comp = graft.plans.ConnectedComponents.components(pairs)
+      val comp = nearDupClusters(s, d)
         .select(col("node").as("doc_id"), col("label"))
       val docs = Tables.documents(s, d).select(col("doc_id"), col("source"))
       val f = docs.join(comp, Seq("doc_id"), "left")

@@ -61,14 +61,14 @@ object PipelineOps {
     * gates → sqrt-temperature mixture plan → shard layout — as ONE
     * Spark application over one shared warm derivation set. Every
     * stage IS the declared production query (resolved through the
-    * registry, so the composed semantics cannot drift from the
-    * oracle-certified ones); the funnel is their per-doc signals
-    * intersected in the production order:
+    * registry), or the shared derivation it reports, so the composed
+    * semantics cannot drift from the oracle-certified ones; the funnel
+    * is their per-doc signals intersected in the production order:
     *
     *  - S1 exact keepers: q42's min-doc_id-per-content-hash rule;
-    *  - S2 near-dup keepers: drop every clustered doc (q70's CC over
-    *    the shared pair graph) that is not its cluster's quality-elected
-    *    keeper (q221's policy);
+    *  - S2 near-dup keepers: drop every clustered doc (the shared
+    *    near-dup clusters q70 reports, [[LlmOps.nearDupClusters]]) that
+    *    is not its cluster's quality-elected keeper (q221's policy);
     *  - S3 decontamination: drop the held-out eval slice itself
     *    (doc_id ≡ 0 mod 97 — never trained on) and every training doc
     *    sharing a 5-gram with it (q73);
@@ -204,7 +204,7 @@ object PipelineOps {
     val s1 = frontier(1)(q("q42_dedup_exact_survivors")(s, d).select("doc_id"))
     val s2 = frontier(2) {
       // clustered docs that lost their family's quality election
-      val nonKeepers = q("q70_dedup_clusters")(s, d).select(col("doc_id"))
+      val nonKeepers = LlmOps.nearDupClusters(s, d).select(col("node").as("doc_id"))
         .join(q("q221_dedup_best_keeper")(s, d)
           .select(col("keeper_id").as("doc_id")), Seq("doc_id"), "left_anti")
       s1.join(nonKeepers, Seq("doc_id"), "left_anti")

@@ -49,7 +49,11 @@ object ConnectedComponents {
     * A larger graph runs the star rounds until its residual link set
     * falls to that size, and the same driver union-find finishes the
     * residual, whose labels join back to the distributed node list. The
-    * spec exercises the star rounds by forcing the threshold to 0. */
+    * spec exercises the star rounds by forcing the threshold to 0.
+    *
+    * The result carries no lineage — a local relation, or a checkpoint of
+    * the star rounds' join — so a memoized copy
+    * ([[graft.operators.LlmOps.nearDupClusters]]) never replays them. */
   def components(pairs: DataFrame, smallGraphEdges: Long = 1L << 20): DataFrame = {
     val sym0 = pairs.toDF("u", "v")
     // ONE materialization of the (possibly expensive) upstream pipeline:
@@ -145,6 +149,7 @@ object ConnectedComponents {
       }
     nodes.join(parents, nodes("node") === parents("u"), "left")
       .select(col("node"), coalesce(col("parent"), col("node")).as("label"))
+      .localCheckpoint()
   }
 
   /** Union-find over `edges`, merging roots under the smaller id, so

@@ -53,6 +53,13 @@ class DevSpec extends AnyFunSuite with TempDirs {
     assert(out.contains("== Physical Plan =="), out)
     // q101 checkpoints while its frame is built: that plan is printed too
     assert(out.dropWhile(_ != "===== q101_price_histogram").contains("----- localCheckpoint"), out)
+    // q70 builds the memoized near-dup labels (or finds them built); q221
+    // then reads them, so its one construction job is its own checkpoint
+    // of clusters ⋈ quality, over the labels' local relation
+    val cl = dev("plan", "q70_dedup_clusters,q221_dedup_best_keeper", d)
+    val q221 = cl.dropWhile(_ != "===== q221_dedup_best_keeper")
+    assert(q221.filter(_.startsWith("----- ")) == Seq("----- localCheckpoint"), cl)
+    assert(q221.takeWhile(_ != "== Physical Plan ==").exists(_.contains("LocalTableScan")), cl)
   }
 
   test("Dev scale: cold and warm times at 1x and Nx") {

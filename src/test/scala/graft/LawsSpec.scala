@@ -65,14 +65,21 @@ class LawsSpec extends AnyFunSuite with TempDirs {
 
   test("memoized pair-graph path ≡ uncached recomputation (q43 at t=0.3)") {
     // Certifies the shared-derivation cache contract: the cached pair
-    // statistics q43/q70/q82 consume must be bit-identical to a fresh
-    // computation (jaccardCountJoinAt never touches the cache).
+    // statistics q43 consumes, and the cached cluster labels q70 reports,
+    // must be bit-identical to a fresh computation (jaccardCountJoinAt
+    // never touches the caches).
     val d = "/root/testdata/sf0.001"
     val cached = SparkEntry.queries("q43_ngram_jaccard")(spark, d)
       .collect().toSeq.sorted(RowOrd)
     val fresh = graft.operators.LlmOps.jaccardCountJoinAt(spark, d, 3)
+    assert(cached == fresh.collect().toSeq.sorted(RowOrd))
+    val clusters = SparkEntry.queries("q70_dedup_clusters")(spark, d)
       .collect().toSeq.sorted(RowOrd)
-    assert(cached == fresh)
+    val freshClusters = graft.plans.ConnectedComponents
+      .components(fresh.select($"a_id", $"b_id"))
+      .select($"node", $"label", $"label" === $"node")
+      .collect().toSeq.sorted(RowOrd)
+    assert(clusters.nonEmpty && clusters == freshClusters)
   }
 
   test("sweep-line rolling MAU ≡ brute-force support count on random activity sets") {
@@ -128,10 +135,11 @@ class LawsSpec extends AnyFunSuite with TempDirs {
   }
 
   test("memoized pair graph follows an in-place corpus overwrite (q43/q178 input)") {
-    // End-to-end: q43 reads the MEMOIZED pair graph (cachedPairStats).
-    // Overwrite the documents table in place with a corpus whose
-    // near-dup structure differs — the declared query must reflect the
-    // new corpus, not the cached pair graph of the old one.
+    // End-to-end: q43 reads the MEMOIZED pair graph (cachedPairStats),
+    // q70 the memoized cluster labels (nearDupClusters). Overwrite the
+    // documents table in place with a corpus whose near-dup structure
+    // differs — both declared queries must reflect the new corpus, not
+    // the cached derivations of the old one.
     val dir = tempDir("graft_docs_ow").toString
     def write(rows: Seq[(Long, String)]): Unit =
       rows.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
@@ -143,6 +151,9 @@ class LawsSpec extends AnyFunSuite with TempDirs {
     val before = SparkEntry.queries("q43_ngram_jaccard")(spark, dir)
       .as[(Long, Long, Long)].collect().toSet
     assert(before.map(p => (p._1, p._2)) == Set((1L, 2L)))
+    def clusters() = SparkEntry.queries("q70_dedup_clusters")(spark, dir)
+      .as[(Long, Long, Boolean)].collect().toSet
+    assert(clusters() == Set((1L, 1L, true), (2L, 1L, false)))
     // docs move: 2 is rewritten unrelated, 3 becomes 1's twin
     write(Seq((1L, shared), (2L, "now totally unrelated " +
       (1 to 9).map(i => s"other$i").mkString(" ")), (3L, shared)))
@@ -150,6 +161,9 @@ class LawsSpec extends AnyFunSuite with TempDirs {
       .as[(Long, Long, Long)].collect().toSet
     assert(after.map(p => (p._1, p._2)) == Set((1L, 3L)),
       s"stale pair graph served after overwrite: $after")
+    val afterClusters = clusters()
+    assert(afterClusters == Set((1L, 1L, true), (3L, 1L, false)),
+      s"stale cluster labels served after overwrite: $afterClusters")
   }
 
   test("PrefixScan.rowNumber ≡ global row_number, independent of partitioning") {
