@@ -13,6 +13,12 @@ import org.apache.spark.sql.SparkSession
   *    microsecond timestamps in Tables.events.
   *  - parquet outputs written as TIMESTAMP_MICROS (not INT96) so the
   *    DuckDB oracle reads identical values.
+  *  - `GraftExtensions`: the native expressions (`graft_dot`,
+  *    `graft_minhash`, `graft_rollhash`) and one AQE query-stage
+  *    preparation rule, `plans.SmallSortExchange`, which plans a global
+  *    sort's range exchange with one partition when the input's size
+  *    estimate is one AQE would coalesce into one partition anyway
+  *    (no range-sampling job).
   */
 object GraftSession {
 

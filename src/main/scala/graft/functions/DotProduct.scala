@@ -86,7 +86,8 @@ object GraftFunctions {
 /** SparkSessionExtensions hook: `builder.withExtensions(new
   * GraftExtensions)` (or spark.sql.extensions=graft.functions.
   * GraftExtensions on a real cluster) makes the engine's native
-  * expressions available to every session derived from the build,
+  * expressions, and the `plans.SmallSortExchange` query-stage
+  * preparation rule, available to every session derived from the build,
   * including pure-SQL users — the supported injection point for
   * library-provided Catalyst code. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
@@ -105,5 +106,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       FunctionIdentifier("graft_rollhash"),
       new ExpressionInfo(classOf[RollingHash].getName, "graft_rollhash"),
       (exprs: Seq[Expression]) => RollingHash(exprs(0))))
+    ext.injectQueryStagePrepRule(_ => graft.plans.SmallSortExchange)
   }
 }

@@ -91,7 +91,7 @@ object LlmOps {
     * a streaming DataFrame unchanged (that identity is what the
     * StreamingSpec batch-parity law certifies). */
   private[graft] def bandedDocRows(s: SparkSession, docs: DataFrame): DataFrame = {
-    val sh = withShingles(docs).filter(size(col("shingles")) > 0)
+    val sh = withShingles(docs.filter(hasShingles))
     sh.withColumn("hx", shingleHashes(col("shingles")))
       .withColumn("sig", minhashSig(s, col("hx")))
       .select(explode(bandKeys(col("sig"))).as("band_key"),
@@ -479,6 +479,19 @@ object LlmOps {
     docs.withColumn("words", TextFns.tokens(col("text")))
       .withColumn("shingles", array_distinct(TextFns.shingles(col("words"), 3)))
 
+  /** Non-empty guard for [[withShingles]]: a doc has a 3-gram exactly
+    * when it has at least 3 tokens. Tested on the tokens because
+    * Catalyst pushes `size(shingles) > 0` below the projection, which
+    * then builds every shingle set twice. */
+  private[graft] val hasShingles: Column = size(TextFns.tokens(col("text"))) >= 3
+
+  /** One row per shingle of a set kept by [[hasShingles]]. Over a set
+    * that is never empty or null, `explode_outer` returns the rows
+    * `explode` does; unlike `explode`, it makes Catalyst infer no
+    * `size(sg) > 0 AND isnotnull(sg)` filter, which it would push below
+    * the projection and so build the set again. */
+  private[graft] def explodeShingles(sg: Column): Column = explode_outer(sg)
+
   /** Oracle twin of [[withShingles]]. Single-line, like
     * [[TextFns.shinglesSql]]. */
   private[graft] val docShinglesSql: String =
@@ -560,10 +573,10 @@ object LlmOps {
   /** Distinct shingle sets per doc with blocking keys and set size. */
   private[graft] def shingleBlocks(s: SparkSession, d: String, fan: Boolean = false): DataFrame =
     docsWithShingles(s, d, fan)
+      .filter(hasShingles)
       .select(col("doc_id"), col("lang"), (col("n_chars") / 100).cast("long").as("lb"),
         col("shingles").as("sg"))
       .withColumn("sz", size(col("sg")))
-      .filter(col("sz") > 0)
 
   /** Inverted-index count join: explode distinct shingles, self-join on
     * (shingle, block), count common shingles per pair, derive
@@ -597,7 +610,7 @@ object LlmOps {
     // (one documents scan, ReusedExchange in the plan).
     val sh = shingleBlocks(s, d, fan = !useLenBucket)
     val ex = sh.select(col("doc_id"), col("lang"), col("lb"), col("sz"),
-      explode(col("sg")).as("shingle"))
+      explodeShingles(col("sg")).as("shingle"))
     val a = ex.select(col("doc_id").as("a_id"), col("sz").as("a_sz"),
       col("lang"), col("lb"), col("shingle"))
     val b = ex.select(col("doc_id").as("b_id"), col("sz").as("b_sz"),
@@ -680,7 +693,7 @@ object LlmOps {
       // rejected and the planner silently falls back to a full shuffle
       shingleBlocks(s, d)
         .select(col("doc_id"), col("sz"), col("lang"), col("lb"),
-          explode(col("sg")).as("shingle"))
+          explodeShingles(col("sg")).as("shingle"))
         .write.mode("overwrite")
         .bucketBy(16, "shingle", "lang", "lb").sortBy("shingle", "lang", "lb")
         .saveAsTable(name)
@@ -695,7 +708,7 @@ object LlmOps {
       col("lang"), col("lb"), col("shingle"))
     val b = deltaSh.select(col("doc_id").as("b_id"), col("sz").as("b_sz"),
       col("lang").as("langb"), col("lb").as("lbb"),
-      explode(col("sg")).as("shingleb"))
+      explodeShingles(col("sg")).as("shingleb"))
     finishJaccard(pairStats(a, b), t10)
   }
 
@@ -708,9 +721,9 @@ object LlmOps {
   private[graft] def deltaNearDupProbe(
       shIndex: DataFrame, shDelta: DataFrame, t10: Int): DataFrame = {
     val exAll = shIndex.select(col("doc_id").as("a_id"), col("sz").as("a_sz"),
-      col("lang"), col("lb"), explode(col("sg")).as("shingle"))
+      col("lang"), col("lb"), explodeShingles(col("sg")).as("shingle"))
     val exNew = shDelta.select(col("doc_id").as("b_id"), col("sz").as("b_sz"),
-      col("lang").as("langb"), col("lb").as("lbb"), explode(col("sg")).as("shingleb"))
+      col("lang").as("langb"), col("lb").as("lbb"), explodeShingles(col("sg")).as("shingleb"))
     finishJaccard(pairStats(exAll, exNew), t10)
   }
 
@@ -773,8 +786,8 @@ object LlmOps {
     * fixture (which is what makes the q44 oracle deterministic). */
   private[graft] def exactJaccardPairsAt(s: SparkSession, d: String, t10: Int): DataFrame = {
     val sh = docsWithShingles(s, d)
+      .filter(hasShingles)
       .select(col("doc_id"), col("shingles").as("sg"), size(col("shingles")).as("sz"))
-      .filter(col("sz") > 0)
     val a = sh.select(col("doc_id").as("a_id"), col("sg").as("sga"), col("sz").as("a_sz"))
     val b = sh.select(col("doc_id").as("b_id"), col("sg").as("sgb"), col("sz").as("b_sz"))
     finishJaccard(a.join(b, col("a_id") < col("b_id"))
@@ -796,7 +809,7 @@ object LlmOps {
   private[graft] def jaccardPrefixJoinAt(s: SparkSession, d: String, t10: Int): DataFrame = {
     val sh = shingleBlocks(s, d)
     val ex = sh.select(col("doc_id"), col("lang"), col("lb"), col("sz"),
-      explode(col("sg")).as("shingle"))
+      explodeShingles(col("sg")).as("shingle"))
     val dfreq = ex.groupBy(col("lang"), col("lb"), col("shingle"))
       .agg(count(lit(1)).as("df"))
     // ONE aggregation builds the canonical view: each doc's shingles
@@ -885,7 +898,7 @@ object LlmOps {
   private def computeShingleSkewStat(s: SparkSession, d: String): Double = {
     val sh = shingleBlocks(s, d)
       .filter(pmod(xxhash64(col("doc_id")), lit(SkewSampleMod)) === 0)
-    val dfreq = sh.select(col("lang"), col("lb"), explode(col("sg")).as("shingle"))
+    val dfreq = sh.select(col("lang"), col("lb"), explodeShingles(col("sg")).as("shingle"))
       .groupBy("lang", "lb", "shingle").agg(count(lit(1)).as("df"))
     val row = dfreq
       .agg(sum(col("df") * col("df")).as("s2"), sum(col("df")).as("s1")).head()
@@ -947,7 +960,7 @@ object LlmOps {
   private[graft] def containmentPrefixJoin(s: SparkSession, d: String): DataFrame = {
     val sh = shingleBlocks(s, d)
     val ex = sh.select(col("doc_id"), col("lang"), col("sz"),
-      explode(col("sg")).as("shingle"))
+      explodeShingles(col("sg")).as("shingle"))
     val dfreq = ex.groupBy(col("lang"), col("shingle")).agg(count(lit(1)).as("df"))
     val sorted = ex.join(dfreq, Seq("lang", "shingle"))
       .groupBy(col("doc_id"), col("lang"), col("sz"))
@@ -1121,7 +1134,7 @@ object LlmOps {
     Q("q44_minhash_lsh",
       jaccardOracleSqlAt(productionThreshold10, sharedShinglePairsSql)) { (s, d) =>
       val docs = docsWithShingles(s, d, fan = true) // A/B r17: 2.0 -> 1.1 s
-        .filter(size(col("shingles")) > 0)
+        .filter(hasShingles)
         .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz"))
       val sig = docs
         .withColumn("hx", shingleHashes(col("shingles")))
@@ -1391,7 +1404,7 @@ object LlmOps {
         |  CAST(count(*) AS BIGINT) AS n_within
         |FROM p""".stripMargin) { (s, d) =>
       val sig = docsWithShingles(s, d)
-        .filter(size(col("shingles")) > 0)
+        .filter(hasShingles)
         .select(col("doc_id"),
           minhashSig(s, shingleHashes(col("shingles"))).as("sig"))
       cachedPairStats(s, d)
@@ -2171,10 +2184,10 @@ object LlmOps {
         |  CAST((1000000 * sum(n_bp)) // sum(n_sh) AS BIGINT) AS share_ppm
         |FROM pd GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       val f = docsWithShingles(s, d) // A/B r17: fan-out is a +35% loss here
+        .filter(hasShingles)
         .select(col("doc_id"), col("source"), col("shingles").as("sg"))
-        .filter(size(col("sg")) > 0)
       val e = f.select(col("doc_id"), col("source"),
-        explode(col("sg")).as("shingle")).localCheckpoint() // df build + the bp join
+        explodeShingles(col("sg")).as("shingle")).localCheckpoint() // df build + the bp join
       val nd = f.agg(count(lit(1)).as("nd"))
       val bp = e.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
         .crossJoin(broadcast(nd))
@@ -2258,9 +2271,9 @@ object LlmOps {
         |    AS simpson_ppm
         |FROM c GROUP BY source ORDER BY source""".stripMargin) { (s, d) =>
       val f = docsWithShingles(s, d, fan = true) // A/B r17: ~-10%
+        .filter(hasShingles)
         .select(col("doc_id"), col("source"), col("shingles").as("sg"))
-        .filter(size(col("sg")) > 0)
-        .select(col("doc_id"), col("source"), explode(col("sg")).as("shingle"))
+        .select(col("doc_id"), col("source"), explodeShingles(col("sg")).as("shingle"))
       f.groupBy(col("source"), col("shingle"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("source"))

@@ -65,8 +65,8 @@ object MiningOps {
       fan: Boolean = false): DataFrame = {
     val base = Tables.documents(s, d)
     (if (fan) base.spread(col("doc_id")) else base)
+      .filter(LlmOps.hasShingles)
       .withColumn("sg", array_distinct(TextFns.shingles(TextFns.tokens(col("text")), 3)))
-      .filter(size(col("sg")) > 0)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("sg"))
   }
 
@@ -89,7 +89,7 @@ object MiningOps {
       // materialized once: the exploded shingle table feeds BOTH the
       // doc-count aggregate and the join-back left side — without the
       // checkpoint the shingling runs twice (q101's byVal pattern).
-      val e = shingledDocs(s, d).select(col("doc_id"), explode(col("sg")).as("sg"))
+      val e = shingledDocs(s, d).select(col("doc_id"), LlmOps.explodeShingles(col("sg")).as("sg"))
         .localCheckpoint()
       val c = e.groupBy("sg").agg(count(lit(1)).as("ndoc"))
       e.join(c, "sg")
@@ -756,7 +756,7 @@ object MiningOps {
          |FROM e LEFT JOIN ref USING (sg) WHERE e.doc_id % 2 = 1
          |GROUP BY e.doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
       val e = shingledDocs(s, d, fan = true) // A/B r17: see shingledDocs doc
-        .select(col("doc_id"), explode(col("sg")).as("sg"))
+        .select(col("doc_id"), LlmOps.explodeShingles(col("sg")).as("sg"))
         .localCheckpoint() // reference distinct + candidate side
       val ref = e.filter(col("doc_id") % 2 === 0)
         .select(col("sg")).distinct().withColumn("hit", lit(1))

@@ -786,8 +786,8 @@ object PipelineOps {
       val ranked = IvfAnn
         .boundedTopK(cs, ev, k = 10, Some(IvfAnn.cachedIndex(s, d)))._2
         .filter(col("rank") >= 2)
-      val sg = Tables.documents(s, d).select(col("doc_id"),
-        array_distinct(TextFns.shingles(TextFns.tokens(col("text")), 3)).as("sg"))
+      val sg = LlmOps.withShingles(Tables.documents(s, d))
+        .select(col("doc_id"), col("shingles").as("sg"))
       ranked
         .join(sg.select(col("doc_id").as("query_id"), col("sg").as("sge")),
           "query_id")

@@ -3,7 +3,7 @@ package graft
 import graft.tools.ExecutedPlans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, PartialMerge}
-import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -22,10 +22,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * frame, a per-bucket offsets table, a ≤k-row report) — and then it
   * must be allowlisted here WITH its bound. A new query that plans a
   * global window without a conscious allowlist entry fails this spec:
-  * scale regressions cannot land silently. (The final presentation
-  * `orderBy` every query carries plans as a range exchange, not a
-  * single partition, so it is invisible to this audit — as it should
-  * be: range partitioning scales.)
+  * scale regressions cannot land silently. The final presentation
+  * `orderBy` every query carries plans as a range exchange. Over a
+  * small input, `plans.SmallSortExchange` gives that exchange one
+  * partition, a funnel too; it passes only while its input's size
+  * estimate is within the rule's bound, so a one-partition sort over an
+  * input that is not provably small is an offender.
   *
   * The audit walks the plans Spark actually executes. Building a query
   * runs eager `localCheckpoint`s and planning reads (`head`, `collect`,
@@ -104,6 +106,11 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     case other => other.children.exists(partialAggUpstream)
   }
 
+  private def onePartitionRange(e: ShuffleExchangeExec): Boolean = e.outputPartitioning match {
+    case r: RangePartitioning => r.numPartitions == 1
+    case _ => false
+  }
+
   private def offendingNodes(plan: SparkPlan): Seq[String] = {
     val nodes = Seq.newBuilder[String]
     def walk(p: SparkPlan): Unit = {
@@ -115,6 +122,9 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         case e: ShuffleExchangeExec
           if e.outputPartitioning == SinglePartition && !partialAggUpstream(e.child) =>
           nodes += "single-partition-exchange"
+        case e: ShuffleExchangeExec if onePartitionRange(e) &&
+            !graft.plans.SmallSortExchange.small(e.child, spark.sessionState.conf) =>
+          nodes += "one-partition-range-exchange"
         case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
         case _ => ()
       }
@@ -163,6 +173,26 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         .select((col("r") + 1).as("r1"))
     }
     assert(nodes.contains("global-window (localCheckpoint)"), nodes)
+  }
+
+  test("a one-partition range exchange passes only over an input within the small-sort bound") {
+    def initial(df: org.apache.spark.sql.Dataset[_]): SparkPlan =
+      df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].initialPlan
+    def hasOne(p: SparkPlan) =
+      p.exists { case e: ShuffleExchangeExec => onePartitionRange(e); case _ => false }
+    val small = initial(spark.range(16).orderBy(col("id").desc))
+    assert(hasOne(small) && offendingNodes(small).isEmpty)
+    // A cross join's estimate is the product of its sides' sizes (5.76 MB
+    // here), so the rule keeps its range partitions; forced to one, the
+    // exchange is a funnel over an input that is not provably small.
+    val large = initial(spark.range(300).crossJoin(spark.range(300).toDF("j"))
+      .orderBy(col("id").desc))
+    assert(!hasOne(large))
+    val funneled = large.transform {
+      case e @ ShuffleExchangeExec(r: RangePartitioning, _, _, _) =>
+        e.copy(outputPartitioning = r.copy(numPartitions = 1))
+    }
+    assert(offendingNodes(funneled) == Seq("one-partition-range-exchange"))
   }
 
   test("refined threshold probe plan is funnel-free (the ivf_refined branch, audited directly)") {
