@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
 /** IVF (inverted-file) approximate nearest neighbor: a coarse k-means
   * quantizer partitions the corpus into nlist cells; a query searches
   * only the nprobe nearest cells. This is the scale path the brief
-  * names alongside sign-LSH (q51): at 100 TB the corpus is written
-  * clustered/partitioned by cell id, so a query reads nprobe/nlist of
-  * the data — partition pruning does the rest.
+  * names alongside sign-LSH (q51). The index IS its member table
+  * (vec_id, cell, emb, nrm) — every indexed vector beside its cell —
+  * plus the centroid table: every probe reads the members, so no
+  * consumer joins a corpus with an assignment again.
   *
   * Everything is deterministic and declarative: centroid init takes
   * evenly spaced vectors in vec_id order (no RNG), Lloyd iterations are
@@ -22,9 +23,12 @@ import org.apache.spark.sql.functions._
   *
   * Each index primitive is written once below — the cell angle, the
   * probe bound, nearest-centroid assignment, the centroid mean, the
-  * Lloyd loop, the radius pass and the member table — and the flat
-  * build, the threshold refinement, the grouped adjacency and the
-  * append path all call them.
+  * Lloyd loop and the radius pass — and the flat build, the threshold
+  * refinement, the grouped adjacency and the append path all call
+  * them. A member table is made only where an assignment is — the
+  * build, an append delta and a refinement round ([[assignMembers]])
+  * and an adopted (persisted) quantizer ([[withAssignment]]) — and
+  * those are the only joins of a corpus with an assignment.
   */
 object IvfAnn {
 
@@ -45,12 +49,17 @@ object IvfAnn {
     math.max(4, math.ceil(math.log(nlist.toDouble) / math.log(2.0)).toInt)
   private val lloydIters = 3
 
-  /** The reusable index: cell assignment, centroid metadata (with
-    * radii), and the size-derived constants it was built with — probe
-    * code must use THESE (a probe breadth derived from a different
-    * corpus count would silently change phase-1 breadth). */
-  final case class IvfIndex(assigned: DataFrame, cmeta: DataFrame,
-      nlist: Int, nprobe: Int)
+  /** The reusable index: the member table (vec_id, cell, emb, nrm),
+    * the centroid metadata (cell, cemb, cnrm, radius) and the
+    * size-derived constants it was built with — probe code must use
+    * THESE (a probe breadth derived from a different corpus count would
+    * silently change phase-1 breadth). The assignment the quantizer
+    * persists and the indexed corpus are projections of the members. */
+  final case class IvfIndex(members: DataFrame, cmeta: DataFrame,
+      nlist: Int, nprobe: Int) {
+    def assigned: DataFrame = members.select(col("vec_id"), col("cell"))
+    def corpus: DataFrame = members.select(col("vec_id"), col("emb"), col("nrm"))
+  }
 
   private def clamp(c: Column): Column = greatest(lit(-1.0), least(lit(1.0), c))
 
@@ -73,10 +82,11 @@ object IvfAnn {
     * joined with the broadcast centroid table (key, cemb, cnrm, by…) —
     * a cross join when `by` is empty, else centroids are per `by` key.
     * Nearest by cosine (dot/norm, since the member norm is constant
-    * per row), the argmax taken as a hash AGGREGATION (max_by over
-    * (score, −key)) — no per-vector sort, partial-aggregated map-side,
-    * unlike a window row_number. Ties go to the lowest key. Returns
-    * (vec_id, by…, key). */
+    * per row), the argmax taken as an AGGREGATION (max_by over
+    * (score, −key)) — partial-aggregated map-side, unlike a window
+    * row_number. Ties go to the lowest key. The aggregated rows stay
+    * slim — the vector is not among them — because Spark sorts all
+    * n·nlist of them for this aggregate. Returns (vec_id, by…, key). */
   private def assign(members: DataFrame, centroids: DataFrame,
       key: String = "cell", by: Seq[String] = Nil): DataFrame = {
     val c = broadcast(centroids)
@@ -87,12 +97,37 @@ object IvfAnn {
       .agg(max_by(col(key), struct(col("score"), (-col(key)).as("nc"))).as(key))
   }
 
+  /** `members` (vec_id, emb, nrm, by…) beside their [[assign]]ed key:
+    * the input of every Lloyd round and every member table. */
+  private def assignMembers(members: DataFrame, centroids: DataFrame,
+      key: String = "cell", by: Seq[String] = Nil): DataFrame =
+    members.join(assign(members, centroids, key, by), "vec_id" +: by)
+
+  /** The member-table columns, in order. */
+  private def memberRows(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), col("cell"), col("emb"), col("nrm"))
+
+  /** The member table of `corpus` (vec_id, emb, nrm) under a stored
+    * assignment (vec_id, cell): how a persisted quantizer, or a
+    * compaction's snapshot, becomes an index again. A vec_id re-sent in
+    * a later batch is stored twice with its cell, so the assignment is
+    * taken once per vec_id — one member row per corpus row — and
+    * checkpointed, so a search re-reads only the corpus. */
+  private[graft] def withAssignment(corpus: DataFrame, assigned: DataFrame): DataFrame =
+    memberRows(corpus.join(assigned.dropDuplicates("vec_id").localCheckpoint(), "vec_id"))
+
   /** Elementwise mean of member vectors per key: (keys…, cemb, cnrm).
-    * `members` carries `emb` plus the key columns. */
+    * `members` carries `emb` plus the key columns. The explode is the
+    * outer form, whose null row for an empty vector is dropped: an
+    * inner posexplode makes Catalyst infer `size(emb) > 0` on the
+    * members' scan, and the runtime-filter rule takes that for a
+    * selective filter and puts a bloom filter on the other side of the
+    * Lloyd join — a 1 MiB literal in every task binary of the round. */
   private def recompute(members: DataFrame, keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)
     val dims = members
-      .select(kc :+ posexplode(col("emb")).as(Seq("pos", "v")): _*)
+      .select(kc :+ posexplode_outer(col("emb")).as(Seq("pos", "v")): _*)
+      .filter(col("pos").isNotNull)
       .groupBy(kc :+ col("pos"): _*).agg(avg(col("v")).as("m"))
     dims.groupBy(kc: _*)
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
@@ -110,8 +145,7 @@ object IvfAnn {
   private def lloyd(members: DataFrame, init: DataFrame, iters: Int,
       key: String = "cell", by: Seq[String] = Nil): DataFrame =
     (1 to iters).foldLeft(init) { (cents, _) =>
-      recompute(members.join(assign(members, cents, key, by), "vec_id" +: by),
-        by :+ key).localCheckpoint()
+      recompute(assignMembers(members, cents, key, by), by :+ key).localCheckpoint()
     }
 
   /** Angular radius per key: the largest angle between a member
@@ -128,12 +162,11 @@ object IvfAnn {
   private def vecTable(corpus: DataFrame): DataFrame =
     corpus.select(col("vec_id").as("a_id"), col("emb").as("ea"), col("nrm").as("na"))
 
-  /** The member table (b_id, eb, nb, cell): every corpus vector with
-    * its cell — the side a probe list joins on cell. */
-  private def memberTable(corpus: DataFrame, assigned: DataFrame): DataFrame =
-    corpus.join(assigned, "vec_id")
-      .select(col("vec_id").as("b_id"), col("emb").as("eb"),
-        col("nrm").as("nb"), col("cell"))
+  /** The member table as the candidate side (b_id, eb, nb, cell) that
+    * a probe list joins on cell. */
+  private def candidates(members: DataFrame): DataFrame =
+    members.select(col("vec_id").as("b_id"), col("emb").as("eb"),
+      col("nrm").as("nb"), col("cell"))
 
   /** Every (query, cell) pair with θ(q, c) and the member-cosine bound
     * `ub`: the query side crossed with the broadcast nlist-row centroid
@@ -145,11 +178,11 @@ object IvfAnn {
       .withColumn("ub", cosBound(col("theta"), col("radius")))
 
   /** Deterministic IVF index build: evenly spaced init, a fixed number
-    * of Lloyd rounds, the final assignment, then the per-cell angular
-    * radius the probe bound needs (one extra aggregation pass,
-    * nlist-row result). Both outputs are localCheckpoint'ed — this pair
-    * IS the reusable index (on a cluster: writeClustered + a persisted
-    * centroid table). */
+    * of Lloyd rounds, the final assignment as the member table, then
+    * the per-cell angular radius the probe bound needs (one extra
+    * aggregation pass over the members, nlist-row result). Both outputs
+    * are localCheckpoint'ed — this pair IS the reusable index (on a
+    * cluster: [[writeClustered]] + a persisted centroid table). */
   def buildIndex(corpus: DataFrame): IvfIndex = {
     // evenly spaced init on the (dense) vec_id key — a plain filter, no
     // global window, so init itself scales
@@ -161,10 +194,10 @@ object IvfAnn {
       .select((col("vec_id") / step).cast("int").as("cell"),
         col("emb").as("cemb"), col("nrm").as("cnrm"))
     val centroids = lloyd(corpus, init, lloydIters)
-    val assigned = assign(corpus, centroids).localCheckpoint()
-    val cmeta = centroids.join(radii(corpus.join(assigned, "vec_id"), centroids, Seq("cell")),
-      "cell").localCheckpoint()
-    IvfIndex(assigned, cmeta, nlist, nprobeFor(nlist))
+    val members = memberRows(assignMembers(corpus, centroids)).localCheckpoint()
+    val cmeta = centroids.join(radii(members, centroids, Seq("cell")), "cell")
+      .localCheckpoint()
+    IvfIndex(members, cmeta, nlist, nprobeFor(nlist))
   }
 
   /** [[buildIndex]] under its former name, kept for the benchmark
@@ -174,9 +207,9 @@ object IvfAnn {
   /** Memoized index per (session, fixture dir): an ANN index is built
     * once and amortized over every subsequent query — the q67 bench
     * steady state is therefore the PROBE cost, matching how the index
-    * would be used at 100 TB (prebuilt via writeClustered, not
-    * reclustered per query). Deterministic: the build itself is
-    * RNG-free, so a cached index yields bit-identical results. */
+    * would be used at 100 TB (prebuilt, not reclustered per query).
+    * Deterministic: the build itself is RNG-free, so a cached index
+    * yields bit-identical results. */
   private val indexCache = new graft.plans.DerivationCache[IvfIndex]
 
   /** The `embedding` column (array<float>) as array<double>. */
@@ -222,13 +255,11 @@ object IvfAnn {
     * yields EXACTLY the brute-force top-k. Pruning power is
     * data-dependent: clustered corpora skip most cells, near-orthogonal
     * ones few. Queries are broadcast, so this is for small query sets.
-    * Returns (probe set (query_id, cell), ranked top-k) so
-    * callers/tests can measure the pruning. */
-  def boundedTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
-      index: Option[IvfIndex] = None)
+    * `queries` is (query_id, qe, qn). Returns (probe set (query_id,
+    * cell), ranked top-k) so callers/tests can measure the pruning. */
+  def boundedTopK(idx: IvfIndex, queries: DataFrame, k: Int)
       : (DataFrame, DataFrame) = {
-    val idx = index.getOrElse(buildIndex(corpus))
-    val cells = memberTable(corpus, idx.assigned)
+    val cells = candidates(idx.members)
     // Score every (query, cell): θ(q,c) and the member-cosine bound.
     val scoredCells = cellBounds(queries, "qe", "qn", idx.cmeta)
     // Phase 1: exact search in the nprobe nearest cells → kth-best
@@ -266,33 +297,28 @@ object IvfAnn {
     (probe2.select("query_id", "cell"), ranked)
   }
 
-  /** All-vectors-as-queries scaffolding shared by the IVF-routed pair
-    * operators: the member table keyed by cell, SLIM per-vector cell
-    * scores, the vector lookup table (a_id, ea, na), and the index's
-    * nprobe. The scores — every vector's (cell, θ, cosine upper bound)
-    * via the tiny broadcast centroid table, nlist rows per vector — are
-    * checkpointed (consumed by multiple probe phases). They carry only
-    * (a_id, cell, theta, ub): the frame has n·nlist rows, so keeping
-    * the 64-dim embedding on every row would checkpoint n·nlist·dim
-    * doubles — ~50 GB at 200k vectors, the shape that OOMed the first
-    * IVF100X run. Probe lists re-attach vectors via an a_id join AFTER
-    * the bound filters, when they are probe-sized again. */
-  private def memberAndScores(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, Int) = {
-    val corpus = fullCorpus(s, d)
-    val idx = cachedIndex(s, d)
-    val vecs = vecTable(corpus)
-    val scored = cellBounds(vecs, "ea", "na", idx.cmeta)
-      .select(col("a_id"), col("cell"), col("theta"), col("ub"))
-      .localCheckpoint()
-    (memberTable(corpus, idx.assigned), scored, vecs, idx.nprobe)
+  /** [[boundedTopK]] over the members of `index` (built over `corpus`
+    * when absent) whose vec_id is in `corpus`. */
+  def boundedTopK(corpus: DataFrame, queries: DataFrame, k: Int = 5,
+      index: Option[IvfIndex] = None): (DataFrame, DataFrame) = {
+    val idx = index.getOrElse(buildIndex(corpus))
+    boundedTopK(idx.copy(members = idx.members.join(corpus.select("vec_id"),
+      Seq("vec_id"), "left_semi")), queries, k)
   }
 
-  /** Candidate cosines for a probe list (a_id, ea, na, cell): SHUFFLE
-    * join on cell — never a corpus-sized broadcast — scored with the
-    * identical formula/summation as the all-pairs oracle paths. */
+  /** Every member as a query against every cell: (a_id, ea, na, cell,
+    * θ, cosine upper bound ub) via the tiny broadcast centroid table,
+    * nlist rows per vector — the scaffolding of the all-vectors-as-
+    * queries pair operators. */
+  private def cellScores(idx: IvfIndex): DataFrame =
+    cellBounds(vecTable(idx.members), "ea", "na", idx.cmeta)
+
+  /** Candidate cosines for a probe list (a_id, ea, na, cell) against
+    * the index members: SHUFFLE join on cell — never a corpus-sized
+    * broadcast — scored with the identical formula/summation as the
+    * all-pairs oracle paths. */
   private def probeCosines(members: DataFrame, probe: DataFrame): DataFrame =
-    members.join(probe, Seq("cell"))
+    candidates(members).join(probe, Seq("cell"))
       .filter(col("a_id") =!= col("b_id"))
       .withColumn("c", VectorFns.cosineWithNorms(
         GraftFunctions.dot(col("ea"), col("eb")), col("na"), col("nb")))
@@ -316,14 +342,25 @@ object IvfAnn {
     * all-pairs oracles' ORDER BY c DESC, b_id. */
   def nearestNeighbors(s: SparkSession, d: String): DataFrame =
     nnCache.getOrCompute(s, d) {
-      val (members, scored, vecs, nprobe) = memberAndScores(s, d)
+      val idx = cachedIndex(s, d)
+      val vecs = vecTable(idx.members)
+      // Both phases read the cell scores, so they are checkpointed —
+      // SLIM: (a_id, cell, theta, ub) only. The frame has n·nlist rows,
+      // so keeping the 64-dim embedding on every row would checkpoint
+      // n·nlist·dim doubles — ~50 GB at 200k vectors, the shape that
+      // OOMed the first IVF100X run. Probe lists re-attach vectors via
+      // an a_id join AFTER the bound filters, when they are probe-sized
+      // again.
+      val scored = cellScores(idx)
+        .select(col("a_id"), col("cell"), col("theta"), col("ub"))
+        .localCheckpoint()
       def cosines(probe: DataFrame): DataFrame =
-        probeCosines(members, probe.join(vecs, "a_id"))
+        probeCosines(idx.members, probe.join(vecs, "a_id"))
       // Phase 1: each vector's best candidate from its nprobe nearest
       // cells (window is per-vector over nlist rows — never global).
       val wq = Window.partitionBy(col("a_id")).orderBy(col("theta"), col("cell"))
       val probe1 = scored.withColumn("crnk", row_number().over(wq))
-        .filter(col("crnk") <= nprobe)
+        .filter(col("crnk") <= idx.nprobe)
         .select(col("a_id"), col("cell"))
       val lbound = cosines(probe1).groupBy(col("a_id")).agg(max(col("c")).as("lb"))
       // Phase 2: exact search of every cell the bound cannot exclude.
@@ -362,12 +399,14 @@ object IvfAnn {
     * lives in a cell whose upper bound cos(max(0, θ(a,c) − r)) ≥
     * cos(a,b) > t, so probing only cells with ub ≥ t−ε is exhaustive.
     * Each unordered pair is emitted exactly once, from its lower id's
-    * probe (the a_id < b_id filter drops the mirror row). */
+    * probe (the a_id < b_id filter drops the mirror row). One pass
+    * reads the cell scores, so the probe list keeps its vectors and
+    * nothing is checkpointed. */
   def thresholdPairsExact(s: SparkSession, d: String, t: Double): DataFrame = {
-    val (members, scored, vecs, _) = memberAndScores(s, d)
-    val probe = scored.filter(col("ub") >= lit(t) - lit(1e-6))
-      .select(col("a_id"), col("cell")).join(vecs, "a_id")
-    probeCosines(members, probe)
+    val idx = cachedIndex(s, d)
+    val probe = cellScores(idx).filter(col("ub") >= lit(t) - lit(1e-6))
+      .select(col("a_id"), col("ea"), col("na"), col("cell"))
+    probeCosines(idx.members, probe)
       .filter(col("a_id") < col("b_id") && col("c") > lit(t))
       .select(col("a_id"), col("b_id"))
       .orderBy("a_id", "b_id")
@@ -439,16 +478,18 @@ object IvfAnn {
     * re-id is shuffle-free; all per-round reads are cell-count-bounded
     * planning reads. Refinement never changes WHICH vectors exist —
     * only the quantizer — so any probe over the refined index is exact
-    * by the same triangle bound as the flat index. */
-  private[graft] def refineForThreshold(corpus: DataFrame, base: IvfIndex,
+    * by the same triangle bound as the flat index. Each round rebuilds
+    * the member table: good cells keep their members, split cells'
+    * members carry their subcell. */
+  private[graft] def refineForThreshold(base: IvfIndex,
       t: Double, maxRounds: Int = 3, targetDepth: Int = 16): IvfIndex = {
     val acosT = angleOf(t)
-    var assigned = base.assigned.select(col("vec_id"), col("cell").cast("long").as("cell"))
+    var members = base.members.withColumn("cell", col("cell").cast("long"))
     var cmeta = base.cmeta.withColumn("cell", col("cell").cast("long"))
     var round = 0
     var done = false
     while (round < maxRounds && !done) {
-      val sizes = assigned.groupBy(col("cell")).agg(count(lit(1)).as("n"))
+      val sizes = members.groupBy(col("cell")).agg(count(lit(1)).as("n"))
       val bad = cmeta.join(sizes, "cell")
         .filter(col("radius") >= lit(acosT) - lit(1e-6) && col("n") > 1)
         .select(col("cell"), col("n"))
@@ -456,11 +497,11 @@ object IvfAnn {
       else {
         val badB = broadcast(bad.localCheckpoint())
         val goodMeta = cmeta.join(badB, Seq("cell"), "left_anti")
-        val goodAssigned = assigned.join(badB, Seq("cell"), "left_anti")
+        val goodMembers = members.join(badB, Seq("cell"), "left_anti")
         // members of bad cells, with per-cell rank (window over one
         // cell's members — bounded by cell depth, never global) and the
         // per-cell split factor k = ⌈n/targetDepth⌉ ∈ [2, 64]
-        val mb = corpus.join(assigned, "vec_id").join(badB, "cell")
+        val mb = members.join(badB, "cell")
           .withColumn("rnk", row_number().over(
             Window.partitionBy(col("cell")).orderBy(col("vec_id"))) - 1)
           .withColumn("k", least(lit(64), greatest(lit(2),
@@ -475,19 +516,17 @@ object IvfAnn {
         // split exists for.
         val init = mb.withColumn("sub",
           (col("rnk").cast("long") * col("k") / col("n")).cast("int"))
-        val members = mb.select(col("vec_id"), col("cell"), col("emb"), col("nrm"))
-        val subc = lloyd(members,
+        val split = mb.select(col("vec_id"), col("cell"), col("emb"), col("nrm"))
+        val subc = lloyd(split,
           recompute(init, Seq("cell", "sub")).localCheckpoint(), 2, "sub", Seq("cell"))
-        val finalSub = assign(members, subc, "sub", Seq("cell")).localCheckpoint()
+        val finalSub = assignMembers(split, subc, "sub", Seq("cell")).localCheckpoint()
         // arithmetic re-id: good keeps cell·65, subcell gets
         // cell·65 + sub + 1 (sub < 64 ⇒ collision-free, deterministic)
-        assigned = goodAssigned
-          .select(col("vec_id"), (col("cell") * 65L).as("cell"))
-          .unionByName(finalSub.select(col("vec_id"),
-            (col("cell") * 65L + col("sub") + 1L).as("cell")))
+        members = memberRows(goodMembers.withColumn("cell", col("cell") * 65L))
+          .unionByName(memberRows(finalSub
+            .withColumn("cell", col("cell") * 65L + col("sub") + 1L)))
           .localCheckpoint()
-        val subRadii = radii(members.join(finalSub, Seq("vec_id", "cell")), subc,
-          Seq("cell", "sub"))
+        val subRadii = radii(finalSub, subc, Seq("cell", "sub"))
         cmeta = goodMeta
           .select((col("cell") * 65L).as("cell"), col("cemb"), col("cnrm"),
             col("radius"))
@@ -498,7 +537,7 @@ object IvfAnn {
         round += 1
       }
     }
-    IvfIndex(assigned, cmeta, nlist = cmeta.count().toInt,
+    IvfIndex(members, cmeta, nlist = cmeta.count().toInt,
       nprobe = base.nprobe)
   }
 
@@ -705,19 +744,19 @@ object IvfAnn {
     val m = refinedCache.getOrCompute(s, d)(
       scala.collection.concurrent.TrieMap.empty[Double, RefinedIndex])
     m.getOrElseUpdate(t, {
-      val refined = refineForThreshold(fullCorpus(s, d), cachedIndex(s, d), t)
+      val refined = refineForThreshold(cachedIndex(s, d), t)
       val adj = cellAdjacency(refined.cmeta, t).localCheckpoint()
       // candidate-volume probe (the q43c/q216c Σsz² pattern): what the
       // adjacency-routed probe would generate vs the all-pairs join —
       // a planning read over cell-count-bounded frames.
-      val cnt = refined.assigned.groupBy(col("cell")).agg(count(lit(1)).as("cnt"))
+      val cnt = refined.members.groupBy(col("cell")).agg(count(lit(1)).as("cnt"))
       val vol = adj
         .join(cnt.select(col("cell").as("gcell"), col("cnt").as("gcnt")), "gcell")
         .join(cnt, "cell")
         .agg(sum(col("gcnt").cast("double") * col("cnt")).as("v"))
         .head()
       val probeVol = if (vol.isNullAt(0)) 0.0 else vol.getDouble(0)
-      val n = refined.assigned.count().toDouble
+      val n = refined.members.count().toDouble
       RefinedIndex(refined, adj, probeVol, n * n)
     })
   }
@@ -731,19 +770,15 @@ object IvfAnn {
   private[graft] def refinedThresholdPairs(s: SparkSession, d: String,
       t: Double): DataFrame = {
     val r = cachedRefined(s, d, t)
-    val corpus = fullCorpus(s, d)
-    val members = memberTable(corpus, r.idx.assigned)
-    val vecs = vecTable(corpus)
-    val own = r.idx.assigned.select(col("vec_id").as("a_id"),
-      col("cell").as("gcell"))
+    val own = r.idx.members.select(col("vec_id").as("a_id"),
+      col("cell").as("gcell"), col("emb").as("ea"), col("nrm").as("na"))
     val cm = r.idx.cmeta.select(col("cell"), col("cemb"), col("cnrm"), col("radius"))
     val probe = own.join(r.adjacency, "gcell")
-      .join(vecs, "a_id")
       .join(broadcast(cm), "cell")
       .withColumn("theta", angle(col("ea"), col("cemb"), col("na"), col("cnrm")))
       .filter(cosBound(col("theta"), col("radius")) >= lit(t) - lit(1e-6))
       .select(col("a_id"), col("ea"), col("na"), col("cell"))
-    probeCosines(members, probe)
+    probeCosines(r.idx.members, probe)
       .filter(col("a_id") < col("b_id") && col("c") > lit(t))
       .select(col("a_id"), col("b_id"))
       .orderBy("a_id", "b_id")
@@ -785,16 +820,15 @@ object IvfAnn {
     * maintainer rebuilds when it degrades (graft.streaming.IvfMaintainer). */
   def appendToIndex(index: IvfIndex, newCorpus: DataFrame): IvfIndex = {
     val centroids = index.cmeta.select(col("cell"), col("cemb"), col("cnrm"))
-    val newAssigned = assign(newCorpus, centroids).localCheckpoint()
-    // Per-append work stays O(delta): only the delta assignment is
-    // checkpointed; the full membership is a LAZY union over already-
+    val delta = memberRows(assignMembers(newCorpus, centroids)).localCheckpoint()
+    // Per-append work stays O(delta): only the delta's members are
+    // checkpointed; the full member table is a LAZY union over already-
     // checkpointed leaves (re-materializing it here would make every
     // append linear in TOTAL index size). Callers that append in a
     // loop bound the union-chain depth by periodically compacting
     // (graft.streaming.IvfMaintainer re-checkpoints every 32 batches).
-    val assigned = index.assigned.unionByName(newAssigned)
-    val newRadii = radii(newCorpus.join(newAssigned, "vec_id"), centroids, Seq("cell"),
-      "nradius")
+    val members = index.members.unionByName(delta)
+    val newRadii = radii(delta, centroids, Seq("cell"), "nradius")
     // the merge references the previous cmeta twice (the broadcast
     // radius probe and the merge join), the compounding case
     // FreshStats exists for
@@ -802,16 +836,15 @@ object IvfAnn {
       .withColumn("radius",
         greatest(col("radius"), coalesce(col("nradius"), lit(0.0))))
       .drop("nradius"))
-    IvfIndex(assigned, cmeta, index.nlist, index.nprobe)
+    IvfIndex(members, cmeta, index.nlist, index.nprobe)
   }
 
-  /** Persist the corpus clustered by IVF cell: `partitionBy(cell)` is
-    * the on-disk form of the inverted file — a probe then reads only
+  /** Persist the member table partitioned by IVF cell: `partitionBy(cell)`
+    * is the on-disk form of the inverted file — a probe then reads only
     * nprobe/nlist of the data via partition pruning (proved in
     * VectorSpec). */
-  def writeClustered(corpus: DataFrame, assigned: DataFrame, path: String): Unit =
-    corpus.join(assigned, "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
+  def writeClustered(index: IvfIndex, path: String): Unit =
+    index.members.write.mode("overwrite").partitionBy("cell").parquet(path)
 
   // Oracles shared by a Baseline all-pairs query and its routed
   // sibling (both exact, so one SQL checks both). Declared BEFORE qs
@@ -868,10 +901,9 @@ object IvfAnn {
     // data-dependent: tightly clustered corpora prune most cells
     // (asserted in VectorSpec), the near-orthogonal fixture prunes few.
     Q("q67_ann_ivf", cosineTopKOracleSql) { (s, d) =>
-      val corpus = fullCorpus(s, d)
-      boundedTopK(corpus, corpus.filter(col("vec_id") < 10)
+      boundedTopK(cachedIndex(s, d), fullCorpus(s, d).filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("emb").as("qe"), col("nrm").as("qn")),
-        index = Some(cachedIndex(s, d)))._2
+        k = 5)._2
     },
 
     // Mutual NN, IVF-routed (q222's production path as real code, not a

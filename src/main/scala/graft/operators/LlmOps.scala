@@ -485,6 +485,13 @@ object LlmOps {
     * then builds every shingle set twice. */
   private[graft] val hasShingles: Column = size(TextFns.tokens(col("text"))) >= 3
 
+  /** The size of a [[withShingles]] set, declared non-null (a set kept
+    * by [[hasShingles]] is never null, so the 0 is never taken). A join
+    * on a nullable size makes Catalyst infer `isnotnull(size)` and push
+    * it below the projection, which then builds every set twice; on a
+    * non-null size that filter folds away. */
+  private[graft] def shingleCount(sg: Column): Column = coalesce(size(sg), lit(0))
+
   /** One row per shingle of a set kept by [[hasShingles]]. Over a set
     * that is never empty or null, `explode_outer` returns the rows
     * `explode` does; unlike `explode`, it makes Catalyst infer no
@@ -706,7 +713,7 @@ object LlmOps {
       idx: DataFrame, deltaSh: DataFrame, t10: Int): DataFrame = {
     val a = idx.select(col("doc_id").as("a_id"), col("sz").as("a_sz"),
       col("lang"), col("lb"), col("shingle"))
-    val b = deltaSh.select(col("doc_id").as("b_id"), col("sz").as("b_sz"),
+    val b = deltaSh.select(col("doc_id").as("b_id"), shingleCount(col("sg")).as("b_sz"),
       col("lang").as("langb"), col("lb").as("lbb"),
       explodeShingles(col("sg")).as("shingleb"))
     finishJaccard(pairStats(a, b), t10)
@@ -808,7 +815,7 @@ object LlmOps {
 
   private[graft] def jaccardPrefixJoinAt(s: SparkSession, d: String, t10: Int): DataFrame = {
     val sh = shingleBlocks(s, d)
-    val ex = sh.select(col("doc_id"), col("lang"), col("lb"), col("sz"),
+    val ex = sh.select(col("doc_id"), col("lang"), col("lb"), shingleCount(col("sg")).as("sz"),
       explodeShingles(col("sg")).as("shingle"))
     val dfreq = ex.groupBy(col("lang"), col("lb"), col("shingle"))
       .agg(count(lit(1)).as("df"))
@@ -1135,7 +1142,7 @@ object LlmOps {
       jaccardOracleSqlAt(productionThreshold10, sharedShinglePairsSql)) { (s, d) =>
       val docs = docsWithShingles(s, d, fan = true) // A/B r17: 2.0 -> 1.1 s
         .filter(hasShingles)
-        .select(col("doc_id"), col("shingles"), size(col("shingles")).as("sz"))
+        .select(col("doc_id"), col("shingles"), shingleCount(col("shingles")).as("sz"))
       val sig = docs
         .withColumn("hx", shingleHashes(col("shingles")))
         .select(col("doc_id"), minhashSig(s, col("hx")).as("sig"))

@@ -19,12 +19,15 @@ import graft.operators.IvfAnn.IvfIndex
   * the caller-supplied `rebuildWhen` diagnostic — typically a
   * [[graft.operators.IvfAnn.thresholdPrunability]] floor or a
   * radius-growth budget, the same planning reads that route q50c —
-  * decides whether to re-cluster from the accumulated corpus. Per-batch
-  * work is O(batch): only the arriving delta is checkpointed, and the
-  * accumulated corpus/membership are lazy unions of checkpointed
-  * per-batch frames, re-compacted (full checkpoint) every `compactEvery`
-  * batches to bound lineage depth. foreachBatch is at-least-once, so a
-  * re-delivered batchId is skipped (the idempotence guard).
+  * decides whether to re-cluster from the accumulated corpus. The live
+  * state is ONE reference: the index, whose member table holds the
+  * vectors, so the corpus is its projection and no reader can pair
+  * frames from two generations. Per-batch work is O(batch): only the
+  * arriving delta's members are checkpointed, and the accumulated member
+  * table is a lazy union of checkpointed per-batch frames, re-compacted
+  * (full checkpoint) every `compactEvery` batches to bound lineage depth.
+  * foreachBatch is at-least-once, so a re-delivered batchId is skipped
+  * (the idempotence guard).
   *
   * Restart recovery: with `persistPath` set the maintainer keeps a
   * crash-consistent log through [[graft.durable.Log]] — the seed corpus
@@ -46,8 +49,9 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
     persistPath: Option[String],
     compactLogEvery: Int,
     fromRestore: Boolean,
-    // the quantizer a compaction generation persisted: a snapshot
-    // restore wraps the logged index instead of re-learning it
+    // the quantizer a compaction generation persisted, over the
+    // snapshot: a snapshot restore wraps the logged index instead of
+    // re-learning it
     presetIndex: Option[IvfIndex]) {
 
   def this(initialCorpus: DataFrame, rebuildWhen: IvfIndex => Boolean,
@@ -72,12 +76,18 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
           "point the fresh maintainer at an empty path (adopting the " +
           "stale seed would merge two runs' corpora)")
   }
-  // canonical index-corpus projection: the seed may carry extra fixture
-  // columns (label, …) the arriving batches don't have
-  private val corpusRef = new AtomicReference(
-    initialCorpus.select(col("vec_id"), col("emb"), col("nrm")).localCheckpoint())
-  private val indexRef = new AtomicReference(
-    presetIndex.getOrElse(IvfAnn.buildIndex(corpusRef.get)))
+  private val indexRef = new AtomicReference(presetIndex.getOrElse {
+    // canonical index-corpus projection: the seed may carry extra
+    // fixture columns (label, …) the arriving batches don't have
+    val seed = initialCorpus.select(col("vec_id"), col("emb"), col("nrm"))
+      .localCheckpoint()
+    val built = IvfAnn.buildIndex(seed)
+    // durable seed, written once (a restore was constructed from it)
+    persistPath.foreach { p =>
+      if (!fromRestore) seed.write.mode("overwrite").parquet(s"$p/seed")
+    }
+    built
+  })
   @volatile private var rebuildCount = 0
   private var sinceCompact = 0
   // Two counters of applied non-empty batches. `appliedSinceLogCompact`
@@ -89,11 +99,11 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
   // compaction at an uncompacted head still runs.
   private var appliedSinceLogCompact = 0
   private var dataSinceGen = 0
-  // Whether the index frames may reference persist-log parquet (an
-  // adopted quantizer ensemble or restore's bulk-append delta read).
-  // Only a restore creates such references: live appends checkpoint
-  // their delta assignment, so a never-restored index is memory-rooted
-  // and a head-moved finalize can skip the O(tail) index re-root.
+  // Whether the index frames may reference persist-log parquet: the
+  // snapshot that an adopted quantizer or a compaction re-roots the
+  // members on. Appends (live or a restore's bulk append) checkpoint
+  // their delta members, so any other index is memory-rooted and a
+  // head-moved finalize can skip the O(tail) index re-root.
   private var indexDiskBacked = false
   // test seam: invoked between compactLog's staging writes and its
   // finalize section. The monitor is not held, but compactionLock is, so
@@ -114,7 +124,7 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
   // a completed snapshot (frontierGen, -1 = seed only) and the exact
   // delta ids past it (frontierTail, ascending). The single writer keeps
   // these under the monitor, so head records are written from this state
-  // and the compaction finalize re-roots the corpus from it instead of
+  // and the compaction finalize re-roots the index from it instead of
   // listing the delta dir (a stale LIST omitting the newest delta would
   // drop it). headSeq numbers the records densely; restore seeds all
   // three from the discovered record.
@@ -141,21 +151,19 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
 
   /** Exact IVF top-k through the owner's live index, materialized inside
     * the call (no driver collect), so `searches` counts completed
-    * answers. The (corpus, index) pair resolves under the monitor:
-    * compaction finalize swaps both refs in one monitor section, and
-    * reading them independently could pair frames from two generations.
+    * answers.
     *
-    * A RESTORED owner's index may be parquet-backed by the adopted
-    * generation until a head-moved finalize re-roots it, and a
-    * concurrent maintenance compactLog retires exactly those files. On
-    * the retired-files signature the search re-resolves the refs once —
-    * the re-rooted frames are live in-process, so once suffices; a
-    * second such failure means damaged frames or log and throws. */
+    * A restored or compacted owner's index may be parquet-backed by a
+    * generation's files, and a concurrent maintenance compactLog retires
+    * the superseded ones after re-rooting the live index. On the
+    * retired-files signature the search re-resolves the ref once — the
+    * re-rooted frames are live in-process, so once suffices; a second
+    * such failure means damaged frames or log and throws. */
   def searchTopK(queries: DataFrame, k: Int): DataFrame = {
     val out = IvfMaintainer.retryOnceIfRetired {
-      val (corpusNow, indexNow) = synchronized((corpusRef.get, indexRef.get))
+      val indexNow = indexRef.get
       searchProbe()
-      IvfAnn.boundedTopK(corpusNow, queries, k, Some(indexNow))._2.localCheckpoint()
+      IvfAnn.boundedTopK(indexNow, queries, k)._2.localCheckpoint()
     } { e =>
       new IllegalStateException(
         "IvfMaintainer.searchTopK: the live frames failed twice " +
@@ -171,12 +179,7 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
   // materialization, the window a concurrent compaction's retire races
   private[graft] var searchProbe: () => Unit = () => ()
 
-  // durable seed, written once (a restore was constructed from it)
-  persistPath.foreach { p =>
-    if (!fromRestore)
-      corpusRef.get.write.mode("overwrite").parquet(s"$p/seed")
-  }
-  def corpus: DataFrame = corpusRef.get
+  def corpus: DataFrame = indexRef.get.corpus
   def index: IvfIndex = indexRef.get
   def rebuilds: Int = rebuildCount
 
@@ -229,26 +232,22 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
   }
 
   /** The in-memory append step, shared by live batches and restore.
-    * O(batch): the accumulated corpus is a lazy union over checkpointed
-    * leaves, fully re-checkpointed only every compactEvery batches.
-    * Every failable Spark job (checkpoints, appendToIndex, rebuildWhen
-    * and the re-cluster it may fire) runs BEFORE either ref is set, so a
-    * failure mid-append leaves the maintainer exactly as it was and the
-    * at-least-once re-delivery re-appends once instead of duplicating
-    * vec_ids (RecoveryFaultSpec's mid-append crash law). */
+    * O(batch): the accumulated member table is a lazy union over
+    * checkpointed leaves, fully re-checkpointed only every compactEvery
+    * batches. Every failable Spark job (checkpoints, appendToIndex,
+    * rebuildWhen and the re-cluster it may fire) runs BEFORE the ref is
+    * set, so a failure mid-append leaves the maintainer exactly as it was
+    * and the at-least-once re-delivery re-appends once instead of
+    * duplicating vec_ids (RecoveryFaultSpec's mid-append crash law). */
   private def append(prepped: DataFrame): Unit = {
     val doCompact = sinceCompact + 1 >= compactEvery
-    val grown0 = corpusRef.get.unionByName(prepped)
-    val grown = if (doCompact) grown0.localCheckpoint() else grown0
     val appended0 = IvfAnn.appendToIndex(indexRef.get, prepped)
     val appended =
-      if (doCompact)
-        appended0.copy(assigned = appended0.assigned.localCheckpoint())
+      if (doCompact) appended0.copy(members = appended0.members.localCheckpoint())
       else appended0
     val rebuilt = rebuildWhen(appended)
-    val next = if (rebuilt) IvfAnn.buildIndex(grown) else appended
-    // ---- no failable work below: ref swaps + counters only ----
-    corpusRef.set(grown)
+    val next = if (rebuilt) IvfAnn.buildIndex(appended.corpus) else appended
+    // ---- no failable work below: ref swap + counters only ----
     indexRef.set(next)
     if (rebuilt) rebuildCount += 1
     sinceCompact = if (doCompact) 0 else sinceCompact + 1
@@ -266,7 +265,7 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
       persist: Boolean = true): Unit = synchronized {
     if (rebuildWhen(indexRef.get)) {
       rebuildCount += 1
-      indexRef.set(IvfAnn.buildIndex(corpusRef.get))
+      indexRef.set(IvfAnn.buildIndex(indexRef.get.corpus))
       if (persist) log.foreach { l =>
         l.delete(s"quantizer/$baseGen/_SUCCESS")
         writeQuantizer(l, baseGen, indexRef.get)
@@ -275,30 +274,31 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
   }
 
   /** Collapse the persist log into a corpus snapshot: write the current
-    * corpus to `path/compact/<last batch id>` (parquet, _SUCCESS-gated),
-    * then delete the deltas it covers and older generations. Restore
-    * afterwards reads one snapshot plus the deltas after it. Every crash
-    * window is safe without renames: a snapshot without _SUCCESS is
-    * ignored; a completed snapshot whose covered deltas survive restores
-    * correctly because restore applies only deltas with id > the
-    * snapshot's; a partially-deleted older generation is covered by the
-    * newest completed one.
+    * corpus (the members' vectors) to `path/compact/<last batch id>`
+    * (parquet, _SUCCESS-gated), then delete the deltas it covers and
+    * older generations. Restore afterwards reads one snapshot plus the
+    * deltas after it. Every crash window is safe without renames: a
+    * snapshot without _SUCCESS is ignored; a completed snapshot whose
+    * covered deltas survive restores correctly because restore applies
+    * only deltas with id > the snapshot's; a partially-deleted older
+    * generation is covered by the newest completed one.
     *
     * Two-phase under a live stream: only two short critical sections
-    * take the monitor — capture (one consistent (last batch, corpus,
-    * index) triple; the refs are only ever swapped, so the captured pair
-    * stays self-consistent) and finalize (re-root the live frames, write
-    * the head record). The corpus-proportional work — snapshot,
-    * quantizer ensemble, index checkpoints — runs between them with no
-    * lock, and the deletion passes run after finalize. A snapshot that
-    * completes at generation `lb` is valid however far the head moved
-    * during staging; finalize re-roots the live frames as snapshot ∪
-    * tail deltas, so continuous arrival cannot livelock the compaction.
+    * take the monitor — capture (one consistent (last batch, index)
+    * pair; the ref is only ever swapped, so the captured index stays
+    * self-consistent) and finalize (re-root the live index, write the
+    * head record). The corpus-proportional work — snapshot, quantizer
+    * ensemble, index checkpoints — runs between them with no lock, and
+    * the deletion passes run after finalize. A snapshot that completes
+    * at generation `lb` is valid however far the head moved during
+    * staging; finalize re-roots the live members on the snapshot (and
+    * the tail deltas), so continuous arrival cannot livelock the
+    * compaction.
     *
     * Re-invoking at the same head is a true no-op, and a completed
     * generation is never rewritten in place. No-op before the first
-    * applied batch or without a persistPath. The maintainer's own frames
-    * are re-rooted before any deletion; a caller that captured
+    * applied batch or without a persistPath. The maintainer's own index
+    * is re-rooted before any deletion; a caller that captured
     * `index`/`corpus` before a compaction and is still mid-job when the
     * retired files are deleted can observe a FileNotFoundException — it
     * re-reads the accessor and retries (the snapshot-isolation contract;
@@ -338,10 +338,10 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
         val lb = gate.last
         if (lb >= 0 && lb != lastCompactedGen &&
             (lastCompactedGen < 0 || dataSinceGen > 0))
-          Some((lb, corpusRef.get, indexRef.get, rebuildCount, dataSinceGen))
+          Some((lb, indexRef.get, rebuildCount, dataSinceGen))
         else None
       }
-      captured.exists { case (lb, corpusSnap, idxSnap, rebuilds0, data0) =>
+      captured.exists { case (lb, idxSnap, rebuilds0, data0) =>
         // A dedicated scheduler pool: a no-op under FIFO; under FAIR
         // scheduling a down-weighted pool keeps the staging writes from
         // queueing ahead of micro-batch jobs (SCALE.md "FAIR pool").
@@ -355,7 +355,7 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
         // a crash mid-rewrite of the only snapshot (its deltas already
         // gone) would roll the log back to the seed
         if (!l.marker(s"compact/$lb"))
-          corpusSnap.write.mode("overwrite").parquet(s"$p/compact/$lb")
+          idxSnap.corpus.write.mode("overwrite").parquet(s"$p/compact/$lb")
         // The quantizer ensemble spares a snapshot restore the re-learn
         // (RESTORE100X: 120.75 s re-learn vs 32.8 s read at 600k
         // vectors). Written from the CAPTURED index, so it matches the lb
@@ -363,47 +363,46 @@ final class IvfMaintainer private[streaming] (initialCorpus: DataFrame,
         // with its _SUCCESS and only at the chosen snapshot's id.
         if (!l.marker(s"quantizer/$lb"))
           writeQuantizer(l, lb, idxSnap)
-        // checkpoint the captured index outside the monitor: a restored
-        // maintainer's frames may reach delta or adopted-quantizer files,
-        // which the deletion passes below retire
-        val assignedCk = idxSnap.assigned.localCheckpoint()
-        val cmetaCk = idxSnap.cmeta.localCheckpoint()
+        // checkpoint the captured assignment and centroids outside the
+        // monitor: the captured frames may reach delta, snapshot or
+        // adopted-quantizer files, which the deletion passes below
+        // retire. The vectors are re-read from the lb snapshot, never
+        // held in memory whole.
+        val snapIndex = idxSnap.copy(cmeta = idxSnap.cmeta.localCheckpoint(),
+          members = IvfAnn.withAssignment(spark.read.parquet(s"$p/compact/$lb"),
+            idxSnap.assigned))
         midStageHook()
         // ---- finalize: re-root + head record (short monitor hold) ----
-        // Only ref swaps, lazy plan construction and one O(1) record PUT
-        // run under the monitor; the deletion passes run after it, so a
-        // micro-batch never waits on per-dir filesystem round trips.
+        // Only ref swaps, lazy plan construction, a disk-backed index's
+        // O(tail) re-root and one O(1) record PUT run under the monitor;
+        // the deletion passes run after it, so a micro-batch never waits
+        // on per-dir filesystem round trips.
         val (deletions, recSeq) = synchronized {
           val branch = if (indexRef.get eq idxSnap) {
             // nothing appended during staging (empty batches carry no
-            // data): the checkpointed copies ARE the live index and the
-            // snapshot IS the live corpus; reading it back resets the
-            // union-chain depth
-            corpusRef.set(spark.read.parquet(s"$p/compact/$lb"))
-            indexRef.set(idxSnap.copy(assigned = assignedCk, cmeta = cmetaCk))
-            indexDiskBacked = false
+            // data): the snapshot IS the live corpus and the checkpointed
+            // copies ARE the live assignment and centroids; re-rooting on
+            // them resets the union-chain depth
+            indexRef.set(snapIndex)
+            indexDiskBacked = true
             sinceCompact = 0
             true
           } else if (rebuildCount == rebuilds0) {
-            // Data arrived during staging: the live frames equal
-            // snapshot(lb) ∪ deltas(lb, head], and every such delta is
+            // Data arrived during staging: the live index equals the lb
+            // snapshot's plus deltas(lb, head], and every such delta is
             // complete (written inside the monitor before its append).
-            // The corpus re-roots as a lazy union over those durable
-            // pieces, with the tail taken from the in-memory frontier,
-            // never a LIST. The index re-roots only when disk-backed: one
-            // O(tail) bulk appendToIndex, equal to the sequential appends
+            // A memory-rooted live index stays as it is. A disk-backed
+            // one re-roots as one O(tail) bulk appendToIndex onto the
+            // snapshot's, with the tail taken from the in-memory
+            // frontier, never a LIST — equal to the sequential appends
             // (assignment depends only on the unchanged centroids; the
             // radius is a max).
-            val tailIds = frontierTail.filter(_ > lb)
-            val tail = spark.read.parquet(tailIds.map(b => s"$p/delta/$b"): _*)
-            corpusRef.set(
-              spark.read.parquet(s"$p/compact/$lb").unionByName(tail))
             if (indexDiskBacked) {
-              indexRef.set(IvfAnn.appendToIndex(
-                idxSnap.copy(assigned = assignedCk, cmeta = cmetaCk), tail))
-              indexDiskBacked = false
+              val tailIds = frontierTail.filter(_ > lb)
+              indexRef.set(IvfAnn.appendToIndex(snapIndex,
+                spark.read.parquet(tailIds.map(b => s"$p/delta/$b"): _*)))
+              sinceCompact = tailIds.size
             }
-            sinceCompact = tailIds.size
             true
           } else {
             // a rebuildWhen re-cluster fired during staging: keep the
@@ -530,7 +529,8 @@ object IvfMaintainer {
       .map { b =>
         val meta = spark.read.parquet(s"$path/quantizer/$b/meta").head()
         IvfIndex(
-          spark.read.parquet(s"$path/quantizer/$b/assigned"),
+          IvfAnn.withAssignment(seedFrame,
+            spark.read.parquet(s"$path/quantizer/$b/assigned")),
           spark.read.parquet(s"$path/quantizer/$b/cmeta"),
           meta.getAs[Int]("nlist"), meta.getAs[Int]("nprobe"))
       }
@@ -559,9 +559,9 @@ object IvfMaintainer {
     // the tail deltas are data applied since the adopted generation:
     // seed the no-op gate's counter, not the inline cadence's
     if (bids.nonEmpty) m.dataSinceGen = bids.size
-    // a restored index may be parquet-backed (adopted ensemble and/or the
-    // bulk-append delta read), so the first head-moved finalize re-roots it
-    m.indexDiskBacked = preset.isDefined || bids.nonEmpty
+    // an adopted ensemble's members read the snapshot, so the first
+    // head-moved finalize re-roots them
+    m.indexDiskBacked = preset.isDefined
     // A bulk append that fired the re-cluster rebuilt the quantizer at a
     // head PAST the snapshot; it cannot be re-logged at the base
     // generation (a later restore would re-append the tail deltas into

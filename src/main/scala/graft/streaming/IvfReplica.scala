@@ -24,11 +24,10 @@ import graft.operators.IvfAnn.IvfIndex
   * queries frame losing its files; the latter costs one pointless
   * re-restore and then surfaces as the same error.
   *
-  * Thread-safe for concurrent searches: each attempt resolves the
-  * maintainer reference ONCE (a heal swapping it between a corpus read
-  * and an index read would pair frames from two generations — silently
-  * wrong answers), and heals are serialized so racing searches cannot
-  * stack redundant restores. */
+  * Thread-safe for concurrent searches: each attempt searches the one
+  * index its maintainer reference holds (the member table carries the
+  * vectors, so no corpus travels beside it), and heals are serialized
+  * so racing searches cannot stack redundant restores. */
 final class IvfReplica(spark: SparkSession, path: String,
     rebuildWhen: IvfIndex => Boolean = _ => false) {
 
@@ -73,8 +72,7 @@ final class IvfReplica(spark: SparkSession, path: String,
     * generation is caught and healed here. */
   def searchTopK(queries: DataFrame, k: Int): DataFrame = {
     def attempt(via: IvfMaintainer): DataFrame =
-      IvfAnn.boundedTopK(via.corpus, queries, k, Some(via.index))._2
-        .localCheckpoint()
+      IvfAnn.boundedTopK(via.index, queries, k)._2.localCheckpoint()
     // A search whose failed reference is already stale ADOPTS the
     // current one; only when its failed reference IS current does it
     // restore for itself. An adopted reference can predate our failure,

@@ -405,12 +405,12 @@ object Streaming {
   }
 
   /** Streaming similarity search: arriving query vectors are top-k
-    * searched against a PREBUILT IVF index (the clustered corpus
-    * layout IvfAnn.writeClustered persists, plus its centroid/radius
-    * table). Each micro-batch runs the identical exact two-phase
-    * bounded probe as batch q67 (IvfAnn.boundedTopK) with the
-    * micro-batch's queries broadcast against the static member table —
-    * the stream-static join shape: the corpus never moves, and
+    * searched against a PREBUILT IVF index alone: its member table
+    * holds the vectors, so no corpus travels beside it. Each
+    * micro-batch runs the identical exact two-phase bounded probe as
+    * batch q67 (IvfAnn.boundedTopK) with the micro-batch's queries
+    * broadcast against the static member table — the stream-static
+    * join shape: the corpus never moves, and
     * per-batch work is (batch queries) × (probed cells) ×
     * (cell depth), with the triangle bound pruning cells exactly as in
     * batch. Results are exact top-k by construction (same code path),
@@ -424,15 +424,13 @@ object Streaming {
     * `queries` is a streaming (query_id, embedding array<float>)
     * frame; `emit` receives each micro-batch's exact ranked
     * (query_id, rank, neighbor_id) result. */
-  def annStream(queries: DataFrame, corpus: DataFrame,
-      index: graft.operators.IvfAnn.IvfIndex, k: Int,
-      emit: (DataFrame, Long) => Unit) = {
+  def annStream(queries: DataFrame, index: graft.operators.IvfAnn.IvfIndex,
+      k: Int, emit: (DataFrame, Long) => Unit) = {
     queries.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val qs = graft.operators.IvfAnn.prepEmbeddings(batch)
           .select(col("query_id"), col("emb").as("qe"), col("nrm").as("qn"))
-        emit(graft.operators.IvfAnn
-          .boundedTopK(corpus, qs, k, Some(index))._2, batchId)
+        emit(graft.operators.IvfAnn.boundedTopK(index, qs, k)._2, batchId)
       }
       .outputMode(OutputMode.Update)
       .start()

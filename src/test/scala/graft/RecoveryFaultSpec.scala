@@ -487,15 +487,14 @@ class RecoveryFaultSpec extends AnyFunSuite with TempDirs {
     // generations. Every successful result must be the EXACT answer
     // for one of the owner's published generation prefixes. Honesty
     // note (review r14 pass 5) on what that catches: an INTRA-index
-    // tear (assigned vs cmeta from different generations) or any
-    // stale-heal divergence breaks exactness; a CROSS-frame tear
-    // (corpus gen i, index gen j) would NOT be caught — boundedTopK's
-    // corpus⋈assigned join truncates it to the older prefix's exact
-    // answers — so that mode is pinned structurally instead (searchTopK
-    // resolves the maintainer reference once; a torn pairing cannot be
-    // CONSTRUCTED), and this soak guards the exception/liveness
-    // surface around it. A deterministic final invalidation pins the
-    // heal non-vacuity the race itself can't guarantee.
+    // tear (members vs cmeta from different generations) or any
+    // stale-heal divergence breaks exactness. A CROSS-frame tear
+    // (corpus gen i, index gen j) cannot be constructed: the index's
+    // member table holds the vectors, so no corpus travels beside it,
+    // and this soak guards the exception/liveness surface around the
+    // one reference a search resolves. A deterministic final
+    // invalidation pins the heal non-vacuity the race itself can't
+    // guarantee.
     val k = (nTotal - cut) / 5
     // generation after batch i (i = 0..3) holds the prefix < bounds(i)
     val bounds = (0 to 3).map(i => cut + (i + 1) * k)
@@ -564,9 +563,9 @@ class RecoveryFaultSpec extends AnyFunSuite with TempDirs {
     // rebuildWhen is evaluated AFTER appendToIndex inside append() — a
     // throw there models any mid-append Spark job failure (a failed
     // checkpoint, a dying executor) at the most state-advanced point.
-    // The old order set corpusRef BEFORE that evaluation, so the
-    // at-least-once re-delivery of the same batchId re-appended the
-    // batch into the already-merged corpus and duplicated vec_ids.
+    // An order that set the live state BEFORE that evaluation made the
+    // at-least-once re-delivery of the same batchId re-append the
+    // batch into the already-merged corpus and duplicate vec_ids.
     val ppath = localLog("graft_midappend")
     @volatile var boom = false
     val m = freshOwner(ppath, rebuildWhen = _ => {

@@ -847,6 +847,11 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     assert(exists(ppath, "compact/2/_SUCCESS"))
     val m3 = IvfMaintainer.restore(spark, ppath, _ => false)
     assert(m3.corpus.count() == nTotal)
+    // the restored corpus is the member table's vectors: one vec_id set
+    def ids(df: DataFrame): Set[Long] =
+      df.select("vec_id").as[Long].collect().toSet
+    assert(ids(m3.corpus) == ids(m3.index.members) && ids(m3.corpus).size == nTotal,
+      "the restored corpus and the index's member table hold different vectors")
     // each generation also logs its quantizer (retired with the
     // generation), and a snapshot restore ADOPTS it — read, never
     // re-learned. Adoption is provable from the geometry: m1's
@@ -907,12 +912,11 @@ class StreamingSpec extends AnyFunSuite with TempDirs {
     val expect = SparkEntry.queries("q67_ann_ivf")(spark, dir)
       .as[(Long, Int, Long)].collect().toSet
     assert(expect.nonEmpty, "batch q67 produced no rows — vacuous")
-    val corpus = graft.operators.IvfAnn.fullCorpus(spark, dir)
     val index = graft.operators.IvfAnn.cachedIndex(spark, dir)
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int, Long)]()
     val mem = MemoryStream[(Long, Seq[Float])]
     val q = Streaming.annStream(
-      mem.toDS().toDF("query_id", "embedding"), corpus, index, k = 5,
+      mem.toDS().toDF("query_id", "embedding"), index, k = 5,
       (df, _) => df.as[(Long, Int, Long)].collect().foreach(got.add))
     try {
       // Replay the 10 query vectors in 3 arrival chunks: each

@@ -141,9 +141,8 @@ class VectorSpec extends AnyFunSuite with TempDirs {
         col("embedding"), x => x.cast("double")))
       .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
       .drop("embedding")
-    val assigned = graft.operators.IvfAnn.buildIndex(corpus).assigned
     val path = tempDir("graft_ivf").toString + "/idx"
-    graft.operators.IvfAnn.writeClustered(corpus, assigned, path)
+    graft.operators.IvfAnn.writeClustered(graft.operators.IvfAnn.buildIndex(corpus), path)
 
     val probe = spark.read.parquet(path).filter(col("cell").isin(0, 1))
     val plan = probe.queryExecution.executedPlan.toString
@@ -475,11 +474,10 @@ class VectorSpec extends AnyFunSuite with TempDirs {
     assert(appended.assigned.count() == base.count())
   }
 
-  test("IVF cell radius covers every member: base, refined and appended indexes") {
-    // Every probe bound cos(max(0, θ − r)) is exact only if no member of
-    // a cell lies farther from its centroid than the cell's radius r.
+  /** 32 tight clusters of 16 in 23 cells: some cells hold unrelated
+    * clusters, so refinement at t = 0.9 has cells to split. */
+  private lazy val splitCorpus = {
     import graft.functions.GraftFunctions
-    import graft.operators.IvfAnn
     GraftFunctions.register(spark)
     val rnd = new scala.util.Random(41)
     def unit(): Array[Double] = {
@@ -487,21 +485,27 @@ class VectorSpec extends AnyFunSuite with TempDirs {
       val n = math.sqrt(v.map(x => x * x).sum)
       v.map(_ / n)
     }
-    // 32 tight clusters of 16 in 23 cells: some cells hold unrelated
-    // clusters, so refinement at t = 0.9 has cells to split
     val centers = Seq.fill(32)(unit())
     val vecs = for (c <- 0 until 32; i <- 0 until 16) yield {
       val noise = Array.fill(64)(rnd.nextGaussian() * 0.03)
       ((c * 16 + i).toLong, centers(c).zip(noise).map { case (a, b) => (a + b).toFloat })
     }
-    val corpus = vecs.toDF("vec_id", "embedding")
+    vecs.toDF("vec_id", "embedding")
       .withColumn("emb", transform(col("embedding"), x => x.cast("double")))
       .withColumn("nrm", sqrt(GraftFunctions.dot(col("emb"), col("emb"))))
       .drop("embedding")
       .localCheckpoint()
+  }
+
+  test("IVF cell radius covers every member: base, refined and appended indexes") {
+    // Every probe bound cos(max(0, θ − r)) is exact only if no member of
+    // a cell lies farther from its centroid than the cell's radius r.
+    import graft.functions.GraftFunctions
+    import graft.operators.IvfAnn
+    val corpus = splitCorpus
     val n = corpus.count()
     val base = IvfAnn.buildIndex(corpus)
-    val refined = IvfAnn.refineForThreshold(corpus, base, 0.9)
+    val refined = IvfAnn.refineForThreshold(base, 0.9)
     assert(refined.nlist > base.nlist, "fixture must make refinement split cells")
     val appended = IvfAnn.appendToIndex(
       IvfAnn.buildIndex(corpus.filter(col("vec_id") < 384)),
@@ -516,6 +520,49 @@ class VectorSpec extends AnyFunSuite with TempDirs {
       assert(outside.count() == 0,
         s"$name: members outside their cell radius, e.g. ${outside.take(5).toSeq}")
     }
+  }
+
+  test("IvfIndex.members is the corpus joined with its assignment: build, append, refine; writeClustered reads it back") {
+    import graft.functions.GraftFunctions
+    import graft.operators.IvfAnn
+    val corpus = splitCorpus
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vec_id"), col("cell").cast("long"), col("emb"), col("nrm"))
+        .as[(Long, Long, Seq[Double], Double)].collect().sortBy(_._1).toSeq
+    // the reference assignment: each vector's nearest candidate centroid
+    // by dot/(nrm·cnrm), ties to the lowest cell, joined onto the corpus
+    def nearest(cands: org.apache.spark.sql.DataFrame) = corpus.join(
+      cands.withColumn("score",
+          GraftFunctions.dot(col("emb"), col("cemb")) / (col("nrm") * col("cnrm")))
+        .groupBy(col("vec_id"))
+        .agg(max_by(col("cell"), struct(col("score"), (-col("cell")).as("nc"))).as("cell")),
+      "vec_id")
+    def centroids(idx: IvfAnn.IvfIndex) = broadcast(idx.cmeta.select("cell", "cemb", "cnrm"))
+    val base = IvfAnn.buildIndex(corpus)
+    val appended = IvfAnn.appendToIndex(
+      IvfAnn.buildIndex(corpus.filter(col("vec_id") < 384)),
+      corpus.filter(col("vec_id") >= 384))
+    for ((name, idx) <- Seq("base" -> base, "appended" -> appended))
+      assert(rows(idx.members) == rows(nearest(corpus.join(centroids(idx)))),
+        s"$name: members differ from the corpus joined with its nearest-centroid assignment")
+    // one refinement round: a vector of an unsplit cell c keeps c·65, a
+    // vector of a split cell takes its nearest subcell c·65 + sub + 1 —
+    // both are the nearest refined centroid whose id divides back to c
+    val once = IvfAnn.refineForThreshold(base, 0.9, maxRounds = 1)
+    assert(once.nlist > base.nlist, "fixture must make refinement split cells")
+    assert(rows(once.members) == rows(nearest(corpus
+        .join(base.assigned.withColumnRenamed("cell", "parent"), "vec_id")
+        .join(centroids(once), expr("cell div 65") === col("parent")))),
+      "refined members differ from the corpus joined with its subcell assignment")
+    // further rounds re-split; the members still hold every vector once
+    val refined = IvfAnn.refineForThreshold(base, 0.9)
+    val refinedRows = rows(refined.members)
+    assert(refinedRows == rows(corpus.join(refined.assigned, "vec_id")))
+    assert(refinedRows.map(_._1).distinct.size == corpus.count())
+    val path = tempDir("graft_ivf_members").toString + "/idx"
+    IvfAnn.writeClustered(base, path)
+    assert(rows(spark.read.parquet(path)) == rows(base.members),
+      "writeClustered did not round-trip the member table")
   }
 
   test("approx_count_distinct within rsd of exact on events fixture") {

@@ -13,7 +13,9 @@ it with every per-run token replaced by a fixed placeholder:
   - call sites                ` at LlmOps.scala:277`  -> ` at <site>`
   - identity hashes           `@1a2b3c4d`             -> `@<hash>`
   - lambda classes            `$Lambda$1234/0x0000..` -> `$Lambda$N/0xN`
-  - fresh lambda names        `x_12#`                 -> `x_N#`
+  - fresh lambda names        `x_12#`, `y_13#`        -> `x_N#`, `y_N#`
+    (the functions API numbers them from one JVM-wide counter, so an
+    earlier query that builds one lambda more renumbers every later one)
   - warehouse locations       `file:/a/b/spark-warehouse/` -> `file:<warehouse>/`
     (so checkouts in different directories compare equal)
   - round-trip dirs           `graft_roundtrip8013..` -> `graft_roundtrip<N>`
@@ -29,7 +31,7 @@ import sys
 
 RULES = [
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$N/0xN"),
-    (re.compile(r"\bx_\d+#"), "x_N#"),
+    (re.compile(r"\b(x|y|z|acc|k|v)_\d+#"), r"\1_N#"),
     (re.compile(r"#\d+L?"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
