@@ -15,10 +15,11 @@ import org.apache.spark.sql.SparkSession
   *    DuckDB oracle reads identical values.
   *  - `GraftExtensions`: the native expressions (`graft_dot`,
   *    `graft_minhash`, `graft_rollhash`) and one AQE query-stage
-  *    preparation rule, `plans.SmallSortExchange`, which plans a global
-  *    sort's range exchange with one partition when the input's size
-  *    estimate is one AQE would coalesce into one partition anyway
-  *    (no range-sampling job).
+  *    preparation rule, `plans.SmallSortExchange`, which sorts in the
+  *    result task when the sort's input is finished shuffle stages AQE
+  *    would read as one partition anyway (no range-exchange map stage),
+  *    and otherwise plans the range exchange with one partition when
+  *    the input's size estimate is that small (no range-sampling job).
   */
 object GraftSession {
 

@@ -98,10 +98,18 @@ object IvfAnn {
   }
 
   /** `members` (vec_id, emb, nrm, by…) beside their [[assign]]ed key:
-    * the input of every Lloyd round and every member table. */
+    * the input of every Lloyd round and every member table. Every
+    * assigned row with a vec_id has its member, so the join is written
+    * right outer, which returns the inner join's rows: Spark's
+    * runtime-filter rule may then prune only the members side, and the
+    * aggregate on the assignment side gives it no filter to build from.
+    * As an inner join, a selective filter on `members` (an index over a
+    * vec_id prefix) made the rule put a bloom filter on the assignment
+    * side: a 1 MiB literal in every task binary of the round. */
   private def assignMembers(members: DataFrame, centroids: DataFrame,
       key: String = "cell", by: Seq[String] = Nil): DataFrame =
-    members.join(assign(members, centroids, key, by), "vec_id" +: by)
+    members.join(assign(members, centroids, key, by).filter(col("vec_id").isNotNull),
+      "vec_id" +: by, "right_outer")
 
   /** The member-table columns, in order. */
   private def memberRows(df: DataFrame): DataFrame =
@@ -372,7 +380,7 @@ object IvfAnn {
       cosines(probe2).groupBy(col("a_id"))
         .agg(max(struct(col("c"), (-col("b_id")).as("negb"))).as("m"))
         .select(col("a_id"), (-col("m.negb")).cast("long").as("nb"))
-        .localCheckpoint() // consumed twice by mutualNnExact's reciprocity join
+        .localCheckpoint() // memoized: q222b and q283 both read it
     }
 
   /** Exact mutual nearest neighbors routed through the IVF index — the
@@ -383,15 +391,17 @@ object IvfAnn {
     * clustered corpora (the dedup regime, where mutual NN matters)
     * probe few cells; the near-orthogonal fixture probes most.
     * Candidate cosines use the identical formula/summation as q222 so
-    * the argmax can never diverge from the oracle's. */
-  def mutualNnExact(s: SparkSession, d: String): DataFrame = {
-    val nn = nearestNeighbors(s, d)
-    nn.join(nn.select(col("a_id").as("ya"), col("nb").as("ynb")),
-        col("nb") === col("ya") && col("ynb") === col("a_id")
-          && col("a_id") < col("nb"))
-      .select(col("a_id"), col("nb").as("b_id"))
+    * the argmax can never diverge from the oracle's. Reciprocity is one
+    * aggregation: every vector has exactly one 1-NN row and nb ≠ a_id,
+    * so an unordered pair has 2 rows exactly when it is mutual. */
+  def mutualNnExact(s: SparkSession, d: String): DataFrame =
+    nearestNeighbors(s, d)
+      .groupBy(least(col("a_id"), col("nb")).as("a_id"),
+        greatest(col("a_id"), col("nb")).as("b_id"))
+      .agg(count(lit(1)).as("n"))
+      .filter(col("n") === 2)
+      .select(col("a_id"), col("b_id"))
       .orderBy("a_id")
-  }
 
   /** Exact threshold near-dup pairs routed through the IVF index —
     * q50's production form. Here the threshold itself is the pruning

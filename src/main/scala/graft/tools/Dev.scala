@@ -141,6 +141,7 @@ object Dev {
     val sc = spark.sparkContext
     val Fence = "graft-dev-fence"
     val stageGroup = mutable.Map.empty[Int, String]
+    val stageJob = mutable.Map.empty[Int, String]
     val taskMs = mutable.Map.empty[Int, Long].withDefaultValue(0L)
     val maxTaskMs = mutable.Map.empty[Int, Long].withDefaultValue(0L)
     val stages = mutable.Map.empty[String, mutable.ArrayBuffer[StageRec]]
@@ -149,6 +150,8 @@ object Dev {
       override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = synchronized {
         Option(s.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
           .foreach(stageGroup(s.stageInfo.stageId) = _)
+        Option(s.properties).flatMap(p => Option(p.getProperty(Bench.JobDescription)))
+          .foreach(stageJob(s.stageInfo.stageId) = _)
       }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
         val ms = Option(t.taskInfo).fold(0L)(_.duration)
@@ -162,9 +165,10 @@ object Dev {
           case g =>
             val wall = (for (a <- i.completionTime; b <- i.submissionTime) yield a - b)
               .getOrElse(0L)
+            val site = i.name.takeWhile(_ != '\n')
             stages.getOrElseUpdate(g, mutable.ArrayBuffer.empty) += StageRec(i.stageId,
-              i.name.takeWhile(_ != '\n'), i.numTasks, taskMs(i.stageId), wall,
-              maxTaskMs(i.stageId))
+              stageJob.get(i.stageId).fold(site)(j => s"$j: $site"), i.numTasks,
+              taskMs(i.stageId), wall, maxTaskMs(i.stageId))
         }
       }
     }
@@ -184,7 +188,7 @@ object Dev {
       println(f"PROFILE $n warm1=$warm1%.2f warm2=$warm2%.2f measured=$t%.2f s, ${recs.size} stages")
       recs.take(25).foreach { s =>
         println(f"PROFILE  stage=${s.id}%4d wall=${s.wallMs}%6d ms task_sum=${s.taskMs}%6d ms " +
-          f"max_task=${s.maxTaskMs}%6d ms tasks=${s.tasks}%4d  ${s.name.take(90)}")
+          f"max_task=${s.maxTaskMs}%6d ms tasks=${s.tasks}%4d  ${s.name.take(120)}")
       }
       println(f"PROFILE  total_stage_wall=${recs.map(_.wallMs).sum}%d ms (overlaps possible)")
     } finally sc.removeSparkListener(listener)

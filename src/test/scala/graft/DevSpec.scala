@@ -33,7 +33,9 @@ class DevSpec extends AnyFunSuite with TempDirs {
     val head = out.find(_.startsWith("PROFILE q01_pricing_summary")).getOrElse(fail(out.mkString("\n")))
     val n = """, (\d+) stages""".r.findFirstMatchIn(head).get.group(1).toInt
     assert(n >= 1, head)
-    assert(out.count(_.startsWith("PROFILE  stage=")) == math.min(n, 25))
+    val stages = out.filter(_.startsWith("PROFILE  stage="))
+    assert(stages.size == math.min(n, 25))
+    assert(stages.forall(_.contains(" q01_pricing_summary: ")), stages.mkString("\n"))
     assert(out.exists(_.startsWith("PROFILE  total_stage_wall=")))
   }
 

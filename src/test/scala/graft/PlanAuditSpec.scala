@@ -4,13 +4,13 @@ import graft.tools.ExecutedPlans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, PartialMerge}
 import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{CoalesceExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, row_number}
+import org.apache.spark.sql.functions.{col, count, lit, row_number, xxhash64}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,7 +27,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * small input, `plans.SmallSortExchange` gives that exchange one
   * partition, a funnel too; it passes only while its input's size
   * estimate is within the rule's bound, so a one-partition sort over an
-  * input that is not provably small is an offender.
+  * input that is not provably small is an offender. Over finished
+  * shuffle stages within the bound, the rule sorts in one task
+  * (`CoalesceExec(1)` under the sort); that one-task sort passes only
+  * while the stages' runtime size is within the bound.
   *
   * The audit walks the plans Spark actually executes. Building a query
   * runs eager `localCheckpoint`s and planning reads (`head`, `collect`,
@@ -41,7 +44,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * built, and audited, under the first query in registry order that
   * uses it.
   */
-class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll with AdaptiveSparkPlanHelper {
   lazy val spark = TestSession.spark
 
   private val executed = new ExecutedPlans
@@ -125,6 +128,9 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         case e: ShuffleExchangeExec if onePartitionRange(e) &&
             !graft.plans.SmallSortExchange.small(e.child, spark.sessionState.conf) =>
           nodes += "one-partition-range-exchange"
+        case SortExec(_, true, CoalesceExec(1, child), _)
+          if !graft.plans.SmallSortExchange.finishedSmall(child, spark.sessionState.conf) =>
+          nodes += "one-task-sort"
         case a: AdaptiveSparkPlanExec => walk(a.initialPlan)
         case _ => ()
       }
@@ -193,6 +199,27 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
         e.copy(outputPartitioning = r.copy(numPartitions = 1))
     }
     assert(offendingNodes(funneled) == Seq("one-partition-range-exchange"))
+  }
+
+  test("a one-task sort passes only over finished shuffle stages within the small-sort bound") {
+    def finalPlan(df: org.apache.spark.sql.Dataset[_]): SparkPlan = {
+      df.collect()
+      df.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan
+    }
+    def hasOneTask(p: SparkPlan) = find(p)(_.isInstanceOf[CoalesceExec]).isDefined
+    val small = finalPlan(spark.range(64).groupBy((col("id") % 7).as("k")).count().orderBy(col("k")))
+    assert(hasOneTask(small) && offendingNodes(small).isEmpty)
+    // 300,000 random 64-bit group keys shuffle several MB, so the rule
+    // keeps the range exchange; forced to one task over the same
+    // finished aggregate stage, the sort is a funnel.
+    val large = finalPlan(spark.range(300000).groupBy(xxhash64(col("id")).as("k"))
+      .agg(count(lit(1)).as("n")).orderBy(col("k")))
+    assert(!hasOneTask(large))
+    val funneled = collectFirst(large) {
+      case ShuffleExchangeExec(r: RangePartitioning, child, _, _) =>
+        SortExec(r.ordering, global = true, CoalesceExec(1, child))
+    }.get
+    assert(offendingNodes(funneled) == Seq("one-task-sort"))
   }
 
   test("refined threshold probe plan is funnel-free (the ivf_refined branch, audited directly)") {
